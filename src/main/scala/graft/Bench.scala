@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicBoolean
+import graft.core.ParquetSource
 
 /** Benchmark main: times each SparkEntry.queries entry on
   * `SPARK_GRAFT_SF_DIR` and prints ONE summary JSON line on stdout.
@@ -157,7 +158,7 @@ object Bench {
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit()))
 
     // JIT/classloading warmup so the first timed query isn't charged for it
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    ParquetSource.read(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
 
     val t0 = System.nanoTime()
@@ -268,7 +269,7 @@ object Bench {
       try {
         import graft.core.Chain
         import graft.ext._
-        val embDf = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        val embDf = ParquetSource.read(spark, s"$sfDir/embeddings.parquet")
         val emb = Chain(spark, "bench_embeddings", embDf)
         val queries = embDf.where("vec_id < 20")
         def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

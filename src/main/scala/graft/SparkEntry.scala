@@ -20,7 +20,7 @@ import graft.ops._
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): Chain =
-    Chain(s, name, s.read.parquet(s"$dir/$name.parquet"))
+    Chain(s, name, ParquetSource.read(s, s"$dir/$name.parquet"))
 
   /** Exact-decimal aggregate SQL helpers mirroring [[graft.core.Exact]]. */
   private def dsum(x: String) = s"CAST(SUM(CAST($x AS DECIMAL(38,4))) AS DOUBLE)"
@@ -1739,7 +1739,7 @@ object SparkEntry {
       // segment — the grouped face of q_agreement, oracled end to end
       "q_agreement_grouped" -> ((s, d) => {
         import org.apache.spark.sql.functions.expr
-        val cust = s.read.parquet(s"$d/customer.parquet")
+        val cust = ParquetSource.read(s, s"$d/customer.parquet")
           .withColumn("seg", expr("CASE WHEN c_custkey % 2 = 0 THEN 'e' ELSE 'o' END"))
           .withColumn("rb", expr(
             "CAST(CASE WHEN c_custkey % 7 = 0 THEN 'BUILDING' ELSE c_mktsegment END AS STRING)"))
@@ -2017,10 +2017,8 @@ object SparkEntry {
     s.createDataFrame(s.sparkContext.parallelize(rows, 2), schema)
   }
 
-  private def readEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$d/events.parquet")
-  }
+  private def readEvents(s: SparkSession, d: String): DataFrame =
+    ParquetSource.read(s, s"$d/events.parquet")
 
   def oracleSql: Map[String, String] = coreOracleSql ++ extOracleSql
 

@@ -97,7 +97,7 @@ final class GraftSession(val spark: SparkSession) {
     * has a referenceable name.
     */
   def datasetFromParquet(path: String, name: String): Chain = {
-    val df = spark.read.parquet(path)
+    val df = ParquetSource.read(spark, path)
     df.createOrReplaceTempView(name)
     Chain(spark, name, df)
   }

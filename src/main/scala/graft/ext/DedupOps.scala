@@ -879,8 +879,10 @@ object DedupOps {
   }
 
   /** Byte gate for [[maybeBroadcastSmall]]: rows × estimated row width ≤
-    * maxBytes, where variable-width fields (string/binary, and anything
-    * non-atomic) are charged `stringBytes` and fixed-width fields their
+    * maxBytes, where variable-width fields (string/binary) are charged
+    * `stringBytes`, non-atomic fields (array/map/struct) at least
+    * `stringBytes` or what their members are charged (one element per
+    * array, one entry per map) if more, and fixed-width fields their
     * type's `defaultSize`. Factored out so the spec can pin the decision
     * without building million-row frames.
     */
@@ -888,10 +890,14 @@ object DedupOps {
                                  rows: Long, maxBytes: Long,
                                  stringBytes: Long): Boolean = {
     import org.apache.spark.sql.types._
-    val rowBytes = schema.fields.map(_.dataType match {
+    def width(t: DataType): Long = t match {
       case StringType | BinaryType => stringBytes
+      case a: ArrayType => math.max(stringBytes, width(a.elementType))
+      case m: MapType => math.max(stringBytes, width(m.keyType) + width(m.valueType))
+      case s: StructType => math.max(stringBytes, s.fields.map(f => width(f.dataType)).sum)
       case other => math.max(8L, other.defaultSize.toLong)
-    }).sum
+    }
+    val rowBytes = schema.fields.map(f => width(f.dataType)).sum
     maxBytes > 0 && rows <= maxBytes / math.max(1L, rowBytes)
   }
 

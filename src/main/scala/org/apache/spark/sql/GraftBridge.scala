@@ -37,4 +37,12 @@ object GraftBridge {
     * a checkpoint materialization need a bounded poll instead).
     */
   def observationResult(o: Observation): Map[String, Any] = o.getOrEmpty
+
+  /** Spark's own rule for the file and directory names a file-source
+    * listing skips (`_`/`.` prefixes, in-flight `._COPYING_` copies, but
+    * not `_metadata`/`_common_metadata` or `_col=v` partition
+    * directories); `HadoopFSUtils` is `private[spark]`.
+    */
+  def hiddenFromListing(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

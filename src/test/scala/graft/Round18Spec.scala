@@ -292,5 +292,11 @@ class Round18Spec extends AnyFunSuite {
     // though a row-only cap of 2M would have broadcast a 100+ MB map
     assert(!ext.DedupOps.broadcastFits(stringKeyed, 2000000L, mb64, 48L))
     assert(!ext.DedupOps.broadcastFits(stringKeyed, 1000000L, 0L, 48L))
+    // an array<string> field is charged like a string (48 B), not its
+    // 20-byte defaultSize: 56 B/row fits at 1M rows, closes at 2M
+    val arrayKeyed = StructType(Seq(StructField("id", LongType),
+      StructField("tokens", ArrayType(StringType))))
+    assert(ext.DedupOps.broadcastFits(arrayKeyed, 1000000L, mb64, 48L))
+    assert(!ext.DedupOps.broadcastFits(arrayKeyed, 2000000L, mb64, 48L))
   }
 }
