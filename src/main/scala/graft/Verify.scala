@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import Harness.q
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -12,37 +12,15 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * additionally runs under a watchdog (`SPARK_GRAFT_QUERY_TIMEOUT`, sec,
   * default 600) that cancels its Spark job group rather than hanging the whole
   * dump, and an optional global budget (`SPARK_GRAFT_TIME_BUDGET`, sec) skips
-  * the remaining queries once exceeded.
+  * the remaining queries once exceeded. A status line carries the query's
+  * seconds and scheduler counters ([[Harness.run]]), so
+  * `SPARK_GRAFT_ONLY=q_name` times and profiles one query.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64MB")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark4 otherwise rejects
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
     // Oracle SQL first: a stall in any later query must not cost the round the
     // whole oracle map (round 4 failure mode: rc=124 → empty correctness file).
@@ -62,7 +40,6 @@ object Verify {
       sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "600").toLong
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
-    val watchdog = new java.util.Timer("verify-watchdog", true)
 
     // Dev convenience: SPARK_GRAFT_ONLY=q_a,q_b runs a subset (the driver
     // never sets it, so the gate always runs everything).
@@ -76,28 +53,15 @@ object Verify {
       if (budgetSec.exists(elapsed > _)) {
         status(s"""{"q":${q(name)},"status":"skipped_budget"}""")
       } else {
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-        val cancel = new java.util.TimerTask {
-          def run(): Unit = spark.sparkContext.cancelJobGroup(name)
-        }
-        watchdog.schedule(cancel, queryTimeoutSec * 1000)
-        val qt0 = System.nanoTime()
-        try {
+        val r = Harness.run(spark, name, queryTimeoutSec) {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
-          val sec = (System.nanoTime() - qt0) / 1e9
-          status(f"""{"q":${q(name)},"status":"ok","sec":$sec%.2f}""")
-        } catch { case e: Throwable =>
-          status(s"""{"q":${q(name)},"status":"fail","err":${q(e.toString.take(300))}}""")
-        } finally {
-          cancel.cancel()
-          spark.sparkContext.clearJobGroup()
-          // queries are independent; storage left behind by one (persisted
-          // barriers, checkpoint blocks) must not leak into the next.
-          // clearCache only drops CacheManager entries — localCheckpoint
-          // blocks are plain RDD persists and need the explicit sweep.
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        }
+        r.error match {
+          case None =>
+            status(f"""{"q":${q(name)},"status":"ok","sec":${r.sec}%.2f,${r.countersJson}}""")
+          case Some(e) =>
+            status(s"""{"q":${q(name)},"status":"fail","err":${q(e.toString.take(300))},${r.countersJson}}""")
         }
       }
     }

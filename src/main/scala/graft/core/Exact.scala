@@ -92,8 +92,8 @@ object Exact {
     * throughout, so the partitioning-independence contract of the
     * decimal path is preserved bit-for-bit, including the final
     * decimal→double conversion (equal decimal values, same `toDouble`).
-    * Measured (ScratchDecSum, sf0.1 lineitem, the 9 corr_matrix moment
-    * sums): 3.41 s → 1.73 s, aggregate rows bit-identical.
+    * Measured (OPTIMIZATION_r18.md, sf0.1 lineitem, the 9 corr_matrix
+    * moment sums): 3.41 s → 1.73 s, aggregate rows bit-identical.
     */
   def splitDecimalSum8(c: Column, fastCast: Boolean = false): Column = {
     import org.apache.spark.sql.GraftBridge

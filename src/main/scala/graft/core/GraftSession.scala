@@ -211,17 +211,20 @@ object GraftSession {
   /** Local-mode builder with the scale-posture defaults this engine assumes:
     * AQE on (runtime re-plan: partition coalescing, skew-join splitting,
     * broadcast demotion/promotion), UTC session, shuffle partitions sized to
-    * cores rather than the 200 default.
+    * cores rather than the 200 default, UI off. Every session graft's own
+    * code builds starts here.
     */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): GraftSession = {
-    val spark = SparkSession.builder()
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
-      .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+
+  /** A session named `graft` on [[builder]]'s settings. */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): GraftSession = {
+    val spark = builder(cores).appName("graft").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new GraftSession(spark)
   }

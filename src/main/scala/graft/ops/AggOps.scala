@@ -1085,8 +1085,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
     // ([[graft.core.Exact.splitDecimalSum8]]): the SAME per-row cast,
     // hi/lo long accumulation, exact decimal recombination —
     // bit-identical values, measured ~2x on the moment pass
-    // (ScratchDecSum, sf0.1: 3.41 -> 1.73 s, rows identical). The probed
-    // maxima bound every moment: |x_i| <= m_i over the FINITE values of
+    // (OPTIMIZATION_r18.md, sf0.1: 3.41 -> 1.73 s, rows identical). The
+    // probed maxima bound every moment: |x_i| <= m_i over the FINITE values of
     // column i, and each branch's per-row masks (allOk / both) only keep
     // rows where the factors are finite, so |x_i·x_j| <= m_i·m_j on
     // every summed row. Where a probe pass would be NEW (the declared

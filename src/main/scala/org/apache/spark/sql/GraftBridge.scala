@@ -45,4 +45,11 @@ object GraftBridge {
     */
   def hiddenFromListing(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Wait until the listener bus has delivered every queued event
+    * (`listenerBus` is `private[spark]`), so a listener's counts cover
+    * every job the caller has already run.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

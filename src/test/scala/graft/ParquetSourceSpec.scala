@@ -33,7 +33,7 @@ class ParquetSourceSpec extends AnyFunSuite {
     sc.setJobGroup(group, group)
     try {
       val r = body
-      org.apache.spark.ListenerBusDrain(sc)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
       (r, started.get)
     } finally {
       sc.clearJobGroup()

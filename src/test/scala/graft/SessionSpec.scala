@@ -6,7 +6,8 @@ import graft.ops._
 import TestSpark._
 
 /** Session-level surface: FQTN resolution/validation, dataset bind with
-  * metadata sync, table-type introspection.
+  * metadata sync, table-type introspection; the one session-config site
+  * and the harness run.
   */
 class SessionSpec extends AnyFunSuite {
   import spark.implicits._
@@ -110,5 +111,47 @@ class SessionSpec extends AnyFunSuite {
     assert(sess.tableType("sess_state_view") == "TEMPORARY")
     assert(sess.tableState("sess_never_bound") == "UNKNOWN")
     assert(sess.tableType("sess_never_bound") == "UNKNOWN")
+  }
+
+  test("src/main builds sessions in one place and ships no dev mains") {
+    import scala.jdk.CollectionConverters._
+    val sources = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(sources.size > 50, s"expected the library sources, got ${sources.size}")
+    def occurrences(needle: String): Seq[String] = sources.flatMap { f =>
+      val text = java.nio.file.Files.readString(f)
+      val n = java.util.regex.Pattern.quote(needle).r.findAllMatchIn(text).size
+      Seq.fill(n)(f.getFileName.toString)
+    }.sorted
+    assert(occurrences("SparkSession.builder()") == Seq("GraftSession.scala"))
+    assert(occurrences("def main(") == Seq("Bench.scala", "Verify.scala"))
+  }
+
+  test("a harness run counts the jobs of its own job group") {
+    // a collect of a range needs no exchange: one job, one stage
+    val one = Harness.run(spark, "session-spec-count", timeoutSec = 60)(spark.range(10).collect())
+    assert(one.ok, one.error)
+    assert((one.jobs, one.stages) == ((1, 1)), one.countersJson)
+    // count() aggregates through an exchange, and AQE runs its map side as
+    // a job of its own: 4 range partitions, then 1 final partition
+    val count = Harness.run(spark, "session-spec-count", timeoutSec = 60)(spark.range(10).count())
+    assert(count.ok, count.error)
+    assert((count.jobs, count.stages, count.tasks) == ((2, 2, 5)), count.countersJson)
+    assert(count.shuffleWriteBytes > 0 && count.shuffleReadBytes > 0, count.countersJson)
+    // the counts are per run: a run of the same group without jobs reads 0
+    val none = Harness.run(spark, "session-spec-count", timeoutSec = 60)(())
+    assert(none.ok && none.jobs == 0 && none.stages == 0, none.countersJson)
+  }
+
+  test("the harness watchdog cancels a run that outlives its timeout") {
+    val r = Harness.run(spark, "session-spec-timeout", timeoutSec = 1) {
+      spark.sparkContext.parallelize(1 to 4, 4).foreach(_ => Thread.sleep(120000))
+    }
+    assert(!r.ok)
+    assert(r.sec < 60, s"cancelled after ${r.sec} s")
+    assert(r.jobs == 1, r.countersJson)
   }
 }

@@ -1,23 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.Chain
+import graft.core.{Chain, GraftSession, ParquetSource}
 
 /** One shared local session for the whole suite (Spark startup is ~5s;
   * per-suite sessions would dominate test time).
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     // same function surface a production session gets from
@@ -29,7 +24,7 @@ object TestSpark {
   val sfDir = "/root/testdata/sf0.001"
 
   def table(name: String): Chain = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = ParquetSource.read(spark, s"$sfDir/$name.parquet")
     df.createOrReplaceTempView(name)
     Chain(spark, name, df)
   }
