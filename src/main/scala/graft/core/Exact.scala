@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType}
 
@@ -14,8 +15,21 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType}
   * (decimal adds instead of double adds; still whole-stage codegen'd, still
   * map-side partial-aggregated by Catalyst).
   *
-  * Used by the `aggregate`/window operators for float inputs; disable per
-  * column by calling the plain functions instead.
+  * This object is the ONE home of the two exact-sum contracts; ops call
+  * its helpers and never spell the casts themselves (SessionSpec's source
+  * census enforces it):
+  *
+  *  - decimal sums: values accumulate in DECIMAL(38,4) ([[Wide]]), squares
+  *    and products in DECIMAL(38,8); a mean counts over the same cast its
+  *    sum accumulates, and moments gate n, Σx and Σx² on the x² cast;
+  *  - fixed point: a value quantizes to `floor(x·10^k + 0.5)` as BIGINT
+  *    ([[fpq]]) before any cross-row combination, and the integers sum in
+  *    DECIMAL(38,0) ([[fixedSum]]).
+  *
+  * Each contract has a Column face (optionally windowed) and a SQL-text
+  * face spelling the same arithmetic, so an op's plan and its rendered
+  * SQL agree by construction. Every sum of every face goes through the
+  * one accumulation, [[acc]] / [[accSql]].
   */
 object Exact {
   /** Scale kept during exact accumulation. 38-4 = 34 integer digits of
@@ -23,11 +37,32 @@ object Exact {
     */
   val Scale = 4
   val Wide: DecimalType = DecimalType(38, Scale)
+  /** Accumulator of squares and products: 30 integer digits. */
+  private val Wide8 = DecimalType(38, 8)
+  /** Accumulator of fixed-point integers. */
+  private val Fixed = DecimalType(38, 0)
 
   def isFloating(dt: DataType): Boolean = dt == DoubleType || dt == FloatType
 
-  /** Exact sum of a floating column, returned as double. */
-  def sum(c: Column): Column = functions_sum(c.cast(Wide)).cast("double")
+  // ---- the accumulation ------------------------------------------------
+
+  private def win(c: Column, over: Option[WindowSpec]): Column = over.fold(c)(c.over)
+
+  /** Σ of an already-decimal column, optionally windowed. */
+  private def acc(dec: Column, over: Option[WindowSpec]): Column =
+    win(org.apache.spark.sql.functions.sum(dec), over)
+
+  private def winSql(agg: String, over: String): String =
+    if (over.isEmpty) agg else s"$agg $over"
+
+  /** SQL twin of [[acc]]: `over` is an `OVER (…)` clause or empty. */
+  private def accSql(dec: String, over: String): String = winSql(s"SUM($dec)", over)
+
+  // ---- decimal sums: Column face ---------------------------------------
+
+  /** Exact sum of a floating column (optionally windowed), as double. */
+  def sum(c: Column, over: Option[WindowSpec] = None): Column =
+    acc(c.cast(Wide), over).cast("double")
 
   /** Exact mean: exact sum / count. The count is over the SAME decimal
     * cast the sum accumulates — `cast(NaN as decimal)` is null, so a NaN
@@ -35,54 +70,165 @@ object Exact {
     * together; `count(c)` would count it (non-null) and silently bias the
     * mean low. Division done once in double space.
     */
-  def avg(c: Column): Column = sum(c) / count(c.cast(Wide))
+  def avg(c: Column, over: Option[WindowSpec] = None): Column =
+    sum(c, over) / win(count(c.cast(Wide)), over)
 
-  /** Population/sample stddev from exact sums: sqrt((Sxx - Sx^2/n)/(n-1)).
-    * x*x is computed per-row in double (deterministic), then accumulated
-    * exactly; deterministic regardless of partitioning.
+  /** Exact sum at the product scale DECIMAL(38,8) — squares, products and
+    * the plain sums that close together with them — returned as double.
+    */
+  def sum8(c: Column): Column = sum8Decimal(c).cast("double")
+
+  /** [[sum8]] left as its raw DECIMAL(38,8) accumulator, for results that
+    * merge exactly later ([[add8]]).
+    */
+  def sum8Decimal(c: Column): Column = acc(c.cast(Wide8), None)
+
+  /** Exact merge of two [[sum8Decimal]] accumulators, a null side counting
+    * as zero; the result keeps the accumulator type.
+    */
+  def add8(a: Column, b: Column): Column = {
+    val zero = lit(BigDecimal(0)).cast(Wide8)
+    (coalesce(a, zero) + coalesce(b, zero)).cast(Wide8)
+  }
+
+  /** The gated moment sums (n, Σx, Σx²) — raw accumulators (n a LONG
+    * count, the sums decimals); [[Moments.toDouble]] casts all three.
     *
     * n, Sx and Sxx are ALL gated on the x² decimal cast: DECIMAL(38,8)
     * holds 30 integer digits, so for |x| ≳ 1e15 the x² cast leaves range
     * while x itself still fits DECIMAL(38,4) (34 digits). Under ANSI mode
     * (the Spark 4 default) the overflow RAISES — loud, never wrong. Under
-    * non-ANSI the cast nulls, and before this gate the row counted in
+    * non-ANSI the cast nulls, and without the gate the row would count in
     * n/Sx while dropping from Sxx — a finite but wrong stddev; gating all
     * three on the same cast excludes such a row (and NaN/Inf, which null
     * the cast in either mode) from the statistic entirely — the same
-    * consistent-exclusion contract as [[avg]]. SQL faces spelling this
-    * formula out carry the same gate; DuckDB likewise raises on decimal
-    * overflow, so past the 1e15 bound every face fails loudly rather
-    * than diverging silently.
+    * consistent-exclusion contract as [[avg]]. The SQL face
+    * ([[momentsSql]]) carries the same gate; DuckDB likewise raises on
+    * decimal overflow, so past the 1e15 bound every face fails loudly
+    * rather than diverging silently.
+    *
+    * `mask` restricts the rows summed (rows outside it count nowhere);
+    * `over` windows all three sums.
     */
-  def stddev(c: Column): Column = {
-    val xx = (c * c).cast(DecimalType(38, 8))
-    val n = count(xx).cast("double")
-    val sx = functions_sum(when(xx.isNotNull, c).cast(Wide)).cast("double")
-    val sxx = functions_sum(xx).cast("double")
-    sqrt((sxx - sx * sx / n) / (n - lit(1.0)))
+  def moments(x: Column, mask: Option[Column] = None,
+              over: Option[WindowSpec] = None): Moments = {
+    val xx = (x * x).cast(Wide8)
+    val kept = mask.fold(xx)(m => when(m, xx))
+    val gate = mask.fold(xx.isNotNull)(_ && xx.isNotNull)
+    Moments(win(count(kept), over), acc(when(gate, x).cast(Wide), over), acc(kept, over))
   }
 
-  /** Sample variance from the same gated exact sums — [[stddev]] without
-    * the square root; identical NaN/overflow exclusion contract.
+  /** (n, Σx, Σx²) and the sample statistics closed from them — all three
+    * must already be doubles for the closings.
     */
-  def variance(c: Column): Column = {
-    val xx = (c * c).cast(DecimalType(38, 8))
-    val n = count(xx).cast("double")
-    val sx = functions_sum(when(xx.isNotNull, c).cast(Wide)).cast("double")
-    val sxx = functions_sum(xx).cast("double")
-    (sxx - sx * sx / n) / (n - lit(1.0))
+  final case class Moments(n: Column, sx: Column, sxx: Column) {
+    def toDouble: Moments = Moments(n.cast("double"), sx.cast("double"), sxx.cast("double"))
+    def mean: Column = sx / n
+    def variance: Column = (sxx - sx * sx / n) / (n - lit(1.0))
+    def stddev: Column = sqrt(variance)
   }
+
+  /** Sample stddev sqrt((Sxx - Sx^2/n)/(n-1)) from the gated exact sums:
+    * x*x is computed per-row in double (deterministic), then accumulated
+    * exactly; deterministic regardless of partitioning.
+    */
+  def stddev(c: Column): Column = moments(c).toDouble.stddev
+
+  /** Sample variance — [[stddev]] without the square root. */
+  def variance(c: Column): Column = moments(c).toDouble.variance
+
+  // ---- decimal sums: SQL face ------------------------------------------
+  // Each takes a SQL expression and an optional `OVER (…)` clause and
+  // spells the same casts as its Column twin above.
+
+  def sumSql(x: String, over: String = ""): String =
+    s"CAST(${accSql(s"CAST($x AS ${Wide.sql})", over)} AS DOUBLE)"
+
+  def avgSql(x: String, over: String = ""): String =
+    s"${sumSql(x, over)} / ${winSql(s"COUNT(CAST($x AS ${Wide.sql}))", over)}"
+
+  def sum8Sql(x: String): String = s"CAST(${sum8DecimalSql(x)} AS DOUBLE)"
+
+  def sum8DecimalSql(x: String): String = accSql(s"CAST($x AS ${Wide8.sql})", "")
+
+  /** [[moments]] in SQL, each term already cast to DOUBLE. */
+  def momentsSql(x: String, over: String = ""): MomentsSql = {
+    val xx = s"CAST($x * $x AS ${Wide8.sql})"
+    MomentsSql(
+      s"CAST(${winSql(s"COUNT($xx)", over)} AS DOUBLE)",
+      s"CAST(${accSql(s"CASE WHEN $xx IS NOT NULL THEN CAST($x AS ${Wide.sql}) END", over)} AS DOUBLE)",
+      s"CAST(${accSql(xx, over)} AS DOUBLE)")
+  }
+
+  final case class MomentsSql(n: String, sx: String, sxx: String) {
+    private def ratio = s"($sxx - $sx * $sx / $n) / ($n - 1.0)"
+    def variance: String = s"($ratio)"
+    def stddev: String = s"SQRT($ratio)"
+  }
+
+  // ---- fixed point -----------------------------------------------------
+  // `digits` is k in 10^k; Math.pow is exact on these integer powers.
+
+  private def pow10(digits: Int): Double = math.pow(10, digits)
+  private def pow10Sql(digits: Int): String = "1" + "0" * digits
+  private def scaled(x: Column, digits: Int): Column =
+    floor(x * lit(pow10(digits)) + lit(0.5))
+
+  /** The fixed-point quantizer floor(x·10^digits + 0.5) as BIGINT —
+    * applied per row before any cross-row combination, so float
+    * associativity never touches a cross-row result.
+    */
+  def fpq(x: Column, digits: Int = 6): Column = scaled(x, digits).cast("long")
+
+  /** [[fpq]] on the driver, for values computed host-side that must
+    * match the quantized columns bit for bit.
+    */
+  def fpqHost(x: Double, digits: Int = 6): Long =
+    math.floor(x * pow10(digits) + 0.5).toLong
+
+  /** x rounded half-up to `digits` decimals, as a double: the quantizer
+    * read straight back.
+    */
+  def fpRound(x: Column, digits: Int = 6): Column = scaled(x, digits) / lit(pow10(digits))
+
+  /** A fixed-point integer (or its sum) read back as a double. */
+  def fromFixed(q: Column, digits: Int = 6): Column = q.cast("double") / lit(pow10(digits))
+
+  /** Exact Σ of fixed-point integers, as its raw DECIMAL(38,0). */
+  def fixedSum(q: Column): Column = acc(q.cast(Fixed), None)
+
+  /** Mean of fixed-point integers read back as a double: the exact sum,
+    * divided by `n`, then by the scale (in that order).
+    */
+  def fixedMean(q: Column, n: Column, digits: Int): Column =
+    fixedSum(q).cast("double") / n / lit(pow10(digits))
+
+  def fpqSql(x: String, digits: Int = 6): String =
+    s"CAST(FLOOR($x * ${pow10Sql(digits)} + 0.5) AS BIGINT)"
+
+  def fpRoundSql(x: String, digits: Int = 6): String =
+    s"FLOOR($x * ${pow10Sql(digits)} + 0.5) / ${pow10Sql(digits)}"
+
+  def fromFixedSql(q: String, digits: Int = 6): String =
+    s"CAST($q AS DOUBLE) / ${pow10Sql(digits)}"
+
+  def fixedSumSql(q: String): String = accSql(s"CAST($q AS ${Fixed.sql})", "")
+
+  def fixedMeanSql(q: String, n: String, digits: Int): String =
+    s"CAST(${fixedSumSql(q)} AS DOUBLE) / $n / ${pow10Sql(digits)}"
+
+  // ---- split-long product-scale sum -------------------------------------
 
   /** Split-long exact DECIMAL(38,8) sum — the probe-gated fast
     * accumulation for [[graft.ops.AggOps.corrMatrix]]'s moment sums.
-    * Value: IDENTICAL to `SUM(CAST(x AS DECIMAL(38,8))) CAST AS DOUBLE`,
+    * Value: IDENTICAL to [[sum8]],
     * PROVIDED the caller proved [[splitSumSafe]] with a bound ≥ max |x|
-    * over the summed values and the row count. The per-row CAST is the
-    * very same expression (same shortest-decimal HALF_UP rounding, same
-    * null/overflow/ANSI semantics); only the ACCUMULATION changes: the
-    * cast's unscaled long U (exact-long extraction —
-    * `Decimal.toUnscaledLong` is `longValueExact`, loud on any probe
-    * violation) splits into hi = U >> 32 and lo = U & 0xFFFFFFFF
+    * over the summed values and the row count. The per-row conversion is
+    * [[graft.functions.Dec8Unscaled]] — the unscaled long U of
+    * `CAST(x AS DECIMAL(38,8))` (same shortest-decimal HALF_UP rounding,
+    * exact BigDecimal fallback, loud `longValueExact` on any probe
+    * violation; valid because the probe also rules out Inf). U
+    * splits into hi = U >> 32 and lo = U & 0xFFFFFFFF
     * (U = hi·2³² + lo exactly, lo non-negative), each summed as a plain
     * LONG — codegen long adds into 8-byte hash-aggregate buffer slots
     * instead of per-row BigDecimal adds into a 16-byte decimal slot —
@@ -95,20 +241,10 @@ object Exact {
     * Measured (OPTIMIZATION_r18.md, sf0.1 lineitem, the 9 corr_matrix
     * moment sums): 3.41 s → 1.73 s, aggregate rows bit-identical.
     */
-  def splitDecimalSum8(c: Column, fastCast: Boolean = false): Column = {
+  def splitDecimalSum8(c: Column): Column = {
     import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.{MakeDecimal, UnscaledValue}
-    // fastCast swaps the cast+UnscaledValue pair for the one-call codegen
-    // conversion [[graft.functions.Dec8Unscaled]] (identical values —
-    // provably-unambiguous pure arithmetic with the exact BigDecimal
-    // fallback; see its doc). Callers may only enable it under the same
-    // probe that gates this sum: inputs null or FINITE (an Inf fails its
-    // column's probe bound, so no split sum is built for it).
-    val u =
-      if (fastCast) GraftBridge.column(
-        graft.functions.Dec8Unscaled(GraftBridge.expression(c)))
-      else GraftBridge.column(UnscaledValue(
-        GraftBridge.expression(c.cast(DecimalType(38, 8)))))
+    import org.apache.spark.sql.catalyst.expressions.MakeDecimal
+    val u = GraftBridge.column(graft.functions.Dec8Unscaled(GraftBridge.expression(c)))
     val hi = shiftright(u, 32)
     val lo = u.bitwiseAND(lit(0xFFFFFFFFL))
     // precisions are deliberately TIGHT so the recombining Add's result
@@ -118,10 +254,11 @@ object Exact {
     // product is decimal(30,8), Σlo·10⁻⁸ < 2^62·10⁻⁸ fits decimal(20,8),
     // and their sum plans as decimal(31,8) — exact, and bounded by the
     // probe (|total| < 2^61·10⁻⁸ ≈ 2.3e10, 11 integer digits of 23).
-    (functions_sum(hi).cast(DecimalType(19, 0)) *
+    (org.apache.spark.sql.functions.sum(hi).cast(DecimalType(19, 0)) *
       lit(new java.math.BigDecimal("42.94967296")) +
       GraftBridge.column(MakeDecimal(
-        GraftBridge.expression(functions_sum(lo)), 20, 8, nullOnOverflow = true)))
+        GraftBridge.expression(org.apache.spark.sql.functions.sum(lo)), 20, 8,
+        nullOnOverflow = true)))
       .cast("double")
   }
 
@@ -153,6 +290,4 @@ object Exact {
     * embeddings.
     */
   def dot(a: Column, b: Column): Column = graft.functions.FixedPointDot(a, b)
-
-  private def functions_sum(c: Column): Column = org.apache.spark.sql.functions.sum(c)
 }

@@ -1122,9 +1122,11 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
       val ls = DedupOps.checkpointRound(sym.join(mins, "v").where(col("u") > col("v"))
         .select(col("u").as("a"), col("m").as("b")).distinct())
       // SMALL-STAR: per center, re-hang its smaller neighbors AND itself
-      // onto the smallest of them
-      val mins2 = DedupOps.maybeBroadcastSmall(
-        ls.groupBy("a").agg(min(col("b")).as("m")),
+      // onto the smallest of them. The broadcast hint goes on the join
+      // side only: a hint under the union is no join relation, and Spark
+      // drops it with a HintErrorLogger warning on every round
+      val mins2 = ls.groupBy("a").agg(min(col("b")).as("m"))
+      val mins2Hinted = DedupOps.maybeBroadcastSmall(mins2,
         if (prevCnt > Long.MaxValue / 2) Long.MaxValue else prevCnt * 2)
       // fixpoint = the round was the identity on the edge set (stars only).
       // Probe cost: the edge count RIDES the round's checkpoint
@@ -1135,7 +1137,7 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
       // driver barriers. On iterative ops the per-round driver barrier
       // count is the wall-clock driver at cluster scale.
       val (ss, ssProbe) = graft.core.CheckpointProbe(
-        ls.join(mins2, "a")
+        ls.join(mins2Hinted, "a")
           .select(col("b").as("a"), col("m").as("b"))
           .unionByName(mins2.select(col("a"), col("m").as("b")))
           .where(col("a") =!= col("b")).distinct(),

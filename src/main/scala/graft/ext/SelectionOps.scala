@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.core.Chain
+import graft.core.{Chain, Exact}
+import graft.core.Exact.fpq
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,17 +20,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    tf-idf/BM25/ANN retrieval family.
   *
   * All float steps are quantized to 1e-6 fixed point BEFORE any
-  * cross-row combination (the [[graft.ops.AggOps]] entropy/fpLn
-  * convention), so every output is a pure integer function of the input
-  * rows — bit-identical across partitionings and engines.
+  * cross-row combination ([[graft.core.Exact.fpq]]), so every output is
+  * a pure integer function of the input rows — bit-identical across
+  * partitionings and engines.
   */
 object SelectionOps {
-  /** 1e-6 fixed-point quantizer: floor(x·1e6 + 0.5) as BIGINT. Applied
-    * per-term before integer summation so float associativity never
-    * touches a cross-row result.
-    */
-  def fpq(x: Column): Column = floor(x * lit(1e6) + lit(0.5)).cast("long")
-
   /** First 8 hex digits of an md5 string parsed digit-by-digit into a
     * 32-bit value — the same explicit `ascii(c) − 48|87` arithmetic as
     * [[graft.ops.ProjectOps.shard]]: the one hex-to-int every SQL engine
@@ -110,7 +105,7 @@ final class SelectionOps(private val c: Chain) extends AnyVal {
     // the per-side term is what the score replay sums, and floor-rounding
     // the sides independently is the convention the oracle can replay
     def fpLog(cnt: Long, tot: Long): Long =
-      math.floor(math.log((cnt + 1.0d) / (tot.toDouble + buckets)) * 1e6 + 0.5).toLong
+      Exact.fpqHost(math.log((cnt + 1.0d) / (tot.toDouble + buckets)))
     val rows = (0 until buckets).map { b =>
       Row(b.toLong, tgt(b), raw(b), fpLog(tgt(b), nT) - fpLog(raw(b), nR))
     }
@@ -250,7 +245,7 @@ final class SelectionOps(private val c: Chain) extends AnyVal {
       .foreach(r => counts(r.getInt(0)) = r.getLong(1))
     val tot = counts.sum
     def fpLog(cnt: Long): Long =
-      math.floor(math.log((cnt + 1.0d) / (tot.toDouble + buckets)) * 1e6 + 0.5).toLong
+      Exact.fpqHost(math.log((cnt + 1.0d) / (tot.toDouble + buckets)))
     val rows = (0 until buckets).map(b => Row(b.toLong, counts(b), fpLog(counts(b))))
     val schema = StructType(Seq(
       StructField("bucket", LongType, nullable = false),

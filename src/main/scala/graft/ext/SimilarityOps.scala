@@ -487,23 +487,16 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
   def centroidByGroup(groupBy: Seq[String], vecCol: String,
                       as: String = "centroid"): Chain = {
     require(groupBy.nonEmpty, "centroid_by_group needs at least one group key")
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = col(vecCol)
-    val bad = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
-      .map(x => coalesce(array_contains(v, lit(x)), lit(false)))
-      .reduce(_ || _)
-    val clean = c.df.where(v.isNotNull && !bad)
-    val gcols = groupBy.map(col)
-    val exploded = clean.select(gcols :+ posexplode(v).as(Seq("_pos", "_val")): _*)
+    val exploded = SimilarityOps.finiteElements(c.df, groupBy, vecCol)
     // 1e-12 fixed-point longs via explicit double arithmetic
     // (floor(x*1e12 + 0.5), half-up): decimal CASTs round differently
     // across engines on arbitrary float expansions, but these IEEE double
     // ops are bit-identical everywhere — the FixedPointDot regime. The
     // integer sum accumulates in DECIMAL(38,0): exact, order-independent,
     // and 38 digits of headroom (1e12-row groups of |x|<=1e13 fit).
-    val xx = floor(col("_val").cast("double") * lit(1e12) + lit(0.5)).cast("long")
+    val xx = Exact.fpq(col("_val").cast("double"), 12)
     val perDim = exploded.groupBy(groupBy.head, groupBy.tail :+ "_pos": _*)
-      .agg((sum(xx.cast(Dec)).cast("double") / count(xx) / lit(1e12)).as("_v"))
+      .agg(Exact.fixedMean(xx, count(xx), 12).as("_v"))
     val df2 = perDim.groupBy(groupBy.head, groupBy.tail: _*)
       .agg(transform(
         sort_array(collect_list(struct(col("_pos").as("p"), col("_v").as("v")))),
@@ -512,14 +505,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     c.next("centroid_by_group", df2, Some(
       s"SELECT $gs, transform(sort_array(collect_list(struct(_pos, _v))), " +
         s"s -> s._v) AS ${graft.core.Naming.quoteId(as)} FROM (" +
-        s"SELECT $gs, _pos, CAST(SUM(CAST(FLOOR(CAST(_val AS DOUBLE) * 1e12 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / " +
-        s"COUNT(_val) / 1e12 AS _v FROM (" +
-        s"SELECT * FROM {{source}} LATERAL VIEW posexplode(${graft.core.Naming.quoteId(vecCol)}) " +
-        s"_t AS _pos, _val WHERE ${graft.core.Naming.quoteId(vecCol)} IS NOT NULL AND " +
-        s"NOT coalesce(array_contains(${graft.core.Naming.quoteId(vecCol)}, float('NaN')), false) AND " +
-        s"NOT coalesce(array_contains(${graft.core.Naming.quoteId(vecCol)}, float('Infinity')), false) AND " +
-        s"NOT coalesce(array_contains(${graft.core.Naming.quoteId(vecCol)}, float('-Infinity')), false)" +
-        s") GROUP BY $gs, _pos) GROUP BY $gs"))
+        s"SELECT $gs, _pos, ${Exact.fixedMeanSql(Exact.fpqSql("CAST(_val AS DOUBLE)", 12), "COUNT(_val)", 12)} AS _v FROM (" +
+        s"${SimilarityOps.finiteElementsSql(vecCol)}) GROUP BY $gs, _pos) GROUP BY $gs"))
   }
 
   /** embedding_moments(group_by, vec_col): per-group per-DIMENSION mean
@@ -558,21 +545,12 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     Seq("n_vecs", "mean", "variance", "_pos", "_val").foreach(r =>
       require(!groupBy.contains(r),
         s"embedding_moments: group column '$r' collides with an internal/output name"))
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = col(vecCol)
-    val bad = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
-      .map(x => coalesce(array_contains(v, lit(x)), lit(false)))
-      .reduce(_ || _)
-    val clean = c.df.where(v.isNotNull && !bad)
-    val gcols = groupBy.map(col)
-    val exploded = clean.select(gcols :+ posexplode(v).as(Seq("_pos", "_val")): _*)
+    val exploded = SimilarityOps.finiteElements(c.df, groupBy, vecCol)
     val xd = col("_val").cast("double")
-    val xx = floor(xd * lit(1e12) + lit(0.5)).cast("long")
-    val xx2 = floor(xd * xd * lit(1e12) + lit(0.5)).cast("long")
     val perDim = exploded.groupBy(groupBy.head, groupBy.tail :+ "_pos": _*)
       .agg(count(col("_val")).as("_n"),
-        (sum(xx.cast(Dec)).cast("double") / count(col("_val")) / lit(1e12)).as("_m"),
-        (sum(xx2.cast(Dec)).cast("double") / count(col("_val")) / lit(1e12)).as("_m2"))
+        Exact.fixedMean(Exact.fpq(xd, 12), count(col("_val")), 12).as("_m"),
+        Exact.fixedMean(Exact.fpq(xd * xd, 12), count(col("_val")), 12).as("_m2"))
       .withColumn("_var", greatest(col("_m2") - col("_m") * col("_m"), lit(0.0)))
     val df2 = perDim.groupBy(groupBy.head, groupBy.tail: _*)
       .agg(max(col("_n")).as("n_vecs"),
@@ -581,22 +559,16 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
         transform(sort_array(collect_list(struct(col("_pos").as("p"), col("_var").as("v")))),
           s => s.getField("v")).as("variance"))
     val gs = groupBy.mkString(", ")
-    val vq = graft.core.Naming.quoteId(vecCol)
+    val xS = "CAST(_val AS DOUBLE)"
+    val mS = Exact.fixedMeanSql(Exact.fpqSql(xS, 12), "COUNT(_val)", 12)
+    val m2S = Exact.fixedMeanSql(Exact.fpqSql(s"$xS * $xS", 12), "COUNT(_val)", 12)
     c.next("embedding_moments", df2, Some(
       s"SELECT $gs, MAX(_n) AS n_vecs, " +
         "transform(sort_array(collect_list(struct(_pos, _m))), s -> s._m) AS mean, " +
         "transform(sort_array(collect_list(struct(_pos, _var))), s -> s._var) AS variance FROM (" +
         s"SELECT $gs, _pos, COUNT(_val) AS _n, " +
-        "CAST(SUM(CAST(FLOOR(CAST(_val AS DOUBLE) * 1e12 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / COUNT(_val) / 1e12 AS _m, " +
-        "GREATEST(CAST(SUM(CAST(FLOOR(CAST(_val AS DOUBLE) * CAST(_val AS DOUBLE) * 1e12 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / COUNT(_val) / 1e12 - " +
-        "(CAST(SUM(CAST(FLOOR(CAST(_val AS DOUBLE) * 1e12 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / COUNT(_val) / 1e12) * " +
-        "(CAST(SUM(CAST(FLOOR(CAST(_val AS DOUBLE) * 1e12 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / COUNT(_val) / 1e12), 0.0) AS _var FROM (" +
-        s"SELECT * FROM {{source}} LATERAL VIEW posexplode($vq) _t AS _pos, _val " +
-        s"WHERE $vq IS NOT NULL AND " +
-        s"NOT coalesce(array_contains($vq, float('NaN')), false) AND " +
-        s"NOT coalesce(array_contains($vq, float('Infinity')), false) AND " +
-        s"NOT coalesce(array_contains($vq, float('-Infinity')), false)" +
-        s") GROUP BY $gs, _pos) GROUP BY $gs"))
+        s"$mS AS _m, GREATEST($m2S - ($mS) * ($mS), 0.0) AS _var FROM (" +
+        s"${SimilarityOps.finiteElementsSql(vecCol)}) GROUP BY $gs, _pos) GROUP BY $gs"))
   }
 
   /** embedding_drift(other, group_by): compare two [[embeddingMoments]]
@@ -612,7 +584,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     * The moment frames are group-cardinality tiny (≤ #groups rows, d-wide
     * arrays), so this is a census-on-census join: both sides explode to
     * (group, dim) and meet in ONE null-safe equi-join (the
-    * psiTermsGrouped `<=>` regime — null group values pair, never drop);
+    * psiTerms `<=>` regime — null group values pair, never drop);
     * only groups present in BOTH snapshots report (drift against nothing
     * is not drift — new/retired groups show up in the corpus censuses).
     * Quantization rides the already-deterministic moment chains (both
@@ -645,10 +617,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       .withColumn("_rvv", col("_rvar")(col("_rpos"))).drop("_rvar")
     val cond = groupBy.map(n => col(n) <=> col(s"_r_$n")).reduce(_ && _) &&
       col("pos") === col("_rpos")
-    val gap = floor((col("_lm") - col("_rm")) * lit(1e9) + lit(0.5))
-      .cast("long").as("mean_gap_fp")
-    val vr = when(col("_rvv") > 0,
-      floor(col("_lvv") / col("_rvv") * lit(1e6) + lit(0.5)).cast("long"))
+    val gap = Exact.fpq(col("_lm") - col("_rm"), 9).as("mean_gap_fp")
+    val vr = when(col("_rvv") > 0, Exact.fpq(col("_lvv") / col("_rvv")))
       .as("var_ratio_fp")
     val df2 = l.join(r, cond)
       .select(gcols ++ Seq(col("pos"), col("n_left"), col("n_right"), gap, vr): _*)
@@ -666,8 +636,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       .mkString(" AND ")
     c.next("embedding_drift", df2, Some(
       s"SELECT ${gq.map(n => s"l.$n").mkString(", ")}, l.pos, n_left, n_right, " +
-        "CAST(FLOOR((_lm - _rm) * 1e9 + 0.5) AS BIGINT) AS mean_gap_fp, " +
-        "CASE WHEN _rvv > 0 THEN CAST(FLOOR(_lvv / _rvv * 1e6 + 0.5) AS BIGINT) END AS var_ratio_fp " +
+        s"${Exact.fpqSql("(_lm - _rm)", 9)} AS mean_gap_fp, " +
+        s"CASE WHEN _rvv > 0 THEN ${Exact.fpqSql("_lvv / _rvv")} END AS var_ratio_fp " +
         s"FROM ($lSql) l JOIN ($rSql) r ON $onSql"))
   }
 
@@ -711,7 +681,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     Seq("n", "intra_fp", "sil_fp").foreach(n =>
       require(n == clusterCol || !c.df.columns.contains(n),
         s"cluster_eval: column '$n' collides with an output name — rename first"))
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val v = col(vecCol)
     val nrm = sqrt(Exact.dot(v, v))
     val usable = c.df.where(col(clusterCol).isNotNull &&
@@ -719,11 +688,11 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     // scan 1: exact per-cluster centroids (the centroidByGroup decimal
     // fold), collected bounded — limit(K+1) caps the driver transfer so
     // an over-cardinality cluster column refuses instead of OOMing
-    val xx = floor(col("_val").cast("double") * lit(1e12) + lit(0.5)).cast("long")
+    val xx = Exact.fpq(col("_val").cast("double"), 12)
     val centRows = usable
       .select(col(clusterCol).as("_ce_k"), posexplode(v).as(Seq("_pos", "_val")))
       .groupBy("_ce_k", "_pos")
-      .agg((sum(xx.cast(Dec)).cast("double") / count(xx) / lit(1e12)).as("_v"),
+      .agg(Exact.fixedMean(xx, count(xx), 12).as("_v"),
         count(xx).as("_n"))
       .groupBy("_ce_k")
       .agg(transform(
@@ -745,7 +714,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     // oracle can replay them: Σ round(c_i² · 1e12) / 1e12, then sqrt
     val centNorms = centers.map { cv =>
       var acc = 0L
-      cv.foreach { x => acc += math.floor(x * x * 1e12 + 0.5).toLong }
+      cv.foreach { x => acc += Exact.fpqHost(x * x, 12) }
       math.sqrt(acc.toDouble / 1e12)
     }
     centNorms.zipWithIndex.foreach { case (cn, i) =>
@@ -754,7 +723,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
         "cosine geometry is undefined; evaluate in euclidean space or " +
         "drop the degenerate cluster")
     }
-    import graft.ops.AggOps.fpq
+    import Exact.fpq
     // scan 2: K literal-centroid distances per row, own/other split by the
     // when-chain cluster index (bounded K, driven by the same ordering)
     val dists = SimilarityOps.centroidDists(v, nrm, centers, centNorms)
@@ -1627,6 +1596,28 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
 }
 
 object SimilarityOps {
+  /** (groups…, `_pos`, `_val`) for every element of the non-null vectors
+    * that carry no NaN/±Inf (a poisoned vector is excluded WHOLE) — the
+    * per-dimension fold input of centroidByGroup and embeddingMoments.
+    */
+  private[ext] def finiteElements(df: DataFrame, groupBy: Seq[String],
+                                  vecCol: String): DataFrame = {
+    val v = col(vecCol)
+    val bad = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .map(x => coalesce(array_contains(v, lit(x)), lit(false)))
+      .reduce(_ || _)
+    df.where(v.isNotNull && !bad)
+      .select(groupBy.map(col) :+ posexplode(v).as(Seq("_pos", "_val")): _*)
+  }
+
+  /** [[finiteElements]] as SQL over `{{source}}`. */
+  private[ext] def finiteElementsSql(vecCol: String): String = {
+    val vq = graft.core.Naming.quoteId(vecCol)
+    s"SELECT * FROM {{source}} LATERAL VIEW posexplode($vq) _t AS _pos, _val WHERE $vq IS NOT NULL AND " +
+      Seq("NaN", "Infinity", "-Infinity")
+        .map(f => s"NOT coalesce(array_contains($vq, float('$f')), false)").mkString(" AND ")
+  }
+
   /** Broadcast-hint the IVF probe frame only when the BATCH side's
     * plan-statistics size (× nprobe replication) says it fits: probe rows
     * carry the full query vector replicated `nprobe` times, so an

@@ -804,7 +804,7 @@ final class TextAnalysisOps(private val c: Chain) extends AnyVal {
           }.mkString(", ")
           val qtSql = s"SELECT query_id, term, _qtf FROM (VALUES $vals) AS _q(query_id, term, _qtf)"
           val scSql = s"SELECT query_id, doc_id, " +
-            s"CAST(SUM(CAST(_qtf * tfidf AS DECIMAL(38,4))) AS DOUBLE) AS score " +
+            s"${graft.core.Exact.sumSql("_qtf * tfidf")} AS score " +
             s"FROM ($qtSql) JOIN ($tfidfFrag) USING (term) GROUP BY query_id, doc_id"
           s"SELECT query_id, doc_id, score, rank FROM (SELECT *, " +
             s"CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id ASC) AS INT) " +

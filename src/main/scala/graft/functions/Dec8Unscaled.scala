@@ -7,26 +7,45 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** `unscaled(CAST(x AS DECIMAL(38,8)))` as one codegen'd long-valued
   * expression — the per-row conversion behind
-  * [[graft.core.Exact.splitDecimalSum8]]'s fast-cast mode. The decimal
-  * cast's semantics are Java's shortest-decimal rendering rounded
-  * HALF_UP at 8 fractional digits (`BigDecimal.valueOf(x).setScale(8,
-  * HALF_UP)`), which normally costs a `Double.toString` + BigDecimal
-  * parse + setScale per row per sum. [[Dec8Unscaled.unscaled8]] takes a
-  * pure-arithmetic fast path when the decision is PROVABLY unambiguous:
-  * with u = x·10⁸ (one rounding, error ≤ ulp(u)/2) and the shortest
-  * rendering D(x) within ulp(x)/2 of x (so |D(x)·10⁸ − u| ≤ ~3·ulp(u)),
-  * any u farther than 8·ulp(u) from the nearest half-integer boundary
-  * rounds to the same integer as D(x)·10⁸ — ties, near-ties and
-  * |u| > 2⁵⁰ (where ulp(u) ≥ 1/8 makes every distance ambiguous) fall
-  * back to the exact BigDecimal computation. The fallback is also the
-  * loud guard: an |x| whose unscaled exceeds a long throws
-  * (`longValueExact`), exactly like Spark's `UnscaledValue`; callers
-  * gate on [[graft.core.Exact.splitSumSafe]] so it never fires.
+  * [[graft.core.Exact.splitDecimalSum8]]. The decimal cast's semantics
+  * are Java's shortest-decimal rendering rounded HALF_UP at 8
+  * fractional digits (`BigDecimal.valueOf(x).setScale(8, HALF_UP)`),
+  * which normally costs a `Double.toString` + BigDecimal parse +
+  * setScale per row per sum. [[Dec8Unscaled.unscaled8]] takes a
+  * pure-arithmetic fast path only when the decision is PROVABLY the
+  * cast's, and falls back to that exact BigDecimal computation otherwise.
   *
+  * Margin derivation. Let p = x·10⁸ (exact), u = fl(p) the computed
+  * product, D the shortest decimal rendering of x, and r = rint(u).
+  *  1. |u − p| ≤ ulp(u)/2 (one round-to-nearest multiplication).
+  *  2. D parses back to x, so |D − x| ≤ ulp(x)/2, i.e.
+  *     |D·10⁸ − p| ≤ 10⁸·ulp(x)/2.
+  *  3. With 2^e ≤ |x| < 2^(e+1): |p| ≥ 10⁸·2^e > 2^(e+26), so
+  *     |u| ≥ 2^(e+26) and ulp(u) ≥ 2^(e+26−52), while
+  *     10⁸·ulp(x) = (10⁸/2²⁶)·2^(e+26−52) ≤ 1.4902·ulp(u).
+  *  4. Hence |D·10⁸ − u| ≤ (0.7451 + 0.5)·ulp(u) < 1.25·ulp(u).
+  *  5. `distToHalf` = 0.5 − |u − r| is computed exactly for |u| ≥ 1/4
+  *     (u − r and the subtraction from 0.5 are exact there: Sterbenz,
+  *     and every operand a multiple of ulp(u)); below 1/4 it exceeds
+  *     1/4 while |D·10⁸ − u| is orders of magnitude smaller (the bound
+  *     of 4. or, for subnormal x, 10⁸·2⁻¹⁰⁷⁴), so the choice is right.
+  *  6. If distToHalf > |D·10⁸ − u|, D·10⁸ lies in the same open
+  *     interval (r − ½, r + ½) as u, so HALF_UP rounds it to r — no tie
+  *     is reachable, and the tie rule never matters.
+  * The test `distToHalf > 8·ulp(|u|)` therefore holds a 6.4× margin over
+  * the 1.25·ulp bound. Every tie, near-tie and |u| > 2⁵⁰ (where ulp(u)
+  * ≥ 1/4 makes the test unsatisfiable anyway) takes the fallback. The
+  * margin must not shrink below the bound without re-deriving it, and
+  * Round18Spec's exhaustive and randomized `unscaled8` fuzz against the
+  * BigDecimal arithmetic is a required gate for ANY edit here.
+  *
+  * The fallback is also the loud guard: an |x| whose unscaled exceeds a
+  * long throws (`longValueExact`), exactly like Spark's `UnscaledValue`;
+  * callers gate on [[graft.core.Exact.splitSumSafe]] so it never fires.
   * ONLY valid under that probe: inputs are null or finite (the corr
   * masks null-out NaN, and an Inf in a column fails its probe bound so
   * the caller never builds this expression for it). Equality with the
-  * cast-based path is pinned bitwise over adversarial and randomized
+  * decimal sum is pinned bitwise over adversarial and randomized
   * fixtures (Round18Spec), including exact half-boundary decimals.
   */
 case class Dec8Unscaled(child: Expression)
@@ -53,7 +72,7 @@ case class Dec8Unscaled(child: Expression)
 object Dec8Unscaled {
   private val Cap = (1L << 50).toDouble
 
-  /** See the class doc for the proof sketch. `x` must be finite. */
+  /** See the class doc for the margin derivation. `x` must be finite. */
   def unscaled8(x: Double): Long = {
     val u = x * 1e8
     val au = math.abs(u)

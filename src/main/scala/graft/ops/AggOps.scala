@@ -47,37 +47,18 @@ private[graft] object AggFns {
   def sqlText(fn: String, colName: String, dt: DataType): String = {
     val floating = Exact.isFloating(dt)
     fn.toUpperCase match {
-      case "SUM" if floating =>
-        s"CAST(SUM(CAST($colName AS DECIMAL(38,${Exact.Scale}))) AS DOUBLE)"
-      case "AVG" | "MEAN" if floating =>
-        // COUNT over the same decimal cast the sum accumulates: NaN casts
-        // to null and leaves numerator and denominator together (the
-        // Exact.avg contract — COUNT(col) would count NaN and bias low)
-        s"CAST(SUM(CAST($colName AS DECIMAL(38,${Exact.Scale}))) AS DOUBLE) / " +
-          s"COUNT(CAST($colName AS DECIMAL(38,${Exact.Scale})))"
+      case "SUM" if floating => Exact.sumSql(colName)
+      // COUNT over the same decimal cast the sum accumulates: NaN casts
+      // to null and leaves numerator and denominator together (the
+      // Exact.avg contract — COUNT(col) would count NaN and bias low)
+      case "AVG" | "MEAN" if floating => Exact.avgSql(colName)
       case "AVG" | "MEAN" => s"AVG($colName)"
-      case "STDDEV" | "STD" | "STDDEV_SAMP" if floating =>
-        // spelled out through the same decimal accumulation as the column
-        // face (Exact.stddev): a bare STDDEV(double) is accumulation-order
-        // dependent AND propagates NaN into the whole group's statistic.
-        // n and Sx gate on the x² cast like the column face, so a row
-        // whose square overflows DECIMAL(38,8) (|x| ≳ 1e15) leaves all
-        // three terms together instead of skewing a finite-looking result
-        val xxC = s"CAST($colName * $colName AS DECIMAL(38,8))"
-        val sx = s"CAST(SUM(CASE WHEN $xxC IS NOT NULL THEN " +
-          s"CAST($colName AS DECIMAL(38,${Exact.Scale})) END) AS DOUBLE)"
-        val sxx = s"CAST(SUM($xxC) AS DOUBLE)"
-        val n = s"CAST(COUNT($xxC) AS DOUBLE)"
-        s"SQRT(($sxx - $sx * $sx / $n) / ($n - 1.0))"
+      // spelled out through the same gated decimal moments as the column
+      // face (Exact.stddev): a bare STDDEV(double) is accumulation-order
+      // dependent AND propagates NaN into the whole group's statistic
+      case "STDDEV" | "STD" | "STDDEV_SAMP" if floating => Exact.momentsSql(colName).stddev
       case "STDDEV" | "STD" | "STDDEV_SAMP" => s"STDDEV($colName)"
-      case "VAR" | "VARIANCE" | "VAR_SAMP" if floating =>
-        // the STDDEV spelled-out form minus the SQRT — same gates
-        val xxC = s"CAST($colName * $colName AS DECIMAL(38,8))"
-        val sx = s"CAST(SUM(CASE WHEN $xxC IS NOT NULL THEN " +
-          s"CAST($colName AS DECIMAL(38,${Exact.Scale})) END) AS DOUBLE)"
-        val sxx = s"CAST(SUM($xxC) AS DOUBLE)"
-        val n = s"CAST(COUNT($xxC) AS DOUBLE)"
-        s"(($sxx - $sx * $sx / $n) / ($n - 1.0))"
+      case "VAR" | "VARIANCE" | "VAR_SAMP" if floating => Exact.momentsSql(colName).variance
       case "VAR" | "VARIANCE" | "VAR_SAMP" => s"VAR_SAMP($colName)"
       case "COUNT_DISTINCT" | "COUNTDISTINCT" => s"COUNT(DISTINCT $colName)"
       case "MEDIAN" if floating =>
@@ -556,20 +537,9 @@ final class AggOps(private val c: Chain) extends AnyVal {
       val cn = Naming.quoteId(f.name)
       val numeric = f.dataType.isInstanceOf[NumericType]
       val x = s"CAST($cn AS DOUBLE)"
-      val sx = s"CAST(SUM(CAST($x AS DECIMAL(38,${Exact.Scale}))) AS DOUBLE)"
-      // mean: n over the decimal cast the sum accumulates — the Exact.avg
-      // NaN contract (COUNT(col) would count NaN and bias the stats).
-      // std: n AND Sx gate on the x² cast like Exact.stddev, so a row
-      // whose square overflows DECIMAL(38,8) leaves every term together
-      val xxC = s"CAST($x * $x AS DECIMAL(38,8))"
-      val sxStd = s"CAST(SUM(CASE WHEN $xxC IS NOT NULL THEN " +
-        s"CAST($x AS DECIMAL(38,${Exact.Scale})) END) AS DOUBLE)"
-      val sxx = s"CAST(SUM($xxC) AS DOUBLE)"
-      val n = s"CAST(COUNT($xxC) AS DOUBLE)"
-      val mean = if (numeric) s"$sx / COUNT(CAST($x AS DECIMAL(38,${Exact.Scale})))"
-        else "CAST(NULL AS DOUBLE)"
-      val std = if (numeric) s"SQRT(($sxx - $sxStd * $sxStd / $n) / ($n - 1.0))"
-        else "CAST(NULL AS DOUBLE)"
+      // the column face's Exact.avg / Exact.stddev contracts, spelled out
+      val mean = if (numeric) Exact.avgSql(x) else "CAST(NULL AS DOUBLE)"
+      val std = if (numeric) Exact.momentsSql(x).stddev else "CAST(NULL AS DOUBLE)"
       s"SELECT '${f.name}' AS feature, '${f.dataType.simpleString}' AS dtype, " +
         s"COUNT(1) AS row_count, COUNT(1) - COUNT($cn) AS null_count, " +
         s"COUNT(DISTINCT $cn) AS unique_count, " +
@@ -595,10 +565,9 @@ final class AggOps(private val c: Chain) extends AnyVal {
       !isnan(col(x).cast("double")) && !isnan(col(y).cast("double"))
     val xc = when(both, col(x).cast("double"))
     val yc = when(both, col(y).cast("double"))
-    def wide(cc: Column) = sum(cc.cast(DecimalType(38, 8))).cast("double")
     val aggs = Seq(
-      count(xc).as("_n"), wide(xc).as("_sx"), wide(yc).as("_sy"),
-      wide(xc * yc).as("_sxy"), wide(xc * xc).as("_sxx"))
+      count(xc).as("_n"), Exact.sum8(xc).as("_sx"), Exact.sum8(yc).as("_sy"),
+      Exact.sum8(xc * yc).as("_sxy"), Exact.sum8(xc * xc).as("_sxx"))
     val g =
       if (groupBy.isEmpty) c.df.agg(aggs.head, aggs.tail: _*)
       else c.df.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*)
@@ -609,7 +578,6 @@ final class AggOps(private val c: Chain) extends AnyVal {
       .withColumn("slope", slope)
       .withColumn("intercept", (col("_sy") - col("slope") * col("_sx")) / n)
       .select((groupBy.map(col) ++ Seq(col("slope"), col("intercept"), col("_n").as("n"))): _*)
-    def ds8(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(38,8))) AS DOUBLE)"
     val bothSql = s"$x IS NOT NULL AND $y IS NOT NULL AND " +
       s"NOT isnan(CAST($x AS DOUBLE)) AND NOT isnan(CAST($y AS DOUBLE))"
     val gCols = if (groupBy.isEmpty) "" else groupBy.mkString(", ") + ", "
@@ -617,8 +585,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val frag =
       s"SELECT ${gCols}slope, (_sy - slope * _sx) / _nd AS intercept, _n AS n FROM (" +
         s"SELECT ${gCols}(_nd * _sxy - _sx * _sy) / (_nd * _sxx - _sx * _sx) AS slope, _sx, _sy, _nd, _n FROM (" +
-        s"SELECT ${gCols}CAST(COUNT(_x) AS DOUBLE) AS _nd, COUNT(_x) AS _n, ${ds8("_x")} AS _sx, ${ds8("_y")} AS _sy, " +
-        s"${ds8("_x * _y")} AS _sxy, ${ds8("_x * _x")} AS _sxx FROM (" +
+        s"SELECT ${gCols}CAST(COUNT(_x) AS DOUBLE) AS _nd, COUNT(_x) AS _n, ${Exact.sum8Sql("_x")} AS _sx, ${Exact.sum8Sql("_y")} AS _sy, " +
+        s"${Exact.sum8Sql("_x * _y")} AS _sxy, ${Exact.sum8Sql("_x * _x")} AS _sxx FROM (" +
         s"SELECT ${gCols}CASE WHEN $bothSql THEN CAST($x AS DOUBLE) END AS _x, " +
         s"CASE WHEN $bothSql THEN CAST($y AS DOUBLE) END AS _y FROM {{source}})$gBy))"
     c.next("linear_regression", df2, Some(frag))
@@ -657,7 +625,6 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val notNull = (col(y) +: xs.map(col)).map(c0 =>
       c0.isNotNull && !isnan(c0.cast("double"))).reduce(_ && _)
     val base = c.df.where(notNull)
-    def wide8(e: Column) = sum(e.cast(DecimalType(38, 8))).cast("double")
     val feats: Seq[Column] = lit(1.0) +: xs.map(col(_).cast("double"))
     val yc = col(y).cast("double")
     var beta = Array.fill(d)(0.0)
@@ -668,8 +635,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
       val w = greatest(mu * (lit(1.0) - mu), lit(1e-10))
       val z = eta + (yc - mu) / w
       val gramAggs = for { i <- 0 until d; j <- i until d }
-        yield wide8(w * feats(i) * feats(j)).as(s"_g_${i}_$j")
-      val gradAggs = (0 until d).map(i => wide8(w * feats(i) * z).as(s"_b_$i"))
+        yield Exact.sum8(w * feats(i) * feats(j)).as(s"_g_${i}_$j")
+      val gradAggs = (0 until d).map(i => Exact.sum8(w * feats(i) * z).as(s"_b_$i"))
       val aggsAll = (gramAggs ++ gradAggs).toSeq
       val rrow = base.agg(aggsAll.head, aggsAll.tail: _*).head()
       require(!rrow.isNullAt(0),
@@ -779,7 +746,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
       l.isNotNull && !isnan(l)
     val b = least(floor(s * lit(buckets.toDouble)).cast("long"),
       lit((buckets - 1).toLong))
-    val fpl = floor(l * lit(1e6) + lit(0.5)).cast("long")
+    val fpl = Exact.fpq(l)
     val rows = c.df.where(ok)
       .groupBy(b.as("bucket"))
       .agg(count(lit(1)).as("n"), sum(fpl).as("pos_fp"))
@@ -853,7 +820,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val fpOut = when(ok, element_at(calArr, (b + lit(1L)).cast("int")))
     val df2 = c.df
       .withColumn(s"${as}_fp", fpOut)
-      .withColumn(as, col(s"${as}_fp").cast("double") / lit(1e6))
+      .withColumn(as, Exact.fromFixed(col(s"${as}_fp")))
     val cn = Naming.quoteId(scoreCol)
     val sS = s"CAST($cn AS DOUBLE)"
     val okS = s"$sS IS NOT NULL AND NOT isnan($sS) AND $sS >= 0.0 AND $sS <= 1.0"
@@ -862,7 +829,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val arrS = cal.mkString("ARRAY(", "L, ", "L)")
     c.next("isotonic_score", df2, Some(
       s"SELECT *, CASE WHEN $okS THEN element_at($arrS, CAST($bS + 1 AS INT)) END AS ${as}_fp, " +
-        s"CAST(CASE WHEN $okS THEN element_at($arrS, CAST($bS + 1 AS INT)) END AS DOUBLE) / 1e6 AS $as " +
+        s"${Exact.fromFixedSql(s"CASE WHEN $okS THEN element_at($arrS, CAST($bS + 1 AS INT)) END")} AS $as " +
         s"FROM {{source}}"))
   }
 
@@ -1071,7 +1038,6 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val pairs = for {
       i <- cols.indices; j <- cols.indices if i < j
     } yield (i, j)
-    def wide(cc: Column) = sum(cc.cast(DecimalType(38, 8))).cast("double")
     def finite(cn: String) =
       col(cn).isNotNull && !isnan(col(cn).cast("double"))
     val declaredListwise = deletion == "listwise"
@@ -1117,16 +1083,11 @@ final class AggOps(private val c: Chain) extends AnyVal {
       }.toArray
       (total, cols.indices.forall(i => r.getLong(i + 1) == total), ms)
     }
-    // fast per-row conversion (Dec8Unscaled — pure-arithmetic with exact
-    // BigDecimal fallback, valid under the same probe) is on by default;
-    // spark.graft.corr.fastCast=false keeps the cast+UnscaledValue pair
-    val fastCast = c.df.sparkSession.conf
-      .get("spark.graft.corr.fastCast", "true").toBoolean
     def wideWith(p: Option[RangeProbe])(cc: Column, bound: Double): Column =
       p match {
         case Some((total, _, _)) if graft.core.Exact.splitSumSafe(bound, total) =>
-          graft.core.Exact.splitDecimalSum8(cc, fastCast)
-        case _ => wide(cc)
+          Exact.splitDecimalSum8(cc)
+        case _ => Exact.sum8(cc)
       }
     def listwiseAggs(p: Option[RangeProbe]): Seq[Column] = {
       val xs = cols.map(cn => when(allOk, col(cn).cast("double")))
@@ -1249,7 +1210,6 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val df2 = g.select((groupBy.map(col) :+ explode(array(rows: _*)).as("_p")): _*)
       .select((groupBy.map(col) ++ Seq(col("_p.col_a"), col("_p.col_b"),
         col("_p.corr"), col("_p.n"))): _*)
-    def ds8(e: String) = s"CAST(SUM(CAST($e AS DECIMAL(38,8))) AS DOUBLE)"
     val gSel = if (groupBy.isEmpty) "" else groupBy.mkString(", ") + ", "
     val gBy = if (groupBy.isEmpty) "" else s" GROUP BY ${groupBy.mkString(", ")}"
     // the render face mirrors semantics branch-per-pair (correctness face;
@@ -1265,8 +1225,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
       s"SELECT $gSel'$a' AS col_a, '$b' AS col_b, " +
         s"(_nd * _sxy - _sx * _sy) / NULLIF(SQRT(_nd * _sxx - _sx * _sx) * SQRT(_nd * _syy - _sy * _sy), 0) AS corr, " +
         s"_n AS n FROM (SELECT ${gSel}CAST(COUNT(_x) AS DOUBLE) AS _nd, COUNT(_x) AS _n, " +
-        s"${ds8("_x")} AS _sx, ${ds8("_y")} AS _sy, ${ds8("_x * _y")} AS _sxy, " +
-        s"${ds8("_x * _x")} AS _sxx, ${ds8("_y * _y")} AS _syy FROM (" +
+        s"${Exact.sum8Sql("_x")} AS _sx, ${Exact.sum8Sql("_y")} AS _sy, ${Exact.sum8Sql("_x * _y")} AS _sxy, " +
+        s"${Exact.sum8Sql("_x * _x")} AS _sxx, ${Exact.sum8Sql("_y * _y")} AS _syy FROM (" +
         s"SELECT ${gSel}CASE WHEN $bothS THEN CAST($a AS DOUBLE) END AS _x, " +
         s"CASE WHEN $bothS THEN CAST($b AS DOUBLE) END AS _y FROM {{source}})$gBy)"
     }
@@ -1325,7 +1285,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val keptS = s"CASE WHEN $keepS THEN _t_x END"
     c.next("trimmed_mean", df2, Some(
       s"SELECT $gSel CASE WHEN COUNT($keptS) = 0 THEN NULL ELSE " +
-        s"CAST(SUM(CAST($keptS AS DECIMAL(38,4))) AS DOUBLE) / COUNT($keptS) END AS $outName, " +
+        s"${Exact.sumSql(keptS)} / COUNT($keptS) END AS $outName, " +
         s"COUNT($keptS) AS n_kept, MAX(_t_n) AS n FROM (" +
         s"SELECT $gSel$xrS AS _t_x, " +
         s"ROW_NUMBER() OVER ($wp ORDER BY $xrS ASC NULLS LAST) AS _t_rn, " +
@@ -1406,7 +1366,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val gByS = if (groupBy.isEmpty) "" else " GROUP BY " + groupBy.map(g => s"s.$g").mkString(", ")
     c.next("trimmed_mean_sketch", df2, Some(
       s"SELECT ${gSelS}CASE WHEN COUNT($keptS) = 0 THEN NULL ELSE " +
-        s"CAST(SUM(CAST($keptS AS DECIMAL(38,${Exact.Scale}))) AS DOUBLE) / COUNT($keptS) END AS $outName, " +
+        s"${Exact.sumSql(keptS)} / COUNT($keptS) END AS $outName, " +
         s"COUNT($keptS) AS n_kept, COUNT($xrS) AS n FROM {{source}} s $joinSql$gByS"))
   }
 
@@ -1469,27 +1429,19 @@ final class AggOps(private val c: Chain) extends AnyVal {
       if (groupBy.isEmpty)
         c.df.where(ok).groupBy(b.as("bucket"))
           .agg(count(lit(1)).as("_nb"),
-            sum(s.cast(DecimalType(38, 8))).as("_ssumd"),
+            Exact.sum8Decimal(s).as("_ssumd"),
             sum(when(l =!= lit(0.0), 1L).otherwise(0L)).as("_pos"))
       else
         c.df.groupBy((groupBy.map(col) :+ when(ok, b).as("bucket")): _*)
           .agg(count(when(ok, lit(1))).as("_nb"),
-            sum(when(ok, s).cast(DecimalType(38, 8))).as("_ssumd"),
+            Exact.sum8Decimal(when(ok, s)).as("_ssumd"),
             sum(when(ok && l =!= lit(0.0), 1L).otherwise(0L)).as("_pos"))
     val spineB = c.spark.range(buckets).select(col("id").as("bucket"))
     val frame =
       if (groupBy.isEmpty)
         spineB.join(counts0, Seq("bucket"), "left")
-          .select(Seq(
-            col("bucket"),
-            (col("bucket") * lit(w)).as("bucket_lo"),
-            ((col("bucket") + lit(1L)) * lit(w)).as("bucket_hi"),
-            coalesce(col("_nb"), lit(0L)).as("n"),
-            when(col("_nb") > 0, col("_ssumd").cast("double") / col("_nb"))
-              .otherwise(lit(null).cast("double")).as("score_avg"),
-            when(col("_nb") > 0, col("_pos").cast("double") / col("_nb").cast("double"))
-              .otherwise(lit(null).cast("double")).as("pos_rate"),
-            col("_ssumd"), col("_pos")): _*)
+          .select((col("bucket") +: AggOps.calibrationStats(col("bucket"),
+            col("_nb"), col("_ssumd"), col("_pos"), w)) :+ col("_ssumd") :+ col("_pos"): _*)
       else {
         // GROUPED spine padding folds into the aggregate chain itself:
         // one more bounded aggregate rolls each group's bucket rows into
@@ -1509,55 +1461,12 @@ final class AggOps(private val c: Chain) extends AnyVal {
           .select((groupBy.map(col) :+
             explode(sequence(lit(0L), lit((buckets - 1).toLong))).as("bucket") :+
             col("_m")): _*)
-          .select((groupBy.map(col) ++ Seq(
-            col("bucket"),
-            (col("bucket") * lit(w)).as("bucket_lo"),
-            ((col("bucket") + lit(1L)) * lit(w)).as("bucket_hi"),
-            coalesce(e.getField("_nb"), lit(0L)).as("n"),
-            when(e.getField("_nb") > 0,
-              e.getField("_ssumd").cast("double") / e.getField("_nb"))
-              .otherwise(lit(null).cast("double")).as("score_avg"),
-            when(e.getField("_nb") > 0,
-              e.getField("_pos").cast("double") / e.getField("_nb").cast("double"))
-              .otherwise(lit(null).cast("double")).as("pos_rate"),
+          .select((groupBy.map(col) ++ (col("bucket") +: AggOps.calibrationStats(col("bucket"),
+            e.getField("_nb"), e.getField("_ssumd"), e.getField("_pos"), w)) ++ Seq(
             e.getField("_ssumd").as("_ssumd"),
             e.getField("_pos").as("_pos"))): _*)
       }
-    // ece over the BOUNDED bucket frame: exact decimal bucket terms
-    // |pos − ssum| (no floating-point step), exact decimal sum, one
-    // closing double division — null when the group has no valid rows
-    // (N = 0: the zero-divide an ANSI runtime would otherwise abort on).
-    // Operands cast to DECIMAL(29,8) — both are ≤ n_b ≤ Long.Max < 1e21,
-    // so the cast can never overflow, and the (30,8) difference keeps
-    // scale 8 on BOTH engines (a (38,8)−(38,8) difference overflows
-    // Spark's 38-digit cap and silently truncates the scale to 7,
-    // diverging from DuckDB in the 10th decimal)
-    val term = when(col("n") > 0,
-      abs(col("_pos").cast(DecimalType(29, 8)) -
-        col("_ssumd").cast(DecimalType(29, 8))))
-      .otherwise(lit(BigDecimal(0)).cast(DecimalType(30, 8)))
-    // grouped N/ece close with a window over the bounded frame — the
-    // frame keeps ONE consumer (an agg+join-back would duplicate its
-    // whole lineage, and column pruning tailors each copy enough that
-    // exchange reuse cannot merge the corpus scans back together); the
-    // window's partitions are ≤ buckets rows each and its required
-    // distribution is already satisfied by the upstream aggregate.
-    // Ungrouped, a global window would be a single-task stage (the shape
-    // ScaleLint rightly errors on), so the one-row total broadcasts onto
-    // the Range-spine frame instead — both sides bounded.
-    val withEce =
-      if (groupBy.isEmpty) {
-        val eceAggs = Seq(sum(term).as("_q"), sum(col("n")).as("_N"))
-        frame.crossJoin(broadcast(frame.agg(eceAggs.head, eceAggs.tail: _*)))
-      } else {
-        val wG = Window.partitionBy(groupBy.map(col): _*)
-        frame.withColumn("_q", sum(term).over(wG))
-          .withColumn("_N", sum(col("n")).over(wG))
-      }
-    val df2 = withEce
-      .withColumn("ece", when(col("_N") === 0L, lit(null).cast("double"))
-        .otherwise(col("_q").cast("double") / col("_N").cast("double")))
-      .drop("_q", "_N", "_ssumd", "_pos")
+    val df2 = AggOps.withCalibrationEce(frame, groupBy, Seq("_ssumd", "_pos"))
     val wS = s"CAST('$w' AS DOUBLE)"
     val sS = s"CAST(${Naming.quoteId(scoreCol)} AS DOUBLE)"
     val lS = s"CAST(${Naming.quoteId(labelCol)} AS DOUBLE)"
@@ -1568,7 +1477,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val gSel = if (groupBy.isEmpty) "" else groupBy.mkString(", ") + ", "
     val gBy = if (groupBy.isEmpty) "" else ", " + groupBy.mkString(", ")
     val cntSql = s"SELECT ${gSel}$bS AS bucket, COUNT(*) AS _nb, " +
-      s"SUM(CAST($sS AS DECIMAL(38,8))) AS _ssumd, " +
+      s"${Exact.sum8DecimalSql(sS)} AS _ssumd, " +
       s"SUM(CASE WHEN $lS <> CAST('0.0' AS DOUBLE) THEN 1 ELSE 0 END) AS _pos " +
       s"FROM {{source}} WHERE $okS GROUP BY bucket$gBy"
     val statsSql =
@@ -1668,20 +1577,20 @@ final class AggOps(private val c: Chain) extends AnyVal {
       coalesce(col("_o"), lit(0L)).as("cnt"), e.as("expected"),
       term.as("chi2_term"),
       ((col("_ka") - 1) * (col("_kb") - 1)).as("dof"))
-    val tot = t1.agg((sum(floor(col("chi2_term") * lit(1e6) + lit(0.5))
-      .cast("long").cast(DecimalType(38, 0))).cast("double") / lit(1e6)).as("chi2_total"))
+    val tot = t1.agg(Exact.fromFixed(Exact.fixedSum(Exact.fpq(col("chi2_term")))).as("chi2_total"))
     val df2 = t1.crossJoin(broadcast(tot))
       .select("value_a", "value_b", "cnt", "expected", "chi2_term",
         "chi2_total", "dof")
     val bothS = s"$colA IS NOT NULL AND $colB IS NOT NULL"
     def vS(cn: String) = s"CAST($cn AS STRING)"
+    val eS = "(CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE))"
+    val dS = s"(CAST(COALESCE(_o, 0) AS DOUBLE) - CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE))"
+    val termS = s"$dS * $dS / $eS"
     c.next("cross_table", df2, Some(
       s"SELECT value_a, value_b, cnt, expected, chi2_term, chi2_total, dof FROM (" +
         s"SELECT value_a, value_b, COALESCE(_o, 0) AS cnt, " +
         s"CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE) AS expected, " +
-        s"(CAST(COALESCE(_o, 0) AS DOUBLE) - CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE)) * " +
-        s"(CAST(COALESCE(_o, 0) AS DOUBLE) - CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE)) / " +
-        s"(CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE)) AS chi2_term, " +
+        s"$termS AS chi2_term, " +
         s"(_ka - 1) * (_kb - 1) AS dof FROM " +
         s"(SELECT ${vS(colA)} AS value_a, COUNT(*) AS _ra FROM {{source}} WHERE $bothS GROUP BY 1) " +
         s"CROSS JOIN (SELECT COUNT(*) AS _n, COUNT(DISTINCT ${vS(colA)}) AS _ka, " +
@@ -1689,10 +1598,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
         s"JOIN (SELECT ${vS(colB)} AS value_b, COUNT(*) AS _cb FROM {{source}} WHERE $bothS GROUP BY 1) ON TRUE " +
         s"LEFT JOIN (SELECT ${vS(colA)} AS value_a, ${vS(colB)} AS value_b, COUNT(*) AS _o " +
         s"FROM {{source}} WHERE $bothS GROUP BY 1, 2) USING (value_a, value_b)) " +
-        s"CROSS JOIN (SELECT CAST(SUM(CAST(CAST(FLOOR((" +
-        s"(CAST(COALESCE(_o, 0) AS DOUBLE) - CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE)) * " +
-        s"(CAST(COALESCE(_o, 0) AS DOUBLE) - CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE)) / " +
-        s"(CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS DECIMAL(38,0))) AS DOUBLE) / 1000000 AS chi2_total FROM " +
+        s"CROSS JOIN (SELECT ${Exact.fromFixedSql(Exact.fixedSumSql(Exact.fpqSql(s"($termS)")))} AS chi2_total FROM " +
         s"(SELECT ${vS(colA)} AS value_a, COUNT(*) AS _ra FROM {{source}} WHERE $bothS GROUP BY 1) " +
         s"CROSS JOIN (SELECT COUNT(*) AS _n FROM {{source}} WHERE $bothS) " +
         s"JOIN (SELECT ${vS(colB)} AS value_b, COUNT(*) AS _cb FROM {{source}} WHERE $bothS GROUP BY 1) ON TRUE " +
@@ -1738,8 +1644,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val vbS = s"CAST(${Naming.quoteId(colB)} AS STRING)"
     val gSel = if (groupBy.isEmpty) "" else groupBy.mkString(", ") + ", "
     val gBy = if (groupBy.isEmpty) "" else ", " + groupBy.mkString(", ")
-    val peTermS = "CAST(FLOOR((CAST(n_a AS DOUBLE) / CAST(n AS DOUBLE)) * " +
-      "(CAST(n_b AS DOUBLE) / CAST(n AS DOUBLE)) * 1000000000000 + 0.5) AS BIGINT)"
+    val peS = Exact.fromFixedSql(Exact.fixedSumSql(Exact.fpqSql(
+      "(CAST(n_a AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(n_b AS DOUBLE) / CAST(n AS DOUBLE))", 12)), 12)
     val sqlFace =
       if (groupBy.isEmpty) {
         val clS = s"SELECT label, COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b, " +
@@ -1748,8 +1654,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
           s"FULL JOIN (SELECT $vbS AS label, COUNT(*) AS n_b FROM {{source}} WHERE $bothS GROUP BY label) USING (label) " +
           s"LEFT JOIN (SELECT $vaS AS label, COUNT(*) AS n_agree FROM {{source}} WHERE $bothS AND $vaS = $vbS GROUP BY label) USING (label)"
         val totS = s"SELECT COUNT(*) AS n FROM {{source}} WHERE $bothS"
-        val stS = s"SELECT SUM(n_agree) AS _agree, CAST(SUM(CAST($peTermS AS DECIMAL(38,0))) AS DOUBLE) / " +
-          s"1000000000000 AS _pe FROM ($clS) CROSS JOIN ($totS)"
+        val stS = s"SELECT SUM(n_agree) AS _agree, $peS AS _pe FROM ($clS) CROSS JOIN ($totS)"
         val poS = "CAST(_agree AS DOUBLE) / CAST(n AS DOUBLE)"
         s"SELECT label, n_a, n_b, n_agree, $poS AS po, _pe AS pe, " +
           s"CASE WHEN 1.0 - _pe = 0.0 THEN NULL ELSE ($poS - _pe) / (1.0 - _pe) END AS kappa, n " +
@@ -1773,8 +1678,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
         val totS = s"SELECT ${gSel}COUNT(*) AS n FROM {{source}} WHERE $bothS " +
           s"GROUP BY ${groupBy.mkString(", ")}"
         val stS = s"SELECT ${groupBy.map(g => s"cl2.$g").mkString(", ")}, " +
-          s"SUM(n_agree) AS _agree, CAST(SUM(CAST($peTermS AS DECIMAL(38,0))) AS DOUBLE) / " +
-          s"1000000000000 AS _pe FROM ($clS) cl2 JOIN ($totS) t2 ON ${nsOn("cl2", "t2")} " +
+          s"SUM(n_agree) AS _agree, $peS AS _pe FROM ($clS) cl2 JOIN ($totS) t2 ON ${nsOn("cl2", "t2")} " +
           s"GROUP BY ${groupBy.map(g => s"cl2.$g").mkString(", ")}"
         val poS = "CAST(st._agree AS DOUBLE) / CAST(t.n AS DOUBLE)"
         s"SELECT ${groupBy.map(g => s"cl.$g").mkString(", ")}, cl.label, cl.n_a, cl.n_b, cl.n_agree, " +
@@ -1840,16 +1744,15 @@ final class AggOps(private val c: Chain) extends AnyVal {
       !isnan(col(valueCol).cast("double")) && !isnan(col(weightCol).cast("double"))
     val xc = when(both, col(valueCol).cast("double"))
     val wc = when(both, col(weightCol).cast("double"))
-    def fp(cc: Column) =
-      sum(floor(cc * lit(1e6) + lit(0.5)).cast("long").cast(DecimalType(38, 0)))
+    def fp(cc: Column) = Exact.fixedSum(Exact.fpq(cc))
     val aggs = Seq(fp(wc * xc).as("_swxfp"), fp(wc).as("_swfp"), count(xc).as("n"))
     val g =
       if (groupBy.isEmpty) c.df.agg(aggs.head, aggs.tail: _*)
       else c.df.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val wavg = Naming.agg(valueCol, "wavg")
     val wsum = Naming.agg(weightCol, "wsum")
-    val swx = col("_swxfp").cast("double") / lit(1e6)
-    val sw = col("_swfp").cast("double") / lit(1e6)
+    val swx = Exact.fromFixed(col("_swxfp"))
+    val sw = Exact.fromFixed(col("_swfp"))
     // a group whose present weights sum to exactly 0 (all-zero weights,
     // or canceling signed ones) would hit ANSI DIVIDE_BY_ZERO — surface
     // a null wavg instead (NULLIF in the render face)
@@ -1857,16 +1760,14 @@ final class AggOps(private val c: Chain) extends AnyVal {
       when(col("_swfp") === lit(0).cast(DecimalType(38, 0)),
         lit(null).cast("double")).otherwise(swx / sw).as(wavg),
       sw.as(wsum), col("n"))): _*)
-    def fpS(e: String) =
-      s"SUM(CAST(CAST(FLOOR(($e) * CAST('1000000.0' AS DOUBLE) + 0.5) AS BIGINT) AS DECIMAL(38,0)))"
-    val scaleS = "CAST('1000000.0' AS DOUBLE)"
+    def fpS(e: String) = Exact.fixedSumSql(Exact.fpqSql(s"($e)"))
     val bothS = s"$valueCol IS NOT NULL AND $weightCol IS NOT NULL AND " +
       s"NOT isnan(CAST($valueCol AS DOUBLE)) AND NOT isnan(CAST($weightCol AS DOUBLE))"
     val gSel = if (groupBy.isEmpty) "" else groupBy.mkString(", ") + ", "
     val gBy = if (groupBy.isEmpty) "" else s" GROUP BY ${groupBy.mkString(", ")}"
     c.next("weighted_agg", df2, Some(
-      s"SELECT $gSel(CAST(_swxfp AS DOUBLE) / $scaleS) / NULLIF(CAST(_swfp AS DOUBLE) / $scaleS, 0) AS $wavg, " +
-        s"CAST(_swfp AS DOUBLE) / $scaleS AS $wsum, n FROM (" +
+      s"SELECT $gSel(${Exact.fromFixedSql("_swxfp")}) / NULLIF(${Exact.fromFixedSql("_swfp")}, 0) AS $wavg, " +
+        s"${Exact.fromFixedSql("_swfp")} AS $wsum, n FROM (" +
         s"SELECT ${gSel}${fpS("_w * _x")} AS _swxfp, ${fpS("_w")} AS _swfp, COUNT(_x) AS n FROM (" +
         s"SELECT ${gSel}CASE WHEN $bothS THEN CAST($valueCol AS DOUBLE) END AS _x, " +
         s"CASE WHEN $bothS THEN CAST($weightCol AS DOUBLE) END AS _w FROM {{source}})$gBy)"))
@@ -2020,19 +1921,17 @@ final class AggOps(private val c: Chain) extends AnyVal {
       .where(col("_v").isNotNull)
     val vpart = groupBy.map(col) ++ Seq(col("_c"), col("_v"))
     val counts = melted.groupBy(vpart: _*).agg(count(lit(1)).as("_cnt"))
-    def fpLn(x: Column) = floor(x * log(x) * lit(1e6) + lit(0.5)).cast("long")
     val g = counts.groupBy((groupBy.map(col) :+ col("_c")): _*).agg(
       sum(col("_cnt")).as("n"),
       count(lit(1)).as("n_distinct"),
-      sum(fpLn(col("_cnt").cast("double")).cast(DecimalType(38, 0))).as("_sclnc"),
+      AggOps.slnSum(col("_cnt")).as("_sclnc"),
       // cast each factor to DECIMAL(19,0) BEFORE multiplying: the long
       // product would overflow silently past ~3e9 rows per value, and
       // 19×19 → DECIMAL(38,0) types identically in every ANSI engine
       sum(col("_cnt").cast(DecimalType(19, 0)) *
         col("_cnt").cast(DecimalType(19, 0))).as("_sc2"))
     val nD = col("n").cast("double")
-    val entropy = (floor(log(nD) * lit(1e6) + lit(0.5)) / lit(1e6)) -
-      (col("_sclnc").cast("double") / lit(1e6)) / nD
+    val entropy = AggOps.entropy(nD, col("_sclnc"))
     val simpson = lit(1.0) - col("_sc2").cast("double") / (nD * nD)
     val df2 = g.select((groupBy.map(col) ++ Seq(col("_c").as("col_name"),
       col("n"), col("n_distinct"), entropy.as("entropy"), simpson.as("simpson"))): _*)
@@ -2042,8 +1941,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val branches = cols.map { cn =>
       s"SELECT $gSel'$cn' AS col_name, CAST(SUM(_cnt) AS BIGINT) AS n, " +
         s"COUNT(*) AS n_distinct, " +
-        s"FLOOR(LN(CAST(SUM(_cnt) AS DOUBLE)) * 1000000 + 0.5) / 1000000 - " +
-        s"(CAST(SUM(CAST(CAST(FLOOR(CAST(_cnt AS DOUBLE) * LN(CAST(_cnt AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS DECIMAL(38,0))) AS DOUBLE) / 1000000) / CAST(SUM(_cnt) AS DOUBLE) AS entropy, " +
+        s"${AggOps.entropySql("SUM(_cnt)", AggOps.slnSumSql("_cnt"))} AS entropy, " +
         s"1.0 - CAST(SUM(CAST(_cnt AS DECIMAL(19,0)) * CAST(_cnt AS DECIMAL(19,0))) AS DOUBLE) / (CAST(SUM(_cnt) AS DOUBLE) * CAST(SUM(_cnt) AS DOUBLE)) AS simpson " +
         s"FROM (SELECT ${gSel}CAST($cn AS STRING) AS _v, COUNT(*) AS _cnt FROM {{source}} " +
         s"WHERE $cn IS NOT NULL GROUP BY _v$gBy2)$gBy" +
@@ -2151,8 +2049,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
           .groupBy((groupBy.map(col) :+ col("bucket")): _*)
           .agg(count(when(col("_s") === 0, lit(1))).as("_cb"),
             count(when(col("_s") === 1, lit(1))).as("_co"))
-        AggOps.psiTermsGrouped(
-          AggOps.foldPadCounts(counts, groupBy, buckets), groupBy, eps)
+        AggOps.psiTerms(AggOps.foldPadCounts(counts, groupBy, buckets), eps, groupBy)
       }
     val df2 = closed
       .withColumn("bucket_lo", lit(lo) + col("bucket") * lit(w))
@@ -2313,8 +2210,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
           .select((groupBy.map(col) ++ Seq(col("bucket"), lit(0L).as("_cb"), col("_co"))): _*))
         .groupBy((groupBy.map(col) :+ col("bucket")): _*)
         .agg(sum(col("_cb")).as("_cb"), sum(col("_co")).as("_co"))
-      val closed = AggOps.psiTermsGrouped(
-        AggOps.foldPadCounts(counts, groupBy, buckets), groupBy, eps)
+      val closed = AggOps.psiTerms(
+        AggOps.foldPadCounts(counts, groupBy, buckets), eps, groupBy)
       val df2 = closed.join(broadcast(cutF), cutJoinCond, "left")
         .withColumn("cut_lo",
           AggOps.cutBoundExpr(buckets, bb => if (bb == 0) None else Some(bb)))
@@ -2346,7 +2243,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     *
     * Scale, grouped: ONE scan per side — tag-union into ONE
     * (group, value) aggregate with map-side combine — then the two tiny
-    * per-group closing aggregates ([[AggOps.psiTermsGrouped]],
+    * per-group closing aggregates ([[AggOps.psiTerms]],
     * null-safe). Ungrouped keeps the two-count-frame full-outer shape.
     */
   def psiCategoricalProfile(other: DataFrame, column: String,
@@ -2375,7 +2272,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
           .groupBy((groupBy.map(col) :+ col("value")): _*)
           .agg(count(when(col("_s") === 0, lit(1))).as("cnt_base"),
             count(when(col("_s") === 1, lit(1))).as("cnt_other"))
-        AggOps.psiTermsGrouped(counts, groupBy, eps)
+        AggOps.psiTerms(counts, eps, groupBy)
       }
     val df2 = closed.select((groupBy.map(col) ++ Seq(col("value"),
       col("cnt_base"), col("cnt_other"), col("psi_term"),
@@ -2432,7 +2329,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
       .groupBy((groupBy.map(col) :+ col("_v")): _*)
       .agg(count(when(col("_s") === 0, lit(1))).as("_ca"),
         count(when(col("_s") === 1, lit(1))).as("_cb"))
-    import AggOps.fpq
+    import Exact.fpq
     val stepped = if (groupBy.isEmpty) {
       // no single-partition window: BOTH cumulative counts ride ONE
       // multi-weight PrefixScan over the count frame (materialized once —
@@ -2709,16 +2606,12 @@ final class AggOps(private val c: Chain) extends AnyVal {
       df.select((groupBy.map(col) ++ Seq(col(column).cast("double").as("_x"),
         lit(tag).as("_s"))): _*)
     val u = side(c.df, 0).unionByName(side(other, 1))
-    val xv = col("_x")
     // the x² decimal cast gates exclusion: NaN casts to null, and so does
-    // an x² overflowing DECIMAL(38,8) — rows drop from n, Σx and Σx²
-    // together (the flagOutliers contract)
-    val xxv = (xv * xv).cast(DecimalType(38, 8))
+    // an overflowing x² — rows drop from n, Σx and Σx² together (the
+    // flagOutliers contract)
     def mg(tag: Int) = {
-      val in = col("_s") === tag
-      Seq(count(when(in, xxv)),
-        sum(when(in && xxv.isNotNull, xv).cast(Exact.Wide)),
-        sum(when(in, xxv)))
+      val m = Exact.moments(col("_x"), mask = Some(col("_s") === tag))
+      Seq(m.n, m.sx, m.sxx)
     }
     val aggs = (mg(0) ++ mg(1)).zip(Seq("_n1", "_s1", "_q1", "_n2", "_s2", "_q2"))
       .map { case (e, n) => e.as(n) }
@@ -2726,17 +2619,13 @@ final class AggOps(private val c: Chain) extends AnyVal {
       if (groupBy.isEmpty) u.groupBy()
       else u.groupBy(groupBy.map(col): _*))
       .agg(aggs.head, aggs.tail: _*)
-    def mean(s: String, n: String) =
-      col(s).cast("double") / col(n).cast("double")
-    def vr(s: String, q: String, n: String) = {
-      val sd = col(s).cast("double"); val nd = col(n).cast("double")
-      (col(q).cast("double") - sd * sd / nd) / (nd - lit(1.0))
-    }
+    val (m1, m2) = (Exact.Moments(col("_n1"), col("_s1"), col("_q1")).toDouble,
+      Exact.Moments(col("_n2"), col("_s2"), col("_q2")).toDouble)
     val closed = g
-      .withColumn("mean_base", when(col("_n1") > 0L, mean("_s1", "_n1")))
-      .withColumn("mean_other", when(col("_n2") > 0L, mean("_s2", "_n2")))
-      .withColumn("var_base", when(col("_n1") > 1L, vr("_s1", "_q1", "_n1")))
-      .withColumn("var_other", when(col("_n2") > 1L, vr("_s2", "_q2", "_n2")))
+      .withColumn("mean_base", when(col("_n1") > 0L, m1.mean))
+      .withColumn("mean_other", when(col("_n2") > 0L, m2.mean))
+      .withColumn("var_base", when(col("_n1") > 1L, m1.variance))
+      .withColumn("var_other", when(col("_n2") > 1L, m2.variance))
     val se1 = col("var_base") / col("_n1").cast("double")
     val se2 = col("var_other") / col("_n2").cast("double")
     val pooled = se1 + se2
@@ -2821,14 +2710,13 @@ final class AggOps(private val c: Chain) extends AnyVal {
     // exists because some side saw it); quantize the per-cell pair before
     // the decimal sum — the crossTable closing
     val term = when(col("_na") > 0L && col("_nb") > 0L,
-      floor((cell(col("_ca"), col("_na")) + cell(col("_cb"), col("_nb"))) *
-        lit(1e6) + lit(0.5)).cast("long"))
+      Exact.fpq(cell(col("_ca"), col("_na")) + cell(col("_cb"), col("_nb"))))
     val closed = (
       if (groupBy.isEmpty) stepped.groupBy()
       else stepped.groupBy(groupBy.map(col): _*))
       .agg(max(col("_na")).as("n_base"), max(col("_nb")).as("n_other"),
         count(lit(1)).as("n_values"),
-        (sum(term.cast(DecimalType(38, 0))).cast("double") / lit(1e6)).as("chi2"))
+        Exact.fromFixed(Exact.fixedSum(term)).as("chi2"))
       .withColumn("df", when(col("chi2").isNotNull, col("n_values") - lit(1L)))
     val df2 = closed.select((groupBy.map(col) ++ Seq(col("n_base"),
       col("n_other"), col("n_values"), col("chi2"), col("df"))): _*)
@@ -2883,7 +2771,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val joint = c.df.groupBy((qcols :+ s): _*).agg(count(lit(1)).as("_c"))
     val wClass = Window.partitionBy(qcols: _*)
     val wVal = Window.partitionBy(s)
-    import AggOps.fpq
+    import Exact.fpq
     // the global total comes from a one-row aggregate over the
     // checkpointed joint-count frame, broadcast back via crossJoin — NOT
     // a whole-frame window (SinglePartition funnel on high-cardinality
@@ -2915,8 +2803,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
         s"SELECT $qSql, MAX(_nc) AS n, " +
         s"CAST(FLOOR(CAST(SUM(_t1) + 1000000 - SUM(_t2) AS DOUBLE) / 2.0 + 0.5) AS BIGINT) AS tvd_fp " +
         s"FROM (SELECT $qSql, _nc, " +
-        s"CAST(FLOOR(ABS($pS - $qS) * 1e6 + 0.5) AS BIGINT) AS _t1, " +
-        s"CAST(FLOOR(($qS) * 1e6 + 0.5) AS BIGINT) AS _t2 " +
+        s"${Exact.fpqSql(s"ABS($pS - $qS)")} AS _t1, " +
+        s"${Exact.fpqSql(s"($qS)")} AS _t2 " +
         s"FROM (SELECT $qSql, $sq, COUNT(*) AS _c, " +
         s"SUM(COUNT(*)) OVER (PARTITION BY $qSql) AS _nc, " +
         s"SUM(COUNT(*)) OVER (PARTITION BY $sq) AS _gs, " +
@@ -2983,7 +2871,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
         .withColumn("_na", sum(col("_ca")).over(wPart))
         .withColumn("_nb", sum(col("_cb")).over(wPart))
     }
-    import AggOps.fpq
+    import Exact.fpq
     // per-value quantized d·ln(d) term; d = 0 contributes 0 exactly
     def term(d: Column) =
       when(d > 0.0, fpq(d * log(d))).otherwise(lit(0L))
@@ -2995,18 +2883,16 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val q = when(col("_nb") > 0L,
       col("_cb").cast("double") / col("_nb").cast("double")).otherwise(lit(0.0))
     val m = (p + q) / lit(2.0)
-    val Dec = DecimalType(38, 0)
     val closed = (
       if (groupBy.isEmpty) stepped.groupBy()
       else stepped.groupBy(groupBy.map(col): _*))
       .agg(max(col("_na")).as("n_base"), max(col("_nb")).as("n_other"),
         count(lit(1)).as("n_values"),
-        sum(term(p).cast(Dec)).as("_slp"),
-        sum(term(q).cast(Dec)).as("_slq"),
-        sum(when(col("_na") > 0L && col("_nb") > 0L, term(m))
-          .otherwise(lit(null)).cast(Dec)).as("_slm"))
-    def h(sln: String, nOk: Column) = when(nOk,
-      -(col(sln).cast("double") / lit(1e6)))
+        Exact.fixedSum(term(p)).as("_slp"),
+        Exact.fixedSum(term(q)).as("_slq"),
+        Exact.fixedSum(when(col("_na") > 0L && col("_nb") > 0L, term(m))
+          .otherwise(lit(null))).as("_slm"))
+    def h(sln: String, nOk: Column) = when(nOk, -Exact.fromFixed(col(sln)))
     val df2 = closed
       .withColumn("h_base", h("_slp", col("n_base") > 0L))
       .withColumn("h_other", h("_slq", col("n_other") > 0L))
@@ -3124,37 +3010,19 @@ final class AggOps(private val c: Chain) extends AnyVal {
       .groupBy((gcols ++ Seq(col(colA).cast("string").as("_va"),
         col(colB).cast("string").as("_vb"))): _*)
       .agg(count(lit(1)).as("_cab"))
-    def fpLn(v: Column) = floor(v * log(v) * lit(1e6) + lit(0.5)).cast("long")
-    def slnSum(cnt: Column) = sum(fpLn(cnt.cast("double")).cast(DecimalType(38, 0)))
-    def marginal(key: String, nAs: String, slnAs: String) = joint
-      .groupBy((gcols :+ col(key)): _*).agg(sum(col("_cab")).as("_cm"))
-      .groupBy(gcols: _*)
-      .agg(count(lit(1)).as(nAs), slnSum(col("_cm")).as(slnAs))
-    val aAgg = marginal("_va", "n_a", "_slna")
-    val bAgg = marginal("_vb", "n_b", "_slnb")
+    val aAgg = AggOps.marginalSln(joint, gcols, "_va", "_cab", "n_a", "_slna")
+    val bAgg = AggOps.marginalSln(joint, gcols, "_vb", "_cab", "n_b", "_slnb")
     val jAgg = joint.groupBy(gcols: _*)
       .agg(sum(col("_cab")).as("n"), count(lit(1)).as("n_ab"),
-        slnSum(col("_cab")).as("_slnab"))
-    // null-SAFE group joins (the psiTermsGrouped `<=>` rename regime): a
+        AggOps.slnSum(col("_cab")).as("_slnab"))
+    // null-SAFE group joins (the psiTerms `<=>` rename regime): a
     // plain equi-join would silently drop every NULL-keyed group while
     // the window-based grouped censuses keep it
     val merged =
       if (groupBy.isEmpty) jAgg.crossJoin(aAgg).crossJoin(bAgg)
-      else {
-        def keyed(df: DataFrame, pfx: String) = df.select(
-          (groupBy.map(k => col(k).as(s"$pfx$k")) ++
-            df.columns.filterNot(groupBy.contains).map(col)): _*)
-        jAgg
-          .join(keyed(aAgg, "_t_"),
-            groupBy.map(k => col(k) <=> col(s"_t_$k")).reduce(_ && _))
-          .drop(groupBy.map(k => s"_t_$k"): _*)
-          .join(keyed(bAgg, "_p_"),
-            groupBy.map(k => col(k) <=> col(s"_p_$k")).reduce(_ && _))
-          .drop(groupBy.map(k => s"_p_$k"): _*)
-      }
+      else AggOps.joinNullSafe(AggOps.joinNullSafe(jAgg, aAgg, groupBy, "_t_"), bAgg, groupBy, "_p_")
     val nD = col("n").cast("double")
-    def h(sln: String) = (floor(log(nD) * lit(1e6) + lit(0.5)) / lit(1e6)) -
-      (col(sln).cast("double") / lit(1e6)) / nD
+    def h(sln: String) = AggOps.entropy(nD, col(sln))
     val df2 = merged
       .withColumn("h_a", h("_slna"))
       .withColumn("h_b", h("_slnb"))
@@ -3177,26 +3045,13 @@ final class AggOps(private val c: Chain) extends AnyVal {
       s"SELECT ${gSel}CAST($ca AS STRING) AS _va, CAST($cb AS STRING) AS _vb, " +
         s"COUNT(*) AS _cab FROM {{source}} WHERE $ca IS NOT NULL AND $cb IS NOT NULL " +
         s"GROUP BY _va, _vb$gBy"
-    def slnS(cnt: String) =
-      s"SUM(CAST(CAST(FLOOR(CAST($cnt AS DOUBLE) * LN(CAST($cnt AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS DECIMAL(38,0)))"
-    def margS(key: String, nAs: String, slnAs: String) =
-      s"SELECT ${gSel}COUNT(*) AS $nAs, ${slnS("_cm")} AS $slnAs FROM (" +
-        s"SELECT $gSel$key, SUM(_cab) AS _cm FROM ($jointSql) GROUP BY $key$gBy)$gGrp"
     val jS = s"SELECT ${gSel}SUM(_cab) AS n, COUNT(*) AS n_ab, " +
-      s"${slnS("_cab")} AS _slnab FROM ($jointSql)$gGrp"
-    def hS(sln: String) =
-      s"FLOOR(LN(CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 - " +
-        s"(CAST($sln AS DOUBLE) / 1000000) / CAST(n AS DOUBLE)"
-    // null-safe `<=>` join conditions in the SQL face too — USING would
-    // drop NULL-keyed groups the DataFrame face keeps
+      s"${AggOps.slnSumSql("_cab")} AS _slnab FROM ($jointSql)$gGrp"
+    def hS(sln: String) = AggOps.entropySql("n", sln)
     val jqSel = if (groupBy.isEmpty) "" else groupBy.map(k => s"_j.$k").mkString(", ") + ", "
-    val joinS =
-      if (groupBy.isEmpty) s"($jS) _j CROSS JOIN (${margS("_va", "n_a", "_slna")}) _a " +
-        s"CROSS JOIN (${margS("_vb", "n_b", "_slnb")}) _b"
-      else s"($jS) _j JOIN (${margS("_va", "n_a", "_slna")}) _a ON " +
-        groupBy.map(k => s"_j.$k <=> _a.$k").mkString(" AND ") +
-        s" JOIN (${margS("_vb", "n_b", "_slnb")}) _b ON " +
-        groupBy.map(k => s"_j.$k <=> _b.$k").mkString(" AND ")
+    val joinS = AggOps.entropyJoinSql(jS,
+      AggOps.marginalSlnSql(jointSql, groupBy, "_va", "_cab", "n_a", "_slna"),
+      AggOps.marginalSlnSql(jointSql, groupBy, "_vb", "_cab", "n_b", "_slnb"), groupBy)
     val frag =
       s"SELECT ${gSel}n, n_a, n_b, n_ab, h_a, h_b, h_ab, (h_a + h_b) - h_ab AS mi " +
         s"FROM (SELECT ${jqSel}n, n_a, n_b, n_ab, ${hS("_slna")} AS h_a, " +
@@ -3257,35 +3112,18 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val joint = melted
       .groupBy((gcols ++ Seq(col("_c"), col("_v"), col("_l"))): _*)
       .agg(count(lit(1)).as("_cfl"))
-    def fpLn(v: Column) = floor(v * log(v) * lit(1e6) + lit(0.5)).cast("long")
-    def slnSum(cnt: Column) = sum(fpLn(cnt.cast("double")).cast(DecimalType(38, 0)))
     val keyCols = gcols :+ col("_c")
     val keyNames = groupBy :+ "_c"
     val jAgg = joint.groupBy(keyCols: _*)
-      .agg(sum(col("_cfl")).as("n"), slnSum(col("_cfl")).as("_slnfl"))
-    val fAgg = joint.groupBy((keyCols :+ col("_v")): _*)
-      .agg(sum(col("_cfl")).as("_cm")).groupBy(keyCols: _*)
-      .agg(count(lit(1)).as("n_values"), slnSum(col("_cm")).as("_slnf"))
-    val lAgg = joint.groupBy((keyCols :+ col("_l")): _*)
-      .agg(sum(col("_cfl")).as("_cm")).groupBy(keyCols: _*)
-      .agg(count(lit(1)).as("n_labels"), slnSum(col("_cm")).as("_slnl"))
-    // null-safe key joins (the psiTermsGrouped regime): _c is never null,
+      .agg(sum(col("_cfl")).as("n"), AggOps.slnSum(col("_cfl")).as("_slnfl"))
+    val fAgg = AggOps.marginalSln(joint, keyCols, "_v", "_cfl", "n_values", "_slnf")
+    val lAgg = AggOps.marginalSln(joint, keyCols, "_l", "_cfl", "n_labels", "_slnl")
+    // null-safe key joins (the psiTerms regime): _c is never null,
     // but a NULL group key must keep its census rows
-    val merged = {
-      def keyed(df: DataFrame, pfx: String) = df.select(
-        (keyNames.map(k => col(k).as(s"$pfx$k")) ++
-          df.columns.filterNot(keyNames.contains).map(col)): _*)
-      jAgg
-        .join(keyed(fAgg, "_t_"),
-          keyNames.map(k => col(k) <=> col(s"_t_$k")).reduce(_ && _))
-        .drop(keyNames.map(k => s"_t_$k"): _*)
-        .join(keyed(lAgg, "_p_"),
-          keyNames.map(k => col(k) <=> col(s"_p_$k")).reduce(_ && _))
-        .drop(keyNames.map(k => s"_p_$k"): _*)
-    }
+    val merged = AggOps.joinNullSafe(
+      AggOps.joinNullSafe(jAgg, fAgg, keyNames, "_t_"), lAgg, keyNames, "_p_")
     val nD = col("n").cast("double")
-    def h(sln: String) = (floor(log(nD) * lit(1e6) + lit(0.5)) / lit(1e6)) -
-      (col(sln).cast("double") / lit(1e6)) / nD
+    def h(sln: String) = AggOps.entropy(nD, col(sln))
     val df2 = merged
       .withColumn("h_feature", h("_slnf"))
       .withColumn("h_label", h("_slnl"))
@@ -3304,30 +3142,18 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val gSel = if (groupBy.isEmpty) "" else groupBy.mkString(", ") + ", "
     val gBy = if (groupBy.isEmpty) "" else s", ${groupBy.mkString(", ")}"
     val gGrp = if (groupBy.isEmpty) "" else s" GROUP BY ${groupBy.mkString(", ")}"
-    def slnS(cnt: String) =
-      s"SUM(CAST(CAST(FLOOR(CAST($cnt AS DOUBLE) * LN(CAST($cnt AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS DECIMAL(38,0)))"
-    def hS(sln: String) =
-      s"FLOOR(LN(CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 - " +
-        s"(CAST($sln AS DOUBLE) / 1000000) / CAST(n AS DOUBLE)"
+    def hS(sln: String) = AggOps.entropySql("n", sln)
     val branches = features.map { fn =>
       val fq = Naming.quoteId(fn)
       val jointSql =
         s"SELECT ${gSel}CAST($fq AS STRING) AS _v, CAST($lq AS STRING) AS _l, " +
           s"COUNT(*) AS _cfl FROM {{source}} WHERE $fq IS NOT NULL AND $lq IS NOT NULL " +
           s"GROUP BY _v, _l$gBy"
-      val jS = s"SELECT ${gSel}SUM(_cfl) AS n, ${slnS("_cfl")} AS _slnfl FROM ($jointSql)$gGrp"
-      def mS(key: String, nAs: String, slnAs: String) =
-        s"SELECT ${gSel}COUNT(*) AS $nAs, ${slnS("_cm")} AS $slnAs FROM (" +
-          s"SELECT $gSel$key, SUM(_cfl) AS _cm FROM ($jointSql) GROUP BY $key$gBy)$gGrp"
-      // null-safe `<=>` joins: USING would drop NULL-keyed groups
+      val jS = s"SELECT ${gSel}SUM(_cfl) AS n, ${AggOps.slnSumSql("_cfl")} AS _slnfl FROM ($jointSql)$gGrp"
       val jqSel = if (groupBy.isEmpty) "" else groupBy.map(k => s"_j.$k").mkString(", ") + ", "
-      val joinS =
-        if (groupBy.isEmpty) s"($jS) _j CROSS JOIN (${mS("_v", "n_values", "_slnf")}) _a " +
-          s"CROSS JOIN (${mS("_l", "n_labels", "_slnl")}) _b"
-        else s"($jS) _j JOIN (${mS("_v", "n_values", "_slnf")}) _a ON " +
-          groupBy.map(k => s"_j.$k <=> _a.$k").mkString(" AND ") +
-          s" JOIN (${mS("_l", "n_labels", "_slnl")}) _b ON " +
-          groupBy.map(k => s"_j.$k <=> _b.$k").mkString(" AND ")
+      val joinS = AggOps.entropyJoinSql(jS,
+        AggOps.marginalSlnSql(jointSql, groupBy, "_v", "_cfl", "n_values", "_slnf"),
+        AggOps.marginalSlnSql(jointSql, groupBy, "_l", "_cfl", "n_labels", "_slnl"), groupBy)
       s"SELECT $gSel'${fn.replace("'", "''")}' AS col_name, n, n_values, n_labels, " +
         s"h_feature, h_label, mi, CASE WHEN h_label > 0 THEN mi / h_label END AS u " +
         s"FROM (SELECT ${gSel}n, n_values, n_labels, h_feature, h_label, " +
@@ -3341,59 +3167,147 @@ final class AggOps(private val c: Chain) extends AnyVal {
 }
 
 private[graft] object AggOps {
-  /** The engine-wide 1e-6 fixed-point quantizer floor(x·1e6 + 0.5) as a
-    * BIGINT — ONE definition (the SelectionOps.fpq convention) so the
-    * quantization regime cannot silently fork per op.
+  /** Quantized Shannon-entropy closing shared by entropyProfile,
+    * mutualInformation and featureRelevance, in both faces:
+    * H = ln(n) − Σc·ln(c)/n over per-value counts c, with ln(n) and every
+    * c·ln(c) in 1e-6 fixed point and Σc·ln(c) summed exactly — so each
+    * entropy is a pure function of the counts, engine-exact.
+    * [[slnSum]] aggregates the counts; [[entropy]] closes against n.
     */
-  private[graft] def fpq(v: Column): Column =
-    floor(v * lit(1e6) + lit(0.5)).cast("long")
+  private[ops] def slnSum(cnt: Column): Column = {
+    val d = cnt.cast("double")
+    Exact.fixedSum(Exact.fpq(d * log(d)))
+  }
+  private[ops] def entropy(n: Column, sln: Column): Column =
+    Exact.fpRound(log(n)) - Exact.fromFixed(sln) / n
+  private[ops] def slnSumSql(cnt: String): String =
+    Exact.fixedSumSql(Exact.fpqSql(s"CAST($cnt AS DOUBLE) * LN(CAST($cnt AS DOUBLE))"))
+  private[ops] def entropySql(n: String, sln: String): String =
+    s"${Exact.fpRoundSql(s"LN(CAST($n AS DOUBLE))")} - (${Exact.fromFixedSql(sln)}) / CAST($n AS DOUBLE)"
+
+  /** One marginal of a joint-count frame (count column `cnt`): per `keys`,
+    * the distinct values of `key` (`nAs`) and the [[slnSum]] of their
+    * marginal counts (`slnAs`). Shared by mutualInformation and
+    * featureRelevance, like the SQL twin [[marginalSlnSql]].
+    */
+  private[ops] def marginalSln(joint: DataFrame, keys: Seq[Column], key: String,
+                               cnt: String, nAs: String, slnAs: String): DataFrame =
+    joint.groupBy((keys :+ col(key)): _*).agg(sum(col(cnt)).as("_cm"))
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as(nAs), slnSum(col("_cm")).as(slnAs))
+
+  private[ops] def marginalSlnSql(jointSql: String, groupBy: Seq[String], key: String,
+                                  cnt: String, nAs: String, slnAs: String): String = {
+    val gSel = if (groupBy.isEmpty) "" else groupBy.mkString(", ") + ", "
+    val gBy = if (groupBy.isEmpty) "" else s", ${groupBy.mkString(", ")}"
+    val gGrp = if (groupBy.isEmpty) "" else s" GROUP BY ${groupBy.mkString(", ")}"
+    s"SELECT ${gSel}COUNT(*) AS $nAs, ${slnSumSql("_cm")} AS $slnAs FROM (" +
+      s"SELECT $gSel$key, SUM($cnt) AS _cm FROM ($jointSql) GROUP BY $key$gBy)$gGrp"
+  }
+
+  /** `left` joined NULL-SAFELY on `keys` with `right`, whose keys are
+    * renamed `pfx`+key first (shared lineage would otherwise trip
+    * ambiguous-column resolution) and dropped after: a plain equi-join
+    * would silently drop every NULL-keyed group.
+    */
+  private[graft] def joinNullSafe(left: DataFrame, right: DataFrame, keys: Seq[String],
+                                pfx: String): DataFrame =
+    left.join(right.select((keys.map(k => col(k).as(s"$pfx$k")) ++
+        right.columns.filterNot(keys.contains).map(col)): _*),
+      keys.map(k => col(k) <=> col(s"$pfx$k")).reduce(_ && _))
+      .drop(keys.map(k => s"$pfx$k"): _*)
+
+  /** The joint aggregate `jS` (alias `_j`) joined with two marginals
+    * (`_a`, `_b`): CROSS JOINs ungrouped, null-safe `<=>` joins on the
+    * groups otherwise (USING would drop NULL-keyed groups).
+    */
+  private[ops] def entropyJoinSql(jS: String, aS: String, bS: String,
+                                  groupBy: Seq[String]): String =
+    if (groupBy.isEmpty) s"($jS) _j CROSS JOIN ($aS) _a CROSS JOIN ($bS) _b"
+    else s"($jS) _j JOIN ($aS) _a ON " +
+      groupBy.map(k => s"_j.$k <=> _a.$k").mkString(" AND ") +
+      s" JOIN ($bS) _b ON " + groupBy.map(k => s"_j.$k <=> _b.$k").mkString(" AND ")
+
+  /** The per-bucket readout columns of a calibration accumulator frame
+    * (count `nb`, exact Σscore `ssumd`, positives `pos`) — shared by
+    * [[AggOps.calibrationProfile]] and its streaming sink.
+    */
+  private[graft] def calibrationStats(bucket: Column, nb: Column, ssumd: Column,
+                                      pos: Column, w: Double): Seq[Column] = Seq(
+    (bucket * lit(w)).as("bucket_lo"),
+    ((bucket + lit(1L)) * lit(w)).as("bucket_hi"),
+    coalesce(nb, lit(0L)).as("n"),
+    when(nb > 0, ssumd.cast("double") / nb)
+      .otherwise(lit(null).cast("double")).as("score_avg"),
+    when(nb > 0, pos.cast("double") / nb.cast("double"))
+      .otherwise(lit(null).cast("double")).as("pos_rate"))
+
+  /** Adds `ece` to a bounded calibration frame (`n`, `_pos`, `_ssumd` per
+    * bucket), then drops its scratch columns and `drop`: exact decimal
+    * bucket terms |pos − ssum| (no floating-point step), exact decimal
+    * sum, one closing double division — null when the group has no
+    * valid rows (N = 0: the zero-divide an ANSI runtime would otherwise
+    * abort on). Operands cast to DECIMAL(29,8) — both are ≤ n_b ≤
+    * Long.Max < 1e21, so the cast can never overflow, and the (30,8)
+    * difference keeps scale 8 on BOTH engines (a (38,8)−(38,8)
+    * difference overflows Spark's 38-digit cap and silently truncates
+    * the scale to 7, diverging from DuckDB in the 10th decimal).
+    *
+    * Grouped N/ece close with a window over the bounded frame — the
+    * frame keeps ONE consumer (an agg+join-back would duplicate its
+    * whole lineage, and column pruning tailors each copy enough that
+    * exchange reuse cannot merge the corpus scans back together); the
+    * window's partitions are ≤ buckets rows each and its required
+    * distribution is already satisfied by the upstream aggregate.
+    * Ungrouped, a global window would be a single-task stage (the shape
+    * ScaleLint rightly errors on), so the one-row total broadcasts onto
+    * the Range-spine frame instead — both sides bounded.
+    */
+  private[graft] def withCalibrationEce(frame: DataFrame, groupBy: Seq[String],
+                                        drop: Seq[String] = Nil): DataFrame = {
+    val term = when(col("n") > 0,
+      abs(col("_pos").cast(DecimalType(29, 8)) -
+        col("_ssumd").cast(DecimalType(29, 8))))
+      .otherwise(lit(BigDecimal(0)).cast(DecimalType(30, 8)))
+    val withEce =
+      if (groupBy.isEmpty) {
+        val eceAggs = Seq(sum(term).as("_q"), sum(col("n")).as("_N"))
+        frame.crossJoin(broadcast(frame.agg(eceAggs.head, eceAggs.tail: _*)))
+      } else {
+        val wG = Window.partitionBy(groupBy.map(col): _*)
+        frame.withColumn("_q", sum(term).over(wG))
+          .withColumn("_N", sum(col("n")).over(wG))
+      }
+    withEce
+      .withColumn("ece", when(col("_N") === 0L, lit(null).cast("double"))
+        .otherwise(col("_q").cast("double") / col("_N").cast("double")))
+      .drop(Seq("_q", "_N") ++ drop: _*)
+  }
 
   /** Shared PSI closing arithmetic over a (…, cnt_base, cnt_other) count
     * frame: eps-floored shares, a 1e-6 fixed-point ln factor, and a 1e-12
     * fixed-point exact `psi_total`. Deliberately NO global window (a
     * single-task stage ScaleLint rightly flags) and NO raw double sum
-    * (partitioning-dependent): totals ride two tiny broadcast aggregates.
-    * A side with no rows yields null shares → null terms → null total —
-    * visible, never a fake zero (greatest() would silently swallow the
-    * null into the eps floor, so nulls are preserved explicitly).
+    * (partitioning-dependent). Ungrouped, totals ride two tiny broadcast
+    * aggregates; with `groupCols` (e.g. per event-time window for
+    * streaming drift, or a user `group_by` slice) they are per group,
+    * joined back NULL-SAFELY ([[joinNullSafe]]) — a null group value
+    * groups like any other value, so it must match back instead of
+    * silently dropping its buckets; everything stays partitioned by the
+    * group, so unbounded group counts are fine. A side with no rows
+    * yields null shares → null terms → null total — visible, never a
+    * fake zero (greatest() would silently swallow the null into the eps
+    * floor, so nulls are preserved explicitly).
     */
-  def psiTerms(joined: DataFrame, eps: Double): DataFrame = {
-    val totals = joined.agg(
-      sum(col("cnt_base")).as("_tb"), sum(col("cnt_other")).as("_to"))
-    val t1 = joined.crossJoin(broadcast(totals))
+  def psiTerms(joined: DataFrame, eps: Double, groupCols: Seq[String] = Nil): DataFrame = {
+    def attach(left: DataFrame, right: DataFrame, pfx: String) =
+      if (groupCols.isEmpty) left.crossJoin(broadcast(right))
+      else joinNullSafe(left, right, groupCols, pfx)
+    val g = groupCols.map(col)
+    val t1 = attach(joined, joined.groupBy(g: _*)
+      .agg(sum(col("cnt_base")).as("_tb"), sum(col("cnt_other")).as("_to")), "_t_")
       .withColumn("psi_term", psiTermExpr(eps)).drop("_tb", "_to")
-    val total2 = t1.agg(psiTotalAgg)
-    t1.crossJoin(broadcast(total2))
-  }
-
-  /** The grouped twin of [[psiTerms]] — totals and `psi_total` per group
-    * (e.g. per event-time window for streaming drift, or a user
-    * `group_by` slice): two small aggregations over the count frame
-    * joined back on the group keys. The joins back are NULL-SAFE with
-    * RENAMED right sides (`_t_`/`_p_` prefixes — shared lineage would
-    * otherwise trip ambiguous-column resolution): a null group value
-    * groups like any other value in the aggregates, so it must match
-    * back instead of silently dropping its buckets. Everything stays
-    * partitioned by the group — no broadcast needed, no global window,
-    * unbounded group counts are fine.
-    */
-  def psiTermsGrouped(joined: DataFrame, groupCols: Seq[String],
-                      eps: Double): DataFrame = {
-    require(groupCols.nonEmpty, "psiTermsGrouped needs group columns")
-    val totals = joined.groupBy(groupCols.map(col): _*)
-      .agg(sum(col("cnt_base")).as("_tb"), sum(col("cnt_other")).as("_to"))
-      .select((groupCols.map(kk => col(kk).as(s"_t_$kk")) ++
-        Seq(col("_tb"), col("_to"))): _*)
-    val t1 = joined.join(totals,
-      groupCols.map(kk => col(kk) <=> col(s"_t_$kk")).reduce(_ && _))
-      .drop(groupCols.map(kk => s"_t_$kk"): _*)
-      .withColumn("psi_term", psiTermExpr(eps)).drop("_tb", "_to")
-    val perGroup = t1.groupBy(groupCols.map(col): _*).agg(psiTotalAgg)
-      .select((groupCols.map(kk => col(kk).as(s"_p_$kk")) :+
-        col("psi_total")): _*)
-    t1.join(perGroup,
-      groupCols.map(kk => col(kk) <=> col(s"_p_$kk")).reduce(_ && _))
-      .drop(groupCols.map(kk => s"_p_$kk"): _*)
+    attach(t1, t1.groupBy(g: _*).agg(psiTotalAgg), "_p_")
   }
 
   /** Pad a grouped (groups…, bucket, _cb, _co) count frame — where a NULL
@@ -3490,14 +3404,13 @@ private[graft] object AggOps {
         .otherwise(greatest(cnt.cast("double") / tot.cast("double"), lit(eps)))
     val pf = floored(col("cnt_base"), col("_tb"))
     val qf = floored(col("cnt_other"), col("_to"))
-    (pf - qf) * (floor(log(pf / qf) * lit(1e6) + lit(0.5)) / lit(1e6))
+    (pf - qf) * Exact.fpRound(log(pf / qf))
   }
 
   // 1e-12 fixed-point exact Σ psi_term: |term| ≤ ln(1/eps) < 28 → ×1e12
   // stays far inside the long range
   private def psiTotalAgg: Column =
-    (sum(floor(col("psi_term") * lit(1e12) + lit(0.5))
-      .cast("long").cast(DecimalType(38, 0))).cast("double") / lit(1e12)).as("psi_total")
+    Exact.fromFixed(Exact.fixedSum(Exact.fpq(col("psi_term"), 12)), 12).as("psi_total")
 
   /** Equal-frequency cutoffs as a ONE-ROW frame (`_cut1`.. `_cut{b-1}`)
     * from one mergeable KLL aggregate — shared by [[psiQuantileProfile]]
@@ -3555,31 +3468,20 @@ private[graft] object AggOps {
     // shared lineage would otherwise trip ambiguous-column resolution):
     // a null group value groups like any other value in the aggregates,
     // so it must match back instead of silently dropping its classes
-    val tot =
-      if (groupBy.isEmpty) classFrame.agg(sum(col("n_a")).as("n"))
-      else classFrame.groupBy(g: _*).agg(sum(col("n_a")).as("n"))
-        .select((groupBy.map(k => col(k).as(s"_t_$k")) :+ col("n")): _*)
     val classes =
-      if (groupBy.isEmpty) classFrame.crossJoin(broadcast(tot))
-      else classFrame.join(tot,
-        groupBy.map(k => col(k) <=> col(s"_t_$k")).reduce(_ && _))
-        .drop(groupBy.map(k => s"_t_$k"): _*)
+      if (groupBy.isEmpty) classFrame.crossJoin(broadcast(classFrame.agg(sum(col("n_a")).as("n"))))
+      else joinNullSafe(classFrame,
+        classFrame.groupBy(g: _*).agg(sum(col("n_a")).as("n")), groupBy, "_t_")
     val nD = col("n").cast("double")
-    val peTerm = floor((col("n_a").cast("double") / nD) *
-      (col("n_b").cast("double") / nD) * lit(1e12) + lit(0.5)).cast("long")
+    val peTerm = Exact.fpq((col("n_a").cast("double") / nD) *
+      (col("n_b").cast("double") / nD), 12)
     val statAggs = Seq(
       sum(col("n_agree")).as("_agree"),
-      (sum(peTerm.cast(DecimalType(38, 0))).cast("double") / lit(1e12)).as("_pe"))
-    val stats =
-      if (groupBy.isEmpty) classes.agg(statAggs.head, statAggs.tail: _*)
-      else classes.groupBy(g: _*).agg(statAggs.head, statAggs.tail: _*)
-        .select((groupBy.map(k => col(k).as(s"_s_$k")) ++
-          Seq(col("_agree"), col("_pe"))): _*)
+      Exact.fromFixed(Exact.fixedSum(peTerm), 12).as("_pe"))
     val withStats =
-      if (groupBy.isEmpty) classes.crossJoin(broadcast(stats))
-      else classes.join(stats,
-        groupBy.map(k => col(k) <=> col(s"_s_$k")).reduce(_ && _))
-        .drop(groupBy.map(k => s"_s_$k"): _*)
+      if (groupBy.isEmpty) classes.crossJoin(broadcast(classes.agg(statAggs.head, statAggs.tail: _*)))
+      else joinNullSafe(classes,
+        classes.groupBy(g: _*).agg(statAggs.head, statAggs.tail: _*), groupBy, "_s_")
     val po = col("_agree").cast("double") / nD
     val kappa = when(lit(1.0) - col("_pe") === lit(0.0), lit(null).cast("double"))
       .otherwise((po - col("_pe")) / (lit(1.0) - col("_pe")))

@@ -101,15 +101,11 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
     // count over the decimal cast the sum accumulates — the Exact.avg NaN
     // contract (a NaN target row would otherwise bias its category's mean)
     val e =
-      if (Exact.isFloating(dt))
-        sum(col(target).cast(Exact.Wide)).over(w).cast("double") /
-          count(col(target).cast(Exact.Wide)).over(w)
+      if (Exact.isFloating(dt)) Exact.avg(col(target), Some(w))
       else avg(col(target)).over(w)
     val name = Naming.targetEncoded(column)
     val sqlAgg =
-      if (Exact.isFloating(dt))
-        s"CAST(SUM(CAST($target AS DECIMAL(38,${Exact.Scale}))) OVER (PARTITION BY $column) AS DOUBLE) / " +
-          s"COUNT(CAST($target AS DECIMAL(38,${Exact.Scale}))) OVER (PARTITION BY $column)"
+      if (Exact.isFloating(dt)) Exact.avgSql(target, s"OVER (PARTITION BY $column)")
       else s"AVG($target) OVER (PARTITION BY $column)"
     c.next("target_encode", c.df.withColumn(name, e),
       Some(s"SELECT *, $sqlAgg AS $name FROM {{source}}"))
@@ -190,15 +186,14 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
     val tExcl =
       if (Exact.isFloating(dt)) when(!isnan(col(target).cast("double")), col(target))
       else col(target)
-    def sumOf(w: org.apache.spark.sql.expressions.WindowSpec) =
-      sum(tExcl.cast(Exact.Wide)).over(w).cast("double")
+    def sumOf(w: org.apache.spark.sql.expressions.WindowSpec) = Exact.sum(tExcl, Some(w))
     def cntOf(w: org.apache.spark.sql.expressions.WindowSpec) =
       count(tExcl).over(w).cast("double")
     val (gsN, gcN) = ("_graft_tes_gsum", "_graft_tes_gcnt")
     Seq(gsN, gcN).foreach(n => require(!c.df.columns.contains(n),
       s"target_encode_smoothed: internal column '$n' already exists on the frame"))
     val globals = c.df.agg(
-      sum(tExcl.cast(Exact.Wide)).cast("double").as(gsN),
+      Exact.sum(tExcl).as(gsN),
       count(tExcl).cast("double").as(gcN))
     val gMean = col(gsN) / col(gcN)
     val e = (sumOf(wCat) + lit(m) * gMean) / (cntOf(wCat) + lit(m))
@@ -208,8 +203,7 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
       if (Exact.isFloating(dt))
         s"CASE WHEN NOT isnan(CAST($tq AS DOUBLE)) THEN $tq END"
       else tq
-    def sumS(part: String) =
-      s"CAST(SUM(CAST($tS AS DECIMAL(38,${Exact.Scale}))) OVER ($part) AS DOUBLE)"
+    def sumS(part: String) = Exact.sumSql(tS, s"OVER ($part)")
     def cntS(part: String) = s"CAST(COUNT($tS) OVER ($part) AS DOUBLE)"
     val gMeanS = s"${sumS("")} / ${cntS("")}"
     val mLit = s"CAST('${m}' AS DOUBLE)"
@@ -879,38 +873,33 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
     require(z > 0, s"z must be positive, got $z")
     val x = col(column).cast("double")
     // n, Sx and Sxx all gate on the x² decimal cast (NaN casts to null,
-    // and so does an x² that overflows DECIMAL(38,8) at |x| ≳ 1e15 —
-    // the Exact.stddev consistent-exclusion contract): a NaN or
+    // and so does an x² that overflows at |x| ≳ 1e15 — the
+    // Exact.moments consistent-exclusion contract): a NaN or
     // overflow row would otherwise inflate n and silently bias mu/sd
     // low for its whole group. The NaN row itself flags as an outlier
     // (|NaN - mu| > z*sd is TRUE under NaN-greatest comparison) — the
     // right verdict for a corrupted value.
-    val xx = (x * x).cast(org.apache.spark.sql.types.DecimalType(38, 8))
     // ungrouped, the global statistics come from ONE column-pruned
     // aggregate broadcast back via crossJoin — never a PARTITION BY ()
     // window (SinglePartition funnel); decimal sums are association-free,
     // so the doubles are bit-identical to the window formulation the SQL
     // face keeps
-    val (src, n, sx, sxx, dropAfter) =
+    val (src, m, dropAfter) =
       if (groupBy.isEmpty) {
         val names = Seq("_graft_fo_n", "_graft_fo_sx", "_graft_fo_sxx")
         names.foreach(cn0 => require(!c.df.columns.contains(cn0),
           s"flag_outliers: internal column '$cn0' already exists on the frame"))
-        val g = c.df.agg(
-          count(xx).cast("double").as(names(0)),
-          sum(when(xx.isNotNull, x).cast(Exact.Wide)).cast("double").as(names(1)),
-          sum(xx).cast("double").as(names(2)))
+        val g0 = Exact.moments(x).toDouble
+        val g = c.df.agg(g0.n.as(names(0)), g0.sx.as(names(1)), g0.sxx.as(names(2)))
         (c.df.crossJoin(broadcast(g)),
-          col(names(0)), col(names(1)), col(names(2)), names)
+          Exact.Moments(col(names(0)), col(names(1)), col(names(2))), names)
       } else {
         val w = Window.partitionBy(groupBy.map(col): _*)
-        (c.df,
-          count(xx).over(w).cast("double"),
-          sum(when(xx.isNotNull, x).cast(Exact.Wide)).over(w).cast("double"),
-          sum(xx).over(w).cast("double"), Seq.empty[String])
+        (c.df, Exact.moments(x, over = Some(w)).toDouble, Seq.empty[String])
       }
-    val mu = sx / n
-    val sd = sqrt((sxx - sx * sx / n) / (n - lit(1.0)))
+    val n = m.n
+    val mu = m.mean
+    val sd = m.stddev
     val zc = when(n > 1 && sd > 0, (x - mu) / sd)
     val flag = n > 1 && sd > 0 && abs(x - mu) > lit(z) * sd
     val df2 = src
@@ -921,12 +910,10 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
     val over =
       if (groupBy.isEmpty) "OVER ()"
       else s"OVER (PARTITION BY ${groupBy.mkString(", ")})"
-    val xxS = s"CAST(CAST($cn AS DOUBLE) * CAST($cn AS DOUBLE) AS DECIMAL(38,8))"
-    val nS = s"CAST(COUNT($xxS) $over AS DOUBLE)"
-    val sxS = s"CAST(SUM(CASE WHEN $xxS IS NOT NULL THEN CAST(CAST($cn AS DOUBLE) AS DECIMAL(38,4)) END) $over AS DOUBLE)"
-    val sxxS = s"CAST(SUM($xxS) $over AS DOUBLE)"
-    val muS = s"($sxS / $nS)"
-    val sdS = s"SQRT(($sxxS - $sxS * $sxS / $nS) / ($nS - 1.0))"
+    val mS = Exact.momentsSql(s"CAST($cn AS DOUBLE)", over)
+    val nS = mS.n
+    val muS = s"(${mS.sx} / $nS)"
+    val sdS = mS.stddev
     c.next("flag_outliers", df2, Some(
       s"SELECT *, CASE WHEN $nS > 1 AND $sdS > 0 THEN (CAST($cn AS DOUBLE) - $muS) / $sdS END AS ${Naming.cleanse(s"${column}_zscore")}, " +
         s"($nS > 1 AND $sdS > 0 AND ABS(CAST($cn AS DOUBLE) - $muS) > $z * $sdS) AS ${Naming.cleanse(s"${column}_outlier")} FROM {{source}}"))

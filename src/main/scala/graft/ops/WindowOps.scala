@@ -50,22 +50,13 @@ final class WindowOps(private val c: Chain) extends AnyVal {
     val df2 = inputColumns.foldLeft(c.df) { (d, cn) =>
       windowSizes.foldLeft(d) { (dd, ws) =>
         val w = spec(partition, orderBy).rowsBetween(-(ws - 1), 0)
-        val e =
-          if (Exact.isFloating(types(cn)))
-            sum(col(cn).cast(Exact.Wide)).over(w).cast("double") / count(col(cn).cast(Exact.Wide)).over(w)
-          else avg(col(cn)).over(w)
-        dd.withColumn(Naming.movingAvg(cn, ws), e)
+        dd.withColumn(Naming.movingAvg(cn, ws), windowAgg("AVG", cn, types(cn), w))
       }
     }
     val frags = for (cn <- inputColumns; ws <- windowSizes) yield {
       val frame = s"ROWS BETWEEN ${ws - 1} PRECEDING AND CURRENT ROW"
       val over = s"OVER (${overSql(partition, orderBy)} $frame)"
-      val e =
-        if (Exact.isFloating(types(cn)))
-          s"CAST(SUM(CAST($cn AS DECIMAL(38,${Exact.Scale}))) $over AS DOUBLE) / " +
-          s"COUNT(CAST($cn AS DECIMAL(38,${Exact.Scale}))) $over"
-        else s"AVG($cn) $over"
-      s"$e AS ${Naming.movingAvg(cn, ws)}"
+      s"${windowAggSql("AVG", cn, types(cn), over)} AS ${Naming.movingAvg(cn, ws)}"
     }
     c.next("moving_avg", df2, Some(s"SELECT *, ${frags.mkString(", ")} FROM {{source}}"))
   }
@@ -439,11 +430,8 @@ final class WindowOps(private val c: Chain) extends AnyVal {
 
   private def windowAggSql(fn: String, cn: String, dt: DataType, over: String): String =
     fn.toUpperCase match {
-      case "SUM" if Exact.isFloating(dt) =>
-        s"CAST(SUM(CAST($cn AS DECIMAL(38,${Exact.Scale}))) $over AS DOUBLE)"
-      case "AVG" | "MEAN" if Exact.isFloating(dt) =>
-        s"CAST(SUM(CAST($cn AS DECIMAL(38,${Exact.Scale}))) $over AS DOUBLE) / " +
-          s"COUNT(CAST($cn AS DECIMAL(38,${Exact.Scale}))) $over"
+      case "SUM" if Exact.isFloating(dt) => Exact.sumSql(cn, over)
+      case "AVG" | "MEAN" if Exact.isFloating(dt) => Exact.avgSql(cn, over)
       case "FIRST" | "FIRST_VALUE" => s"FIRST_VALUE($cn) $over"
       case "LAST" | "LAST_VALUE" => s"LAST_VALUE($cn) $over"
       case f => s"${f.toUpperCase}($cn) $over"
@@ -451,10 +439,8 @@ final class WindowOps(private val c: Chain) extends AnyVal {
 
   private def windowAgg(fn: String, cn: String, dt: DataType, w: WindowSpec): Column =
     fn.toUpperCase match {
-      case "SUM" if Exact.isFloating(dt) =>
-        sum(col(cn).cast(Exact.Wide)).over(w).cast("double")
-      case "AVG" | "MEAN" if Exact.isFloating(dt) =>
-        sum(col(cn).cast(Exact.Wide)).over(w).cast("double") / count(col(cn).cast(Exact.Wide)).over(w)
+      case "SUM" if Exact.isFloating(dt) => Exact.sum(col(cn), Some(w))
+      case "AVG" | "MEAN" if Exact.isFloating(dt) => Exact.avg(col(cn), Some(w))
       case "SUM" => sum(col(cn)).over(w)
       case "AVG" | "MEAN" => avg(col(cn)).over(w)
       case "MIN" => min(col(cn)).over(w)

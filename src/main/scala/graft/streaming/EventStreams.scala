@@ -812,7 +812,7 @@ object EventStreams {
     * corpus's mix — the dataset-shift alarm as a time series ("which
     * hour's event mix deviates from the accepted profile"). One row per
     * (window × value seen on either side): both counts, the eps-floored
-    * fixed-point PSI term ([[graft.ops.AggOps.psiTermsGrouped]] —
+    * fixed-point PSI term ([[graft.ops.AggOps.psiTerms]] —
     * partitioning- and engine-independent), and the window's `psi_total`
     * repeated on its rows. Null values are excluded on both sides (count
     * them separately if they matter).
@@ -874,7 +874,7 @@ object EventStreams {
       .select(col("window_start"), col("value"),
         coalesce(try_element_at(col("_mb"), col("value")), lit(0L)).as("cnt_base"),
         coalesce(try_element_at(col("_mo"), col("value")), lit(0L)).as("cnt_other"))
-    graft.ops.AggOps.psiTermsGrouped(joined, Seq("window_start"), eps)
+    graft.ops.AggOps.psiTerms(joined, eps, Seq("window_start"))
       .select("window_start", "value", "cnt_base", "cnt_other",
         "psi_term", "psi_total")
   }
@@ -966,7 +966,7 @@ object EventStreams {
     * Scale: one map-side-combined aggregate per side (≤ buckets rows per
     * window out); the spine-complete reference profile (buckets rows)
     * broadcasts onto the distinct-window spine; totals and psi_total stay
-    * partitioned by window ([[graft.ops.AggOps.psiTermsGrouped]]) — no
+    * partitioned by window ([[graft.ops.AggOps.psiTerms]]) — no
     * global window, unbounded stream history is fine. Batch face of
     * [[sinkDriftNumericUpsertToTable]].
     */
@@ -1047,7 +1047,7 @@ object EventStreams {
       .join(broadcast(refC), Seq("bucket"), "left")
       .select(col("window_start"), col("bucket"), col("cnt_base"),
         col("cnt_other"))
-    graft.ops.AggOps.psiTermsGrouped(joined, Seq("window_start"), eps)
+    graft.ops.AggOps.psiTerms(joined, eps, Seq("window_start"))
       .withColumn("bucket_lo", lit(lo) + col("bucket") * lit(w))
       .withColumn("bucket_hi", lit(lo) + (col("bucket") + lit(1L)) * lit(w))
       .select("window_start", "bucket", "bucket_lo", "bucket_hi",
@@ -1069,7 +1069,7 @@ object EventStreams {
     *
     * Scale: the cutoffs are a one-row broadcast; window counts are one
     * map-side-combined aggregate; PSI totals stay partitioned by window
-    * (psiTermsGrouped) — no global window, unbounded stream history is
+    * (psiTerms) — no global window, unbounded stream history is
     * fine. Cutoffs inside the sketch's exact regime (reference n ≤ k)
     * are literal inclusive-rank order statistics (oracle-replayable);
     * beyond it they carry KLL's published rank-error bounds.
@@ -1116,7 +1116,7 @@ object EventStreams {
       .select(col("window_start"), col("bucket"),
         coalesce(col("_cb"), lit(0L)).as("cnt_base"), col("cnt_other"))
     graft.ops.AggOps.withCutoffBounds(
-        graft.ops.AggOps.psiTermsGrouped(joined, Seq("window_start"), eps),
+        graft.ops.AggOps.psiTerms(joined, eps, Seq("window_start")),
         cuts, buckets)
       .select("window_start", "bucket", "cut_lo", "cut_hi",
         "cnt_base", "cnt_other", "psi_term", "psi_total")
@@ -1224,44 +1224,13 @@ object EventStreams {
       col("_pos").as("_r_pos"))): _*)
     val cond = keys.map(k => col(k) <=> col(s"_r_$k")).reduce(_ && _)
     val frame = spine.join(accR, cond, "left")
-      .select((groupBy.map(col) ++ Seq(
-        col("bucket"),
-        (col("bucket") * lit(w)).as("bucket_lo"),
-        ((col("bucket") + lit(1L)) * lit(w)).as("bucket_hi"),
-        coalesce(col("_r_n"), lit(0L)).as("n"),
-        when(col("_r_n") > 0, col("_r_ssumd").cast("double") / col("_r_n"))
-          .otherwise(lit(null).cast("double")).as("score_avg"),
-        when(col("_r_n") > 0, col("_r_pos").cast("double") / col("_r_n").cast("double"))
-          .otherwise(lit(null).cast("double")).as("pos_rate"),
+      .select((groupBy.map(col) ++ (col("bucket") +: graft.ops.AggOps.calibrationStats(
+        col("bucket"), col("_r_n"), col("_r_ssumd"), col("_r_pos"), w)) ++ Seq(
         col("_r_ssumd").as("_ssumd"), col("_r_pos").as("_pos"))): _*)
-    // (29,8) casts: both operands ≤ n_b ≤ Long.Max, and the (30,8)
-    // difference stays inside the 38-digit cap — no scale truncation
-    // (the batch face's exact-term regime, see calibrationProfile)
-    val term = when(col("n") > 0,
-      abs(col("_pos").cast(DecimalType(29, 8)) -
-        col("_ssumd").cast(DecimalType(29, 8))))
-      .otherwise(lit(BigDecimal(0)).cast(DecimalType(30, 8)))
-    // grouped N/ece close with a window over the bounded frame (one
-    // consumer — the batch face's regime); ungrouped broadcasts the
-    // one-row total instead of a single-task global window
-    val withEce =
-      if (groupBy.isEmpty) {
-        val eceAggs = Seq(sum(term).as("_q"), sum(col("n")).as("_N"))
-        frame.crossJoin(broadcast(frame.agg(eceAggs.head, eceAggs.tail: _*)))
-      } else {
-        val wG = org.apache.spark.sql.expressions.Window
-          .partitionBy(groupBy.map(col): _*)
-        frame.withColumn("_q", sum(term).over(wG))
-          .withColumn("_N", sum(col("n")).over(wG))
-      }
     val pbCol =
       if (groupBy.isEmpty) lit(0)
       else pmod(hash(groupBy.map(col): _*), lit(profileBuckets))
-    withEce
-      .withColumn("ece", when(col("_N") === 0L, lit(null).cast("double"))
-        .otherwise(col("_q").cast("double") / col("_N").cast("double")))
-      .drop("_q", "_N")
-      .withColumn("_pb", pbCol)
+    graft.ops.AggOps.withCalibrationEce(frame, groupBy).withColumn("_pb", pbCol)
   }
 
   /** Streaming face of [[graft.ops.AggOps.calibrationProfile]] — the
@@ -1309,7 +1278,6 @@ object EventStreams {
       s"sink_calibration group columns may not start with the internal " +
         s"rename prefixes _r_/_o_: $groupBy — rename first")
     val session = events.sparkSession
-    val zeroD = lit(BigDecimal(0)).cast(DecimalType(38, 8))
     val q = events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -1329,7 +1297,7 @@ object EventStreams {
           val bc = batch
             .groupBy((groupBy.map(col) :+ when(ok, b).as("bucket")): _*)
             .agg(count(when(ok, lit(1))).as("n"),
-              sum(when(ok, s).cast(DecimalType(38, 8))).as("_ssumd"),
+              Exact.sum8Decimal(when(ok, s)).as("_ssumd"),
               sum(when(ok && l =!= lit(0.0), 1L).otherwise(0L)).as("_pos"))
           val newAcc = bc.where(col("bucket").isNotNull)
           val newGroups =
@@ -1363,8 +1331,7 @@ object EventStreams {
               .select((mKeys.map(k => coalesce(col(k), col(s"_o_$k")).as(k)) ++ Seq(
                 (coalesce(col("_n_new"), lit(0L)) +
                   coalesce(col("_n_old"), lit(0L))).as("n"),
-                (coalesce(col("_sd_new"), zeroD) + coalesce(col("_sd_old"), zeroD))
-                  .cast(DecimalType(38, 8)).as("_ssumd"),
+                Exact.add8(col("_sd_new"), col("_sd_old")).as("_ssumd"),
                 (coalesce(col("_p_new"), lit(0L)) +
                   coalesce(col("_p_old"), lit(0L))).as("_pos"))): _*)
               // drop the stored spine padding (re-derived by the closing —

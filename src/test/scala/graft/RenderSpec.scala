@@ -131,6 +131,36 @@ class RenderSpec extends AnyFunSuite {
     }
   }
 
+  test("exact-sum faces round-trip on NaN rows, null rows and an all-NaN group") {
+    // windowed SUM/AVG (windowAggSql), flag_outliers grouped and
+    // ungrouped, and aggregate STDDEV/VAR render through graft.core.Exact's
+    // SQL face; NaN and null rows must leave every statistic the same way
+    // on both faces
+    import spark.implicits._
+    val nan = Double.NaN
+    Seq[(String, Int, java.lang.Double)](
+      ("a", 1, 1.5), ("a", 2, nan), ("a", 3, null), ("a", 4, 2.25),
+      ("a", 5, -7.125), ("a", 6, 40.0), ("a", 7, 0.1),
+      ("b", 1, 0.1), ("b", 2, 0.2), ("b", 3, nan), ("b", 4, 0.3), ("b", 5, null),
+      ("c", 1, nan), ("c", 2, nan), ("c", 3, nan))
+      .toDF("g", "t", "x").createOrReplaceTempView("exact_faces")
+    val base = graft.core.Chain(spark, "exact_faces", spark.table("exact_faces"))
+    val order = Seq("g" -> "ASC", "t" -> "ASC")
+    val sumAvg = Seq("x" -> Seq("SUM", "AVG"))
+    val chains = Seq(
+      base.rollingAgg(sumAvg, order, (-2, 0), Seq("g")),
+      base.rollingAgg(sumAvg, order, (-1, 1)),
+      base.cumulativeAgg(sumAvg, order, "forward", Seq("g")),
+      base.cumulativeAgg(sumAvg, order, "reverse"),
+      base.flagOutliers("x", Seq("g"), z = 1.0),
+      base.flagOutliers("x", z = 1.0),
+      base.aggregate(Seq("g"), Seq("x" -> Seq("STDDEV", "VAR", "SUM", "AVG"))),
+      base.aggregate(Nil, Seq("x" -> Seq("STDDEV", "VAR"))))
+    chains.foreach { ch =>
+      assert(rows(spark.sql(ch.sql())) == rows(ch.df), s"mismatch for ${ch.steps.last.op}")
+    }
+  }
+
   test("scalar ext text/similarity ops render SQL equivalent to their DataFrame faces") {
     import graft.ext._
     val docs = table("documents")

@@ -40,12 +40,9 @@ class Round18Spec extends AnyFunSuite {
       s"fixture must satisfy the probe: bound=$bound n=${values.size}")
     val got = df.agg(
       Exact.splitDecimalSum8(col("x")).as("split"),
-      Exact.splitDecimalSum8(col("x"), fastCast = true).as("fast"),
       sum(col("x").cast(DecimalType(38, 8))).cast("double").as("dec")).head()
-    assert(bitEq(got.get(0), got.get(2)),
-      s"split=${got.get(0)} dec=${got.get(2)} for $values")
-    assert(bitEq(got.get(1), got.get(2)),
-      s"fastCast=${got.get(1)} dec=${got.get(2)} for $values")
+    assert(bitEq(got.get(0), got.get(1)),
+      s"split=${got.get(0)} dec=${got.get(1)} for $values")
   }
 
   test("splitDecimalSum8: bit-identical to the decimal sum on adversarial values") {

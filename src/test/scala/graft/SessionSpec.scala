@@ -113,13 +113,15 @@ class SessionSpec extends AnyFunSuite {
     assert(sess.tableType("sess_never_bound") == "UNKNOWN")
   }
 
-  test("src/main builds sessions in one place and ships no dev mains") {
+  private lazy val mainSources: List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    val sources = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("src/main builds sessions in one place and ships no dev mains") {
+    val sources = mainSources
     assert(sources.size > 50, s"expected the library sources, got ${sources.size}")
     def occurrences(needle: String): Seq[String] = sources.flatMap { f =>
       val text = java.nio.file.Files.readString(f)
@@ -128,6 +130,33 @@ class SessionSpec extends AnyFunSuite {
     }.sorted
     assert(occurrences("SparkSession.builder()") == Seq("GraftSession.scala"))
     assert(occurrences("def main(") == Seq("Bench.scala", "Verify.scala"))
+  }
+
+  test("src/main spells the exact-sum contracts only in graft.core.Exact") {
+    // the decimal accumulator types and the fixed-point quantizer, as an
+    // op would spell them by hand; SparkEntry's oracle SQL is the
+    // independent reference and keeps its own spelling
+    val needles = Seq("DecimalType(38, 4)", "DecimalType(38, 8)", "Exact.Wide",
+      "DECIMAL(38,4)", "DECIMAL(38,8)", "DECIMAL(38,${Exact.Scale})",
+      "lit(1e6) + lit(0.5)", "lit(1e12) + lit(0.5)", "* 1000000 + 0.5", "* 1e12 + 0.5")
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    val exempt = Set("graft/core/Exact.scala", "graft/SparkEntry.scala")
+    val checked = mainSources.filterNot(f => exempt.exists(e => f.toString.endsWith(e)))
+    assert(checked.size == mainSources.size - 2, "both exempt files must exist")
+    val hits = for {
+      f <- checked
+      (line, i) <- java.nio.file.Files.readAllLines(f).toArray(Array.empty[String]).zipWithIndex
+      if !isComment(line)
+      needle <- needles if line.contains(needle)
+    } yield s"${f.getFileName}:${i + 1}: $needle"
+    assert(hits.isEmpty, hits.mkString("exact-sum contract spelled outside Exact:\n", "\n", ""))
+    val fpqDefs = mainSources.flatMap { f =>
+      "def fpq\\b".r.findAllMatchIn(java.nio.file.Files.readString(f)).map(_ => f.getFileName.toString)
+    }
+    assert(fpqDefs == Seq("Exact.scala"), s"expected one fpq definition, found $fpqDefs")
   }
 
   test("a harness run counts the jobs of its own job group") {
