@@ -33,7 +33,10 @@ object SparkEntry {
     * join → datetrunc → rename → aggregate → lag → moving_avg →
     * target_encode → impute → train_test_split.
     */
-  def entry(spark: SparkSession): DataFrame = {
+  def entry(spark: SparkSession): DataFrame = entryChain(spark).df
+
+  /** [[entry]] as a chain, for its SQL face and `releaseCheckpoints`. */
+  def entryChain(spark: SparkSession): Chain = {
     val dir = "/root/testdata/sf0.001"
     val li = t(spark, dir, "lineitem")
     val o = t(spark, dir, "orders")
@@ -49,7 +52,6 @@ object SparkEntry {
       .targetEncode("l_partkey", "l_extendedprice_sum")
       .impute(Seq("lag_l_extendedprice_sum_1" -> "mean"))
       .trainTestSplit(Seq("l_partkey" -> "ASC", "order_week" -> "ASC"), 0.8)
-      .df
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -26,21 +26,50 @@ final case class TransformStep(
   * SQL-text rendering / dbt export parity with the reference's `SQLChain`
   * (rasgoql/primitives/transforms.py:261-429).
   *
-  * Nothing executes until a terminal verb (`preview`, `toLocal`, `save`).
+  * Row work runs at a terminal verb (`preview`, `toLocal`, `save`), with
+  * one declared exception: ops whose output depends on the data run an
+  * eager, bounded driver action while the chain is built, as the
+  * reference's compile-time `run_query` probes do —
+  *   - schema-determining probes (one-hot and pivot values, label maps);
+  *   - scalar statistics (impute's mean and median, standard_scaler,
+  *     min_max_scaler, equal-width bin ranges), through
+  *     [[CheckpointProbe.stats]];
+  *   - fits and iterative loops (clustering, regressions, k-means,
+  *     train_test_split's count).
+  * Over a shuffled upstream the scalar statistics ride one
+  * `localCheckpoint`, and the step builds on its blocks, so the prefix
+  * runs once; those blocks, and every other checkpoint a step leaves,
+  * are freed by [[releaseCheckpoints]].
   */
 final class Chain private (
     val spark: SparkSession,
     val entryName: String,
     val df: DataFrame,
-    val steps: Vector[TransformStep]) {
+    val steps: Vector[TransformStep],
+    entry: DataFrame,
+    superseded: Set[Int]) {
+
+  /** Ids of the checkpointed RDDs `df` reads. */
+  private lazy val checkpoints: Set[Int] = Chain.checkpointIds(df)
+
+  private def append(newDf: DataFrame, step: TransformStep): Chain = {
+    val more = new Chain(spark, entryName, newDf, steps :+ step, entry, superseded)
+    // checkpoints a step left that a later step no longer reads (a sort
+    // checkpointed over an earlier checkpoint) are out of reach of a walk
+    // of the final plan: remember their ids for releaseCheckpoints, unless
+    // the caller's entry frame brought them in
+    val dropped = checkpoints -- more.checkpoints -- superseded
+    if (dropped.isEmpty) more
+    else new Chain(spark, entryName, newDf, more.steps, entry,
+      superseded ++ (dropped -- Chain.checkpointIds(entry)))
+  }
 
   /** Append a step (functional — returns a new Chain, like the reference's
     * immutable chaining).
     */
   def next(op: String, newDf: DataFrame, fragment: Option[String],
            args: Map[String, String] = Map.empty): Chain =
-    new Chain(spark, entryName, newDf,
-      steps :+ TransformStep(op, Naming.stepAlias(steps.length + 1), fragment, args))
+    append(newDf, TransformStep(op, Naming.stepAlias(steps.length + 1), fragment, args))
 
   /** Append a step whose SQL face is computed only when rendered — for ops
     * whose text form needs driver introspection (e.g. a VALUES literal of
@@ -48,9 +77,8 @@ final class Chain private (
     */
   def nextLazy(op: String, newDf: DataFrame, fragmentFn: () => String,
                args: Map[String, String] = Map.empty): Chain =
-    new Chain(spark, entryName, newDf,
-      steps :+ TransformStep(op, Naming.stepAlias(steps.length + 1), None, args,
-        Some(fragmentFn)))
+    append(newDf, TransformStep(op, Naming.stepAlias(steps.length + 1), None, args,
+      Some(fragmentFn)))
 
   /** Functional escape hatch: any DataFrame=>DataFrame as a step. */
   def transformDf(op: String)(f: DataFrame => DataFrame): Chain =
@@ -337,11 +365,18 @@ final class Chain private (
   def toDbt(outputDir: String, modelName: String, materialize: String = "view"): Seq[String] =
     graft.render.DbtExport.toDbt(this, outputDir, modelName, materialize)
 
-  /** Release the checkpoint blocks an iterative operator left embedded in
-    * this chain's plan (see [[Chain.releaseCheckpoints]]). Terminal: call
-    * after the last read of this chain and anything derived from it.
+  /** Release the checkpoint blocks this chain's steps left: every one
+    * embedded in the final plan (see [[Chain.releaseCheckpoints]]) and every
+    * one an earlier step created that a later checkpoint superseded.
+    * Persisted (cached) inputs are never released, nor a checkpointed
+    * entry frame that a step superseded. Terminal: call after the last read
+    * of this chain and anything derived from it.
     */
-  def releaseCheckpoints(): Unit = Chain.releaseCheckpoints(df)
+  def releaseCheckpoints(): Unit = {
+    Chain.releaseCheckpoints(df)
+    val live = spark.sparkContext.getPersistentRDDs
+    superseded.foreach(id => live.get(id).foreach(_.unpersist(false)))
+  }
 
   /** Plan-shape guardrails ([[ScaleLint]]): inspect the compiled plan for
     * shapes that don't survive cluster scale.
@@ -357,7 +392,7 @@ final class Chain private (
 
 object Chain {
   def apply(spark: SparkSession, entryName: String, df: DataFrame): Chain =
-    new Chain(spark, entryName, df, Vector.empty)
+    new Chain(spark, entryName, df, Vector.empty, df, Set.empty)
 
   /** Release EVERY checkpoint block embedded in a frame's plan: walks the
     * analyzed plan and unpersists each `LogicalRDD`'s blocks. This is the
@@ -368,7 +403,16 @@ object Chain {
     * the frame (or anything derived from it) again. A truncated plan cannot
     * recompute: reading after release fails rather than silently rescanning.
     */
-  def releaseCheckpoints(df: DataFrame): Unit = {
+  def releaseCheckpoints(df: DataFrame): Unit =
+    checkpointedRdds(df).foreach { rdd =>
+      if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        rdd.unpersist(false)
+    }
+
+  private def checkpointIds(df: DataFrame): Set[Int] = checkpointedRdds(df).map(_.id).toSet
+
+  /** The checkpointed RDDs a frame's plan reads, stopping at each one. */
+  private def checkpointedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {
     // walk each embedded RDD's dependency ancestors too: an op that maps
     // over a checkpointed RDD (the PrefixScan shape — localCheckpoint,
     // then mapPartitions) surfaces the UNPERSISTED map RDD in the plan
@@ -387,6 +431,7 @@ object Chain {
     // callers sharing such frames must not call this hook on them.
     val seen = scala.collection.mutable.HashSet.empty[Int]
     val stack = scala.collection.mutable.ArrayDeque.empty[org.apache.spark.rdd.RDD[_]]
+    val found = Seq.newBuilder[org.apache.spark.rdd.RDD[_]]
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD => stack.append(lr.rdd)
       case _ => ()
@@ -394,11 +439,10 @@ object Chain {
     while (stack.nonEmpty) {
       val rdd = stack.removeLast()
       if (seen.add(rdd.id)) {
-        if (rdd.isCheckpointed) {
-          if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-            rdd.unpersist(false)
-        } else rdd.dependencies.foreach(d => stack.append(d.rdd))
+        if (rdd.isCheckpointed) found += rdd
+        else rdd.dependencies.foreach(d => stack.append(d.rdd))
       }
     }
+    found.result()
   }
 }

@@ -1,6 +1,9 @@
 package graft.core
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Eager `localCheckpoint` with aggregate metrics computed BY the
   * materialization job itself (`Dataset.observe`) — the round-17
@@ -11,21 +14,23 @@ import org.apache.spark.sql.{Column, DataFrame}
   * pass over DISK_ONLY blocks per round). The observation's accumulators
   * ride the checkpoint action, so the probe is free.
   *
-  * The metric map is read through the observation listener. The wait is
-  * BOUNDED (`spark.graft.checkpointProbe.waitMs`, default 2000): an
-  * 11-round iterative loop on a listener bus that never delivers must
-  * not sleep 10 s per round (round-17 verdict #5) — past the bound the
-  * helper recomputes the metrics with one aggregate over the
-  * MATERIALIZED blocks (cheap: the exact job this helper exists to
-  * remove, paid only when the listener path fails). Spark 4 registers
-  * observations with the session-level ObservationManager (one shared
-  * listener per session, not one per probe), so an undelivered probe
-  * leaks only its map entry, never a listener.
-  * `spark.graft.checkpointProbe.forceFallback = true` skips the
-  * listener read entirely — the spec's hook for pinning the fallback
-  * path.
+  * The metrics are read synchronously from the observed frame's own
+  * executed plan once the checkpoint action returns: the scheduler merges
+  * every task's accumulator update before it releases the job's waiter,
+  * so no listener delivery is waited on — empty and zero-partition inputs
+  * included. Should the plan hold no observed row, the helper recomputes
+  * the metrics with one aggregate over the MATERIALIZED blocks (cheap:
+  * the exact job this helper exists to remove).
+  * `spark.graft.checkpointProbe.forceFallback = true` takes that path
+  * unconditionally — the spec's hook for pinning it.
+  *
+  * [[stats]] is the home of the chain ops' eager scalar statistics (the
+  * reference's compile-time `run_query` probes): it checkpoints only when
+  * that saves recomputing a shuffled upstream.
   */
 private[graft] object CheckpointProbe {
+
+  private val ids = new AtomicLong(0L)
 
   /** Checkpoint `df` eagerly and return (checkpointed frame, metric
     * values in `metrics` order). Aggregate columns only (the
@@ -33,34 +38,59 @@ private[graft] object CheckpointProbe {
     */
   def apply(df: DataFrame, metrics: (String, Column)*): (DataFrame, Seq[Any]) = {
     require(metrics.nonEmpty, "checkpoint_probe: at least one metric")
-    val conf = df.sparkSession.conf
-    val names = metrics.map(_._1)
     val named = metrics.map { case (n, c) => c.as(n) }
-    val force = conf
+    val force = df.sparkSession.conf
       .get("spark.graft.checkpointProbe.forceFallback", "false").toBoolean
     if (force) {
       val cp = df.localCheckpoint()
-      return (cp, fallback(cp, named, names.size))
+      return (cp, aggregate(cp, named))
     }
-    val waitMs = math.max(0L,
-      conf.get("spark.graft.checkpointProbe.waitMs", "2000").toLong)
-    val obs = new org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, named.head, named.tail: _*).localCheckpoint()
-    var m = org.apache.spark.sql.GraftBridge.observationResult(obs)
-    var waited = 0L
-    while (m.isEmpty && waited < waitMs) {
-      Thread.sleep(5); waited += 5
-      m = org.apache.spark.sql.GraftBridge.observationResult(obs)
+    val name = s"graft_checkpoint_probe_${ids.incrementAndGet()}"
+    val observed = df.observe(name, named.head, named.tail: _*)
+    val cp = observed.localCheckpoint()
+    observed.queryExecution.observedMetrics.get(name) match {
+      case Some(row) => (cp, named.indices.map(row.get))
+      case None => (cp, aggregate(cp, named))
     }
-    if (m.nonEmpty) (cp, names.map(m(_)))
-    else (cp, fallback(cp, named, names.size))
   }
 
-  /** One bounded aggregate over the materialized checkpoint blocks —
-    * the pre-observe probe job, kept as the defensive path.
+  /** Eager scalar statistics over `df`: (the frame later steps must build
+    * on, metric values in `metrics` order). Two paths, chosen by a
+    * property of the plan ([[shuffled]]):
+    *   - a SHUFFLED upstream (join, aggregate, window, global sort,
+    *     repartition, distinct, expand) is computed once: the metrics ride
+    *     one `localCheckpoint` ([[apply]]) and the returned frame reads its
+    *     blocks, so the step's own action and every later one (a sort, a
+    *     write) skip the prefix. The blocks live until
+    *     [[Chain.releaseCheckpoints]] or garbage collection.
+    *   - a NARROW upstream (scans, projections, filters, an earlier
+    *     checkpoint) keeps the column-pruned aggregate and returns `df`
+    *     itself: checkpointing a bare scan would store every column to
+    *     save one pruned read.
+    * Both paths evaluate the same aggregate expressions over the same
+    * rows, so the values — and the SQL faces built from them — agree.
     */
-  private def fallback(cp: DataFrame, named: Seq[Column], n: Int): Seq[Any] = {
-    val row = cp.agg(named.head, named.tail: _*).collect()(0)
-    (0 until n).map(row.get)
+  def stats(df: DataFrame, metrics: (String, Column)*): (DataFrame, Seq[Any]) = {
+    require(metrics.nonEmpty, "stats: at least one metric")
+    if (shuffled(df)) apply(df, metrics: _*)
+    else (df, aggregate(df, metrics.map { case (n, c) => c.as(n) }))
+  }
+
+  /** Does computing `df` plan a shuffle? True when its optimized plan
+    * (subqueries included) holds a join, aggregate, window, global sort,
+    * repartition, deduplication or expand node; cached relations and
+    * checkpoints are leaves, so their upstream does not count.
+    */
+  def shuffled(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case n @ (_: Join | _: Aggregate | _: Window | _: RepartitionOperation |
+                _: RebalancePartitions | _: Deduplicate | _: Distinct | _: Expand) => n
+      case s: Sort if s.global => s
+    }.nonEmpty
+
+  /** One aggregate job over `df`, values in `named` order. */
+  private def aggregate(df: DataFrame, named: Seq[Column]): Seq[Any] = {
+    val row = df.agg(named.head, named.tail: _*).collect()(0)
+    named.indices.map(row.get)
   }
 }

@@ -1562,8 +1562,11 @@ final class AggOps(private val c: Chain) extends AnyVal {
       .agg(count(lit(1)).as("_o"))
     val ra = c.df.where(both).groupBy(va.as("value_a")).agg(count(lit(1)).as("_ra"))
     val cb = c.df.where(both).groupBy(vb.as("value_b")).agg(count(lit(1)).as("_cb"))
-    val n = c.df.where(both).agg(count(lit(1)).as("_n"),
-      countDistinct(va).as("_ka"), countDistinct(vb).as("_kb"))
+    // the totals come from the margins (n = Σ row margins, and the level
+    // counts are their row counts): two COUNT(DISTINCT …) over the input
+    // planned an Expand whose grouping-set order varied from run to run
+    val n = ra.agg(sum(col("_ra")).as("_n"), count(lit(1)).as("_ka"))
+      .crossJoin(cb.agg(count(lit(1)).as("_kb")))
     // the margin cross product IS the output; ScaleLint reads the
     // aggregated broadcast build as the domain-sized (info-level) pattern
     // it is, and the one-row totals frames under the ungrouped-aggregate

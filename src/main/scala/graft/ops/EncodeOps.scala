@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.core.{Chain, Exact, Naming, PrefixScan}
-import org.apache.spark.sql.{Column, Row}
+import graft.core.{Chain, CheckpointProbe, Exact, Naming, PrefixScan}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -13,7 +13,11 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * Ops that need the value domain or column statistics perform a bounded,
   * declared driver-side action — the exact analogue of the reference's
   * compile-time `run_query` probes (rasgoql/primitives/rendering.py:272-330,
-  * capped there at 100 rows; capped here by `maxDistinct`).
+  * capped there at 100 rows; capped here by `maxDistinct`). Scalar
+  * statistics (impute's mean/median, the scalers, the equal-width bin
+  * range) go through [[graft.core.CheckpointProbe.stats]]: over a shuffled
+  * upstream the step builds on the checkpoint the statistics rode
+  * (release with [[graft.core.Chain.releaseCheckpoints]]).
   */
 final class EncodeOps(private val c: Chain) extends AnyVal {
 
@@ -217,9 +221,11 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
 
   /** impute(imputations, flag_missing_vals): fill nulls with a constant or
     * a computed statistic ("mean" | "median" | "mode") per column; optional
-    * `<col>_missing_flag` indicators. Statistics come from one bounded
-    * aggregate (mode: one small groupBy per mode-imputed column,
-    * deterministic tie-break by smallest value).
+    * `<col>_missing_flag` indicators. Means and medians come from one eager
+    * statistics pass ([[graft.core.CheckpointProbe.stats]]: over a shuffled
+    * upstream it checkpoints, and the step builds on the blocks); mode:
+    * one small groupBy per mode-imputed column, deterministic tie-break by
+    * smallest value.
     */
   def impute(imputations: Seq[(String, String)], flagMissingVals: Boolean = false): Chain = {
     val types = c.df.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -233,27 +239,28 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
     val statCols = imputations.flatMap { case (cn, how) =>
       how.toLowerCase match {
         case "mean" =>
-          Some((if (Exact.isFloating(types(cn))) Exact.avg(col(cn))
-                else avg(col(cn))).as(s"_m_$cn"))
-        case "median" => Some(percentile(nanFree(cn), lit(0.5)).as(s"_m_$cn"))
+          Some(s"_m_$cn" -> (if (Exact.isFloating(types(cn))) Exact.avg(col(cn))
+                             else avg(col(cn))))
+        case "median" => Some(s"_m_$cn" -> percentile(nanFree(cn), lit(0.5)))
         case _ => None
       }
     }
-    val statRow =
-      if (statCols.nonEmpty) Some(c.df.agg(statCols.head, statCols.tail: _*).collect()(0))
-      else None
+    val (base, statVals) =
+      if (statCols.nonEmpty) CheckpointProbe.stats(c.df, statCols: _*)
+      else (c.df, Nil)
+    val statOf = statCols.map(_._1).zip(statVals).toMap
     val flagged =
       if (flagMissingVals)
-        imputations.foldLeft(c.df) { case (d, (cn, _)) =>
+        imputations.foldLeft(base) { case (d, (cn, _)) =>
           d.withColumn(Naming.cleanse(s"${cn}_missing_flag"),
             when(col(cn).isNull, 1).otherwise(0))
         }
-      else c.df
+      else base
     val fills = imputations.map { case (cn, how) =>
       val v: Any = how.toLowerCase match {
-        case "mean" | "median" => statRow.get.getAs[Any](s"_m_$cn")
+        case "mean" | "median" => statOf(s"_m_$cn")
         case "mode" =>
-          val m = c.df.where(nanFree(cn).isNotNull).groupBy(col(cn).as("_v")).count()
+          val m = base.where(nanFree(cn).isNotNull).groupBy(col(cn).as("_v")).count()
             .orderBy(col("count").desc, col("_v").asc).limit(1).collect()
           if (m.isEmpty) null else m(0).get(0)
         case raw => raw
@@ -294,12 +301,12 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
         // it silently into the LAST bin)
         val xd = col(column).cast("double")
         val xr = when(!isnan(xd), xd)
-        val r = c.df.agg(min(xr).as("mn"), max(xr).as("mx")).collect()(0)
+        val (base, Seq(mnV, mxV)) = CheckpointProbe.stats(c.df, "mn" -> min(xr), "mx" -> max(xr))
         // an all-null / all-NaN column leaves no range statistic at all —
         // refuse loudly by name instead of an opaque NPE off the null Row
-        require(!r.isNullAt(0) && !r.isNullAt(1),
+        require(mnV != null && mxV != null,
           s"bin(equalwidth): column $column has no non-null, non-NaN values to derive a range from")
-        val (mn, mx) = (r.getDouble(0), r.getDouble(1))
+        val (mn, mx) = (mnV.asInstanceOf[Double], mxV.asInstanceOf[Double])
         val width = (mx - mn) / binCount
         val e0 =
           if (width == 0d) lit(0)
@@ -308,7 +315,7 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
         val coreSql =
           if (width == 0d) "0"
           else s"CAST(LEAST(FLOOR((CAST($column AS DOUBLE) - $mn) / $width), ${binCount - 1}) AS INT)"
-        c.next("bin", c.df.withColumn(name, e), Some(
+        c.next("bin", base.withColumn(name, e), Some(
           s"SELECT *, CASE WHEN NOT isnan(CAST($column AS DOUBLE)) THEN $coreSql END " +
             s"AS $name FROM {{source}}"))
       case "ntile" =>
@@ -1001,18 +1008,14 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
     def xr(cn: String) = {
       val xd = col(cn).cast("double"); when(!isnan(xd), xd)
     }
-    val statRow =
-      if (need.nonEmpty) {
-        val aggs = need.flatMap(cn => Seq(
-          Exact.avg(xr(cn)).as(s"_mu_$cn"),
-          Exact.stddev(xr(cn)).as(s"_sd_$cn")))
-        Some(c.df.agg(aggs.head, aggs.tail: _*).collect()(0))
-      } else None
+    val (base, statOf) = scalarStats(need.flatMap(cn => Seq(
+      s"_mu_$cn" -> Exact.avg(xr(cn)),
+      s"_sd_$cn" -> Exact.stddev(xr(cn)))))
     val stats = columnsToScale.map { cn =>
-      cn -> (averages.getOrElse(cn, statRow.get.getAs[Double](s"_mu_$cn")),
-        stddevs.getOrElse(cn, statRow.get.getAs[Double](s"_sd_$cn")))
+      cn -> (averages.getOrElse(cn, statOf(s"_mu_$cn")),
+        stddevs.getOrElse(cn, statOf(s"_sd_$cn")))
     }
-    val df2 = stats.foldLeft(c.df) { case (d, (cn, (mu, sd))) =>
+    val df2 = stats.foldLeft(base) { case (d, (cn, (mu, sd))) =>
       d.withColumn(Naming.cleanse(s"${cn}_scaled"),
         (col(cn).cast("double") - lit(mu)) / lit(sd))
     }
@@ -1031,22 +1034,18 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
       minimums: Map[String, Double] = Map.empty,
       maximums: Map[String, Double] = Map.empty): Chain = {
     val need = columnsToScale.filterNot(cn => minimums.contains(cn) && maximums.contains(cn))
-    val statRow =
-      if (need.nonEmpty) {
-        // NaN excluded from the range: max() returns NaN when any row is
-        // NaN (NaN compares greatest), which would scale the WHOLE column
-        // to NaN; NaN values themselves scale to NaN row-wise instead
-        val aggs = need.flatMap { cn =>
-          val xd = col(cn).cast("double"); val xr = when(!isnan(xd), xd)
-          Seq(min(xr).as(s"_mn_$cn"), max(xr).as(s"_mx_$cn"))
-        }
-        Some(c.df.agg(aggs.head, aggs.tail: _*).collect()(0))
-      } else None
+    // NaN excluded from the range: max() returns NaN when any row is
+    // NaN (NaN compares greatest), which would scale the WHOLE column
+    // to NaN; NaN values themselves scale to NaN row-wise instead
+    val (base, statOf) = scalarStats(need.flatMap { cn =>
+      val xd = col(cn).cast("double"); val xr = when(!isnan(xd), xd)
+      Seq(s"_mn_$cn" -> min(xr), s"_mx_$cn" -> max(xr))
+    })
     val stats = columnsToScale.map { cn =>
-      cn -> (minimums.getOrElse(cn, statRow.get.getAs[Double](s"_mn_$cn")),
-        maximums.getOrElse(cn, statRow.get.getAs[Double](s"_mx_$cn")))
+      cn -> (minimums.getOrElse(cn, statOf(s"_mn_$cn")),
+        maximums.getOrElse(cn, statOf(s"_mx_$cn")))
     }
-    val df2 = stats.foldLeft(c.df) { case (d, (cn, (mn, mx))) =>
+    val df2 = stats.foldLeft(base) { case (d, (cn, (mn, mx))) =>
       d.withColumn(Naming.cleanse(s"${cn}_scaled"),
         (col(cn).cast("double") - lit(mn)) / lit(mx - mn))
     }
@@ -1069,6 +1068,17 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
       s"LEVENSHTEIN($cn, $column2) AS ${Naming.cleanse(s"lev_${cn}_$column2")}")
     c.next("levenshtein", df2, Some(s"SELECT *, ${frags.mkString(", ")} FROM {{source}}"))
   }
+
+  /** The scalers' double-valued statistics by name, through
+    * [[graft.core.CheckpointProbe.stats]], plus the frame the step builds
+    * on; no metrics, no job.
+    */
+  private def scalarStats(metrics: Seq[(String, Column)]): (DataFrame, Map[String, Double]) =
+    if (metrics.isEmpty) (c.df, Map.empty)
+    else {
+      val (base, vals) = CheckpointProbe.stats(c.df, metrics: _*)
+      (base, metrics.map(_._1).zip(vals.map(_.asInstanceOf[Double])).toMap)
+    }
 
   private def distinctValues(column: String, maxDistinct: Int): Seq[String] = {
     val vals = c.df.select(col(column).cast("string")).distinct()

@@ -310,4 +310,21 @@ class RenderSpec extends AnyFunSuite {
     val schema = Files.readString(Paths.get(out, "models", "schema.yml"))
     assert(schema.contains("o_totalprice_sum"))
   }
+
+  test("dbt export leaves files holding the same text alone and rewrites changed ones") {
+    val out = Files.createTempDirectory("graft_dbt_same").toString
+    val c = table("orders").filterRows(Seq("o_totalprice > 100000"))
+    val files = c.toDbt(out, "big_orders").map(Paths.get(_))
+    val old = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
+    files.foreach(Files.setLastModifiedTime(_, old))
+    assert(c.toDbt(out, "big_orders").map(Paths.get(_)) == files, "the return value must not change")
+    assert(files.forall(Files.getLastModifiedTime(_) == old), "an unchanged file was rewritten")
+    // a different chain under the same model name rewrites only what differs
+    val c2 = table("orders").filterRows(Seq("o_totalprice > 200000"))
+    c2.toDbt(out, "big_orders")
+    val (model, schemaYml, project) = (files(0), files(1), files(2))
+    assert(Files.getLastModifiedTime(model) != old)
+    assert(Files.readString(model).contains(c2.sql()))
+    assert(Files.getLastModifiedTime(schemaYml) == old && Files.getLastModifiedTime(project) == old)
+  }
 }
