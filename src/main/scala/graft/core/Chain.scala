@@ -46,22 +46,19 @@ final class Chain private (
     val entryName: String,
     val df: DataFrame,
     val steps: Vector[TransformStep],
-    entry: DataFrame,
     superseded: Set[Int]) {
 
   /** Ids of the checkpointed RDDs `df` reads. */
-  private lazy val checkpoints: Set[Int] = Chain.checkpointIds(df)
+  private lazy val checkpoints: Set[Int] = Chain.checkpointedRdds(df).map(_.id).toSet
 
   private def append(newDf: DataFrame, step: TransformStep): Chain = {
-    val more = new Chain(spark, entryName, newDf, steps :+ step, entry, superseded)
+    val more = new Chain(spark, entryName, newDf, steps :+ step, superseded)
     // checkpoints a step left that a later step no longer reads (a sort
     // checkpointed over an earlier checkpoint) are out of reach of a walk
-    // of the final plan: remember their ids for releaseCheckpoints, unless
-    // the caller's entry frame brought them in
-    val dropped = checkpoints -- more.checkpoints -- superseded
+    // of the final plan: remember their ids for releaseCheckpoints
+    val dropped = checkpoints -- more.checkpoints
     if (dropped.isEmpty) more
-    else new Chain(spark, entryName, newDf, more.steps, entry,
-      superseded ++ (dropped -- Chain.checkpointIds(entry)))
+    else new Chain(spark, entryName, newDf, more.steps, superseded ++ dropped)
   }
 
   /** Append a step (functional — returns a new Chain, like the reference's
@@ -368,9 +365,8 @@ final class Chain private (
   /** Release the checkpoint blocks this chain's steps left: every one
     * embedded in the final plan (see [[Chain.releaseCheckpoints]]) and every
     * one an earlier step created that a later checkpoint superseded.
-    * Persisted (cached) inputs are never released, nor a checkpointed
-    * entry frame that a step superseded. Terminal: call after the last read
-    * of this chain and anything derived from it.
+    * Persisted (cached) inputs are never released. Terminal: call after
+    * the last read of this chain and anything derived from it.
     */
   def releaseCheckpoints(): Unit = {
     Chain.releaseCheckpoints(df)
@@ -392,7 +388,7 @@ final class Chain private (
 
 object Chain {
   def apply(spark: SparkSession, entryName: String, df: DataFrame): Chain =
-    new Chain(spark, entryName, df, Vector.empty, df, Set.empty)
+    new Chain(spark, entryName, df, Vector.empty, Set.empty)
 
   /** Release EVERY checkpoint block embedded in a frame's plan: walks the
     * analyzed plan and unpersists each `LogicalRDD`'s blocks. This is the
@@ -408,8 +404,6 @@ object Chain {
       if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
         rdd.unpersist(false)
     }
-
-  private def checkpointIds(df: DataFrame): Set[Int] = checkpointedRdds(df).map(_.id).toSet
 
   /** The checkpointed RDDs a frame's plan reads, stopping at each one. */
   private def checkpointedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {

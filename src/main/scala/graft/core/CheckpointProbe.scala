@@ -36,23 +36,8 @@ private[graft] object CheckpointProbe {
     * values in `metrics` order). Aggregate columns only (the
     * `Dataset.observe` contract).
     */
-  def apply(df: DataFrame, metrics: (String, Column)*): (DataFrame, Seq[Any]) = {
-    require(metrics.nonEmpty, "checkpoint_probe: at least one metric")
-    val named = metrics.map { case (n, c) => c.as(n) }
-    val force = df.sparkSession.conf
-      .get("spark.graft.checkpointProbe.forceFallback", "false").toBoolean
-    if (force) {
-      val cp = df.localCheckpoint()
-      return (cp, aggregate(cp, named))
-    }
-    val name = s"graft_checkpoint_probe_${ids.incrementAndGet()}"
-    val observed = df.observe(name, named.head, named.tail: _*)
-    val cp = observed.localCheckpoint()
-    observed.queryExecution.observedMetrics.get(name) match {
-      case Some(row) => (cp, named.indices.map(row.get))
-      case None => (cp, aggregate(cp, named))
-    }
-  }
+  def apply(df: DataFrame, metrics: (String, Column)*): (DataFrame, Seq[Any]) =
+    checkpoint(new Observed(df, metrics))
 
   /** Eager scalar statistics over `df`: (the frame later steps must build
     * on, metric values in `metrics` order). Two paths, chosen by a
@@ -71,9 +56,33 @@ private[graft] object CheckpointProbe {
     * rows, so the values — and the SQL faces built from them — agree.
     */
   def stats(df: DataFrame, metrics: (String, Column)*): (DataFrame, Seq[Any]) = {
-    require(metrics.nonEmpty, "stats: at least one metric")
-    if (shuffled(df)) apply(df, metrics: _*)
-    else (df, aggregate(df, metrics.map { case (n, c) => c.as(n) }))
+    val o = new Observed(df, metrics)
+    // the observed frame's optimized plan is the one the checkpoint then
+    // executes: testing it, not `df`'s, optimizes the prefix once
+    if (shuffled(o.frame)) checkpoint(o) else (df, aggregate(df, o.named))
+  }
+
+  /** `df` with `metrics` attached as a uniquely named observation. */
+  private final class Observed(val df: DataFrame, metrics: Seq[(String, Column)]) {
+    require(metrics.nonEmpty, "checkpoint_probe: at least one metric")
+    val named: Seq[Column] = metrics.map { case (n, c) => c.as(n) }
+    val name = s"graft_checkpoint_probe_${ids.incrementAndGet()}"
+    val frame: DataFrame = df.observe(name, named.head, named.tail: _*)
+  }
+
+  private def checkpoint(o: Observed): (DataFrame, Seq[Any]) = {
+    val force = o.df.sparkSession.conf
+      .get("spark.graft.checkpointProbe.forceFallback", "false").toBoolean
+    if (force) {
+      val cp = o.df.localCheckpoint()
+      (cp, aggregate(cp, o.named))
+    } else {
+      val cp = o.frame.localCheckpoint()
+      o.frame.queryExecution.observedMetrics.get(o.name) match {
+        case Some(row) => (cp, o.named.indices.map(row.get))
+        case None => (cp, aggregate(cp, o.named))
+      }
+    }
   }
 
   /** Does computing `df` plan a shuffle? True when its optimized plan

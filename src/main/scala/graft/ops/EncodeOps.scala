@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.{Chain, CheckpointProbe, Exact, Naming, PrefixScan}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -245,10 +245,7 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
         case _ => None
       }
     }
-    val (base, statVals) =
-      if (statCols.nonEmpty) CheckpointProbe.stats(c.df, statCols: _*)
-      else (c.df, Nil)
-    val statOf = statCols.map(_._1).zip(statVals).toMap
+    val (base, statOf) = scalarStats(statCols)
     val flagged =
       if (flagMissingVals)
         imputations.foldLeft(base) { case (d, (cn, _)) =>
@@ -303,7 +300,7 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
         val xr = when(!isnan(xd), xd)
         val (base, Seq(mnV, mxV)) = CheckpointProbe.stats(c.df, "mn" -> min(xr), "mx" -> max(xr))
         // an all-null / all-NaN column leaves no range statistic at all —
-        // refuse loudly by name instead of an opaque NPE off the null Row
+        // refuse loudly by name instead of a silent 0.0 from a null statistic
         require(mnV != null && mxV != null,
           s"bin(equalwidth): column $column has no non-null, non-NaN values to derive a range from")
         val (mn, mx) = (mnV.asInstanceOf[Double], mxV.asInstanceOf[Double])
@@ -1012,8 +1009,8 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
       s"_mu_$cn" -> Exact.avg(xr(cn)),
       s"_sd_$cn" -> Exact.stddev(xr(cn)))))
     val stats = columnsToScale.map { cn =>
-      cn -> (averages.getOrElse(cn, statOf(s"_mu_$cn")),
-        stddevs.getOrElse(cn, statOf(s"_sd_$cn")))
+      cn -> (averages.getOrElse(cn, statOf(s"_mu_$cn").asInstanceOf[Double]),
+        stddevs.getOrElse(cn, statOf(s"_sd_$cn").asInstanceOf[Double]))
     }
     val df2 = stats.foldLeft(base) { case (d, (cn, (mu, sd))) =>
       d.withColumn(Naming.cleanse(s"${cn}_scaled"),
@@ -1042,8 +1039,8 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
       Seq(s"_mn_$cn" -> min(xr), s"_mx_$cn" -> max(xr))
     })
     val stats = columnsToScale.map { cn =>
-      cn -> (minimums.getOrElse(cn, statOf(s"_mn_$cn")),
-        maximums.getOrElse(cn, statOf(s"_mx_$cn")))
+      cn -> (minimums.getOrElse(cn, statOf(s"_mn_$cn").asInstanceOf[Double]),
+        maximums.getOrElse(cn, statOf(s"_mx_$cn").asInstanceOf[Double]))
     }
     val df2 = stats.foldLeft(base) { case (d, (cn, (mn, mx))) =>
       d.withColumn(Naming.cleanse(s"${cn}_scaled"),
@@ -1069,15 +1066,14 @@ final class EncodeOps(private val c: Chain) extends AnyVal {
     c.next("levenshtein", df2, Some(s"SELECT *, ${frags.mkString(", ")} FROM {{source}}"))
   }
 
-  /** The scalers' double-valued statistics by name, through
-    * [[graft.core.CheckpointProbe.stats]], plus the frame the step builds
-    * on; no metrics, no job.
+  /** The frame the step builds on and the statistics by name, through
+    * [[graft.core.CheckpointProbe.stats]]; no metrics, no job.
     */
-  private def scalarStats(metrics: Seq[(String, Column)]): (DataFrame, Map[String, Double]) =
+  private def scalarStats(metrics: Seq[(String, Column)]): (DataFrame, Map[String, Any]) =
     if (metrics.isEmpty) (c.df, Map.empty)
     else {
       val (base, vals) = CheckpointProbe.stats(c.df, metrics: _*)
-      (base, metrics.map(_._1).zip(vals.map(_.asInstanceOf[Double])).toMap)
+      (base, metrics.map(_._1).zip(vals).toMap)
     }
 
   private def distinctValues(column: String, maxDistinct: Int): Seq[String] = {

@@ -172,14 +172,20 @@ class EagerStatsSpec extends AnyFunSuite {
       s"cached partitions left after release: ${cached.toSeq}")
   }
 
-  test("releaseCheckpoints spares a checkpointed entry frame a step superseded") {
-    val entry = shuffledFixture(mixed).localCheckpoint()
-    val id = entry.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd.id }.get
-    val chain = Chain(spark, "fx", entry)
-      .trainTestSplit(Seq("k" -> "ASC", "g" -> "ASC"), 0.5)
-    chain.releaseCheckpoints()
-    assert(spark.sparkContext.getPersistentRDDs.contains(id),
-      "the caller's checkpointed entry frame must survive release")
-    Chain.releaseCheckpoints(entry)
+  test("releaseCheckpoints reaches superseded checkpoints and spares a persisted input") {
+    val input = shuffledFixture(mixed).persist()
+    try {
+      input.count()
+      val chain = Chain(spark, "fx", input)
+        .aggregate(Seq("k"), Seq("x" -> Seq("SUM")))
+        .impute(Seq("x_sum" -> "mean"))
+      val imputed = chain.df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get
+      val split = chain.trainTestSplit(Seq("k" -> "ASC"), 0.5)
+      split.releaseCheckpoints()
+      assert(imputed.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "impute's checkpoint, superseded by the split's, must be released")
+      assert(input.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "a persisted input must survive release")
+    } finally input.unpersist()
   }
 }

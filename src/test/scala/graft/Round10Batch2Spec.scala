@@ -278,6 +278,18 @@ class Round10Batch2Spec extends AnyFunSuite {
     assert(rows(spark.sql(c0.sql())) == rows(c0.df))
   }
 
+  test("cross_table: totals come from the margins, so the plan holds no Expand") {
+    // COUNT(DISTINCT …) totals planned an Expand whose grouping-set order
+    // changed from run to run
+    val ct = table("customer").crossTable("c_mktsegment", "c_nationkey")
+    val expands = ct.df.queryExecution.optimizedPlan.collect {
+      case e: org.apache.spark.sql.catalyst.plans.logical.Expand => e
+    }
+    assert(expands.isEmpty, s"unexpected Expand in cross_table's plan: $expands")
+    val levels = ct.df.select(countDistinct("value_a"), countDistinct("value_b"), max("dof")).head()
+    assert(levels.getLong(2) == (levels.getLong(0) - 1) * (levels.getLong(1) - 1))
+  }
+
   // ---- extract pattern -----------------------------------------------------
 
   test("extract_pattern: groups, no-match and null normalize to NULL; SQL face agrees") {
