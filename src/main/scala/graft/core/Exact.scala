@@ -221,23 +221,40 @@ object Exact {
 
   /** Split-long exact DECIMAL(38,8) sum — the probe-gated fast
     * accumulation for [[graft.ops.AggOps.corrMatrix]]'s moment sums.
-    * Value: IDENTICAL to [[sum8]],
-    * PROVIDED the caller proved [[splitSumSafe]] with a bound ≥ max |x|
-    * over the summed values and the row count. The per-row conversion is
+    * Value: IDENTICAL to [[sum8]] whenever [[splitSumSafe]] holds for a
+    * bound ≥ max |x| over the summed values and a count ≥ the number of
+    * summed rows. The per-row conversion is
     * [[graft.functions.Dec8Unscaled]] — the unscaled long U of
     * `CAST(x AS DECIMAL(38,8))` (same shortest-decimal HALF_UP rounding,
-    * exact BigDecimal fallback, loud `longValueExact` on any probe
-    * violation; valid because the probe also rules out Inf). U
-    * splits into hi = U >> 32 and lo = U & 0xFFFFFFFF
-    * (U = hi·2³² + lo exactly, lo non-negative), each summed as a plain
-    * LONG — codegen long adds into 8-byte hash-aggregate buffer slots
-    * instead of per-row BigDecimal adds into a 16-byte decimal slot —
-    * then recombined EXACTLY in decimal space:
-    * `Σhi · (2³²·10⁻⁸) + MakeDecimal(Σlo)`, a decimal(20,0)·decimal(10,8)
-    * product (31 digits, exact) plus a decimal(38,8). Integer arithmetic
-    * throughout, so the partitioning-independence contract of the
-    * decimal path is preserved bit-for-bit, including the final
-    * decimal→double conversion (equal decimal values, same `toDouble`).
+    * exact BigDecimal fallback). U splits into hi = U >> 32 and
+    * lo = U & 0xFFFFFFFF (U = hi·2³² + lo exactly, lo non-negative), each
+    * summed as a plain LONG — codegen long adds into 8-byte
+    * hash-aggregate buffer slots instead of per-row BigDecimal adds into
+    * a 16-byte decimal slot — then recombined EXACTLY in decimal space:
+    * `Σhi · (2³²·10⁻⁸) + MakeDecimal(Σlo)`, a decimal(19,0)·decimal(10,8)
+    * product plus a decimal(20,8). Integer arithmetic throughout, so the
+    * partitioning-independence contract of the decimal path is preserved
+    * bit-for-bit, including the final decimal→double conversion (equal
+    * decimal values, same `toDouble`).
+    *
+    * The expression is TOTAL, so it may run before anything is proven
+    * about its input (the validate-after-the-pass route below):
+    *  - `Dec8Unscaled` drops a value with |x| ≥ its `MaxAbs` = 2⁶²·10⁻⁸
+    *    (or ±Inf, or NaN) to null instead of converting it, and never
+    *    throws;
+    *  - Σhi and Σlo are non-ANSI long sums ([[wrappingSum]]): an
+    *    overflow wraps instead of raising, and the value is then never
+    *    trusted.
+    * Neither can ever leave a wrong value that is then trusted: a dropped
+    * row has |x| ≥ 2⁶²·10⁻⁸ > 2⁶¹/1.01·10⁻⁸, the largest bound
+    * [[splitSumSafe]] admits, and a long sum can only overflow past the
+    * count and bound [[splitSumSafe]] admits — so whenever the check
+    * passes on the bound and count the SAME pass measured (max |x| over
+    * finite values, `count(1)`), no row was dropped and no sum
+    * overflowed, and the value equals [[sum8]]. That is the post-pass validation argument: a
+    * caller may compute these sums speculatively next to the range probe
+    * in ONE aggregate and check [[splitSumSafe]] afterwards; a sum whose
+    * check fails is discarded and recomputed on the decimal path.
     * Measured (OPTIMIZATION_r18.md, sf0.1 lineitem, the 9 corr_matrix
     * moment sums): 3.41 s → 1.73 s, aggregate rows bit-identical.
     */
@@ -254,12 +271,26 @@ object Exact {
     // product is decimal(30,8), Σlo·10⁻⁸ < 2^62·10⁻⁸ fits decimal(20,8),
     // and their sum plans as decimal(31,8) — exact, and bounded by the
     // probe (|total| < 2^61·10⁻⁸ ≈ 2.3e10, 11 integer digits of 23).
-    (org.apache.spark.sql.functions.sum(hi).cast(DecimalType(19, 0)) *
+    (wrappingSum(hi).cast(DecimalType(19, 0)) *
       lit(new java.math.BigDecimal("42.94967296")) +
       GraftBridge.column(MakeDecimal(
-        GraftBridge.expression(org.apache.spark.sql.functions.sum(lo)), 20, 8,
+        GraftBridge.expression(wrappingSum(lo)), 20, 8,
         nullOnOverflow = true)))
       .cast("double")
+  }
+
+  /** Σ of a long column with non-ANSI (wrapping) adds, whatever the
+    * session's ANSI setting: it never raises, and callers trust it only
+    * where [[splitSumSafe]] proves it cannot overflow. (`try_sum` would
+    * also never raise, but its exception guard made the fused corr pass
+    * ~13% slower: 132 vs 116 ms median on sf0.01 lineitem, 4 cores.)
+    */
+  private def wrappingSum(c: Column): Column = {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.expressions.{EvalMode, NumericEvalContext}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    GraftBridge.column(Sum(GraftBridge.expression(c), NumericEvalContext(EvalMode.LEGACY))
+      .toAggregateExpression())
   }
 
   /** Proof obligation for [[splitDecimalSum8]], from a measured bound ≥
@@ -267,10 +298,11 @@ object Exact {
     * summed rows: every per-row |unscaled| = |round(x·10⁸)| must fit a
     * long with margin (also keeps `toUnscaledLong` exact), Σ lo must fit
     * (n < 2³⁰ ⇒ Σ lo < 2⁶²), and Σ |hi| ≤ n·(maxU/2³² + 1) must stay
-    * under 2⁶¹ — long sums then cannot overflow even under ANSI. A NaN
-    * or infinite bound (unprobed column, Inf in the data) fails every
-    * comparison and keeps the decimal path; so does corpus-scale n —
-    * the gate is measured, never tuned to a cluster size.
+    * under 2⁶¹ — long sums then cannot overflow. A NaN or infinite bound
+    * (unprobed column, Inf in the data) fails every comparison and keeps
+    * the decimal path; so does corpus-scale n — the gate is measured,
+    * never tuned to a cluster size. Monotone: a larger bound or count
+    * never passes where a smaller one fails.
     */
   def splitSumSafe(bound: Double, n: Long): Boolean = {
     val maxU = bound * 1e8

@@ -17,8 +17,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   * task (unpartitioned window, global sort-without-limit below other
   * operators); `warn` findings are shapes that are fine for the domains
   * they were built for but carry a cardinality assumption the plan cannot
-  * prove (domain-sized broadcast builds, literal-domain window keys) —
-  * they never fail [[assertSafe]] but deserve a look before 100 TB;
+  * prove (domain-sized broadcast builds, literal-domain window keys), or
+  * waste work at any size (a repartition whose partitioning nothing
+  * consumes) — they never fail [[assertSafe]] but deserve a look before
+  * 100 TB;
   * `info` findings are structural facts (exchange count) useful for
   * before/after comparison when tuning.
   */
@@ -319,6 +321,45 @@ object ScaleLint {
               "discovery into the aggregate (null-bucket + per-group map/explode " +
               "spine padding, the histogram/calibrationProfile pattern) to halve " +
               "the corpus I/O")
+      }
+    }
+    // an explicit repartition(col) whose rows reach a broadcast build, or
+    // either side of a nested-loop join, through projections and filters
+    // only: the broadcast collects the rows whole and the nested loop
+    // pairs every row with every build row, so nothing consumes the hash
+    // partitioning — the shuffle moves the frame for nothing, and a
+    // projection below the join is computed once per row without it. An
+    // exchange that recurs elsewhere in the plan (the same canonical
+    // subtree, which runs once as a reused exchange) is never flagged: it
+    // is a shared materialization, and dropping it would compute the
+    // subtree once per copy.
+    locally {
+      import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
+        WholeStageCodegenExec}
+      import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_COL}
+      def reachedRepartition(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => Some(e)
+        case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec | _: InputAdapter =>
+          reachedRepartition(p.children.head)
+        case _ => None
+      }
+      val dead = plan.collect {
+        case b: BroadcastExchangeExec => Seq(b.child)
+        case j: BroadcastNestedLoopJoinExec => Seq(j.left, j.right)
+      }.flatten.flatMap(reachedRepartition)
+      val copies = plan.collect {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e.canonicalized
+      }.groupBy(identity).view.mapValues(_.size).toMap
+      dead.filter(e => copies(e.canonicalized) == 1).foreach { e =>
+        val keys = e.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            h.expressions.map(_.sql).mkString(", ")
+          case other => other.toString
+        }
+        findings += Finding("warn", "dead-repartition",
+          s"repartition($keys) feeds only a broadcast or a nested-loop join side, " +
+            "which discard its partitioning: the shuffle moves the frame for nothing; " +
+            "drop it (a projection below the join is still computed once per row)")
       }
     }
     // a global sort directly under collect/write is a legitimate ordered

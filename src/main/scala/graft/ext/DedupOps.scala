@@ -32,8 +32,8 @@ final class DedupOps(private val c: Chain) extends AnyVal {
     val rows = numHashes / bands
     // tokens → hashed shingles → signature, all in native codegen kernels
     // (one pass, two hash mixes per shingle); the repartition is a
-    // materialization barrier so neither the band projection nor either
-    // bucket-join side re-derives it (they share a ReusedExchange)
+    // materialization barrier: both bucket-join sides read this one
+    // exchange (a ReusedExchange), so the signature is computed once
     val sh = graft.functions.ShingleHashes(TextOps.tokens(col(textCol)), shingleWords)
     val sigs = c.df.select(col(idCol).as("_id"),
       graft.functions.Sketches.minhashSignature(sh, numHashes).as("_mh"))
@@ -178,8 +178,9 @@ final class DedupOps(private val c: Chain) extends AnyVal {
       textCol: String,
       maxHamming: Int = 3,
       maxBucket: Int = 1000): Chain = {
-    // native codegen SimHash64 kernel over the token array; barrier so the
-    // band projection and both join sides read the materialized signature
+    // native codegen SimHash64 kernel over the token array; barrier: both
+    // bucket-join sides read this one exchange (a ReusedExchange), so the
+    // signature is computed once
     val withSig = c.df.select(col(idCol).as("_id"),
       graft.functions.Sketches.simhash64(TextOps.tokens(col(textCol))).as("_sim"))
       .repartition(col("_id"))
@@ -228,8 +229,9 @@ final class DedupOps(private val c: Chain) extends AnyVal {
     // tokens → sorted distinct 64-bit shingle hashes in one codegen pass
     // (graft.functions.ShingleHashes): every downstream shuffle, sort and
     // merge-compare is over fixed-width longs instead of shingle strings.
-    // The repartition is a materialization barrier so the kernel runs once
-    // per document, not re-derived on each join side.
+    // The repartition is a materialization barrier: the postings explode
+    // and the id_a / id_b verification join-backs read this one exchange
+    // (a ReusedExchange), so the kernel runs once per document.
     val side = c.df.select(col(idCol).as("_id"),
         graft.functions.ShingleHashes(TextOps.tokens(col(textCol)), n).as("_sh"))
       .withColumn("_sz", size(col("_sh")))
@@ -362,7 +364,8 @@ final class DedupOps(private val c: Chain) extends AnyVal {
       // merge everything it meets into a single bogus cluster
       .where(SimilarityOps.usableVec(col("_v"), col("_norm")))
       .withColumn("_sk", graft.functions.SignSketch(col("_v"), planes))
-      // materialization barrier: norm+sketch computed once per vector
+      // barrier: the id_a / id_b join-backs read this one exchange (a
+      // ReusedExchange), so the norm is computed once per vector
       .repartition(col("_id"))
     // Hamming acceptance: bits disagree w.p. θ/π per plane; qualifying
     // pairs (cos >= threshold) have mean planes·θ/π and σ² = planes·p(1-p)
@@ -557,31 +560,36 @@ final class DedupOps(private val c: Chain) extends AnyVal {
     // segments; longer side probes every substring a surviving segment
     // could occupy. Segment j of an l-char string: the first k - l%k
     // segments take FLOOR(l/k) chars, the rest one more.
-    def segLen(j: Int, l: Column) =
-      floor(l / k).cast("int") + when(lit(j) >= lit(k) - l % k, 1).otherwise(0)
-    def segStart(j: Int, l: Column) = // 0-based
-      (floor(l / k) * j).cast("int") + greatest(lit(0), lit(j) - (lit(k) - (l % k).cast("int")))
+    def segLen(j: Column, l: Column) =
+      floor(l / k).cast("int") + when(j >= lit(k) - l % k, 1).otherwise(0)
+    def segStart(j: Column, l: Column) = // 0-based
+      (floor(l / k) * j).cast("int") + greatest(lit(0), j - (lit(k) - (l % k).cast("int")))
     val idx = base.where(col("_l") >= k).select(
       col("_id"), col("_s"), col("_l"),
       explode(array((0 until k).map { j =>
         struct(col("_l").as("_kl"), lit(j).as("_kj"),
-          expr(s"substring(_s, ${segStartSql(j, k)} + 1, ${segLenSql(j, k)})").as("_kseg"))
+          col("_s").substr(segStart(lit(j), col("_l")) + 1, segLen(lit(j), col("_l"))).as("_kseg"))
       }: _*)).as("_k"))
-    val probeKeys = for {
-      delta <- 0 to maxDist; j <- 0 until k; shift <- -maxDist to maxDist
-    } yield (delta, j, shift)
-    val probe = base.where(col("_l") >= k).select(
-      col("_id"), col("_s"), col("_l"),
-      explode(array(probeKeys.map { case (delta, j, shift) =>
-        val lp = col("_l") - delta // candidate shorter length
-        val pos = segStart(j, lp) + shift
-        val len = segLen(j, lp)
-        when(lp >= k && pos >= 0 && pos + len <= col("_l"),
-          struct(lp.as("_kl"), lit(j).as("_kj"),
-            expr(s"substring(_s, ${segStartSql(j, k, s"(_l - $delta)")} + $shift + 1, " +
-              s"${segLenSql(j, k, s"(_l - $delta)")})").as("_kseg")))
-      }: _*)).as("_k"))
-      .where(col("_k").isNotNull)
+    // probe keys: (delta, j, shift) over 0..maxDist × 0..k-1 × ±maxDist,
+    // enumerated as ONE exploded index decoded arithmetically, so the
+    // generated code holds one key expression whatever the key count (an
+    // array of per-key `when(…, struct(…))` inlined 45 copies at
+    // maxDist = 2 and outgrew the 64 KB method limit)
+    val width = 2 * maxDist + 1
+    def div(a: Column, b: Int) = floor(a / b).cast("int")
+    val pk = col("_pk")
+    val delta = div(pk, k * width)
+    val j = div(pk, width) % k
+    val shift = pk % width - maxDist
+    val lp = col("_l") - delta // candidate shorter length
+    val pos = segStart(j, lp) + shift
+    val len = segLen(j, lp)
+    val probe = base.where(col("_l") >= k)
+      .select(col("_id"), col("_s"), col("_l"),
+        explode(sequence(lit(0), lit((maxDist + 1) * k * width - 1))).as("_pk"))
+      .where(lp >= k && pos >= 0 && pos + len <= col("_l"))
+      .select(col("_id"), col("_s"), col("_l"),
+        struct(lp.as("_kl"), j.as("_kj"), col("_s").substr(pos + 1, len).as("_kseg")).as("_k"))
     val cands = probe.as("e").join(idx.as("i"),
       col("e._k") === col("i._k") &&
         (col("i._l") < col("e._l") ||
@@ -593,17 +601,6 @@ final class DedupOps(private val c: Chain) extends AnyVal {
       .select(pairOut(col("_ia"), col("_ib"), col("_sa"), col("_sb")): _*)
     c.next("fuzzy_pairs", tinyPairs.unionByName(cands), None)
   }
-
-  /** SQL text for [[fuzzyPairs]]'s 0-based segment start/length of segment
-    * j when a string of length `lS` is cut into k segments (first k − l%k
-    * segments take FLOOR(l/k), the rest one more) — the expr-side twin of
-    * the Column arithmetic, kept in one place so both sides of the
-    * pigeonhole agree character-for-character.
-    */
-  private def segStartSql(j: Int, k: Int, lS: String = "_l"): String =
-    s"(CAST(FLOOR($lS / $k) * $j AS INT) + GREATEST(0, $j - ($k - CAST($lS % $k AS INT))))"
-  private def segLenSql(j: Int, k: Int, lS: String = "_l"): String =
-    s"(CAST(FLOOR($lS / $k) AS INT) + (CASE WHEN $j >= $k - $lS % $k THEN 1 ELSE 0 END))"
 }
 
 object DedupOps {
@@ -917,7 +914,6 @@ object DedupOps {
     val sh = graft.functions.ShingleHashes(TextOps.tokens(col(textCol)), shingleWords)
     df.select(col(idCol).as("_id"),
         graft.functions.Sketches.minhashSignature(sh, numHashes).as("_mh"))
-      .repartition(col("_id"))
       .select(col("_id"), col("_mh"),
         explode(array((0 until bands).map(b =>
           xxhash64(lit(b) +: (0 until rows).map(r => col("_mh")(b * rows + r)): _*)): _*))
@@ -1318,7 +1314,9 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
       // threshold and would merge whole cells); they stay singletons
       // and SURVIVE the dedup untouched
       .where(SimilarityOps.usableVec(col("_v"), col("_n")))
-      .repartition(col("_id")) // barrier: norm computed once
+      // barrier: the nassign > 1 top-m window is partitioned by _id and
+      // reads this exchange's partitioning
+      .repartition(col("_id"))
     // bounded hash-deterministic training sample → driver k-means
     // (the declared compile-time-introspection pattern)
     val trainVecs = corpus

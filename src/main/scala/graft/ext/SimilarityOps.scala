@@ -41,11 +41,14 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     * [[dequantizeEmbeddings]]) do render.
     */
   def cosineTopK(queries: DataFrame, idCol: String, vecCol: String, k: Int): Chain = {
+    // the norm stays in the Project below the nested-loop join (the
+    // filter reads it), so it is computed once per vector, not per pair;
+    // a repartition barrier here would only add an exchange whose
+    // partitioning the broadcast and the join discard
     def withNorm(df: DataFrame, idAs: String, vAs: String, nAs: String) =
       df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
         .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
         .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
-        .repartition(col(idAs)) // barrier: norm computed once, not per pair
     val corpus = withNorm(c.df, "neighbor_id", "_vc", "_nc")
     val qs = withNorm(queries, "query_id", "_vq", "_nq")
     val cos = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
@@ -84,11 +87,11 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
                     fnThreshold: Option[Double] = None): Chain = {
     fnThreshold.foreach(t => require(!t.isNaN,
       "hard_negatives: fnThreshold must not be NaN (no cosine compares true against NaN)"))
+    // no barrier: the norm stays below the join, as in [[cosineTopK]]
     def withNorm(df: DataFrame, idAs: String, vAs: String, nAs: String) =
       df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
         .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
         .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
-        .repartition(col(idAs)) // barrier: norm computed once, not per pair
     val corpus = withNorm(c.df, "neighbor_id", "_vc", "_nc")
     val qs = withNorm(queries, "query_id", "_vq", "_nq")
     val pos = positives
@@ -153,7 +156,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
         .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
         .where(SimilarityOps.usableVec(col(vAs), col(nAs)))
-        .repartition(col(idAs))
     val corpus = withNorm(c.df, "neighbor_id", "_vc", "_nc")
     val qs = withNorm(queries, "query_id", "_vq", "_nq")
     val rel = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
@@ -216,7 +218,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
         .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
         .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
         .withColumn(sAs, SignSketch(col(vAs), planes))
-        .repartition(col(idAs)) // barrier: norm+sketch computed once
     val corpus = prep(c.df, "neighbor_id", "_vc", "_nc", "_skc")
     val qs = prep(queries, "query_id", "_vq", "_nq", "_skq")
     // pass 1: cheap hamming score, ids only through the top-N shuffle
@@ -279,7 +280,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     val corpus = c.df.select(col(idCol).as("neighbor_id"), col(vecCol).as("_vc"))
       .withColumn("_nc", sqrt(Exact.dot(col("_vc"), col("_vc"))))
       .where(SimilarityOps.usableVec(col("_vc"), col("_nc"))) // NaN cosine would rank FIRST
-      .repartition(col("neighbor_id"))
     // --- train: deterministic hash-ordered sample -> driver k-means
     val trainVecs = corpus
       .orderBy(xxhash64(col("neighbor_id")).asc, col("neighbor_id").asc)
@@ -360,7 +360,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       // be a true neighbor, and their NaN cosines would otherwise top
       // every ranking (NaN compares greatest)
       .where(SimilarityOps.usableVec(col("_v"), col("_n")))
-      .repartition(col("_id")) // barrier: norm computed once
     val trainVecs = corpus
       .orderBy(xxhash64(col("_id")).asc, col("_id").asc)
       .limit(trainSample)
@@ -390,7 +389,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     val assigned = c.df.select(idExpr.as("_id"), col(vecCol).as("_v"))
       .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
       .where(SimilarityOps.usableVec(col("_v"), col("_n"))) // same exclusion as the build
-      .repartition(col("_id"))
       .withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
       .select(col("_cid"), col("_id"), col("_v").cast("array<double>").as("_v"), col("_n"))
     c.next("ivf_index_assign", assigned, None)
@@ -968,7 +966,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       // same exclusion as ivfIndex: zero-norm/NaN vectors can never be a
       // true neighbor, and PqEncode NULLs them anyway
       .where(SimilarityOps.usableVec(col("_v"), col("_n")))
-      .repartition(col("_id")) // barrier: norm computed once
     val trainVecs = corpus
       .orderBy(xxhash64(col("_id")).asc, col("_id").asc)
       .limit(trainSample)
@@ -1056,7 +1053,6 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     val batch = c.df.select(idExpr.as("_id"), col(vecCol).as("_v"))
       .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
       .where(SimilarityOps.usableVec(col("_v"), col("_n"))) // same exclusion as the build
-      .repartition(col("_id"))
     val assigned = resCbOpt match {
       case None =>
         val pqCenters = SimilarityOps.collectPqModel(pqModel)
@@ -1509,14 +1505,16 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
         .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
         .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
         .withColumn("_sk", SignSketch(col(vAs), planes))
-        .repartition(col(idAs)) // barrier: sketch computed once
     // band b's key = bits [b*rows, (b+1)*rows) of the sketch
     def bandKey(b: Int) = {
       val word = (b * rows) / 64
       shiftright(col("_sk")(word), (b * rows) % 64)
         .bitwiseAND(lit((1L << rows) - 1L))
     }
-    val corpus = prep(c.df, "neighbor_id", "_vc", "_nc")
+    // the corpus keeps its neighbor_id barrier: the candidates' distinct
+    // and the rerank join on neighbor_id both use its partitioning; the
+    // query side feeds broadcasts only, so it takes none
+    val corpus = prep(c.df, "neighbor_id", "_vc", "_nc").repartition(col("neighbor_id"))
     val qs = prep(queries, "query_id", "_vq", "_nq")
     val corpusB = corpus.select(col("neighbor_id"),
         posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("_band", "_bk")))

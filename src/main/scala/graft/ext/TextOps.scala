@@ -366,10 +366,13 @@ final class TextAnalysisOps(private val c: Chain) extends AnyVal {
     * scores tf·ln((N+1)/(df_t+1) + 1) (the classic smoothed variant;
     * transcendental, so approximately-equal across engines only).
     *
-    * N (distinct documents) is a declared driver-side count, the engine's
-    * compile-time-introspection pattern (reference `run_query`,
-    * rendering.py:272-291). Everything else is two hash aggregations and a
-    * term-keyed join — linear in corpus size, no driver data movement.
+    * N (distinct documents) rides the plan as a broadcast one-row
+    * aggregate; only the SQL face reads it on the driver, at render time
+    * (the engine's compile-time-introspection pattern, reference
+    * `run_query`, rendering.py:272-291). Everything else is one
+    * tokenizing scan, one (doc, term) hash aggregation and a
+    * term-partitioned window for df_t — linear in corpus size, no driver
+    * data movement.
     */
   def tfidf(idCol: String, textCol: String, idf: String = "raw"): Chain = {
     require(Seq("raw", "log").contains(idf),
@@ -394,20 +397,20 @@ final class TextAnalysisOps(private val c: Chain) extends AnyVal {
     })
   }
 
-  /** The ONE tfidf scoring body (round 18, ADVICE: [[tfidf]] and
-    * [[searchTfidf]]'s probe-pruned branch carried two copies that had
-    * to stay bit-identical): tokenize → optional probed-term semi-join
-    * prune → (doc, term) tf → df_t → N as a broadcast one-row aggregate
-    * → score. With `pruneTerms` set (a SMALL distinct term frame — the
-    * caller proved it broadcasts), the corpus token stream drops
-    * non-probed terms BEFORE the tf aggregation; df_t (every doc holding
-    * a probed term survives the semi-join) and N (its own corpus
-    * aggregate) are unchanged by the pruning, so scores are identical.
-    * Without it, the tf frame takes the term-keyed barrier so one
-    * exchange serves both the df aggregation and the final join
-    * (ReusedExchange). N rides the plan as a broadcast one-row aggregate
-    * instead of a chain-build driver collect (round 17): arithmetic is
-    * long×long then the same casts — scores bit-identical; idf = "raw"
+  /** The ONE tfidf scoring body, shared by [[tfidf]] and
+    * [[searchTfidf]]'s probe-pruned branch: tokenize ONCE → optional
+    * probed-term semi-join prune → (doc, term) tf → df_t as
+    * `count(*) OVER (PARTITION BY term)` over the tf frame → N as a
+    * broadcast one-row aggregate → score. With `pruneTerms` set (a SMALL
+    * distinct term frame — the caller proved it broadcasts), the corpus
+    * token stream drops non-probed terms BEFORE the tf aggregation; df_t
+    * (every doc holding a probed term survives the semi-join) and N (its
+    * own corpus aggregate) are unchanged by the pruning, so scores are
+    * identical. The tf frame is one (doc, term) map-side-combined
+    * aggregate; df_t counts its rows per term in a window over one
+    * term-keyed exchange, so the token stream is generated once. N rides the plan
+    * as a broadcast one-row aggregate instead of a chain-build driver
+    * collect: arithmetic is long×long then the same casts — idf = "raw"
     * is exact, "log" transcendental (the [[tfidf]] contract).
     */
   private def tfidfScored(idCol: String, textCol: String, idf: String,
@@ -416,9 +419,8 @@ final class TextAnalysisOps(private val c: Chain) extends AnyVal {
       explode(tokens(col(textCol))).as("term"))
     val tok = pruneTerms.fold(tok0)(t =>
       tok0.join(broadcast(t), Seq("term"), "leftsemi"))
-    val tf0 = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val tf = if (pruneTerms.isEmpty) tf0.repartition(col("term")) else tf0
-    val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df_t"))
+    val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+      .withColumn("df_t", count(lit(1)).over(Window.partitionBy(col("term"))))
     val nAgg = broadcast(c.df.agg(countDistinct(col(idCol)).as("_tfidf_n")))
     val score = idf match {
       case "raw" => (col("tf") * col("_tfidf_n")).cast("double") / col("df_t")
@@ -426,7 +428,7 @@ final class TextAnalysisOps(private val c: Chain) extends AnyVal {
         log((col("_tfidf_n").cast("double") + 1.0) / (col("df_t").cast("double") + 1.0) + 1.0)
       case other => throw new IllegalArgumentException(s"unknown idf kind $other")
     }
-    tf.join(dft, Seq("term")).crossJoin(nAgg)
+    tf.crossJoin(nAgg)
       .select(col("doc_id"), col("term"), col("tf"), col("df_t"), score.as("tfidf"))
   }
 

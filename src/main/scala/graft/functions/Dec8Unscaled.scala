@@ -39,12 +39,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * Round18Spec's exhaustive and randomized `unscaled8` fuzz against the
   * BigDecimal arithmetic is a required gate for ANY edit here.
   *
-  * The fallback is also the loud guard: an |x| whose unscaled exceeds a
-  * long throws (`longValueExact`), exactly like Spark's `UnscaledValue`;
-  * callers gate on [[graft.core.Exact.splitSumSafe]] so it never fires.
-  * ONLY valid under that probe: inputs are null or finite (the corr
-  * masks null-out NaN, and an Inf in a column fails its probe bound so
-  * the caller never builds this expression for it). Equality with the
+  * The expression is total: NaN, ±Inf and every |x| ≥ [[Dec8Unscaled.MaxAbs]]
+  * (2⁶²·10⁻⁸ ≈ 4.6e10, where the unscaled would near a long's range)
+  * evaluate to null, so [[Dec8Unscaled.unscaled8]] only sees finite values
+  * whose unscaled fits a long, and its `longValueExact` fallback guard
+  * never fires from SQL. Equality with the
   * decimal sum is pinned bitwise over adversarial and randomized
   * fixtures (Round18Spec), including exact half-boundary decimals.
   */
@@ -57,13 +56,21 @@ case class Dec8Unscaled(child: Expression)
       s"$prettyName requires a double input, got ${child.dataType.simpleString}")
 
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
   override def prettyName: String = "dec8_unscaled"
 
-  override protected def nullSafeEval(input: Any): Any =
-    Dec8Unscaled.unscaled8(input.asInstanceOf[Double])
+  override protected def nullSafeEval(input: Any): Any = {
+    val x = input.asInstanceOf[Double]
+    if (math.abs(x) < Dec8Unscaled.MaxAbs) Dec8Unscaled.unscaled8(x) else null
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Dec8Unscaled.unscaled8($c)")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""if (java.lang.Math.abs($c) < ${Dec8Unscaled.MaxAbs}D) {
+         |  ${ev.value} = graft.functions.Dec8Unscaled.unscaled8($c);
+         |} else {
+         |  ${ev.isNull} = true;
+         |}""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Dec8Unscaled =
     copy(child = newChild)
@@ -71,6 +78,11 @@ case class Dec8Unscaled(child: Expression)
 
 object Dec8Unscaled {
   private val Cap = (1L << 50).toDouble
+
+  /** Inputs at or past this magnitude (and NaN) evaluate to null:
+    * 2⁶²·10⁻⁸ keeps |x·10⁸| inside a long with margin.
+    */
+  val MaxAbs: Double = (1L << 62).toDouble / 1e8
 
   /** See the class doc for the margin derivation. `x` must be finite. */
   def unscaled8(x: Double): Long = {

@@ -1008,26 +1008,40 @@ final class AggOps(private val c: Chain) extends AnyVal {
     * column — same result bit-for-bit; the declared semantics and the
     * rendered SQL face stay pairwise.
     *
-    * Scale, by branch: declared-listwise is ONE map-side-combined
-    * aggregation pass. UNGROUPED declared-pairwise folds the probe into
-    * the shared-moment pass (one scan; the combined one-row aggregate is
-    * collected EAGERLY at chain-construction time — a bounded declared
-    * driver read) and pays a second, per-pair scan only when the input
-    * is incomplete. GROUPED declared-pairwise runs a separate count-only
-    * probe scan first (no decimal sums), then one aggregation pass — two
-    * corpus scans when complete, the cheap probe being the price of the
-    * grouped fold being inexpressible without grouping sets. The
-    * long-form explode always runs on the tiny aggregated frame. Decimal
-    * accumulation makes every sum partitioning-independent; the closing
-    * doubles are IEEE-exact across engines (the linear_regression regime).
+    * Scale, by branch. The range probe — row count, per-column finite
+    * counts and per-column max |x|, gated on plan-statistics size via
+    * `spark.graft.corr.probeMaxBytes` (default 32g; <= 0 disables) — lets
+    * a moment sum run as a split-long accumulation
+    * ([[graft.core.Exact.splitDecimalSum8]], bit-identical values, ~2x
+    * the decimal moment pass) when the measured bounds prove it exact.
     *
-    * Round 18: a cheap range probe (count + per-column max |x|, gated on
-    * plan-statistics size via `spark.graft.corr.probeMaxBytes`) lets each
-    * moment sum run as a split-long accumulation
-    * ([[graft.core.Exact.splitDecimalSum8]]) when the measured bounds
-    * prove it exact — bit-identical values, ~2x the moment pass. Past the
-    * gate (corpus-scale or unsized frames) every branch keeps its
-    * pre-round-18 shape unchanged.
+    *  - UNGROUPED, gate open (pairwise and declared listwise): ONE
+    *    aggregate at chain construction computes the probe AND every
+    *    shared moment as a split-long sum, speculatively; the sums are
+    *    checked after the pass with [[graft.core.Exact.splitSumSafe]] on
+    *    the bounds and count that same pass measured (the post-pass
+    *    argument is in [[graft.core.Exact.splitDecimalSum8]]). When every
+    *    check passes — and, for pairwise, every column is complete — the
+    *    closing runs over that one bounded driver-local row: one scan,
+    *    one aggregate action, and the write reads no corpus. Otherwise
+    *    the row is discarded and a second, lazy pass runs at the action
+    *    with the per-sum choice (split where proven, decimal elsewhere;
+    *    per-pair sums when pairwise input is incomplete): two corpus
+    *    scans, the first of which paid the split sums for nothing — the
+    *    cost of an input with a value past ~2.3e10, an Inf, a NaN or a
+    *    null in a pairwise column.
+    *  - UNGROUPED, gate closed (corpus-scale or unsized frames, where
+    *    n ≥ 2³⁰ could never pass the check): declared-listwise is one
+    *    lazy decimal pass; pairwise is one eager decimal pass carrying the
+    *    completeness counts, plus the per-pair pass when incomplete.
+    *  - GROUPED: the probe is its own cheap scan first (a global probe
+    *    cannot fold into a grouped pass without grouping sets), then one
+    *    aggregation pass with the per-sum choice.
+    *
+    * The long-form explode always runs on the tiny aggregated frame.
+    * Decimal accumulation makes every sum partitioning-independent; the
+    * closing doubles are IEEE-exact across engines (the linear_regression
+    * regime).
     */
   def corrMatrix(cols: Seq[String], groupBy: Seq[String] = Nil,
                  deletion: String = "pairwise"): Chain = {
@@ -1042,40 +1056,29 @@ final class AggOps(private val c: Chain) extends AnyVal {
       col(cn).isNotNull && !isnan(col(cn).cast("double"))
     val declaredListwise = deletion == "listwise"
     val allOk = cols.map(finite).reduce(_ && _)
-    // ---- range probe (round 18). Every moment sum accumulates in
-    // DECIMAL(38,8) — exact and partitioning-independent, but each row
-    // pays a BigDecimal add into a 16-byte aggregate-buffer slot per
-    // sum. When a probe has measured the per-column max |x| (and the row
-    // count), any sum whose bounds pass [[graft.core.Exact.splitSumSafe]]
-    // runs the split-long formulation instead
-    // ([[graft.core.Exact.splitDecimalSum8]]): the SAME per-row cast,
-    // hi/lo long accumulation, exact decimal recombination —
-    // bit-identical values, measured ~2x on the moment pass
-    // (OPTIMIZATION_r18.md, sf0.1: 3.41 -> 1.73 s, rows identical). The
-    // probed maxima bound every moment: |x_i| <= m_i over the FINITE values of
-    // column i, and each branch's per-row masks (allOk / both) only keep
-    // rows where the factors are finite, so |x_i·x_j| <= m_i·m_j on
-    // every summed row. Where a probe pass would be NEW (the declared
-    // listwise faces; the fused ungrouped-pairwise pass), it is gated on
-    // the frame's plan-statistics size (spark.graft.corr.probeMaxBytes,
-    // default 32g; <= 0 disables): past the gate — including RDD-backed
-    // frames, whose statistics are the defaultSizeInBytes maximum — the
-    // pre-round-18 shape runs unchanged, because at corpus scale
-    // n >= 2^30 could never pass splitSumSafe and the probe would be a
-    // wasted full scan. The probe itself is count/max-only — no decimal
-    // work, roughly 10x cheaper than the moment pass it halves.
+    // Every moment sum accumulates in DECIMAL(38,8) — exact and
+    // partitioning-independent, but each row pays a BigDecimal add into a
+    // 16-byte aggregate-buffer slot per sum. A sum whose bounds pass
+    // [[graft.core.Exact.splitSumSafe]] runs the split-long formulation
+    // instead (OPTIMIZATION_r18.md, sf0.1: 3.41 -> 1.73 s, rows
+    // identical). The probed maxima bound every moment: |x_i| <= m_i over
+    // the FINITE values of column i, and each branch's per-row masks
+    // (allOk / both) only keep rows where the factors are finite, so
+    // |x_i·x_j| <= m_i·m_j on every summed row. Past the statistics gate
+    // (including RDD-backed frames, whose statistics are the
+    // defaultSizeInBytes maximum) no probe runs: at corpus scale the
+    // check could never pass.
     val statsOk = graft.core.SizeGate.statsUnderBytes(c.df,
       c.df.sparkSession.conf
         .get("spark.graft.corr.probeMaxBytes", (32L << 30).toString).toLong)
     // (total rows, complete, per-column max |x|) — a plain tuple: AnyVal
     // ops classes cannot nest case classes
     type RangeProbe = (Long, Boolean, Array[Double])
-    def rangeProbe(): RangeProbe = {
-      val aggs = (count(lit(1)).as("_t") +:
-        cols.indices.map(i => count(when(finite(cols(i)), lit(1))).as(s"_c_$i"))) ++
-        cols.indices.map(i =>
-          max(abs(when(finite(cols(i)), col(cols(i)).cast("double")))).as(s"_m_$i"))
-      val r = c.df.agg(aggs.head, aggs.tail: _*).head()
+    val probeAggs: Seq[Column] = (count(lit(1)).as("_t") +:
+      cols.indices.map(i => count(when(finite(cols(i)), lit(1))).as(s"_c_$i"))) ++
+      cols.indices.map(i =>
+        max(abs(when(finite(cols(i)), col(cols(i)).cast("double")))).as(s"_m_$i"))
+    def readProbe(r: Row): RangeProbe = {
       val total = r.getLong(0)
       val ms = cols.indices.map { i =>
         val o = 1 + cols.size + i
@@ -1083,30 +1086,29 @@ final class AggOps(private val c: Chain) extends AnyVal {
       }.toArray
       (total, cols.indices.forall(i => r.getLong(i + 1) == total), ms)
     }
-    def wideWith(p: Option[RangeProbe])(cc: Column, bound: Double): Column =
-      p match {
-        case Some((total, _, _)) if graft.core.Exact.splitSumSafe(bound, total) =>
-          Exact.splitDecimalSum8(cc)
-        case _ => Exact.sum8(cc)
-      }
-    def listwiseAggs(p: Option[RangeProbe]): Seq[Column] = {
-      val xs = cols.map(cn => when(allOk, col(cn).cast("double")))
-      def m(i: Int) = p.map(_._3(i)).getOrElse(Double.NaN)
-      val w = wideWith(p) _
-      (count(xs.head).as("_n") +:
-        cols.indices.flatMap(i =>
-          Seq(w(xs(i), m(i)).as(s"_s_$i"),
-            w(xs(i) * xs(i), m(i) * m(i)).as(s"_ss_$i")))) ++
-        pairs.map { case (i, j) =>
-          w(xs(i) * xs(j), m(i) * m(j)).as(s"_sp_${i}_$j") }
-    }
+    // which form each sum takes, from its bound on |summed value|
+    type SumChoice = Double => Boolean
+    val decimalOnly: SumChoice = _ => false
+    def provenBy(p: RangeProbe): SumChoice = graft.core.Exact.splitSumSafe(_, p._1)
+    def wide(split: SumChoice)(cc: Column, bound: Double): Column =
+      if (split(bound)) Exact.splitDecimalSum8(cc) else Exact.sum8(cc)
+    // the shared moments as (name, summed value, bound on |value|); an
+    // unprobed bound is NaN, which no check passes
+    val xs = cols.map(cn => when(allOk, col(cn).cast("double")))
+    def listwiseSums(ms: Int => Double): Seq[(String, Column, Double)] =
+      cols.indices.flatMap(i =>
+        Seq((s"_s_$i", xs(i), ms(i)), (s"_ss_$i", xs(i) * xs(i), ms(i) * ms(i)))) ++
+        pairs.map { case (i, j) => (s"_sp_${i}_$j", xs(i) * xs(j), ms(i) * ms(j)) }
+    def listwiseAggs(split: SumChoice, ms: Int => Double): Seq[Column] =
+      count(xs.head).as("_n") +:
+        listwiseSums(ms).map { case (n, v, b) => wide(split)(v, b).as(n) }
     def pairwiseAggs(pp: Option[RangeProbe]): Seq[Column] = pairs.flatMap { case (i, j) =>
       val (a, b) = (cols(i), cols(j))
       val both = finite(a) && finite(b)
       val xc = when(both, col(a).cast("double"))
       val yc = when(both, col(b).cast("double"))
       def m(k: Int) = pp.map(_._3(k)).getOrElse(Double.NaN)
-      val w = wideWith(pp) _
+      val w = wide(pp.fold(decimalOnly)(provenBy)) _
       val p = s"${i}_$j"
       Seq(count(xc).as(s"_n_$p"), w(xc, m(i)).as(s"_sx_$p"), w(yc, m(j)).as(s"_sy_$p"),
         w(xc * yc, m(i) * m(j)).as(s"_sxy_$p"), w(xc * xc, m(i) * m(i)).as(s"_sxx_$p"),
@@ -1115,76 +1117,60 @@ final class AggOps(private val c: Chain) extends AnyVal {
     // pairwise deletion differs from listwise ONLY on rows with missing
     // values; when every screened column is complete the two regimes are
     // IDENTICAL (docstring above) and listwise's shared per-column moments
-    // cost ~2.5× fewer exact-decimal sums. UNGROUPED pairwise FOLDS the
-    // completeness probe into the shared-moment pass itself — one scan
-    // total: the combined aggregate is a single bounded row, collected
-    // once, and when complete the closing runs over that driver-local
-    // row (the probe-then-rescan shape paid a second full pass for
-    // nothing). Only the rare incomplete input pays a second scan (the
-    // true per-pair aggregation). GROUPED pairwise keeps the separate
-    // cheap count-only probe: a global probe can't fold into a grouped
-    // pass without grouping sets, and the grouped aggregate is not a
-    // bounded row to close from. Declared semantics (and the rendered
+    // cost ~2.5× fewer exact sums. Declared semantics (and the rendered
     // face) stay pairwise in every branch.
-    // names/schema of the shared-moment row (the ungrouped-pairwise
-    // degraded faces build a driver-local one-row frame from it)
+    // names/schema of the shared-moment row (the ungrouped faces build a
+    // driver-local one-row frame from it)
     def momentFrame(rowAll: Row, off: Int): DataFrame = {
-      val names: Seq[String] = "_n" +:
-        (cols.indices.flatMap(i => Seq(s"_s_$i", s"_ss_$i")) ++
-          pairs.map { case (i, j) => s"_sp_${i}_$j" })
+      val names: Seq[String] = "_n" +: listwiseSums(_ => Double.NaN).map(_._1)
       val schema = StructType(StructField("_n", LongType, nullable = false) +:
         names.tail.map(StructField(_, DoubleType, nullable = true)))
       val vals = Row.fromSeq(names.indices.map(k => rowAll.get(off + k)))
       c.df.sparkSession.createDataFrame(
         java.util.Collections.singletonList(vals), schema)
     }
+    def aggregate(aggs: Seq[Column]): DataFrame =
+      if (groupBy.isEmpty) c.df.agg(aggs.head, aggs.tail: _*)
+      else c.df.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val (g, listwise): (DataFrame, Boolean) =
-      if (declaredListwise) {
-        // stats gate closed -> NO probe pass, the pre-round-18 lazy
-        // pure-decimal plan unchanged (at corpus scale the probe cannot
-        // enable anything); open -> one cheap probe at construction (a
-        // bounded one-row declared driver read, the house corr posture)
-        // chooses split-long sums per moment
-        val aggs = listwiseAggs(if (statsOk) Some(rangeProbe()) else None)
-        (if (groupBy.isEmpty) c.df.agg(aggs.head, aggs.tail: _*)
-        else c.df.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*), true)
+      if (groupBy.isEmpty && statsOk) {
+        // ONE pass: the probe plus every shared moment as a speculative
+        // split-long sum, checked after the pass on what it measured
+        val fused = probeAggs ++ listwiseAggs(_ => true, _ => Double.NaN)
+        val rowAll = c.df.agg(fused.head, fused.tail: _*).head()
+        val p = readProbe(rowAll)
+        val proven = listwiseSums(p._3(_)).forall { case (_, _, b) => provenBy(p)(b) }
+        if (proven && (declaredListwise || p._2))
+          (momentFrame(rowAll, probeAggs.size), true)
+        else if (declaredListwise || p._2)
+          (aggregate(listwiseAggs(provenBy(p), p._3(_))), true)
+        else (aggregate(pairwiseAggs(Some(p))), false)
+      } else if (declaredListwise) {
+        // grouped: the cheap probe scan, then one pass; gate closed: the
+        // lazy pure-decimal plan, no probe
+        val aggs =
+          if (statsOk) {
+            val p = readProbe(c.df.agg(probeAggs.head, probeAggs.tail: _*).head())
+            listwiseAggs(provenBy(p), p._3(_))
+          } else listwiseAggs(decimalOnly, _ => Double.NaN)
+        (aggregate(aggs), true)
       } else if (groupBy.isEmpty) {
-        if (statsOk) {
-          // two passes: the count/max probe (no decimal work), then the
-          // moment pass with split-long sums where proven — measured
-          // cheaper together than the old fused single pass (0.22 s +
-          // 1.73 s vs 3.41 s on the sf0.1 bench columns) because the
-          // fused pass paid the full decimal rate on every sum
-          val p = rangeProbe()
-          if (p._2) {
-            val aggs = listwiseAggs(Some(p))
-            (momentFrame(c.df.agg(aggs.head, aggs.tail: _*).head(), 0), true)
-          } else {
-            val aggs = pairwiseAggs(Some(p))
-            (c.df.agg(aggs.head, aggs.tail: _*), false)
-          }
-        } else {
-          // stats gate closed: the pre-round-18 fused shape — ONE pass
-          // computing the completeness probe and the decimal moments
-          val probe = count(lit(1)).as("_t") +:
-            cols.indices.map(i => count(when(finite(cols(i)), lit(1))).as(s"_c_$i"))
-          val aggsAll = probe ++ listwiseAggs(None)
-          val rowAll = c.df.agg(aggsAll.head, aggsAll.tail: _*).head()
-          if (cols.indices.forall(i => rowAll.getLong(i + 1) == rowAll.getLong(0)))
-            (momentFrame(rowAll, 1 + cols.size), true)
-          else {
-            val aggs = pairwiseAggs(None)
-            (c.df.agg(aggs.head, aggs.tail: _*), false)
-          }
-        }
+        // gate closed: ONE pass computing the completeness counts and the
+        // decimal moments
+        val counts = probeAggs.take(1 + cols.size)
+        val aggsAll = counts ++ listwiseAggs(decimalOnly, _ => Double.NaN)
+        val rowAll = c.df.agg(aggsAll.head, aggsAll.tail: _*).head()
+        if (cols.indices.forall(i => rowAll.getLong(i + 1) == rowAll.getLong(0)))
+          (momentFrame(rowAll, counts.size), true)
+        else (aggregate(pairwiseAggs(None)), false)
       } else {
         // grouped pairwise: the completeness probe has ALWAYS been a
         // separate scan here (a global probe can't fold into a grouped
-        // pass) — the range maxima now ride that same pass (three cheap
-        // max aggregates), so split gating costs no extra scan
-        val p = rangeProbe()
-        val aggs = if (p._2) listwiseAggs(Some(p)) else pairwiseAggs(Some(p))
-        (c.df.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*), p._2)
+        // pass) — the range maxima ride that same pass, so split gating
+        // costs no extra scan
+        val p = readProbe(c.df.agg(probeAggs.head, probeAggs.tail: _*).head())
+        if (p._2) (aggregate(listwiseAggs(provenBy(p), p._3(_))), true)
+        else (aggregate(pairwiseAggs(Some(p))), false)
       }
     val rows = pairs.map { case (i, j) =>
       val p = s"${i}_$j"
