@@ -324,29 +324,48 @@ object ScaleLint {
       }
     }
     // an explicit repartition(col) whose rows reach a broadcast build, or
-    // either side of a nested-loop join, through projections and filters
-    // only: the broadcast collects the rows whole and the nested loop
-    // pairs every row with every build row, so nothing consumes the hash
-    // partitioning — the shuffle moves the frame for nothing, and a
-    // projection below the join is computed once per row without it. An
-    // exchange that recurs elsewhere in the plan (the same canonical
-    // subtree, which runs once as a reused exchange) is never flagged: it
-    // is a shared materialization, and dropping it would compute the
-    // subtree once per copy.
+    // the streamed side of a nested-loop join, through projections and
+    // filters only, where nothing consumes the hash partitioning: the
+    // broadcast collects the rows whole, so its side is always dead. The
+    // streamed side is dead only when the join drops its partitioning or
+    // no operator above the join, up to the next exchange, requires a
+    // distribution: for inner, semi and anti joins the join passes that
+    // partitioning up, and a window or aggregate on the same key reads it
+    // in place of an exchange of the joined rows. A dead shuffle moves the
+    // frame for nothing, and a projection below the join is computed once
+    // per row without it. An exchange that recurs elsewhere in the plan
+    // (the same canonical subtree, which runs once as a reused exchange)
+    // is never flagged: it is a shared materialization, and dropping it
+    // would compute the subtree once per copy.
     locally {
+      import org.apache.spark.sql.catalyst.plans.physical.{UnknownPartitioning,
+        UnspecifiedDistribution}
+      import org.apache.spark.sql.catalyst.optimizer.BuildRight
       import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
         WholeStageCodegenExec}
-      import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_COL}
+      import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange,
+        REPARTITION_BY_COL}
       def reachedRepartition(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
         case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => Some(e)
         case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec | _: InputAdapter =>
           reachedRepartition(p.children.head)
         case _ => None
       }
-      val dead = plan.collect {
-        case b: BroadcastExchangeExec => Seq(b.child)
-        case j: BroadcastNestedLoopJoinExec => Seq(j.left, j.right)
-      }.flatten.flatMap(reachedRepartition)
+      // `used`: an operator above p, below the nearest exchange, requires
+      // a distribution of its child
+      def deadSides(p: SparkPlan, used: Boolean): Seq[SparkPlan] = {
+        val here = p match {
+          case b: BroadcastExchangeExec => Seq(b.child)
+          case j: BroadcastNestedLoopJoinExec
+              if !used || j.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
+            Seq(if (j.buildSide == BuildRight) j.left else j.right)
+          case _ => Nil
+        }
+        here ++ p.children.zip(p.requiredChildDistribution).flatMap { case (ch, d) =>
+          deadSides(ch, !p.isInstanceOf[Exchange] && (used || d != UnspecifiedDistribution))
+        }
+      }
+      val dead = deadSides(plan, used = false).flatMap(reachedRepartition)
       val copies = plan.collect {
         case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e.canonicalized
       }.groupBy(identity).view.mapValues(_.size).toMap
@@ -357,8 +376,8 @@ object ScaleLint {
           case other => other.toString
         }
         findings += Finding("warn", "dead-repartition",
-          s"repartition($keys) feeds only a broadcast or a nested-loop join side, " +
-            "which discard its partitioning: the shuffle moves the frame for nothing; " +
+          s"repartition($keys) feeds only a broadcast, or a nested-loop join whose " +
+            "output partitioning nothing uses: the shuffle moves the frame for nothing; " +
             "drop it (a projection below the join is still computed once per row)")
       }
     }

@@ -902,9 +902,9 @@ object DedupOps {
     * ([[DedupOps.minhashIndex]] / [[DedupOps.dedupAgainstIndex]]): one row
     * per (doc, band) as `(_id, _mh, _bh)` where `_bh` = xxhash64(band id ‖
     * the band's signature rows) — the band id is mixed in so `_bh` alone
-    * keys the bucket join. The repartition is the usual materialization
-    * barrier: the codegen shingle/signature kernels run once per document,
-    * not once per band row.
+    * keys the bucket join. The signature is computed in the Project below
+    * the Generate, so the codegen shingle/signature kernels run once per
+    * document, not once per band row, with no exchange in between.
     */
   private[ext] def bandedMinhash(df: DataFrame, idCol: String, textCol: String,
                                  shingleWords: Int, numHashes: Int, bands: Int): DataFrame = {

@@ -1,12 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.core.{Chain, ScaleLint}
 import graft.ops._
 import graft.ext._
@@ -31,26 +30,6 @@ class OneScanSpec extends AnyFunSuite {
   }
 
   private def query(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
-
-  /** Each Dataset action `build` runs, as its executed plan's text. */
-  private def actionsDuring(build: => Unit): Seq[String] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = plans.add("FAILED " + e)
-    }
-    // events of earlier actions still queued would reach the new listener
-    GraftBridge.drainListenerBus(spark.sparkContext)
-    spark.listenerManager.register(l)
-    try {
-      build
-      GraftBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
-  }
 
   test("tfidf and search_tfidf tokenize the document corpus once") {
     // a Generate over an unfiltered scan tokenizes the corpus; the query
@@ -140,6 +119,25 @@ class OneScanSpec extends AnyFunSuite {
     }
   }
 
+  test("corr_matrix runs no probe where the plan statistics know n >= 2^30") {
+    // a range's row count survives the projection with cost-based
+    // statistics on; the size gate is opened wide so only the row count
+    // closes it
+    val huge = spark.range(0, 1L << 31).select(col("id").as("a"), col("id").as("b"))
+    val confs = Seq("spark.sql.cbo.enabled" -> "true",
+      "spark.graft.corr.probeMaxBytes" -> (1L << 42).toString)
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      assert(huge.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(1L << 31)))
+      // the declared-listwise build is then lazy: no job at all (a probe
+      // over 2^31 rows would run into the watchdog)
+      val r = Harness.run(spark, "corr-rowcount-gate", 60) {
+        Chain(spark, "huge", huge).corrMatrix(Seq("a", "b"), deletion = "listwise")
+      }
+      assert(r.ok && r.jobs == 0, s"${r.error} jobs=${r.jobs}")
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("fuzzy_pairs compiles with the codegen fallback off, output unchanged") {
     def lev(a: String, b: String): Int = {
       val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
@@ -193,11 +191,12 @@ class OneScanSpec extends AnyFunSuite {
     }
   }
 
-  test("ScaleLint flags a repartition that only feeds a broadcast or a nested-loop side") {
+  test("ScaleLint flags a repartition whose partitioning no consumer uses") {
     val corpus = spark.range(0, 500).select(col("id"), (col("id") % 7).as("v"))
     val qs = spark.range(0, 5).select(col("id").as("q"), (col("id") * 3).as("w"))
     def dead(df: DataFrame) = ScaleLint.lint(df).filter(_.rule == "dead-repartition")
-    // both sides of a nested-loop join, through a projection and a filter
+    // a broadcast build side, and a nested-loop join's streamed side
+    // with nothing above the join (through a projection and a filter)
     val bnlj = corpus.repartition(col("id")).withColumn("v2", col("v") * 2).where(col("v2") > 1)
       .crossJoin(broadcast(qs.repartition(col("q"))))
       .where(col("id") =!= col("q"))
@@ -205,6 +204,19 @@ class OneScanSpec extends AnyFunSuite {
     assert(hits.size == 2 && hits.forall(_.severity == "warn"), hits.mkString("\n"))
     assert(hits.map(_.detail).exists(_.contains("repartition(id)")) &&
       hits.map(_.detail).exists(_.contains("repartition(q)")), hits.mkString("\n"))
+    // the streamed side under a window on another key: the window's
+    // exchange discards the join's partitioning
+    val otherKey = corpus.repartition(col("id")).crossJoin(broadcast(qs))
+      .withColumn("r", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("q")).orderBy(col("id"))))
+    assert(dead(otherKey).map(_.detail).exists(_.contains("repartition(id)")),
+      s"${dead(otherKey)}\n${otherKey.queryExecution.executedPlan}")
+    // the same window on the repartition's key reads the join's
+    // partitioning in place of an exchange of the joined rows
+    val sameKey = corpus.repartition(col("id")).crossJoin(broadcast(qs))
+      .withColumn("r", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("id")).orderBy(col("q"))))
+    assert(dead(sameKey).isEmpty, s"${dead(sameKey)}\n${sameKey.queryExecution.executedPlan}")
     // a broadcast hash join's build side
     val bhj = corpus.join(broadcast(qs.repartition(col("q"))), col("v") === col("q"))
     assert(dead(bhj).size == 1, dead(bhj).mkString("\n"))

@@ -169,20 +169,9 @@ class Round18Spec extends AnyFunSuite {
     // ungrouped, the moments ride the one aggregate the chain build runs
     // (probe and split-long sums together); read that action's plan
     val df = corrFixture(withNulls = false)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-    spark.listenerManager.register(l)
-    try {
+    val all = actionsDuring {
       Chain(spark, "t", df).corrMatrix(Seq("a", "b", "c"), deletion = "listwise")
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    val all = plans.asScala.toSeq
+    }
     assert(all.exists(_.contains("shiftright")),
       s"expected split-long (shiftright) partial aggregates in:\n${all.mkString("\n")}")
   }

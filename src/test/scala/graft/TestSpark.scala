@@ -32,6 +32,29 @@ object TestSpark {
   def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Each Dataset action `build` runs, as its executed plan's text (a
+    * failed action as "FAILED <exception>").
+    */
+  def actionsDuring(build: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add("FAILED " + e)
+    }
+    // events of earlier actions still queued would reach the new listener
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      build
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
   /** Structural scan counter for one-corpus-scan plan pins: walks the
     * FINAL adaptive plan (query stages unwrapped, reused exchanges NOT
     * descended — a reused exchange is by definition not a second
