@@ -17,12 +17,12 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * The metrics are read synchronously from the observed frame's own
   * executed plan once the checkpoint action returns: the scheduler merges
   * every task's accumulator update before it releases the job's waiter,
-  * so no listener delivery is waited on — empty and zero-partition inputs
-  * included. Should the plan hold no observed row, the helper recomputes
-  * the metrics with one aggregate over the MATERIALIZED blocks (cheap:
-  * the exact job this helper exists to remove).
-  * `spark.graft.checkpointProbe.forceFallback = true` takes that path
-  * unconditionally — the spec's hook for pinning it.
+  * so no listener delivery is waited on. Empty, zero-partition and
+  * AQE-emptied inputs (a runtime-empty join side, aggregate, window,
+  * sort, repartition or union input) all carry their observed row. A
+  * plan that holds none means Spark's observation contract changed: the
+  * helper throws an `IllegalStateException` naming the observation
+  * rather than silently paying the second job it exists to remove.
   *
   * [[stats]] is the home of the chain ops' eager scalar statistics (the
   * reference's compile-time `run_query` probes): it checkpoints only when
@@ -71,17 +71,13 @@ private[graft] object CheckpointProbe {
   }
 
   private def checkpoint(o: Observed): (DataFrame, Seq[Any]) = {
-    val force = o.df.sparkSession.conf
-      .get("spark.graft.checkpointProbe.forceFallback", "false").toBoolean
-    if (force) {
-      val cp = o.df.localCheckpoint()
-      (cp, aggregate(cp, o.named))
-    } else {
-      val cp = o.frame.localCheckpoint()
-      o.frame.queryExecution.observedMetrics.get(o.name) match {
-        case Some(row) => (cp, o.named.indices.map(row.get))
-        case None => (cp, aggregate(cp, o.named))
-      }
+    val cp = o.frame.localCheckpoint()
+    o.frame.queryExecution.observedMetrics.get(o.name) match {
+      case Some(row) => (cp, o.named.indices.map(row.get))
+      case None =>
+        Chain.releaseCheckpoints(cp)
+        throw new IllegalStateException(s"checkpoint_probe: observation ${o.name} " +
+          "left no observed row after its checkpoint job")
     }
   }
 

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.core.{Chain, Exact}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Event-stream operators over the `events` table shape
@@ -137,18 +138,41 @@ object EventStreams {
   /** Streaming append sink: drain the stream into a managed parquet table
     * with exactly-once file-sink semantics (offsets + written-file log in
     * the checkpoint). `Trigger.AvailableNow` processes everything
-    * available then stops — the batch-drain mode for scheduled ingest;
-    * pass `continuous = true` for an always-on query (returned without
-    * awaiting).
+    * available then stops — the batch-drain mode for scheduled ingest,
+    * and the one launch posture every sink here shares. The `toTable`
+    * start is what gives the file sink's log, so this sink alone does not
+    * go through [[drainForeachBatch]].
     */
-  def sinkAppendToTable(df: DataFrame, name: String, checkpointDir: String,
-                        continuous: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    val w = df.writeStream
+  def sinkAppendToTable(df: DataFrame, name: String, checkpointDir: String): StreamingQuery = {
+    val q = df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-    val q = (if (continuous) w else w.trigger(Trigger.AvailableNow())).toTable(name)
-    if (!continuous) q.awaitTermination()
+      .trigger(Trigger.AvailableNow())
+      .toTable(name)
+    q.awaitTermination()
+    q
+  }
+
+  /** The one launch of every `foreachBatch` sink: run `body` on each
+    * micro-batch of what is available now (`Trigger.AvailableNow`), wait
+    * for the drain, then refresh each of `refresh` that exists in the
+    * CALLER's session. `foreachBatch` runs in a cloned session, so the
+    * caller's cached file listings would not see the batches' writes; a
+    * stream that yielded no non-empty batch never created its tables, and
+    * refreshing a missing table throws.
+    */
+  private def drainForeachBatch(df: DataFrame, outputMode: String, checkpointDir: String,
+                                refresh: Seq[String])(
+                                body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = df.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val catalog = df.sparkSession.catalog
+    refresh.filter(catalog.tableExists).foreach(catalog.refreshTable)
     q
   }
 
@@ -162,32 +186,17 @@ object EventStreams {
     */
   def sinkUpsertToTable(df: DataFrame, name: String, keys: Seq[String],
                         checkpointDir: String,
-                        dedupeBatch: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = df.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // dedupeBatch dedupes INSIDE the batch (a plain batch-side
-        // distinct) — a distinct on the streaming frame would instead
-        // compile to a watermarkless stateful dropDuplicates whose state
-        // store grows with every key ever seen
-        if (!batch.isEmpty) {
-          val b = if (dedupeBatch) batch.distinct() else batch
-          graft.core.Chain(batch.sparkSession, name, b).saveUpsert(name, keys)
-        }
+                        dedupeBatch: Boolean = false): StreamingQuery =
+    drainForeachBatch(df, "update", checkpointDir, Seq(name)) { (batch, _) =>
+      // dedupeBatch dedupes INSIDE the batch (a plain batch-side
+      // distinct) — a distinct on the streaming frame would instead
+      // compile to a watermarkless stateful dropDuplicates whose state
+      // store grows with every key ever seen
+      if (!batch.isEmpty) {
+        val b = if (dedupeBatch) batch.distinct() else batch
+        graft.core.Chain(batch.sparkSession, name, b).saveUpsert(name, keys)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // foreachBatch runs in a cloned session; the upsert's table swap is
-    // invisible to the CALLER session's cached file listing until refreshed.
-    // Guarded: a stream that yielded no non-empty batch never created the
-    // table, and refreshing a non-existent table throws.
-    if (df.sparkSession.catalog.tableExists(name))
-      df.sparkSession.catalog.refreshTable(name)
-    q
-  }
+    }
 
   /** Stream-stream range enrichment: every point event joins the interval
     * facts containing it (`point ∈ [start, end)`, half-open like the batch
@@ -262,56 +271,41 @@ object EventStreams {
                              shingleWords: Int = 3, numHashes: Int = 32, bands: Int = 4,
                              estThreshold: Double = 0.8,
                              indexBuckets: Int = 16,
-                             dedupWithinBatch: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                             dedupWithinBatch: Boolean = false): StreamingQuery = {
     import graft.ext._
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val exact = graft.core.Chain(spark, name, batch).dedupExact(idCol, textCol)
-          // batch-INTERNAL near-dups (two new docs near-duplicating each
-          // other in one micro-batch) are invisible to the index probe —
-          // opt in to a within-batch minhash dedupNear pass (work ∝ batch,
-          // same banding parameters as the cross-batch index)
-          val deduped =
-            if (dedupWithinBatch)
-              exact.dedupNear(idCol, textCol, n = shingleWords,
-                threshold = estThreshold, candidates = "minhash",
-                numHashes = numHashes, bands = bands)
-            else exact
-          val survivors =
-            if (spark.catalog.tableExists(indexTable))
-              deduped.dedupAgainstIndex(spark.table(indexTable), idCol, textCol,
-                shingleWords, numHashes, bands, estThreshold)
-            else deduped
-          // replay-idempotent APPEND: drop ids already in the corpus (one
-          // column-pruned scan of the id column), then append the rest —
-          // never rewrite the corpus (a per-batch upsert is O(corpus) I/O)
-          val fresh =
-            if (spark.catalog.tableExists(name))
-              survivors.df.join(spark.table(name).select(col(idCol)), Seq(idCol), "left_anti")
-            else survivors.df
-          fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(name)
-          survivors
-            .minhashIndex(idCol, textCol, shingleWords, numHashes, bands)
-            .appendBucketed(indexTable, Seq("_bh"), indexBuckets)
-        }
+    drainForeachBatch(docs, "append", checkpointDir, Seq(name, indexTable)) { (batch, _) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) {
+        val exact = graft.core.Chain(spark, name, batch).dedupExact(idCol, textCol)
+        // batch-INTERNAL near-dups (two new docs near-duplicating each
+        // other in one micro-batch) are invisible to the index probe —
+        // opt in to a within-batch minhash dedupNear pass (work ∝ batch,
+        // same banding parameters as the cross-batch index)
+        val deduped =
+          if (dedupWithinBatch)
+            exact.dedupNear(idCol, textCol, n = shingleWords,
+              threshold = estThreshold, candidates = "minhash",
+              numHashes = numHashes, bands = bands)
+          else exact
+        val survivors =
+          if (spark.catalog.tableExists(indexTable))
+            deduped.dedupAgainstIndex(spark.table(indexTable), idCol, textCol,
+              shingleWords, numHashes, bands, estThreshold)
+          else deduped
+        // replay-idempotent APPEND: drop ids already in the corpus (one
+        // column-pruned scan of the id column), then append the rest —
+        // never rewrite the corpus (a per-batch upsert is O(corpus) I/O)
+        val fresh =
+          if (spark.catalog.tableExists(name))
+            survivors.df.join(spark.table(name).select(col(idCol)), Seq(idCol), "left_anti")
+          else survivors.df
+        fresh.write.mode(SaveMode.Append)
+          .format("parquet").saveAsTable(name)
+        survivors
+          .minhashIndex(idCol, textCol, shingleWords, numHashes, bands)
+          .appendBucketed(indexTable, Seq("_bh"), indexBuckets)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // foreachBatch runs in a cloned session; refresh the CALLER session's
-    // cached listings for both tables the batches rewrote/appended. Both
-    // guarded: an all-empty stream creates neither table.
-    if (docs.sparkSession.catalog.tableExists(name))
-      docs.sparkSession.catalog.refreshTable(name)
-    if (docs.sparkSession.catalog.tableExists(indexTable))
-      docs.sparkSession.catalog.refreshTable(indexTable)
-    q
+    }
   }
 
   /** Streaming lexical-index ingest via `foreachBatch`: every micro-batch
@@ -334,47 +328,35 @@ object EventStreams {
     */
   def sinkTfidfAppendToTable(docs: DataFrame, corpusTable: String, indexTable: String,
                              idCol: String, textCol: String, checkpointDir: String,
-                             indexBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                             indexBuckets: Int = 16): StreamingQuery = {
     import graft.ext._
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val deduped = graft.core.Chain(spark, corpusTable, batch)
-            .dedupExact(idCol, textCol)
-          val freshCorpus =
-            if (spark.catalog.tableExists(corpusTable))
-              deduped.df.join(spark.table(corpusTable).select(col(idCol)),
-                Seq(idCol), "left_anti")
-            else deduped.df
-          freshCorpus.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(corpusTable)
-          if (!spark.catalog.tableExists(indexTable)) {
-            graft.core.Chain(spark, indexTable, deduped.df)
-              .tfidfIndex(idCol, textCol)
-              .saveBucketed(indexTable, Seq("term"), indexBuckets)
-          } else {
-            val freshIdx = deduped.df.join(
-              spark.table(indexTable).select(col("doc_id").as(idCol)).distinct(),
+    drainForeachBatch(docs, "append", checkpointDir, Seq(corpusTable, indexTable)) { (batch, _) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) {
+        val deduped = graft.core.Chain(spark, corpusTable, batch)
+          .dedupExact(idCol, textCol)
+        val freshCorpus =
+          if (spark.catalog.tableExists(corpusTable))
+            deduped.df.join(spark.table(corpusTable).select(col(idCol)),
               Seq(idCol), "left_anti")
-            if (!freshIdx.isEmpty)
-              graft.core.Chain(spark, indexTable, freshIdx)
-                .tfidfIndex(idCol, textCol)
-                .appendBucketed(indexTable, Seq("term"), indexBuckets)
-          }
+          else deduped.df
+        freshCorpus.write.mode(SaveMode.Append)
+          .format("parquet").saveAsTable(corpusTable)
+        if (!spark.catalog.tableExists(indexTable)) {
+          graft.core.Chain(spark, indexTable, deduped.df)
+            .tfidfIndex(idCol, textCol)
+            .saveBucketed(indexTable, Seq("term"), indexBuckets)
+        } else {
+          val freshIdx = deduped.df.join(
+            spark.table(indexTable).select(col("doc_id").as(idCol)).distinct(),
+            Seq(idCol), "left_anti")
+          if (!freshIdx.isEmpty)
+            graft.core.Chain(spark, indexTable, freshIdx)
+              .tfidfIndex(idCol, textCol)
+              .appendBucketed(indexTable, Seq("term"), indexBuckets)
         }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (docs.sparkSession.catalog.tableExists(corpusTable))
-      docs.sparkSession.catalog.refreshTable(corpusTable)
-    if (docs.sparkSession.catalog.tableExists(indexTable))
-      docs.sparkSession.catalog.refreshTable(indexTable)
-    q
+    }
   }
 
   /** Streaming SEMANTIC ingest via `foreachBatch` — the embedding sibling
@@ -404,54 +386,42 @@ object EventStreams {
                                  idCol: String, vecCol: String, checkpointDir: String,
                                  threshold: Double, nprobe: Int = 4,
                                  nlist: Int = 16,
-                                 indexBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                                 indexBuckets: Int = 16): StreamingQuery = {
     import graft.ext._
-    val q = vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val chain = graft.core.Chain(spark, corpusTable, batch)
-          val survivors =
-            if (spark.catalog.tableExists(indexTable))
-              chain.dedupAgainstIvfIndex(spark.table(indexTable), idCol, vecCol,
-                threshold, nprobe)
-            else chain
-          val freshCorpus =
-            if (spark.catalog.tableExists(corpusTable))
-              survivors.df.join(spark.table(corpusTable).select(col(idCol)),
-                Seq(idCol), "left_anti")
-            else survivors.df
-          freshCorpus.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(corpusTable)
-          if (!spark.catalog.tableExists(indexTable)) {
-            survivors.ivfIndex(idCol, vecCol, nlist)
-              .saveBucketed(indexTable, Seq("_cid"), indexBuckets)
-          } else {
-            // _id keeps the index's own id type (long OR string) — an
-            // unconditional long cast would null a string-keyed index's
-            // ids and let replays duplicate postings
-            val freshIdx = survivors.df.join(
-              spark.table(indexTable).where(col("_id").isNotNull)
-                .select(col("_id").as(idCol)),
+    drainForeachBatch(vecs, "append", checkpointDir, Seq(corpusTable, indexTable)) { (batch, _) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) {
+        val chain = graft.core.Chain(spark, corpusTable, batch)
+        val survivors =
+          if (spark.catalog.tableExists(indexTable))
+            chain.dedupAgainstIvfIndex(spark.table(indexTable), idCol, vecCol,
+              threshold, nprobe)
+          else chain
+        val freshCorpus =
+          if (spark.catalog.tableExists(corpusTable))
+            survivors.df.join(spark.table(corpusTable).select(col(idCol)),
               Seq(idCol), "left_anti")
-            if (!freshIdx.isEmpty)
-              graft.core.Chain(spark, indexTable, freshIdx)
-                .ivfIndexAssign(spark.table(indexTable), idCol, vecCol)
-                .appendBucketed(indexTable, Seq("_cid"), indexBuckets)
-          }
+          else survivors.df
+        freshCorpus.write.mode(SaveMode.Append)
+          .format("parquet").saveAsTable(corpusTable)
+        if (!spark.catalog.tableExists(indexTable)) {
+          survivors.ivfIndex(idCol, vecCol, nlist)
+            .saveBucketed(indexTable, Seq("_cid"), indexBuckets)
+        } else {
+          // _id keeps the index's own id type (long OR string) — an
+          // unconditional long cast would null a string-keyed index's
+          // ids and let replays duplicate postings
+          val freshIdx = survivors.df.join(
+            spark.table(indexTable).where(col("_id").isNotNull)
+              .select(col("_id").as(idCol)),
+            Seq(idCol), "left_anti")
+          if (!freshIdx.isEmpty)
+            graft.core.Chain(spark, indexTable, freshIdx)
+              .ivfIndexAssign(spark.table(indexTable), idCol, vecCol)
+              .appendBucketed(indexTable, Seq("_cid"), indexBuckets)
         }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (vecs.sparkSession.catalog.tableExists(corpusTable))
-      vecs.sparkSession.catalog.refreshTable(corpusTable)
-    if (vecs.sparkSession.catalog.tableExists(indexTable))
-      vecs.sparkSession.catalog.refreshTable(indexTable)
-    q
+    }
   }
 
   /** sink_pq_append(vecs, corpus, index, id, vec, ckpt, pq_model,
@@ -480,83 +450,46 @@ object EventStreams {
                           pqModel: DataFrame, maxDist: Double, nprobe: Int = 4,
                           nlist: Int = 16,
                           indexBuckets: Int = 16,
-                          byResidual: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                          byResidual: Boolean = false): StreamingQuery = {
     import graft.ext._
-    val q = vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val chain = graft.core.Chain(spark, corpusTable, batch)
-          val survivors =
-            if (spark.catalog.tableExists(indexTable))
-              chain.dedupAgainstIvfPqIndex(spark.table(indexTable), pqModel,
-                idCol, vecCol, maxDist, nprobe)
-            else chain
-          val freshCorpus =
-            if (spark.catalog.tableExists(corpusTable))
-              survivors.df.join(spark.table(corpusTable).select(col(idCol)),
-                Seq(idCol), "left_anti")
-            else survivors.df
-          freshCorpus.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(corpusTable)
-          if (!spark.catalog.tableExists(indexTable)) {
-            survivors.ivfPqIndex(pqModel, idCol, vecCol, nlist,
-                byResidual = byResidual)
-              .saveBucketed(indexTable, Seq("_cid"), indexBuckets)
-          } else {
-            // _id keeps the index's own id type (long OR string), the
-            // sinkEmbeddingAppendToTable lesson
-            val freshIdx = survivors.df.join(
-              spark.table(indexTable).where(col("_id").isNotNull)
-                .select(col("_id").as(idCol)),
+    drainForeachBatch(vecs, "append", checkpointDir, Seq(corpusTable, indexTable)) { (batch, _) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) {
+        val chain = graft.core.Chain(spark, corpusTable, batch)
+        val survivors =
+          if (spark.catalog.tableExists(indexTable))
+            chain.dedupAgainstIvfPqIndex(spark.table(indexTable), pqModel,
+              idCol, vecCol, maxDist, nprobe)
+          else chain
+        val freshCorpus =
+          if (spark.catalog.tableExists(corpusTable))
+            survivors.df.join(spark.table(corpusTable).select(col(idCol)),
               Seq(idCol), "left_anti")
-            if (!freshIdx.isEmpty)
-              graft.core.Chain(spark, indexTable, freshIdx)
-                .ivfPqIndexAssign(spark.table(indexTable), pqModel, idCol, vecCol)
-                .appendBucketed(indexTable, Seq("_cid"), indexBuckets)
-          }
+          else survivors.df
+        freshCorpus.write.mode(SaveMode.Append)
+          .format("parquet").saveAsTable(corpusTable)
+        if (!spark.catalog.tableExists(indexTable)) {
+          survivors.ivfPqIndex(pqModel, idCol, vecCol, nlist,
+              byResidual = byResidual)
+            .saveBucketed(indexTable, Seq("_cid"), indexBuckets)
+        } else {
+          // _id keeps the index's own id type (long OR string), the
+          // sinkEmbeddingAppendToTable lesson
+          val freshIdx = survivors.df.join(
+            spark.table(indexTable).where(col("_id").isNotNull)
+              .select(col("_id").as(idCol)),
+            Seq(idCol), "left_anti")
+          if (!freshIdx.isEmpty)
+            graft.core.Chain(spark, indexTable, freshIdx)
+              .ivfPqIndexAssign(spark.table(indexTable), pqModel, idCol, vecCol)
+              .appendBucketed(indexTable, Seq("_cid"), indexBuckets)
         }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (vecs.sparkSession.catalog.tableExists(corpusTable))
-      vecs.sparkSession.catalog.refreshTable(corpusTable)
-    if (vecs.sparkSession.catalog.tableExists(indexTable))
-      vecs.sparkSession.catalog.refreshTable(indexTable)
-    q
+    }
   }
 
-  /** Replay guard for the stored-profile sinks: `foreachBatch` is
-    * at-least-once — a run that dies between the merge write and the
-    * checkpoint commit re-fires the SAME batchId on restart, and an
-    * ADDITIVE merge (frequent-items, KLL, drift counts, calibration
-    * accumulators) applied twice double-counts. The last applied
-    * (batchId, checkpoint) pair is recorded as a table property
-    * immediately after each merge commits; a re-delivery of an
-    * already-recorded batch is skipped. The marker carries the
-    * checkpoint IDENTITY — the stream's uuid from the checkpoint's own
-    * `metadata` file, plus the path — because a NEW checkpoint against
-    * an existing table legitimately restarts batch ids at 0 (a
-    * deliberate reprocess) and must not be mistaken for a replay. The
-    * uuid (not the bare path) is what recognizes the common
-    * rm-rf-and-rerun reprocess: a checkpoint RECREATED at the same path
-    * gets a fresh uuid, so its batches 0..N are re-applied instead of
-    * silently dropped against the stale path marker. An unparseable or
-    * externally-corrupted marker reads as "not applied" — the sink
-    * falls back to documented at-least-once behavior rather than
-    * crashing the stream. Residual window: a crash
-    * BETWEEN the merge commit and the property write still replays that
-    * one batch — the window is one catalog-metadata op wide (versus the
-    * whole awaitTermination span before), and a parquet catalog has no
-    * atomic data+marker commit to close it completely; the sinks are
-    * exactly-once up to that documented sliver, not transactional. The
-    * HLL sink's register-wise-max merge is idempotent and needs no
-    * guard for correctness — it carries one anyway so a replayed batch
-    * skips the pointless bucket rewrite.
+  /** Table property holding a profile table's last applied batch as
+    * `batchId@checkpointIdentity` (the replay guard of [[runProfileSink]]).
     */
   private val AppliedBatchProp = "graft.applied_batch"
 
@@ -575,7 +508,7 @@ object EventStreams {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
     try out.select(spark.table(name).columns.map(col).toIndexedSeq: _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).insertInto(name)
+      .write.mode(SaveMode.Overwrite).insertInto(name)
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -614,7 +547,7 @@ object EventStreams {
     id.fold(checkpointDir)(u => s"$u:$checkpointDir")
   }
 
-  /** One-read-per-batch guard for the additive sinks: resolve the
+  /** One-read-per-batch replay guard of [[runProfileSink]]: resolve the
     * checkpoint identity ONCE, return None when this batch is a replay
     * (skip), Some(identity) to proceed — the caller hands the identity
     * back to [[markBatchApplied]] so the metadata file is opened exactly
@@ -653,80 +586,127 @@ object EventStreams {
     spark.sql(s"ALTER TABLE `$name` SET TBLPROPERTIES ('$AppliedBatchProp' = " +
       s"'$batchId@${checkpointIdent.replace("'", "''")}')")
 
+  /** The one body of the seven stored-profile sinks (distinct,
+    * frequent-items and quantile sketches, categorical and numeric drift,
+    * calibration, agreement). A sink supplies only what is its own:
+    * `aggregate` folds a micro-batch into its per-key rows, `close` turns
+    * those into the rows of a new table, and `merge` combines them with
+    * the stored rows of the partitions they touch into the rows that
+    * replace those partitions. Per non-empty micro-batch:
+    *
+    *  - Replay guard. `foreachBatch` is at-least-once: a run that dies
+    *    between the merge write and the checkpoint commit re-fires the
+    *    SAME batchId on restart, and an ADDITIVE merge (frequent items,
+    *    KLL, drift counts, calibration and agreement accumulators)
+    *    applied twice double-counts. [[markBatchApplied]] records the last
+    *    applied (batchId, checkpoint) pair as a table property right after
+    *    each write commits, and [[checkpointGuard]] skips a re-delivery of
+    *    an already-recorded batch. The marker carries the checkpoint
+    *    IDENTITY — the stream's uuid from the checkpoint's own `metadata`
+    *    file, plus the path — because a NEW checkpoint against an existing
+    *    table legitimately restarts batch ids at 0 (a deliberate
+    *    reprocess) and must not be mistaken for a replay; a checkpoint
+    *    RECREATED at the same path (rm-rf-and-rerun) gets a fresh uuid, so
+    *    its batches re-apply instead of silently dropping against the
+    *    stale marker. An unparseable or externally-corrupted marker reads
+    *    as "not applied" — documented at-least-once behavior, never a
+    *    crashed stream. Residual window: a crash BETWEEN the write commit
+    *    and the property write still replays that one batch — one
+    *    catalog-metadata op wide; a parquet catalog has no atomic
+    *    data+marker commit to close it, so the sinks are exactly-once up
+    *    to that sliver, not transactional. The HLL sink's register-wise
+    *    max is idempotent and needs no guard for correctness; the guard
+    *    still spares a replayed batch the pointless rewrite.
+    *  - Touched-partition prune. The table is PARTITIONED by
+    *    `_pb = hash(bucketBy) mod profileBuckets` (every row in `_pb = 0`
+    *    when `bucketBy` is empty). The first batch writes the table; each
+    *    later batch reads only the `_pb` partitions its rows land in (one
+    *    bounded driver read of ≤ profileBuckets ints, none when `bucketBy`
+    *    is empty) and rewrites ONLY those by dynamic partition overwrite —
+    *    untouched partitions keep their files, so per-batch I/O follows
+    *    the touched key population, not the whole profile. Size
+    *    `profileBuckets` so one partition's rows fit an executor.
+    *  - Release. The merged rows are materialized by `localCheckpoint`,
+    *    which breaks the read-then-overwrite cycle on the touched
+    *    partitions; once the overwrite commits, [[Chain.releaseCheckpoints]]
+    *    frees the blocks (`Dataset.unpersist` does not reach a local
+    *    checkpoint's blocks).
+    *
+    * `reference`, when given, is pinned ONCE at sink start into
+    * `<name>_ref` (the drift sinks' accepted profile — rerun the sink to
+    * rotate it); batches read it back with `spark.table`, so the
+    * `foreachBatch` session never reaches into caller-session plans.
+    */
+  private def runProfileSink(events: DataFrame, name: String, checkpointDir: String,
+                             profileBuckets: Int, bucketBy: Seq[Column],
+                             reference: Option[DataFrame] = None)(
+                             aggregate: DataFrame => DataFrame,
+                             close: DataFrame => DataFrame,
+                             merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
+    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
+    reference.foreach(_.write.mode(SaveMode.Overwrite).format("parquet")
+      .saveAsTable(name + "_ref"))
+    val pb = if (bucketBy.isEmpty) lit(0) else pmod(hash(bucketBy: _*), lit(profileBuckets))
+    drainForeachBatch(events, "append", checkpointDir, Seq(name)) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val ident = if (batch.isEmpty) None
+                  else checkpointGuard(spark, name, checkpointDir, batchId)
+      ident.foreach { ci =>
+        val bs = aggregate(batch).withColumn("_pb", pb)
+        if (!spark.catalog.tableExists(name)) {
+          close(bs).withColumn("_pb", pb)
+            .write.partitionBy("_pb").format("parquet").saveAsTable(name)
+        } else {
+          val touched =
+            if (bucketBy.isEmpty) Seq(0)
+            else bs.select("_pb").distinct().collect().map(_.getInt(0)).toSeq
+          val old = spark.table(name).where(col("_pb").isInCollection(touched))
+          val out = merge(bs, old).withColumn("_pb", pb).localCheckpoint()
+          try dynamicOverwrite(spark, out, name)
+          finally Chain.releaseCheckpoints(out)
+        }
+        markBatchApplied(spark, name, ci, batchId)
+      }
+    }
+  }
+
+  /** Full-outer merge of a sketch sink's batch rows with its stored rows
+    * on `keys :+ "_pb"` (`_pb` is a function of the keys, so this is the
+    * key-equality join with the partition column aligned): each named
+    * column is renamed apart on both sides and recombined by its function
+    * of (new, old).
+    */
+  private def mergeSketches(bs: DataFrame, old: DataFrame, keys: Seq[String])(
+                            combine: (String, (Column, Column) => Column)*): DataFrame = {
+    def apart(df: DataFrame, suffix: String) =
+      df.withColumnsRenamed(combine.map { case (c, _) => c -> s"$c$suffix" }.toMap)
+    apart(bs, "_new").join(apart(old, "_old"), keys :+ "_pb", "full_outer")
+      .select((keys.map(col) ++ combine.map { case (c, f) =>
+        f(col(s"${c}_new"), col(s"${c}_old")).as(c) }): _*)
+  }
+
   /** Streaming continuous profile via `foreachBatch`: every micro-batch
     * folds its per-key HLL sketches into a persistent profile table — a
     * COUNT DISTINCT over the whole stream history that never rescans
     * history (the sketch-column pattern of [[graft.ops.AggOps
     * .distinctSketches]], made continuous). Estimates read out with
-    * `hll_sketch_estimate(_sk)`. Replay-safe in the at-least-once sense
-    * of sketches: re-merging the same batch is register-wise idempotent
-    * (max of maxima), so duplicate deliveries never inflate the estimate.
-    *
-    * Scale shape (round-6 ask): the profile table is PARTITIONED by
-    * `_pb = hash(keys) mod profileBuckets`, and each batch rewrites ONLY
-    * the buckets its keys land in (dynamic partition overwrite). Per batch
-    * the work is one bounded aggregate of the batch, a full-outer
-    * register-wise `hll_union` merge against the TOUCHED buckets (the old
-    * side is partition-pruned), and a rewrite of those buckets — so a
-    * batch touching few keys pays I/O proportional to the touched key
-    * population, not the full profile. Size `profileBuckets` so one
-    * bucket's rows fit an executor comfortably (keys/buckets rows each).
+    * `hll_sketch_estimate(_sk)`. The merge is a register-wise
+    * `hll_union` (a key new to either side adopts the present sketch), so
+    * re-merging the same batch is idempotent and duplicate deliveries
+    * never inflate the estimate. Replay guard, `_pb = hash(keys)`
+    * touched-partition rewrite and checkpoint release: [[runProfileSink]].
     */
   def sinkDistinctSketchToTable(events: DataFrame, keys: Seq[String], valueCol: String,
                                 name: String, checkpointDir: String,
                                 lgConfigK: Int = 12,
-                                profileBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                                profileBuckets: Int = 16): StreamingQuery = {
     require(keys.nonEmpty, "profile sink needs key columns")
-    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val _ci = if (batch.isEmpty) None
-                  else checkpointGuard(spark, name, checkpointDir, batchId)
-        if (_ci.isDefined) {
-          val bs = batch.groupBy(keys.map(col): _*)
-            .agg(hll_sketch_agg(col(valueCol), lit(lgConfigK)).as("_sk"))
-            .withColumn("_pb", pmod(hash(keys.map(col): _*), lit(profileBuckets)))
-          if (!spark.catalog.tableExists(name)) {
-            bs.write.partitionBy("_pb")
-              .format("parquet").saveAsTable(name)
-          } else {
-            // buckets this batch touches: bounded driver read (≤ profileBuckets
-            // ints) used to partition-prune the old-side scan
-            val touched = bs.select("_pb").distinct().collect().map(_.getInt(0)).toSeq
-            val old = spark.table(name)
-              .where(col("_pb").isInCollection(touched))
-              .withColumnRenamed("_sk", "_sk_old")
-            // _pb is a pure function of keys, so joining on keys :+ _pb is the
-            // same key-equality join but keeps the partition column aligned
-            val merged = bs.withColumnRenamed("_sk", "_sk_new")
-              .join(old, keys :+ "_pb", "full_outer")
-              .select((keys.map(col) :+
-                when(col("_sk_new").isNull, col("_sk_old"))
-                  .when(col("_sk_old").isNull, col("_sk_new"))
-                  .otherwise(hll_union(col("_sk_new"), col("_sk_old"))).as("_sk") :+
-                col("_pb")): _*)
-            // materialize to break the read-then-overwrite cycle on the
-            // touched buckets, then dynamic-overwrite ONLY those buckets —
-            // untouched partitions keep their files
-            val out = merged.localCheckpoint()
-            dynamicOverwrite(spark, out, name)
-            out.unpersist()
-          }
-          markBatchApplied(spark, name, _ci.get, batchId)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // a stream with no non-empty batch never creates the table; the refresh
-    // must then be a no-op, not an AnalysisException
-    if (events.sparkSession.catalog.tableExists(name))
-      events.sparkSession.catalog.refreshTable(name)
-    q
+    runProfileSink(events, name, checkpointDir, profileBuckets, keys.map(col))(
+      aggregate = _.groupBy(keys.map(col): _*)
+        .agg(hll_sketch_agg(col(valueCol), lit(lgConfigK)).as("_sk")),
+      close = identity,
+      merge = mergeSketches(_, _, keys)("_sk" -> ((nw, od) =>
+        when(nw.isNull, od).when(od.isNull, nw).otherwise(hll_union(nw, od)))))
   }
 
   /** Streaming continuous heavy-hitters via `foreachBatch`: every
@@ -738,73 +718,24 @@ object EventStreams {
     * Read out with `freq_topk(_sk, k)` ([[graft.functions.FreqSketches
     * .topK]]); counts stay EXACT while a key's distinct-value count is
     * under ~0.75×maxMapSize, and carry ±n/maxMapSize with
-    * NO_FALSE_NEGATIVES beyond it. Unlike the HLL sink's register-wise
-    * max, a frequent-items merge is ADDITIVE — replay safety comes from
-    * the [[batchAlreadyApplied]] guard (a re-fired batch is skipped;
-    * same contract as the drift sinks' counts), not from merge
-    * idempotence, with the one-metadata-op residual window documented
-    * there.
-    *
-    * Scale shape: the profile table is PARTITIONED by
-    * `_pb = hash(keys) mod profileBuckets`; each batch pays one bounded
-    * aggregate of the batch, a [[graft.functions.FreqUnion]] merge against
-    * the TOUCHED buckets only (partition-pruned old side), and a
-    * dynamic-overwrite rewrite of those buckets.
+    * NO_FALSE_NEGATIVES beyond it. The merge is a
+    * [[graft.functions.FreqUnion]] (null-coalescing: a key new to either
+    * side adopts the present sketch). Unlike the HLL sink's register-wise
+    * max it is ADDITIVE, so replay safety comes from the guard of
+    * [[runProfileSink]], which also owns the `_pb = hash(keys)`
+    * touched-partition rewrite and the checkpoint release.
     */
   def sinkFreqSketchToTable(events: DataFrame, keys: Seq[String], valueCol: String,
                             name: String, checkpointDir: String,
                             maxMapSize: Int = 2048,
-                            profileBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                            profileBuckets: Int = 16): StreamingQuery = {
     require(keys.nonEmpty, "profile sink needs key columns")
-    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val _ci = if (batch.isEmpty) None
-                  else checkpointGuard(spark, name, checkpointDir, batchId)
-        if (_ci.isDefined) {
-          val bs = batch.groupBy(keys.map(col): _*)
-            .agg(graft.functions.FreqSketches
-              .sketchAgg(col(valueCol).cast("string"), maxMapSize).as("_sk"))
-            .withColumn("_pb", pmod(hash(keys.map(col): _*), lit(profileBuckets)))
-          if (!spark.catalog.tableExists(name)) {
-            bs.write.partitionBy("_pb")
-              .format("parquet").saveAsTable(name)
-          } else {
-            // buckets this batch touches: bounded driver read (≤ profileBuckets
-            // ints) used to partition-prune the old-side scan
-            val touched = bs.select("_pb").distinct().collect().map(_.getInt(0)).toSeq
-            val old = spark.table(name)
-              .where(col("_pb").isInCollection(touched))
-              .withColumnRenamed("_sk", "_sk_old")
-            // _pb is a pure function of keys, so joining on keys :+ _pb is the
-            // same key-equality join but keeps the partition column aligned;
-            // freq_union null-coalesces, so a key new to either side adopts
-            // the present sketch unchanged
-            val merged = bs.withColumnRenamed("_sk", "_sk_new")
-              .join(old, keys :+ "_pb", "full_outer")
-              .select((keys.map(col) :+
-                graft.functions.FreqSketches
-                  .union(col("_sk_new"), col("_sk_old")).as("_sk") :+
-                col("_pb")): _*)
-            val out = merged.localCheckpoint()
-            dynamicOverwrite(spark, out, name)
-            out.unpersist()
-          }
-          markBatchApplied(spark, name, _ci.get, batchId)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // a stream with no non-empty batch never creates the table; the refresh
-    // must then be a no-op, not an AnalysisException
-    if (events.sparkSession.catalog.tableExists(name))
-      events.sparkSession.catalog.refreshTable(name)
-    q
+    runProfileSink(events, name, checkpointDir, profileBuckets, keys.map(col))(
+      aggregate = _.groupBy(keys.map(col): _*)
+        .agg(graft.functions.FreqSketches
+          .sketchAgg(col(valueCol).cast("string"), maxMapSize).as("_sk")),
+      close = identity,
+      merge = mergeSketches(_, _, keys)("_sk" -> graft.functions.FreqSketches.union _))
   }
 
   /** drift_by_window(events, reference, value_col, width): per-tumbling-
@@ -880,77 +811,41 @@ object EventStreams {
   }
 
   /** Streaming face of [[driftByWindow]]: per-batch value counts MERGE
-    * into the per-(window, value) rows of `name` and the PSI columns are
-    * recomputed for every window in the touched buckets, so the table
-    * always equals the batch face over all data processed so far
-    * (replay-convergent: a re-fired batch is skipped by the
-    * [[batchAlreadyApplied]] guard — the count merge is additive, so the
-    * checkpoint alone cannot make it safe; residual window documented on
-    * the guard). The reference profile is pinned ONCE at sink start into
-    * `<name>_ref` (drift is measured against an ACCEPTED corpus — rerun
-    * the sink to rotate it); batches read it back rather than re-deriving
-    * it, so the foreachBatch session never reaches into caller-session
-    * plans. Bucketed dynamic-overwrite I/O (the profile-sink pattern):
-    * only buckets whose windows the batch touched are rewritten.
+    * additively into the per-(window, value) rows of `name` and the PSI
+    * columns are recomputed for every window in the touched partitions,
+    * so the table always equals the batch face over all data processed
+    * so far. The reference profile is pinned ONCE at sink start into
+    * `<name>_ref` (drift is measured against an ACCEPTED corpus).
+    * Replay guard (the count merge is additive, so the checkpoint alone
+    * cannot make it safe), `_pb = hash(window_start)` touched-partition
+    * rewrite and checkpoint release: [[runProfileSink]].
     */
   def sinkDriftUpsertToTable(events: DataFrame, reference: DataFrame,
                              valueCol: String, width: String, name: String,
                              checkpointDir: String, eps: Double = 1e-6,
-                             profileBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
-    val session = events.sparkSession
-    val refTable = name + "_ref"
-    reference.where(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("string").as("value"))
-      .agg(count(lit(1)).as("cnt_base"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(refTable)
-    def bucketed(cc: Column) = pmod(hash(cc), lit(profileBuckets))
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val _ci = if (batch.isEmpty) None
-                  else checkpointGuard(spark, name, checkpointDir, batchId)
-        if (_ci.isDefined) {
-          val refC = spark.table(refTable)
-          val bc = windowCounts(batch, valueCol, width)
-            .withColumn("_pb", bucketed(col("window_start")))
-          if (!spark.catalog.tableExists(name)) {
-            driftFromCounts(bc.drop("_pb"), refC, eps)
-              .withColumn("_pb", bucketed(col("window_start")))
-              .write.partitionBy("_pb").format("parquet").saveAsTable(name)
-          } else {
-            // buckets this batch touches: bounded driver read used to
-            // partition-prune the old-side scan (the profile-sink pattern)
-            val touched = bc.select("_pb").distinct().collect().map(_.getInt(0)).toSeq
-            val old = spark.table(name).where(col("_pb").isInCollection(touched))
-              .select(col("window_start"), col("value"), col("cnt_other").as("_cold"))
-            val merged = bc.select(col("window_start"), col("value"), col("cnt_other").as("_cnew"))
-              .join(old, Seq("window_start", "value"), "full_outer")
-              .select(col("window_start"), col("value"),
-                (coalesce(col("_cnew"), lit(0L)) + coalesce(col("_cold"), lit(0L))).as("cnt_other"))
-              // drop the stored grid padding (re-derived by the re-grid —
-              // keeping it would be harmless but re-pads idempotently)
-              .where(col("cnt_other") > 0)
-            val out = driftFromCounts(merged, refC, eps)
-              .withColumn("_pb", bucketed(col("window_start")))
-              .localCheckpoint()
-            dynamicOverwrite(spark, out, name)
-            out.unpersist()
-          }
-          markBatchApplied(spark, name, _ci.get, batchId)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // guarded: an all-empty stream never created the drift table
-    if (session.catalog.tableExists(name)) session.catalog.refreshTable(name)
-    q
+                             profileBuckets: Int = 16): StreamingQuery = {
+    def close(counts: DataFrame) =
+      driftFromCounts(counts, counts.sparkSession.table(name + "_ref"), eps)
+    runProfileSink(events, name, checkpointDir, profileBuckets, Seq(col("window_start")),
+      Some(reference.where(col(valueCol).isNotNull)
+        .groupBy(col(valueCol).cast("string").as("value"))
+        .agg(count(lit(1)).as("cnt_base"))))(
+      aggregate = windowCounts(_, valueCol, width),
+      close = close,
+      merge = (bs, old) => close(mergeCounts(bs, old, Seq("window_start", "value"))))
   }
+
+  /** Additive merge of a drift sink's batch counts with its stored rows
+    * on `keys`: `cnt_other` sums across the full outer join, and the
+    * stored zero padding drops (the closing re-derives it — keeping it
+    * would be harmless but re-pads idempotently).
+    */
+  private def mergeCounts(bs: DataFrame, old: DataFrame, keys: Seq[String]): DataFrame =
+    bs.select((keys.map(col) :+ col("cnt_other").as("_cnew")): _*)
+      .join(old.select((keys.map(col) :+ col("cnt_other").as("_cold")): _*), keys, "full_outer")
+      .select((keys.map(col) :+
+        (coalesce(col("_cnew"), lit(0L)) + coalesce(col("_cold"), lit(0L))).as("cnt_other")): _*)
+      .where(col("cnt_other") > 0)
 
   /** drift_by_window_numeric(events, reference, value_col, width, lo, hi,
     * buckets): the NUMERIC twin of [[driftByWindow]] — per-tumbling-window
@@ -1124,77 +1019,29 @@ object EventStreams {
 
   /** Streaming face of [[driftByWindowNumeric]] — the
     * [[sinkDriftUpsertToTable]] machinery with bucket counts in place of
-    * value counts: per-batch (window × bucket) counts MERGE into `name`
-    * and the PSI columns are recomputed for every window in the touched
-    * buckets, so the table always equals the batch face over all data
-    * processed so far (replay-convergent: a re-fired batch is skipped by
-    * the [[batchAlreadyApplied]] guard — the count merge is additive, so
-    * the checkpoint alone cannot make it safe; residual window documented
-    * on the guard). The spine-complete reference profile is
-    * pinned ONCE at sink start into `<name>_ref` (rerun the sink to
-    * rotate it); batches read it back rather than re-deriving it.
-    * Bucketed dynamic-overwrite I/O: only `_pb` buckets whose windows the
-    * batch touched are rewritten.
+    * value counts: per-batch (window × bucket) counts MERGE additively
+    * into `name` and the PSI columns are recomputed for every window in
+    * the touched partitions, so the table always equals the batch face
+    * over all data processed so far. The spine-complete reference
+    * profile is pinned ONCE at sink start into `<name>_ref`. Replay
+    * guard, `_pb = hash(window_start)` touched-partition rewrite and
+    * checkpoint release: [[runProfileSink]].
     */
   def sinkDriftNumericUpsertToTable(events: DataFrame, reference: DataFrame,
                                     valueCol: String, width: String,
                                     lo: Double, hi: Double, buckets: Int,
                                     name: String, checkpointDir: String,
                                     eps: Double = 1e-6,
-                                    profileBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
+                                    profileBuckets: Int = 16): StreamingQuery = {
     require(buckets > 0, s"sink_drift_numeric needs buckets > 0, got $buckets")
     require(hi > lo, s"sink_drift_numeric needs hi > lo, got [$lo, $hi]")
-    val session = events.sparkSession
-    val refTable = name + "_ref"
-    refBucketCounts(reference, valueCol, lo, hi, buckets)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(refTable)
-    def bucketed(cc: Column) = pmod(hash(cc), lit(profileBuckets))
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val _ci = if (batch.isEmpty) None
-                  else checkpointGuard(spark, name, checkpointDir, batchId)
-        if (_ci.isDefined) {
-          val refC = spark.table(refTable)
-          val bc = windowBucketCounts(batch, valueCol, width, lo, hi, buckets)
-            .withColumn("_pb", bucketed(col("window_start")))
-          if (!spark.catalog.tableExists(name)) {
-            driftFromBucketCounts(bc.drop("_pb"), refC, lo, hi, buckets, eps)
-              .withColumn("_pb", bucketed(col("window_start")))
-              .write.partitionBy("_pb").format("parquet").saveAsTable(name)
-          } else {
-            // buckets this batch touches: bounded driver read used to
-            // partition-prune the old-side scan (the profile-sink pattern)
-            val touched = bc.select("_pb").distinct().collect().map(_.getInt(0)).toSeq
-            val old = spark.table(name).where(col("_pb").isInCollection(touched))
-              .select(col("window_start"), col("bucket"), col("cnt_other").as("_cold"))
-            val merged = bc.select(col("window_start"), col("bucket"), col("cnt_other").as("_cnew"))
-              .join(old, Seq("window_start", "bucket"), "full_outer")
-              .select(col("window_start"), col("bucket"),
-                (coalesce(col("_cnew"), lit(0L)) + coalesce(col("_cold"), lit(0L))).as("cnt_other"))
-              // drop the stored spine padding (re-derived by the re-grid —
-              // keeping it would be harmless but re-pads idempotently)
-              .where(col("cnt_other") > 0)
-            val out = driftFromBucketCounts(merged, refC, lo, hi, buckets, eps)
-              .withColumn("_pb", bucketed(col("window_start")))
-              .localCheckpoint()
-            dynamicOverwrite(spark, out, name)
-            out.unpersist()
-          }
-          markBatchApplied(spark, name, _ci.get, batchId)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // guarded: an all-empty stream never created the drift table
-    if (session.catalog.tableExists(name)) session.catalog.refreshTable(name)
-    q
+    def close(counts: DataFrame) = driftFromBucketCounts(counts,
+      counts.sparkSession.table(name + "_ref"), lo, hi, buckets, eps)
+    runProfileSink(events, name, checkpointDir, profileBuckets, Seq(col("window_start")),
+      Some(refBucketCounts(reference, valueCol, lo, hi, buckets)))(
+      aggregate = windowBucketCounts(_, valueCol, width, lo, hi, buckets),
+      close = close,
+      merge = (bs, old) => close(mergeCounts(bs, old, Seq("window_start", "bucket"))))
   }
 
   /** Close per-(group, bucket) calibration accumulators into the stored
@@ -1202,12 +1049,10 @@ object EventStreams {
     * group ever seen, including all-invalid ones — the batch face's
     * null-ece contract), score_avg/pos_rate, the exact-decimal ece
     * closing of [[graft.ops.AggOps.calibrationProfile]], the raw
-    * accumulators retained for the next merge, and the `_pb` partition
-    * column.
+    * accumulators retained for the next merge.
     */
   private def closeCalibration(acc: DataFrame, groups: Option[DataFrame],
-                               groupBy: Seq[String], buckets: Int,
-                               profileBuckets: Int): DataFrame = {
+                               groupBy: Seq[String], buckets: Int): DataFrame = {
     val w = 1.0 / buckets
     val spark = acc.sparkSession
     val spineB = spark.range(buckets).select(col("id").as("bucket"))
@@ -1227,10 +1072,7 @@ object EventStreams {
       .select((groupBy.map(col) ++ (col("bucket") +: graft.ops.AggOps.calibrationStats(
         col("bucket"), col("_r_n"), col("_r_ssumd"), col("_r_pos"), w)) ++ Seq(
         col("_r_ssumd").as("_ssumd"), col("_r_pos").as("_pos"))): _*)
-    val pbCol =
-      if (groupBy.isEmpty) lit(0)
-      else pmod(hash(groupBy.map(col): _*), lit(profileBuckets))
-    graft.ops.AggOps.withCalibrationEce(frame, groupBy).withColumn("_pb", pbCol)
+    graft.ops.AggOps.withCalibrationEce(frame, groupBy)
   }
 
   /** Streaming face of [[graft.ops.AggOps.calibrationProfile]] — the
@@ -1249,26 +1091,23 @@ object EventStreams {
     * for every group in the touched `_pb` buckets, full bucket spine
     * included. The table stores the batch face's visible columns plus
     * the raw accumulators (`_ssumd` DECIMAL(38,8), `_pos`) that make the
-    * merge exact — drop them on readout. Additive, so a re-fired batch
-    * is skipped by [[batchAlreadyApplied]] (residual window documented
-    * there); convergence to the batch face over all delivered events is
-    * spec-gated (Round12Spec), including late-data and all-invalid-group
-    * cases.
+    * merge exact — drop them on readout. Convergence to the batch face
+    * over all delivered events is spec-gated (Round12Spec), including
+    * late-data and all-invalid-group cases.
     *
     * Scale shape: the per-batch aggregate is map-side combined and its
-    * output is ≤ groups × (buckets + 1) rows; the old side is
-    * partition-pruned to touched buckets; nothing corpus-sized is ever
-    * re-read. Ungrouped, the whole table is `buckets` rows in one `_pb`
-    * partition — the rewrite is trivially bounded.
+    * output is ≤ groups × (buckets + 1) rows; nothing corpus-sized is
+    * ever re-read. Replay guard (the merge is additive), `_pb =
+    * hash(groupBy)` touched-partition rewrite and checkpoint release:
+    * [[runProfileSink]]. Ungrouped, the whole table is `buckets` rows in
+    * the one `_pb = 0` partition, found without a job.
     */
   def sinkCalibrationUpsertToTable(events: DataFrame, scoreCol: String,
                                    labelCol: String, name: String,
                                    checkpointDir: String, buckets: Int = 10,
                                    groupBy: Seq[String] = Nil,
-                                   profileBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                                   profileBuckets: Int = 16): StreamingQuery = {
     require(buckets > 0, s"sink_calibration needs buckets > 0, got $buckets")
-    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
     val reservedCal = Seq("bucket", "bucket_lo", "bucket_hi", "n", "score_avg",
       "pos_rate", "ece", "_ssumd", "_pos", "_pb")
     require(groupBy.intersect(reservedCal).isEmpty,
@@ -1277,87 +1116,53 @@ object EventStreams {
     require(groupBy.forall(g => !g.startsWith("_r_") && !g.startsWith("_o_")),
       s"sink_calibration group columns may not start with the internal " +
         s"rename prefixes _r_/_o_: $groupBy — rename first")
-    val session = events.sparkSession
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val _ci = if (batch.isEmpty) None
-                  else checkpointGuard(spark, name, checkpointDir, batchId)
-        if (_ci.isDefined) {
-          val s = col(scoreCol).cast("double")
-          val l = col(labelCol).cast("double")
-          val ok = s.isNotNull && !isnan(s) && s >= lit(0.0) && s <= lit(1.0) &&
-            l.isNotNull && !isnan(l)
-          val b = least(floor(s * lit(buckets.toDouble)).cast("long"),
-            lit((buckets - 1).toLong))
-          // null-bucket rows track groups whose batch rows are ALL invalid
-          // (the batch face's group-discovery-in-one-pass shape)
-          val bc = batch
-            .groupBy((groupBy.map(col) :+ when(ok, b).as("bucket")): _*)
-            .agg(count(when(ok, lit(1))).as("n"),
-              Exact.sum8Decimal(when(ok, s)).as("_ssumd"),
-              sum(when(ok && l =!= lit(0.0), 1L).otherwise(0L)).as("_pos"))
-          val newAcc = bc.where(col("bucket").isNotNull)
-          val newGroups =
-            if (groupBy.isEmpty) None
-            else Some(bc.select(groupBy.map(col): _*).distinct())
-          if (!spark.catalog.tableExists(name)) {
-            closeCalibration(newAcc, newGroups, groupBy, buckets, profileBuckets)
-              .write.partitionBy("_pb").format("parquet").saveAsTable(name)
-          } else {
-            // buckets this batch touches: bounded driver read used to
-            // partition-prune the old-side scan (the profile-sink pattern)
-            val touched =
-              if (groupBy.isEmpty) Seq(0)
-              else bc.select(pmod(hash(groupBy.map(col): _*), lit(profileBuckets))
-                .as("_pb")).distinct().collect().map(_.getInt(0)).toSeq
-            // NULL-SAFE accumulator merge on (groups, bucket): a null
-            // group value must match its stored row, not fork a
-            // duplicate; keys coalesce across the full outer (both null
-            // for a null group — correct either way)
-            val mKeys = groupBy :+ "bucket"
-            val old = spark.table(name).where(col("_pb").isInCollection(touched))
-              .select((mKeys.map(k => col(k).as(s"_o_$k")) ++ Seq(
-                col("n").as("_n_old"), col("_ssumd").as("_sd_old"),
-                col("_pos").as("_p_old"))): _*)
-            val mCond = mKeys.map(k => col(k) <=> col(s"_o_$k")).reduce(_ && _)
-            val merged = newAcc
-              .select((mKeys.map(col) ++ Seq(
-                col("n").as("_n_new"), col("_ssumd").as("_sd_new"),
-                col("_pos").as("_p_new"))): _*)
-              .join(old, mCond, "full_outer")
-              .select((mKeys.map(k => coalesce(col(k), col(s"_o_$k")).as(k)) ++ Seq(
-                (coalesce(col("_n_new"), lit(0L)) +
-                  coalesce(col("_n_old"), lit(0L))).as("n"),
-                Exact.add8(col("_sd_new"), col("_sd_old")).as("_ssumd"),
-                (coalesce(col("_p_new"), lit(0L)) +
-                  coalesce(col("_p_old"), lit(0L))).as("_pos"))): _*)
-              // drop the stored spine padding (re-derived by the closing —
-              // keeping it would be harmless but re-pads idempotently)
-              .where(col("n") > 0)
-            // group set BEFORE the padding filter: an all-invalid group
-            // exists only as padding rows (or a batch null-bucket row) and
-            // must stay in the spine
-            val groups =
-              if (groupBy.isEmpty) None
-              else Some(newGroups.get.union(
-                old.select(groupBy.map(k => col(s"_o_$k").as(k)): _*)))
-            val out = closeCalibration(merged, groups, groupBy, buckets,
-              profileBuckets).localCheckpoint()
-            dynamicOverwrite(spark, out, name)
-            out.unpersist()
-          }
-          markBatchApplied(spark, name, _ci.get, batchId)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // guarded: an all-empty stream never created the table
-    if (session.catalog.tableExists(name)) session.catalog.refreshTable(name)
-    q
+    val s = col(scoreCol).cast("double")
+    val l = col(labelCol).cast("double")
+    val ok = s.isNotNull && !isnan(s) && s >= lit(0.0) && s <= lit(1.0) &&
+      l.isNotNull && !isnan(l)
+    val b = least(floor(s * lit(buckets.toDouble)).cast("long"),
+      lit((buckets - 1).toLong))
+    def groupsOf(bc: DataFrame) =
+      if (groupBy.isEmpty) None else Some(bc.select(groupBy.map(col): _*).distinct())
+    // NULL-SAFE accumulator merge on (groups, bucket): a null group value
+    // must match its stored row, not fork a duplicate; keys coalesce
+    // across the full outer (both null for a null group — correct either way)
+    val mKeys = groupBy :+ "bucket"
+    runProfileSink(events, name, checkpointDir, profileBuckets, groupBy.map(col))(
+      // null-bucket rows track groups whose batch rows are ALL invalid
+      // (the batch face's group-discovery-in-one-pass shape)
+      aggregate = _.groupBy((groupBy.map(col) :+ when(ok, b).as("bucket")): _*)
+        .agg(count(when(ok, lit(1))).as("n"),
+          Exact.sum8Decimal(when(ok, s)).as("_ssumd"),
+          sum(when(ok && l =!= lit(0.0), 1L).otherwise(0L)).as("_pos")),
+      close = bc => closeCalibration(bc.where(col("bucket").isNotNull), groupsOf(bc),
+        groupBy, buckets),
+      merge = { (bc, stored) =>
+        val old = stored.select((mKeys.map(k => col(k).as(s"_o_$k")) ++ Seq(
+          col("n").as("_n_old"), col("_ssumd").as("_sd_old"),
+          col("_pos").as("_p_old"))): _*)
+        val mCond = mKeys.map(k => col(k) <=> col(s"_o_$k")).reduce(_ && _)
+        val merged = bc.where(col("bucket").isNotNull)
+          .select((mKeys.map(col) ++ Seq(
+            col("n").as("_n_new"), col("_ssumd").as("_sd_new"),
+            col("_pos").as("_p_new"))): _*)
+          .join(old, mCond, "full_outer")
+          .select((mKeys.map(k => coalesce(col(k), col(s"_o_$k")).as(k)) ++ Seq(
+            (coalesce(col("_n_new"), lit(0L)) +
+              coalesce(col("_n_old"), lit(0L))).as("n"),
+            Exact.add8(col("_sd_new"), col("_sd_old")).as("_ssumd"),
+            (coalesce(col("_p_new"), lit(0L)) +
+              coalesce(col("_p_old"), lit(0L))).as("_pos"))): _*)
+          // drop the stored spine padding (re-derived by the closing —
+          // keeping it would be harmless but re-pads idempotently)
+          .where(col("n") > 0)
+        // group set BEFORE the padding filter: an all-invalid group
+        // exists only as padding rows (or a batch null-bucket row) and
+        // must stay in the spine
+        val groups = groupsOf(bc).map(_.union(
+          old.select(groupBy.map(k => col(s"_o_$k").as(k)): _*)))
+        closeCalibration(merged, groups, groupBy, buckets)
+      })
   }
 
   // ---- bounded incremental report closing (round-13 verdict ask #6) -------
@@ -1375,17 +1180,6 @@ object EventStreams {
   private[graft] def journalName(activityTable: String): String =
     s"${activityTable}_journal"
 
-  /** foreachBatch body of the journaled activity sinks: (1) append the
-    * batch's distinct (groups, user, _ub) keys to the journal FIRST — a
-    * crash between the two writes then re-derives an unchanged user
-    * (idempotent) instead of missing a changed one on redelivery; (2)
-    * upsert the batch into the `_ub`-partitioned activity table,
-    * rewriting ONLY the touched partitions (null-safe anti-join on the
-    * full activity keys, dynamic partition overwrite) — per batch the
-    * activity I/O is proportional to the touched buckets, never the
-    * stored history (the `Chain.saveUpsert` full-table swap this
-    * replaces for the incremental posture).
-    */
   /** Shared touched-partition replace for the `_ub`-partitioned per-user
     * tables (activity upserts AND chain/state merges — one body, so a
     * fix to the prune/anti-join/overwrite logic can't silently miss one
@@ -1411,12 +1205,23 @@ object EventStreams {
     spark.catalog.refreshTable(table)
   }
 
+  /** foreachBatch body of the journaled activity sinks: (1) append the
+    * batch's distinct (groups, user, _ub) keys to the journal FIRST — a
+    * crash between the two writes then re-derives an unchanged user
+    * (idempotent) instead of missing a changed one on redelivery; (2)
+    * upsert the batch into the `_ub`-partitioned activity table,
+    * rewriting ONLY the touched partitions (null-safe anti-join on the
+    * full activity keys, dynamic partition overwrite) — per batch the
+    * activity I/O is proportional to the touched buckets, never the
+    * stored history (the `Chain.saveUpsert` full-table swap this
+    * replaces for the incremental posture).
+    */
   private def journaledPartitionedUpsert(batch: DataFrame, name: String,
                                          keys: Seq[String],
                                          userKeys: Seq[String]): Unit = {
     val spark = batch.sparkSession
     batch.select((userKeys.map(col) :+ col("_ub")): _*).distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
+      .write.mode(SaveMode.Append).format("parquet")
       .saveAsTable(journalName(name))
     val buckets = batch.select(col("_ub")).distinct().collect()
       .map(_.getLong(0)).toIndexedSeq
@@ -1425,30 +1230,18 @@ object EventStreams {
 
   private def runJournaledSink(df: DataFrame, name: String, keys: Seq[String],
                                userKeys: Seq[String],
-                               checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                               checkpointDir: String): StreamingQuery = {
     // the internal rename prefixes must stay unambiguous — the same
     // contract requirePsiGroupNames gives the grouped PSI faces
     require(df.columns.forall(n => !n.startsWith("_nk_") && !n.startsWith("_j_")),
       s"journaled activity sinks reserve the _nk_/_j_ rename prefixes: " +
         s"${df.columns.filter(n => n.startsWith("_nk_") || n.startsWith("_j_")).mkString(", ")} — rename first")
-    val q = df.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // batch-side distinct (the sinkUpsertToTable dedupeBatch rationale:
-        // the upsert only dedupes new keys against STORED rows)
-        if (!batch.isEmpty)
-          journaledPartitionedUpsert(batch.distinct(), name, keys, userKeys)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val session = df.sparkSession
-    if (session.catalog.tableExists(name)) session.catalog.refreshTable(name)
-    if (session.catalog.tableExists(journalName(name)))
-      session.catalog.refreshTable(journalName(name))
-    q
+    drainForeachBatch(df, "update", checkpointDir, Seq(name, journalName(name))) { (batch, _) =>
+      // batch-side distinct (the sinkUpsertToTable dedupeBatch rationale:
+      // the upsert only dedupes new keys against STORED rows)
+      if (!batch.isEmpty)
+        journaledPartitionedUpsert(batch.distinct(), name, keys, userKeys)
+    }
   }
 
   /** The touched-user slice of a stored incremental activity table:
@@ -1646,7 +1439,7 @@ object EventStreams {
                                 userCol: String = "user_id",
                                 tsCol: String = "ts",
                                 groupBy: Seq[String] = Nil,
-                                incrementalBuckets: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+                                incrementalBuckets: Option[Int] = None): StreamingQuery = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct.size == steps.size, s"funnel steps repeat: $steps")
     val keyCols = groupBy ++ Seq(userCol, stepCol)
@@ -1693,7 +1486,7 @@ object EventStreams {
                                 userCol: String = "user_id",
                                 tsCol: String = "ts",
                                 groupBy: Seq[String] = Nil,
-                                incrementalBuckets: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+                                incrementalBuckets: Option[Int] = None): StreamingQuery = {
     val keyCols = groupBy :+ userCol
     require(keyCols.distinct.size == keyCols.size && !keyCols.contains("d"),
       s"sink_cohort_activity key columns must be distinct and none may be " +
@@ -1734,21 +1527,19 @@ object EventStreams {
     * buckets via the shared [[graft.ops.AggOps.agreementClose]] closing.
     * The table stores the batch face's full output (the count columns
     * ARE the accumulators — no hidden state columns needed). Rows with
-    * a null on either side are excluded, exactly like the batch face;
-    * additive, so a re-fired batch is skipped by [[batchAlreadyApplied]]
-    * (residual window documented there).
+    * a null on either side are excluded, exactly like the batch face.
     *
     * Scale shape: the per-batch aggregate is map-side combined and its
-    * output is ≤ groups × labels rows; the old side is partition-pruned
-    * to touched buckets; nothing corpus-sized is ever re-read.
+    * output is ≤ groups × labels rows; nothing corpus-sized is ever
+    * re-read. Replay guard (the merge is additive), `_pb = hash(groupBy)`
+    * touched-partition rewrite (ungrouped: the one `_pb = 0` partition,
+    * found without a job) and checkpoint release: [[runProfileSink]].
     */
   def sinkAgreementUpsertToTable(events: DataFrame, colA: String, colB: String,
                                  name: String, checkpointDir: String,
                                  groupBy: Seq[String] = Nil,
-                                 profileBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                                 profileBuckets: Int = 16): StreamingQuery = {
     require(colA != colB, "sink_agreement needs two distinct columns")
-    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
     val reservedAg = Seq("label", "n_a", "n_b", "n_agree", "po", "pe",
       "kappa", "n", "_pb") ++
       Seq("n_a", "n_b", "n_agree").flatMap(cn => Seq(s"${cn}_old", s"${cn}_new"))
@@ -1759,58 +1550,25 @@ object EventStreams {
       !g.startsWith("_o_")),
       s"sink_agreement group columns may not start with the internal " +
         s"rename prefixes _t_/_s_/_o_: $groupBy — rename first")
-    val session = events.sparkSession
     val accCols = Seq("n_a", "n_b", "n_agree")
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val _ci = if (batch.isEmpty) None
-                  else checkpointGuard(spark, name, checkpointDir, batchId)
-        if (_ci.isDefined) {
-          val bc = graft.ops.AggOps.agreementClassFrame(batch, colA, colB, groupBy)
-          val pbCol =
-            if (groupBy.isEmpty) lit(0)
-            else pmod(hash(groupBy.map(col): _*), lit(profileBuckets))
-          if (!spark.catalog.tableExists(name)) {
-            graft.ops.AggOps.agreementClose(bc, groupBy).withColumn("_pb", pbCol)
-              .write.partitionBy("_pb").format("parquet").saveAsTable(name)
-          } else {
-            // buckets this batch touches: bounded driver read used to
-            // partition-prune the old-side scan (the profile-sink pattern)
-            val touched =
-              if (groupBy.isEmpty) Seq(0)
-              else bc.select(pbCol.as("_pb")).distinct().collect()
-                .map(_.getInt(0)).toSeq
-            // NULL-SAFE accumulator merge on (groups, label): a null
-            // group value must match its stored row, not fork duplicates
-            val keys = groupBy :+ "label"
-            val old = spark.table(name).where(col("_pb").isInCollection(touched))
-              .select((keys.map(k => col(k).as(s"_o_$k")) ++
-                accCols.map(cn => col(cn).as(s"${cn}_old"))): _*)
-            val mCond = keys.map(k => col(k) <=> col(s"_o_$k")).reduce(_ && _)
-            val merged = bc
-              .select((keys.map(col) ++ accCols.map(cn => col(cn).as(s"${cn}_new"))): _*)
-              .join(old, mCond, "full_outer")
-              .select((keys.map(k => coalesce(col(k), col(s"_o_$k")).as(k)) ++
-                accCols.map(cn =>
-                  (coalesce(col(s"${cn}_new"), lit(0L)) +
-                    coalesce(col(s"${cn}_old"), lit(0L))).as(cn))): _*)
-            val out = graft.ops.AggOps.agreementClose(merged, groupBy)
-              .withColumn("_pb", pbCol).localCheckpoint()
-            dynamicOverwrite(spark, out, name)
-            out.unpersist()
-          }
-          markBatchApplied(spark, name, _ci.get, batchId)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // guarded: an all-empty stream never created the table
-    if (session.catalog.tableExists(name)) session.catalog.refreshTable(name)
-    q
+    // NULL-SAFE accumulator merge on (groups, label): a null group value
+    // must match its stored row, not fork duplicates
+    val keys = groupBy :+ "label"
+    runProfileSink(events, name, checkpointDir, profileBuckets, groupBy.map(col))(
+      aggregate = graft.ops.AggOps.agreementClassFrame(_, colA, colB, groupBy),
+      close = graft.ops.AggOps.agreementClose(_, groupBy),
+      merge = { (bc, stored) =>
+        val old = stored.select((keys.map(k => col(k).as(s"_o_$k")) ++
+          accCols.map(cn => col(cn).as(s"${cn}_old"))): _*)
+        val mCond = keys.map(k => col(k) <=> col(s"_o_$k")).reduce(_ && _)
+        graft.ops.AggOps.agreementClose(bc
+          .select((keys.map(col) ++ accCols.map(cn => col(cn).as(s"${cn}_new"))): _*)
+          .join(old, mCond, "full_outer")
+          .select((keys.map(k => coalesce(col(k), col(s"_o_$k")).as(k)) ++
+            accCols.map(cn =>
+              (coalesce(col(s"${cn}_new"), lit(0L)) +
+                coalesce(col(s"${cn}_old"), lit(0L))).as(cn))): _*), groupBy)
+      })
   }
 
   /** quantiles_by_window(events, value_col, width, probs, keys, slide):
@@ -1879,73 +1637,27 @@ object EventStreams {
     * (cumulative n per key ≤ k) readouts equal the order statistics of
     * everything ever ingested, independent of batch slicing
     * (replay-convergence is spec-gated on READOUTS — sketch bytes may
-    * differ across slicings even when exact). A KLL merge is ADDITIVE
-    * (re-merging a delivered batch inflates n), so a re-fired batch is
-    * skipped by the [[batchAlreadyApplied]] guard — residual window
-    * documented there.
-    *
-    * Scale: per batch — one map-side-combined aggregate over the batch,
-    * a key-equality merge join against ONLY the touched `_pb` hash
-    * buckets of the stored table (bounded driver read of ≤ profileBuckets
-    * ints prunes the old-side scan), dynamic-overwrite of touched
-    * partitions. Unbounded stream history, bounded per-batch I/O.
+    * differ across slicings even when exact). `kll_union`
+    * null-coalesces, so a key new to either side adopts the present
+    * sketch unchanged. A KLL merge is ADDITIVE (re-merging a delivered
+    * batch inflates n), so replay safety comes from the guard of
+    * [[runProfileSink]], which also owns the `_pb = hash(keys)`
+    * touched-partition rewrite and the checkpoint release. Unbounded
+    * stream history, bounded per-batch I/O.
     */
   def sinkQuantileSketchToTable(events: DataFrame, keys: Seq[String], valueCol: String,
                                 name: String, checkpointDir: String,
                                 k: Int = 200,
-                                profileBuckets: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
+                                profileBuckets: Int = 16): StreamingQuery = {
     require(keys.nonEmpty, "profile sink needs key columns")
-    require(profileBuckets > 0, s"profileBuckets must be positive, got $profileBuckets")
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val _ci = if (batch.isEmpty) None
-                  else checkpointGuard(spark, name, checkpointDir, batchId)
-        if (_ci.isDefined) {
-          val xr = { val x = col(valueCol).cast("double"); when(!isnan(x), x) }
-          val bs = batch.groupBy(keys.map(col): _*)
-            .agg(graft.functions.KllSketches.sketchAgg(xr, k).as("_sk"),
-              count(xr).as("_n"))
-            .withColumn("_pb", pmod(hash(keys.map(col): _*), lit(profileBuckets)))
-          if (!spark.catalog.tableExists(name)) {
-            bs.write.partitionBy("_pb")
-              .format("parquet").saveAsTable(name)
-          } else {
-            // buckets this batch touches: bounded driver read (≤ profileBuckets
-            // ints) used to partition-prune the old-side scan
-            val touched = bs.select("_pb").distinct().collect().map(_.getInt(0)).toSeq
-            val old = spark.table(name)
-              .where(col("_pb").isInCollection(touched))
-              .withColumnsRenamed(Map("_sk" -> "_sk_old", "_n" -> "_n_old"))
-            // _pb is a pure function of keys, so joining on keys :+ _pb is the
-            // same key-equality join but keeps the partition column aligned;
-            // kll_union null-coalesces, so a key new to either side adopts
-            // the present sketch unchanged
-            val merged = bs.withColumnsRenamed(Map("_sk" -> "_sk_new", "_n" -> "_n_new"))
-              .join(old, keys :+ "_pb", "full_outer")
-              .select((keys.map(col) :+
-                graft.functions.KllSketches
-                  .union(col("_sk_new"), col("_sk_old")).as("_sk") :+
-                (coalesce(col("_n_new"), lit(0L)) + coalesce(col("_n_old"), lit(0L))).as("_n") :+
-                col("_pb")): _*)
-            val out = merged.localCheckpoint()
-            dynamicOverwrite(spark, out, name)
-            out.unpersist()
-          }
-          markBatchApplied(spark, name, _ci.get, batchId)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // a stream with no non-empty batch never creates the table; the refresh
-    // must then be a no-op, not an AnalysisException
-    if (events.sparkSession.catalog.tableExists(name))
-      events.sparkSession.catalog.refreshTable(name)
-    q
+    val xr = { val x = col(valueCol).cast("double"); when(!isnan(x), x) }
+    runProfileSink(events, name, checkpointDir, profileBuckets, keys.map(col))(
+      aggregate = _.groupBy(keys.map(col): _*)
+        .agg(graft.functions.KllSketches.sketchAgg(xr, k).as("_sk"), count(xr).as("_n")),
+      close = identity,
+      merge = mergeSketches(_, _, keys)(
+        "_sk" -> graft.functions.KllSketches.union _,
+        "_n" -> ((nw, od) => coalesce(nw, lit(0L)) + coalesce(od, lit(0L)))))
   }
 
   /** heavy_hitters_by_window(events, value_col, width, k): per-tumbling-

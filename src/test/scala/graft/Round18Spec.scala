@@ -237,22 +237,32 @@ class Round18Spec extends AnyFunSuite {
     Chain.releaseCheckpoints(got)
   }
 
-  // ---- CheckpointProbe: bounded wait + pinned fallback path -----------
+  // ---- CheckpointProbe: every observed checkpoint carries its row ---------
 
-  test("CheckpointProbe: forced fallback recomputes identical metrics") {
-    val df = Seq(1L, 2L, 3L, 4L).toDF("v")
-    val (cp1, m1) = graft.core.CheckpointProbe(df,
-      "_s" -> sum(col("v").cast("decimal(38,0)")), "_n" -> count(lit(1)))
-    spark.conf.set("spark.graft.checkpointProbe.forceFallback", "true")
-    val (cp2, m2) =
-      try graft.core.CheckpointProbe(df,
-        "_s" -> sum(col("v").cast("decimal(38,0)")), "_n" -> count(lit(1)))
-      finally spark.conf.unset("spark.graft.checkpointProbe.forceFallback")
-    assert(m1(1) == 4L && m2(1) == 4L)
-    assert(m1(0).asInstanceOf[java.math.BigDecimal].compareTo(
-      m2(0).asInstanceOf[java.math.BigDecimal]) == 0)
-    assert(rows(cp1) == rows(cp2))
-    Chain.releaseCheckpoints(cp1); Chain.releaseCheckpoints(cp2)
+  test("CheckpointProbe: empty, zero-partition and AQE-emptied inputs read their observed row") {
+    val base = (1 to 100).map(k => (k % 7, k.toLong)).toDF("k", "v")
+    val dir = java.nio.file.Files.createTempDirectory("graft_probe_empty").toString
+    base.write.parquet(s"$dir/t")
+    val t = spark.read.parquet(s"$dir/t")
+    // opaque to the optimizer: only AQE learns at runtime that it is empty
+    val runtimeEmpty = t.where(col("v") * 0 === 1)
+    val inputs = Seq(
+      Seq.empty[(Int, Long)].toDF("k", "v"),
+      base.where(lit(false)),
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], base.schema),
+      t.join(runtimeEmpty.select(col("k").as("k2")), col("k") === col("k2")).select("k", "v"),
+      runtimeEmpty.groupBy("k").agg(sum("v").as("v")),
+      runtimeEmpty.repartition(3))
+    for (df <- inputs) {
+      // the None branch throws, so a value here is the observed row
+      val (cp, m) = graft.core.CheckpointProbe(df,
+        "_n" -> count(lit(1)), "_s" -> sum(col("v")))
+      assert(m == Seq(0L, null), s"${df.queryExecution.analyzed.nodeName}: $m")
+      Chain.releaseCheckpoints(cp)
+    }
+    val (cp, m) = graft.core.CheckpointProbe(base, "_n" -> count(lit(1)))
+    assert(m == Seq(100L))
+    Chain.releaseCheckpoints(cp)
   }
 
   // ---- PrefixScan: reliable-checkpoint opt-in --------------------------

@@ -132,6 +132,35 @@ class SessionSpec extends AnyFunSuite {
     assert(occurrences("def main(") == Seq("Bench.scala", "Verify.scala"))
   }
 
+  test("src/main launches foreachBatch once and spells the profile-sink protocol once") {
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    val defName = """\bdef\s+(\w+)""".r
+    val protocol = Seq("foreachBatch", "checkpointGuard", "dynamicOverwrite", "markBatchApplied")
+    // (helper, file, enclosing def) for every code use outside the helper's own def
+    val uses = mainSources.flatMap { f =>
+      import scala.jdk.CollectionConverters._
+      var enclosing = ""
+      java.nio.file.Files.readAllLines(f).asScala.toSeq.filterNot(isComment).flatMap { line =>
+        defName.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+        protocol.filter(h => line.contains(h) && !line.contains(s"def $h"))
+          .map(h => (h, f.getFileName.toString, enclosing))
+      }
+    }
+    // the launcher and the profile-sink body; besides them only the
+    // test-facing guard wrapper and the journaled tables' own
+    // touched-partition replace
+    assert(uses.sorted == Seq(
+      ("checkpointGuard", "EventStreams.scala", "batchAlreadyApplied"),
+      ("checkpointGuard", "EventStreams.scala", "runProfileSink"),
+      ("dynamicOverwrite", "EventStreams.scala", "replaceTouched"),
+      ("dynamicOverwrite", "EventStreams.scala", "runProfileSink"),
+      ("foreachBatch", "EventStreams.scala", "drainForeachBatch"),
+      ("markBatchApplied", "EventStreams.scala", "runProfileSink")), uses.mkString("\n"))
+  }
+
   test("src/main spells the exact-sum contracts only in graft.core.Exact") {
     // the decimal accumulator types and the fixed-point quantizer, as an
     // op would spell them by hand; SparkEntry's oracle SQL is the
