@@ -70,7 +70,7 @@ object Harness {
     // CacheManager entries — localCheckpoint blocks are plain RDD persists
     // and need the explicit sweep.
     spark.catalog.clearCache()
-    sc.getPersistentRDDs.values.foreach(_.unpersist(false))
+    sc.getPersistentRDDs.values.foreach(GraftBridge.unpersistQuietly)
     // the counts are complete once the bus has delivered the run's events;
     // a bus still busy after Spark's 10 s wait leaves them short instead
     // of failing the run

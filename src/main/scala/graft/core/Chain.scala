@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SaveMode, SparkSession}
 
 /** One applied transform: operator name, deterministic output alias, and a
   * Spark-SQL fragment with a `{{source}}` placeholder for the previous step
@@ -371,7 +371,7 @@ final class Chain private (
   def releaseCheckpoints(): Unit = {
     Chain.releaseCheckpoints(df)
     val live = spark.sparkContext.getPersistentRDDs
-    superseded.foreach(id => live.get(id).foreach(_.unpersist(false)))
+    superseded.foreach(id => live.get(id).foreach(GraftBridge.unpersistQuietly))
   }
 
   /** Plan-shape guardrails ([[ScaleLint]]): inspect the compiled plan for
@@ -402,7 +402,7 @@ object Chain {
   def releaseCheckpoints(df: DataFrame): Unit =
     checkpointedRdds(df).foreach { rdd =>
       if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        rdd.unpersist(false)
+        GraftBridge.unpersistQuietly(rdd)
     }
 
   /** The checkpointed RDDs a frame's plan reads, stopping at each one. */

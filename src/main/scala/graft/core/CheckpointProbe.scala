@@ -2,8 +2,12 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 
 /** Eager `localCheckpoint` with aggregate metrics computed BY the
   * materialization job itself (`Dataset.observe`) — the round-17
@@ -26,7 +30,11 @@ import org.apache.spark.sql.catalyst.plans.logical._
   *
   * [[stats]] is the home of the chain ops' eager scalar statistics (the
   * reference's compile-time `run_query` probes): it checkpoints only when
-  * that saves recomputing a shuffled upstream.
+  * that saves recomputing a shuffled upstream. [[scalars]] reads an eager
+  * ungrouped probe whose frame is not built on (describe's row, a fit's
+  * Gram pass, quantile picks, size guards, Bloom filters) in one job
+  * instead of an aggregate's two; SessionSpec's census keeps the ops'
+  * eager ungrouped reads here.
   */
 private[graft] object CheckpointProbe {
 
@@ -49,8 +57,8 @@ private[graft] object CheckpointProbe {
     *     write) skip the prefix. The blocks live until
     *     [[Chain.releaseCheckpoints]] or garbage collection.
     *   - a NARROW upstream (scans, projections, filters, an earlier
-    *     checkpoint) keeps the column-pruned aggregate and returns `df`
-    *     itself: checkpointing a bare scan would store every column to
+    *     checkpoint) returns `df` itself and reads the metrics with
+    *     [[scalars]]: checkpointing a bare scan would store every column to
     *     save one pruned read.
     * Both paths evaluate the same aggregate expressions over the same
     * rows, so the values — and the SQL faces built from them — agree.
@@ -59,27 +67,88 @@ private[graft] object CheckpointProbe {
     val o = new Observed(df, metrics)
     // the observed frame's optimized plan is the one the checkpoint then
     // executes: testing it, not `df`'s, optimizes the prefix once
-    if (shuffled(o.frame)) checkpoint(o) else (df, aggregate(df, o.named))
+    if (shuffled(o.frame)) checkpoint(o) else (df, drain(o))
   }
 
-  /** `df` with `metrics` attached as a uniquely named observation. */
+  /** Eager scalar statistics over `df` (metric values in `metrics` order)
+    * in ONE job and no checkpoint: the metrics are observed on the
+    * column-pruned frame, which is drained once. An ungrouped
+    * `df.agg(…).collect()` runs as two jobs under AQE (the partial
+    * aggregate's map stage, then the final one). Aggregate columns only,
+    * and none distinct (the `Dataset.observe` contract).
+    */
+  def scalars(df: DataFrame, metrics: (String, Column)*): Seq[Any] =
+    drain(new Observed(df, metrics))
+
+  /** `df` with `metrics` attached as a uniquely named observation. Only
+    * the metrics' aggregate leaves are observed; each metric closes on
+    * the driver from the leaves' merged values ([[values]]). Spark also
+    * evaluates an observation on every task's partial result (for its
+    * accumulator report) and logs any failure there: a closing such as
+    * a sample variance divides by n − 1, which a one-row partition makes
+    * zero under ANSI.
+    */
   private final class Observed(val df: DataFrame, metrics: Seq[(String, Column)]) {
     require(metrics.nonEmpty, "checkpoint_probe: at least one metric")
-    val named: Seq[Column] = metrics.map { case (n, c) => c.as(n) }
     val name = s"graft_checkpoint_probe_${ids.incrementAndGet()}"
-    val frame: DataFrame = df.observe(name, named.head, named.tail: _*)
+    /** The metrics as the analyzer resolves them over `df`. */
+    private val resolved: Seq[Expression] = {
+      val named = metrics.map { case (n, c) => c.as(n) }
+      df.agg(named.head, named.tail: _*).queryExecution.analyzed match {
+        case a: Aggregate => a.aggregateExpressions.map {
+          case Alias(e, _) => e
+          case e => e
+        }
+        case other => throw new IllegalStateException(s"checkpoint_probe: $other")
+      }
+    }
+    private val leaves: Seq[Expression] = resolved
+      .flatMap(_.collect { case a: AggregateExpression => a.canonicalized -> a })
+      .distinctBy(_._1).map(_._2)
+    require(leaves.nonEmpty, "checkpoint_probe: the metrics hold no aggregate")
+    private val slot: Map[Expression, Int] = leaves.map(_.canonicalized).zipWithIndex.toMap
+    val frame: DataFrame = {
+      val cols = leaves.zipWithIndex.map { case (a, i) => GraftBridge.column(a).as(s"_leaf$i") }
+      df.observe(name, cols.head, cols.tail: _*)
+    }
+
+    /** The metric values, in `metrics` order, from the observed row. */
+    def values(row: Row): Seq[Any] = resolved.map { m =>
+      val closed = m.transformUp {
+        case a: AggregateExpression => Literal.create(row.get(slot(a.canonicalized)), a.dataType)
+      }
+      CatalystTypeConverters.convertToScala(closed.eval(), closed.dataType)
+    }
   }
 
   private def checkpoint(o: Observed): (DataFrame, Seq[Any]) = {
     val cp = o.frame.localCheckpoint()
-    o.frame.queryExecution.observedMetrics.get(o.name) match {
-      case Some(row) => (cp, o.named.indices.map(row.get))
-      case None =>
-        Chain.releaseCheckpoints(cp)
-        throw new IllegalStateException(s"checkpoint_probe: observation ${o.name} " +
-          "left no observed row after its checkpoint job")
-    }
+    try (cp, observed(o, o.frame.queryExecution))
+    catch { case e: IllegalStateException => Chain.releaseCheckpoints(cp); throw e }
   }
+
+  /** Run `o`'s frame, projected to no columns, once; read the metrics
+    * from the query execution that ran. (A query execution that never
+    * ran reads a zero row, not no row: the metrics must come from the
+    * one that was executed.)
+    */
+  private def drain(o: Observed): Seq[Any] = {
+    // the empty projection above the observation prunes the scan below it
+    // to the columns the metrics read
+    val qe = o.frame.select().queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(o.name)) {
+      qe.executedPlan.execute().foreachPartition(rows => while (rows.hasNext) rows.next())
+    }
+    observed(o, qe)
+  }
+
+  private def observed(o: Observed, qe: QueryExecution): Seq[Any] =
+    qe.observedMetrics.get(o.name) match {
+      case Some(row) => o.values(row)
+      case None =>
+        throw new IllegalStateException(s"checkpoint_probe: observation ${o.name} " +
+          "left no observed row after its job")
+    }
 
   /** Does computing `df` plan a shuffle? True when its optimized plan
     * (subqueries included) holds a join, aggregate, window, global sort,
@@ -92,10 +161,4 @@ private[graft] object CheckpointProbe {
                 _: RebalancePartitions | _: Deduplicate | _: Distinct | _: Expand) => n
       case s: Sort if s.global => s
     }.nonEmpty
-
-  /** One aggregate job over `df`, values in `named` order. */
-  private def aggregate(df: DataFrame, named: Seq[Column]): Seq[Any] = {
-    val row = df.agg(named.head, named.tail: _*).collect()(0)
-    named.indices.map(row.get)
-  }
 }

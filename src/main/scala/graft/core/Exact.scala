@@ -1,35 +1,44 @@
 package graft.core
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType}
+import graft.functions.{Dec8Unscaled, ExactSum}
 
 /** Deterministic (partitioning-independent) floating-point aggregation.
   *
   * Plain `sum(double)` depends on accumulation order, which in a distributed
   * engine depends on partitioning — the same query can return different last
   * bits on different cluster layouts, which breaks result reproducibility and
-  * oracle/hash-based testing at any scale. Routing the sum through a wide
-  * decimal makes it exact and order-independent, at a modest CPU cost
-  * (decimal adds instead of double adds; still whole-stage codegen'd, still
-  * map-side partial-aggregated by Catalyst).
+  * oracle/hash-based testing at any scale. Summing the values as exact
+  * decimals makes the sum order-independent.
   *
   * This object is the ONE home of the two exact-sum contracts; ops call
   * its helpers and never spell the casts themselves (SessionSpec's source
   * census enforces it):
   *
-  *  - decimal sums: values accumulate in DECIMAL(38,4) ([[Wide]]), squares
-  *    and products in DECIMAL(38,8); a mean counts over the same cast its
-  *    sum accumulates, and moments gate n, Σx and Σx² on the x² cast;
+  *  - decimal sums: values accumulate as `SUM(CAST(x AS DECIMAL(38,4)))`
+  *    ([[Wide]]), squares and products at DECIMAL(38,8); a mean counts
+  *    over the same cast its sum accumulates, and moments gate n, Σx and
+  *    Σx² on the x² cast;
   *  - fixed point: a value quantizes to `floor(x·10^k + 0.5)` as BIGINT
-  *    ([[fpq]]) before any cross-row combination, and the integers sum in
+  *    ([[fpq]]) before any cross-row combination, and the integers sum as
   *    DECIMAL(38,0) ([[fixedSum]]).
   *
   * Each contract has a Column face (optionally windowed) and a SQL-text
   * face spelling the same arithmetic, so an op's plan and its rendered
-  * SQL agree by construction. Every sum of every face goes through the
-  * one accumulation, [[acc]] / [[accSql]].
+  * SQL agree by construction. Every sum of every Column face is ONE
+  * native aggregate, [[graft.functions.ExactSum]]: it takes each row's
+  * unscaled decimal as a long ([[graft.functions.Dec8Unscaled]], whose
+  * fast path skips the `Double.toString` + BigDecimal parse of the cast;
+  * its margin derivation covers every scale used here) and adds it into
+  * long limbs, codegen'd in hash aggregates, window frames and `observe`.
+  * Its value is the decimal SUM's, and its double result equals the
+  * decimal's `CAST(… AS DOUBLE)` bit for bit. The SQL faces spell the
+  * decimal SUM itself.
   */
 object Exact {
   /** Scale kept during exact accumulation. 38-4 = 34 integer digits of
@@ -48,9 +57,29 @@ object Exact {
 
   private def win(c: Column, over: Option[WindowSpec]): Column = over.fold(c)(c.over)
 
-  /** Σ of an already-decimal column, optionally windowed. */
-  private def acc(dec: Column, over: Option[WindowSpec]): Column =
-    win(org.apache.spark.sql.functions.sum(dec), over)
+  private def unscaled(x: Column, scale: Int): Column =
+    GraftBridge.column(Dec8Unscaled(GraftBridge.expression(x), scale))
+
+  /** Σ CAST(x AS DECIMAL(38,scale)) over the rows `mask` keeps,
+    * optionally windowed: the decimal, or with `asDouble` that decimal
+    * read as a double.
+    */
+  private def acc(x: Column, scale: Int, over: Option[WindowSpec], asDouble: Boolean,
+                  mask: Option[Column] = None): Column = {
+    val e = ExactSum(GraftBridge.expression(unscaled(x, scale)), GraftBridge.expression(x),
+      mask.fold[Expression](Literal.TrueLiteral)(GraftBridge.expression),
+      scale, asDouble, SQLConf.get.ansiEnabled)
+    win(GraftBridge.column(e.toAggregateExpression()), over)
+  }
+
+  /** `CAST(x AS DECIMAL(38,scale)) IS NOT NULL`, the cast evaluated only
+    * on the rows the long conversion leaves out of range.
+    */
+  private def converts(x: Column, scale: Int): Column = {
+    val u = unscaled(x, scale)
+    u.isNotNull && (u =!= lit(Dec8Unscaled.OutOfRange) ||
+      x.cast(DecimalType(38, scale)).isNotNull)
+  }
 
   private def winSql(agg: String, over: String): String =
     if (over.isEmpty) agg else s"$agg $over"
@@ -62,7 +91,7 @@ object Exact {
 
   /** Exact sum of a floating column (optionally windowed), as double. */
   def sum(c: Column, over: Option[WindowSpec] = None): Column =
-    acc(c.cast(Wide), over).cast("double")
+    acc(c, Scale, over, asDouble = true)
 
   /** Exact mean: exact sum / count. The count is over the SAME decimal
     * cast the sum accumulates — `cast(NaN as decimal)` is null, so a NaN
@@ -71,17 +100,19 @@ object Exact {
     * mean low. Division done once in double space.
     */
   def avg(c: Column, over: Option[WindowSpec] = None): Column =
-    sum(c, over) / win(count(c.cast(Wide)), over)
+    sum(c, over) / win(count(when(converts(c, Scale), lit(1))), over)
 
   /** Exact sum at the product scale DECIMAL(38,8) — squares, products and
-    * the plain sums that close together with them — returned as double.
+    * the plain sums that close together with them — over the rows `mask`
+    * keeps, returned as double.
     */
-  def sum8(c: Column): Column = sum8Decimal(c).cast("double")
+  def sum8(c: Column, mask: Option[Column] = None): Column =
+    acc(c, 8, None, asDouble = true, mask)
 
   /** [[sum8]] left as its raw DECIMAL(38,8) accumulator, for results that
     * merge exactly later ([[add8]]).
     */
-  def sum8Decimal(c: Column): Column = acc(c.cast(Wide8), None)
+  def sum8Decimal(c: Column): Column = acc(c, 8, None, asDouble = false)
 
   /** Exact merge of two [[sum8Decimal]] accumulators, a null side counting
     * as zero; the result keeps the accumulator type.
@@ -91,8 +122,8 @@ object Exact {
     (coalesce(a, zero) + coalesce(b, zero)).cast(Wide8)
   }
 
-  /** The gated moment sums (n, Σx, Σx²) — raw accumulators (n a LONG
-    * count, the sums decimals); [[Moments.toDouble]] casts all three.
+  /** The gated moment sums (n, Σx, Σx²): n a LONG count, the sums exact
+    * doubles; [[Moments.toDouble]] casts n for the closings.
     *
     * n, Sx and Sxx are ALL gated on the x² decimal cast: DECIMAL(38,8)
     * holds 30 integer digits, so for |x| ≳ 1e15 the x² cast leaves range
@@ -112,10 +143,11 @@ object Exact {
     */
   def moments(x: Column, mask: Option[Column] = None,
               over: Option[WindowSpec] = None): Moments = {
-    val xx = (x * x).cast(Wide8)
-    val kept = mask.fold(xx)(m => when(m, xx))
-    val gate = mask.fold(xx.isNotNull)(_ && xx.isNotNull)
-    Moments(win(count(kept), over), acc(when(gate, x).cast(Wide), over), acc(kept, over))
+    val xx = x * x
+    val gate = mask.fold(converts(xx, 8))(converts(xx, 8) && _)
+    Moments(win(count(when(gate, lit(1))), over),
+      acc(x, Scale, over, asDouble = true, Some(gate)),
+      acc(xx, 8, over, asDouble = true, mask))
   }
 
   /** (n, Σx, Σx²) and the sample statistics closed from them — all three
@@ -195,13 +227,13 @@ object Exact {
   def fromFixed(q: Column, digits: Int = 6): Column = q.cast("double") / lit(pow10(digits))
 
   /** Exact Σ of fixed-point integers, as its raw DECIMAL(38,0). */
-  def fixedSum(q: Column): Column = acc(q.cast(Fixed), None)
+  def fixedSum(q: Column): Column = acc(q, 0, None, asDouble = false)
 
   /** Mean of fixed-point integers read back as a double: the exact sum,
     * divided by `n`, then by the scale (in that order).
     */
   def fixedMean(q: Column, n: Column, digits: Int): Column =
-    fixedSum(q).cast("double") / n / lit(pow10(digits))
+    acc(q, 0, None, asDouble = true) / n / lit(pow10(digits))
 
   def fpqSql(x: String, digits: Int = 6): String =
     s"CAST(FLOOR($x * ${pow10Sql(digits)} + 0.5) AS BIGINT)"
@@ -216,101 +248,6 @@ object Exact {
 
   def fixedMeanSql(q: String, n: String, digits: Int): String =
     s"CAST(${fixedSumSql(q)} AS DOUBLE) / $n / ${pow10Sql(digits)}"
-
-  // ---- split-long product-scale sum -------------------------------------
-
-  /** Split-long exact DECIMAL(38,8) sum — the probe-gated fast
-    * accumulation for [[graft.ops.AggOps.corrMatrix]]'s moment sums.
-    * Value: IDENTICAL to [[sum8]] whenever [[splitSumSafe]] holds for a
-    * bound ≥ max |x| over the summed values and a count ≥ the number of
-    * summed rows. The per-row conversion is
-    * [[graft.functions.Dec8Unscaled]] — the unscaled long U of
-    * `CAST(x AS DECIMAL(38,8))` (same shortest-decimal HALF_UP rounding,
-    * exact BigDecimal fallback). U splits into hi = U >> 32 and
-    * lo = U & 0xFFFFFFFF (U = hi·2³² + lo exactly, lo non-negative), each
-    * summed as a plain LONG — codegen long adds into 8-byte
-    * hash-aggregate buffer slots instead of per-row BigDecimal adds into
-    * a 16-byte decimal slot — then recombined EXACTLY in decimal space:
-    * `Σhi · (2³²·10⁻⁸) + MakeDecimal(Σlo)`, a decimal(19,0)·decimal(10,8)
-    * product plus a decimal(20,8). Integer arithmetic throughout, so the
-    * partitioning-independence contract of the decimal path is preserved
-    * bit-for-bit, including the final decimal→double conversion (equal
-    * decimal values, same `toDouble`).
-    *
-    * The expression is TOTAL, so it may run before anything is proven
-    * about its input (the validate-after-the-pass route below):
-    *  - `Dec8Unscaled` drops a value with |x| ≥ its `MaxAbs` = 2⁶²·10⁻⁸
-    *    (or ±Inf, or NaN) to null instead of converting it, and never
-    *    throws;
-    *  - Σhi and Σlo are non-ANSI long sums ([[wrappingSum]]): an
-    *    overflow wraps instead of raising, and the value is then never
-    *    trusted.
-    * Neither can ever leave a wrong value that is then trusted: a dropped
-    * row has |x| ≥ 2⁶²·10⁻⁸ > 2⁶¹/1.01·10⁻⁸, the largest bound
-    * [[splitSumSafe]] admits, and a long sum can only overflow past the
-    * count and bound [[splitSumSafe]] admits — so whenever the check
-    * passes on the bound and count the SAME pass measured (max |x| over
-    * finite values, `count(1)`), no row was dropped and no sum
-    * overflowed, and the value equals [[sum8]]. That is the post-pass validation argument: a
-    * caller may compute these sums speculatively next to the range probe
-    * in ONE aggregate and check [[splitSumSafe]] afterwards; a sum whose
-    * check fails is discarded and recomputed on the decimal path.
-    * Measured (OPTIMIZATION_r18.md, sf0.1 lineitem, the 9 corr_matrix
-    * moment sums): 3.41 s → 1.73 s, aggregate rows bit-identical.
-    */
-  def splitDecimalSum8(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.MakeDecimal
-    val u = GraftBridge.column(graft.functions.Dec8Unscaled(GraftBridge.expression(c)))
-    val hi = shiftright(u, 32)
-    val lo = u.bitwiseAND(lit(0xFFFFFFFFL))
-    // precisions are deliberately TIGHT so the recombining Add's result
-    // type stays within 38 digits WITHOUT precision-loss scale reduction
-    // (a decimal(31,8) + decimal(38,8) add would plan as decimal(38,7)
-    // and ROUND the 8th decimal): Σhi < 2^61 fits decimal(19,0), the
-    // product is decimal(30,8), Σlo·10⁻⁸ < 2^62·10⁻⁸ fits decimal(20,8),
-    // and their sum plans as decimal(31,8) — exact, and bounded by the
-    // probe (|total| < 2^61·10⁻⁸ ≈ 2.3e10, 11 integer digits of 23).
-    (wrappingSum(hi).cast(DecimalType(19, 0)) *
-      lit(new java.math.BigDecimal("42.94967296")) +
-      GraftBridge.column(MakeDecimal(
-        GraftBridge.expression(wrappingSum(lo)), 20, 8,
-        nullOnOverflow = true)))
-      .cast("double")
-  }
-
-  /** Σ of a long column with non-ANSI (wrapping) adds, whatever the
-    * session's ANSI setting: it never raises, and callers trust it only
-    * where [[splitSumSafe]] proves it cannot overflow. (`try_sum` would
-    * also never raise, but its exception guard made the fused corr pass
-    * ~13% slower: 132 vs 116 ms median on sf0.01 lineitem, 4 cores.)
-    */
-  private def wrappingSum(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.{EvalMode, NumericEvalContext}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
-    GraftBridge.column(Sum(GraftBridge.expression(c), NumericEvalContext(EvalMode.LEGACY))
-      .toAggregateExpression())
-  }
-
-  /** Proof obligation for [[splitDecimalSum8]], from a measured bound ≥
-    * max |x| over the summed values and a row count `n` ≥ the number of
-    * summed rows: every per-row |unscaled| = |round(x·10⁸)| must fit a
-    * long with margin (also keeps `toUnscaledLong` exact), Σ lo must fit
-    * (n < 2³⁰ ⇒ Σ lo < 2⁶²), and Σ |hi| ≤ n·(maxU/2³² + 1) must stay
-    * under 2⁶¹ — long sums then cannot overflow. A NaN or infinite bound
-    * (unprobed column, Inf in the data) fails every comparison and keeps
-    * the decimal path; so does corpus-scale n — the gate is measured,
-    * never tuned to a cluster size. Monotone: a larger bound or count
-    * never passes where a smaller one fails.
-    */
-  def splitSumSafe(bound: Double, n: Long): Boolean = {
-    val maxU = bound * 1e8
-    val lim = (1L << 61).toDouble
-    n >= 0 && n < (1L << 30) && maxU >= 0.0 &&
-      maxU * 1.01 < lim &&
-      (n.toDouble + 1.0) * (maxU / 4294967296.0 + 2.0) < lim
-  }
 
   /** Exact, order-independent dot product of two numeric array columns.
     *

@@ -20,17 +20,6 @@ import org.apache.spark.sql.DataFrame
   * lexical-search and encode ops share one posture.)
   */
 private[graft] object SizeGate {
-  /** True when `df`'s optimized-plan statistics size is a KNOWN value at
-    * or under `maxBytes` — the scale gate for OPTIONAL probe passes
-    * (corr_matrix's range probe): a probe only pays off when the frame
-    * is small enough that what it proves can actually fire, and
-    * RDD-backed frames report the `defaultSizeInBytes` maximum so they
-    * correctly read as "not provably small". Plan statistics only — no
-    * job.
-    */
-  def statsUnderBytes(df: DataFrame, maxBytes: Long): Boolean =
-    maxBytes > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(maxBytes)
-
   def fitsBroadcast(sized: DataFrame, replication: Int): Boolean = {
     val spark = sized.sparkSession
     val thresh = org.apache.spark.sql.GraftBridge.autoBroadcastThreshold(spark)

@@ -353,7 +353,9 @@ final class DedupOps(private val c: Chain) extends AnyVal {
   def embeddingCosinePairs(idCol: String, vecCol: String, threshold: Double,
                            planes: Int = 1024, blocks: Int = 32,
                            maxRows: Long = 1000000L): Chain = {
-    val n = c.df.count() // declared size guard on the quadratic stage
+    // declared size guard on the quadratic stage
+    val n = graft.core.CheckpointProbe.scalars(c.df, "_n" -> count(lit(1))).head
+      .asInstanceOf[Long]
     require(n <= maxRows,
       s"embeddingCosinePairs is exact and Ω(n²): corpus has $n rows > maxRows=$maxRows; " +
         "use minhashLsh/simhashPairs for sub-quadratic near-dup mining or raise maxRows deliberately")
@@ -833,7 +835,8 @@ object DedupOps {
     */
   private[ext] def releaseRound(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.sql.GraftBridge.unpersistQuietly(lr.rdd)
       case _ => ()
     }
 

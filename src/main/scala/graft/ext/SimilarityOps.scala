@@ -41,16 +41,12 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     * [[dequantizeEmbeddings]]) do render.
     */
   def cosineTopK(queries: DataFrame, idCol: String, vecCol: String, k: Int): Chain = {
-    // the norm stays in the Project below the nested-loop join (the
-    // filter reads it), so it is computed once per vector, not per pair;
-    // a repartition barrier here would only add an exchange whose
-    // partitioning the broadcast and the join discard
-    def withNorm(df: DataFrame, idAs: String, vAs: String, nAs: String) =
-      df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
-        .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
-        .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
-    val corpus = withNorm(c.df, "neighbor_id", "_vc", "_nc")
-    val qs = withNorm(queries, "query_id", "_vq", "_nq")
+    // the norm is computed below the nested-loop join, once per vector,
+    // not per pair ([[SimilarityOps.withNorm]]); a repartition barrier
+    // here would only add an exchange whose partitioning the broadcast
+    // and the join discard
+    val corpus = SimilarityOps.withNorm(c.df, idCol, vecCol, "neighbor_id", "_vc", "_nc")
+    val qs = SimilarityOps.withNorm(queries, idCol, vecCol, "query_id", "_vq", "_nq")
     val cos = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
     val scored = corpus.crossJoin(broadcast(qs))
       .where(col("query_id") =!= col("neighbor_id"))
@@ -88,12 +84,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     fnThreshold.foreach(t => require(!t.isNaN,
       "hard_negatives: fnThreshold must not be NaN (no cosine compares true against NaN)"))
     // no barrier: the norm stays below the join, as in [[cosineTopK]]
-    def withNorm(df: DataFrame, idAs: String, vAs: String, nAs: String) =
-      df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
-        .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
-        .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
-    val corpus = withNorm(c.df, "neighbor_id", "_vc", "_nc")
-    val qs = withNorm(queries, "query_id", "_vq", "_nq")
+    val corpus = SimilarityOps.withNorm(c.df, idCol, vecCol, "neighbor_id", "_vc", "_nc")
+    val qs = SimilarityOps.withNorm(queries, idCol, vecCol, "query_id", "_vq", "_nq")
     val pos = positives
       .select(col(posQueryCol).as("query_id"), col(posDocCol).as("neighbor_id"))
     val cos = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
@@ -1675,6 +1667,21 @@ object SimilarityOps {
     * untouched (a corrupted embedding is unknowable, not a duplicate);
     * null vectors fail the null-propagated predicate and drop too.
     */
+  /** `(idAs, vAs, nAs)`: each row's id, vector and norm
+    * sqrt(Exact.dot(v, v)), keeping only [[usableVec]] rows (a NaN cosine
+    * would rank FIRST). The norm is GENERATED (a one-element explode), not
+    * projected: the optimizer pushes a filter through a projection by
+    * copying the projected expression into it — the usability test read
+    * the norm twice and the projection once, three dot products per
+    * vector — while a filter on a generated column stays above its
+    * Generate, so each vector's dot product runs once.
+    */
+  private[ext] def withNorm(df: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String,
+                            idAs: String, vAs: String, nAs: String): org.apache.spark.sql.DataFrame =
+    df.select(col(idCol).as(idAs), col(vecCol).as(vAs),
+        explode(array(sqrt(Exact.dot(col(vecCol), col(vecCol))))).as(nAs))
+      .where(usableVec(col(vAs), col(nAs)))
+
   private[ext] def usableVec(v: org.apache.spark.sql.Column,
                              n: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     !isnan(n) && (n > lit(0.0)) &&

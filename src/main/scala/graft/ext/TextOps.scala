@@ -625,7 +625,8 @@ final class TextAnalysisOps(private val c: Chain) extends AnyVal {
         .toAggregateExpression())
     // one small binary to the driver — a sketch of the eval set, not data;
     // embedded as a literal exactly like Spark's own injected runtime filters
-    val bloomBytes = evalGrams.agg(bloomAgg.as("_bf")).head().getAs[Array[Byte]]("_bf")
+    val bloomBytes = graft.core.CheckpointProbe.scalars(evalGrams, "_bf" -> bloomAgg).head
+      .asInstanceOf[Array[Byte]]
     val df2 =
       if (bloomBytes == null) // empty eval set: nothing can be contaminated
         c.df.withColumn(flagCol, lit(false))
@@ -825,9 +826,14 @@ final class TextAnalysisOps(private val c: Chain) extends AnyVal {
         // the whole vocabulary. An unsized/huge query batch keeps the
         // full-tfidf join plan (pruning via a SHUFFLED semi-join would
         // move the raw token stream, more bytes than the aggregated tf).
+        // The probe list reads qt's `_qtf` (every (query, term) group
+        // counts >= 1, so the filter keeps every term): that keeps qt's
+        // aggregate whole under column pruning, so both consumers plan
+        // the same tokenizing exchange and the query batch is tokenized
+        // once instead of once per consumer.
         if (SimilarityOps.fitsBroadcast(queries.df, 1))
           tfidfScored(idCol, textCol, idf,
-            pruneTerms = Some(qt.select(col("term")).distinct()))
+            pruneTerms = Some(qt.where(col("_qtf") > 0L).select(col("term")).distinct()))
             .join(qt, Seq("term"))
             .groupBy(col("query_id"), col("doc_id"))
             .agg(graft.core.Exact.sum(col("_qtf") * col("tfidf")).as("score"))

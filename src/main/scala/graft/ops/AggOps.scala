@@ -481,12 +481,13 @@ final class AggOps(private val c: Chain) extends AnyVal {
       val cc = col(f.name)
       val numeric = f.dataType.isInstanceOf[NumericType]
       Seq(
-        (if (numeric) Exact.avg(cc.cast("double")) else lit(null).cast("double")).as(s"mean_${f.name}"),
-        (if (numeric) Exact.stddev(cc.cast("double")) else lit(null).cast("double")).as(s"std_${f.name}"),
-        min(cc).cast("string").as(s"min_${f.name}"),
-        max(cc).cast("string").as(s"max_${f.name}"))
-    } :+ count(lit(1)).as("_total")
-    val stats = c.df.agg(statCols.head, statCols.tail: _*).collect()(0)
+        s"mean_${f.name}" -> (if (numeric) Exact.avg(cc.cast("double")) else lit(null).cast("double")),
+        s"std_${f.name}" -> (if (numeric) Exact.stddev(cc.cast("double")) else lit(null).cast("double")),
+        s"min_${f.name}" -> min(cc).cast("string"),
+        s"max_${f.name}" -> max(cc).cast("string"))
+    } :+ ("_total" -> count(lit(1)))
+    val stats = statCols.map(_._1)
+      .zip(graft.core.CheckpointProbe.scalars(c.df, statCols: _*)).toMap
     // row/null/unique counts + deterministic mode (ties → smallest value)
     // in ONE job: stack all columns to (feature, value) rows, count, then
     // rank-and-aggregate per feature — column count never multiplies scans
@@ -507,17 +508,13 @@ final class AggOps(private val c: Chain) extends AnyVal {
         max(when(col("_rn") === 1, col("v"))).as("mode"))
       .collect().map(r =>
         r.getString(0) -> (r.getLong(1), r.getLong(2), r.getString(3))).toMap
-    val total = stats.getAs[Long]("_total")
+    val total = stats("_total").asInstanceOf[Long]
     val rows = fields.map { f =>
       val (nulls, uniq, mode) = profile(f.name)
       Row(f.name, f.dataType.simpleString, total,
         nulls, uniq, mode,
-        if (stats.isNullAt(stats.fieldIndex(s"mean_${f.name}"))) null
-        else stats.getAs[Double](s"mean_${f.name}"),
-        if (stats.isNullAt(stats.fieldIndex(s"std_${f.name}"))) null
-        else stats.getAs[Double](s"std_${f.name}"),
-        stats.getAs[String](s"min_${f.name}"),
-        stats.getAs[String](s"max_${f.name}"))
+        stats(s"mean_${f.name}"), stats(s"std_${f.name}"),
+        stats(s"min_${f.name}"), stats(s"max_${f.name}"))
     }
     val schema = StructType(Seq(
       StructField("feature", StringType), StructField("dtype", StringType),
@@ -635,20 +632,20 @@ final class AggOps(private val c: Chain) extends AnyVal {
       val w = greatest(mu * (lit(1.0) - mu), lit(1e-10))
       val z = eta + (yc - mu) / w
       val gramAggs = for { i <- 0 until d; j <- i until d }
-        yield Exact.sum8(w * feats(i) * feats(j)).as(s"_g_${i}_$j")
-      val gradAggs = (0 until d).map(i => Exact.sum8(w * feats(i) * z).as(s"_b_$i"))
-      val aggsAll = (gramAggs ++ gradAggs).toSeq
-      val rrow = base.agg(aggsAll.head, aggsAll.tail: _*).head()
-      require(!rrow.isNullAt(0),
+        yield s"_g_${i}_$j" -> Exact.sum8(w * feats(i) * feats(j))
+      val gradAggs = (0 until d).map(i => s"_b_$i" -> Exact.sum8(w * feats(i) * z))
+      val rrow = graft.core.CheckpointProbe.scalars(base, (gramAggs ++ gradAggs): _*)
+        .map(_.asInstanceOf[java.lang.Double])
+      require(rrow.head != null,
         "logistic_regression: no rows with non-null label and features")
       val a = Array.ofDim[Double](d, d + 1)
       var k = 0
       for { i <- 0 until d; j <- i until d } {
-        val v = rrow.getDouble(k); a(i)(j) = v; a(j)(i) = v; k += 1
+        val v = rrow(k).doubleValue; a(i)(j) = v; a(j)(i) = v; k += 1
       }
       var i = 0
       while (i < d) {
-        a(i)(d) = rrow.getDouble(k); k += 1; a(i)(i) += ridge; i += 1
+        a(i)(d) = rrow(k).doubleValue; k += 1; a(i)(i) += ridge; i += 1
       }
       beta = AggFns.solveLinearSystem(a)
       it += 1
@@ -993,64 +990,24 @@ final class AggOps(private val c: Chain) extends AnyVal {
     *
     *  - `"pairwise"` (default — the pandas/sklearn `corr()` convention):
     *    a row is excluded per PAIR when either side is null/NaN, so each
-    *    pair's n is its own. Costs 5 exact-decimal sums + 1 count per
-    *    pair (5·k(k−1)/2 total).
+    *    pair's n is its own: 5 exact sums + 1 count per pair
+    *    (5·k(k−1)/2 sums in total).
     *  - `"listwise"`: a row is excluded from EVERY pair when ANY screened
     *    column is null/NaN (the post-`dropna` convention) — one shared n,
     *    and the per-column Σx/Σx² are shared across pairs: 2k + k(k−1)/2
-    *    decimal sums, ~2.5× fewer at k = 5. On a frame with no missing
-    *    values the two regimes are identical — the exact-decimal
-    *    accumulation is the dominant cost (measured ~0.3 s per sum per
-    *    600 k rows — the determinism tax, see [[graft.core.Exact]]).
+    *    sums, ~2.5× fewer at k = 5. On a frame with no missing values the
+    *    two regimes give identical values.
     *
-    * Pairwise mode AUTO-DEGRADES to the shared-moment arithmetic when a
-    * completeness probe finds zero missing values in every screened
-    * column — same result bit-for-bit; the declared semantics and the
-    * rendered SQL face stay pairwise.
-    *
-    * Scale, by branch. The range probe — row count, per-column finite
-    * counts and per-column max |x|, gated on plan-statistics size via
-    * `spark.graft.corr.probeMaxBytes` (default 32g; <= 0 disables) — lets
-    * a moment sum run as a split-long accumulation
-    * ([[graft.core.Exact.splitDecimalSum8]], bit-identical values, ~2x
-    * the decimal moment pass) when the measured bounds prove it exact.
-    *
-    *  - UNGROUPED, gate open (pairwise and declared listwise): ONE
-    *    aggregate at chain construction computes the probe AND every
-    *    shared moment as a split-long sum, speculatively; the sums are
-    *    checked after the pass with [[graft.core.Exact.splitSumSafe]] on
-    *    the bounds and count that same pass measured (the post-pass
-    *    argument is in [[graft.core.Exact.splitDecimalSum8]]). When every
-    *    check passes — and, for pairwise, every column is complete — the
-    *    closing runs over that one bounded driver-local row: one scan,
-    *    one aggregate action, and the write reads no corpus. Otherwise
-    *    the row is discarded and a second, lazy pass runs at the action
-    *    with the per-sum choice (split where proven, decimal elsewhere;
-    *    per-pair sums when pairwise input is incomplete): two corpus
-    *    scans, the first of which paid the split sums for nothing — the
-    *    cost of an input with a value past ~2.3e10, an Inf, a NaN or a
-    *    null in a pairwise column. Nothing observable before the pass
-    *    tells such an input apart, so it pays more than a cheap probe
-    *    followed by the same second pass would: measured on lineitem's
-    *    three corr columns (4 cores, build plus collect, median), with 1%
-    *    nulls in one column pairwise went 0.33 → 0.37 s at sf0.01 and
-    *    0.67 → 0.93 s at sf0.1 against the probe-first route, and values
-    *    near 1e12 went 0.38 → 0.45 s (pairwise) and 0.34 → 0.42 s
-    *    (listwise) at sf0.01 and stayed within noise at sf0.1, where the
-    *    decimal second pass dominates.
-    *  - UNGROUPED, gate closed (corpus-scale or unsized frames, or a
-    *    plan-statistics row count of 2³⁰ or more, where the check could
-    *    never pass): declared-listwise is one
-    *    lazy decimal pass; pairwise is one eager decimal pass carrying the
-    *    completeness counts, plus the per-pair pass when incomplete.
-    *  - GROUPED: the probe is its own cheap scan first (a global probe
-    *    cannot fold into a grouped pass without grouping sets), then one
-    *    aggregation pass with the per-sum choice.
-    *
-    * The long-form explode always runs on the tiny aggregated frame.
-    * Decimal accumulation makes every sum partitioning-independent; the
-    * closing doubles are IEEE-exact across engines (the linear_regression
-    * regime).
+    * Scale: ONE lazy aggregate, grouped or not, in the declared mode; the
+    * chain build runs no job. Every moment is an exact
+    * `SUM(CAST(… AS DECIMAL(38,8)))` on long accumulators
+    * ([[graft.core.Exact.sum8]]), so no bound has to be proven before the
+    * pass. Each column's conversion (x, x², x·y) is computed once per row
+    * and shared by every pair that reads it — the pair masks apply after
+    * the conversion. The long-form explode runs on the tiny aggregated
+    * frame. Exact sums make every value partitioning-independent; the
+    * closing doubles are IEEE-exact across engines (the
+    * linear_regression regime).
     */
   def corrMatrix(cols: Seq[String], groupBy: Seq[String] = Nil,
                  deletion: String = "pairwise"): Chain = {
@@ -1063,126 +1020,26 @@ final class AggOps(private val c: Chain) extends AnyVal {
     } yield (i, j)
     def finite(cn: String) =
       col(cn).isNotNull && !isnan(col(cn).cast("double"))
-    val declaredListwise = deletion == "listwise"
-    val allOk = cols.map(finite).reduce(_ && _)
-    // Every moment sum accumulates in DECIMAL(38,8) — exact and
-    // partitioning-independent, but each row pays a BigDecimal add into a
-    // 16-byte aggregate-buffer slot per sum. A sum whose bounds pass
-    // [[graft.core.Exact.splitSumSafe]] runs the split-long formulation
-    // instead (OPTIMIZATION_r18.md, sf0.1: 3.41 -> 1.73 s, rows
-    // identical). The probed maxima bound every moment: |x_i| <= m_i over
-    // the FINITE values of column i, and each branch's per-row masks
-    // (allOk / both) only keep rows where the factors are finite, so
-    // |x_i·x_j| <= m_i·m_j on every summed row. Past the statistics gate
-    // (including RDD-backed frames, whose statistics are the
-    // defaultSizeInBytes maximum) no probe runs: at corpus scale the
-    // check could never pass. Nor where the plan statistics know a row
-    // count of 2³⁰ or more, which fails every check whatever the values.
-    val statsOk = graft.core.SizeGate.statsUnderBytes(c.df,
-      c.df.sparkSession.conf
-        .get("spark.graft.corr.probeMaxBytes", (32L << 30).toString).toLong) &&
-      c.df.queryExecution.optimizedPlan.stats.rowCount.forall(_ < (1L << 30))
-    // (total rows, complete, per-column max |x|) — a plain tuple: AnyVal
-    // ops classes cannot nest case classes
-    type RangeProbe = (Long, Boolean, Array[Double])
-    val probeAggs: Seq[Column] = (count(lit(1)).as("_t") +:
-      cols.indices.map(i => count(when(finite(cols(i)), lit(1))).as(s"_c_$i"))) ++
-      cols.indices.map(i =>
-        max(abs(when(finite(cols(i)), col(cols(i)).cast("double")))).as(s"_m_$i"))
-    def readProbe(r: Row): RangeProbe = {
-      val total = r.getLong(0)
-      val ms = cols.indices.map { i =>
-        val o = 1 + cols.size + i
-        if (r.isNullAt(o)) 0.0 else r.getDouble(o)
-      }.toArray
-      (total, cols.indices.forall(i => r.getLong(i + 1) == total), ms)
-    }
-    // which form each sum takes, from its bound on |summed value|
-    type SumChoice = Double => Boolean
-    val decimalOnly: SumChoice = _ => false
-    def provenBy(p: RangeProbe): SumChoice = graft.core.Exact.splitSumSafe(_, p._1)
-    def wide(split: SumChoice)(cc: Column, bound: Double): Column =
-      if (split(bound)) Exact.splitDecimalSum8(cc) else Exact.sum8(cc)
-    // the shared moments as (name, summed value, bound on |value|); an
-    // unprobed bound is NaN, which no check passes
-    val xs = cols.map(cn => when(allOk, col(cn).cast("double")))
-    def listwiseSums(ms: Int => Double): Seq[(String, Column, Double)] =
-      cols.indices.flatMap(i =>
-        Seq((s"_s_$i", xs(i), ms(i)), (s"_ss_$i", xs(i) * xs(i), ms(i) * ms(i)))) ++
-        pairs.map { case (i, j) => (s"_sp_${i}_$j", xs(i) * xs(j), ms(i) * ms(j)) }
-    def listwiseAggs(split: SumChoice, ms: Int => Double): Seq[Column] =
-      count(xs.head).as("_n") +:
-        listwiseSums(ms).map { case (n, v, b) => wide(split)(v, b).as(n) }
-    def pairwiseAggs(pp: Option[RangeProbe]): Seq[Column] = pairs.flatMap { case (i, j) =>
-      val (a, b) = (cols(i), cols(j))
-      val both = finite(a) && finite(b)
-      val xc = when(both, col(a).cast("double"))
-      val yc = when(both, col(b).cast("double"))
-      def m(k: Int) = pp.map(_._3(k)).getOrElse(Double.NaN)
-      val w = wide(pp.fold(decimalOnly)(provenBy)) _
-      val p = s"${i}_$j"
-      Seq(count(xc).as(s"_n_$p"), w(xc, m(i)).as(s"_sx_$p"), w(yc, m(j)).as(s"_sy_$p"),
-        w(xc * yc, m(i) * m(j)).as(s"_sxy_$p"), w(xc * xc, m(i) * m(i)).as(s"_sxx_$p"),
-        w(yc * yc, m(j) * m(j)).as(s"_syy_$p"))
-    }
-    // pairwise deletion differs from listwise ONLY on rows with missing
-    // values; when every screened column is complete the two regimes are
-    // IDENTICAL (docstring above) and listwise's shared per-column moments
-    // cost ~2.5× fewer exact sums. Declared semantics (and the rendered
-    // face) stay pairwise in every branch.
-    // names/schema of the shared-moment row (the ungrouped faces build a
-    // driver-local one-row frame from it)
-    def momentFrame(rowAll: Row, off: Int): DataFrame = {
-      val names: Seq[String] = "_n" +: listwiseSums(_ => Double.NaN).map(_._1)
-      val schema = StructType(StructField("_n", LongType, nullable = false) +:
-        names.tail.map(StructField(_, DoubleType, nullable = true)))
-      val vals = Row.fromSeq(names.indices.map(k => rowAll.get(off + k)))
-      c.df.sparkSession.createDataFrame(
-        java.util.Collections.singletonList(vals), schema)
-    }
-    def aggregate(aggs: Seq[Column]): DataFrame =
+    val listwise = deletion == "listwise"
+    val xs = cols.map(cn => col(cn).cast("double"))
+    def sum(v: Column, rows: Column) = Exact.sum8(v, Some(rows))
+    val aggs: Seq[Column] =
+      if (listwise) {
+        val allOk = cols.map(finite).reduce(_ && _)
+        count(when(allOk, lit(1))).as("_n") +:
+          (cols.indices.flatMap(i => Seq(sum(xs(i), allOk).as(s"_s_$i"),
+            sum(xs(i) * xs(i), allOk).as(s"_ss_$i"))) ++
+            pairs.map { case (i, j) => sum(xs(i) * xs(j), allOk).as(s"_sp_${i}_$j") })
+      } else pairs.flatMap { case (i, j) =>
+        val both = finite(cols(i)) && finite(cols(j))
+        val p = s"${i}_$j"
+        Seq(count(when(both, lit(1))).as(s"_n_$p"), sum(xs(i), both).as(s"_sx_$p"),
+          sum(xs(j), both).as(s"_sy_$p"), sum(xs(i) * xs(j), both).as(s"_sxy_$p"),
+          sum(xs(i) * xs(i), both).as(s"_sxx_$p"), sum(xs(j) * xs(j), both).as(s"_syy_$p"))
+      }
+    val g =
       if (groupBy.isEmpty) c.df.agg(aggs.head, aggs.tail: _*)
       else c.df.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val (g, listwise): (DataFrame, Boolean) =
-      if (groupBy.isEmpty && statsOk) {
-        // ONE pass: the probe plus every shared moment as a speculative
-        // split-long sum, checked after the pass on what it measured
-        val fused = probeAggs ++ listwiseAggs(_ => true, _ => Double.NaN)
-        val rowAll = c.df.agg(fused.head, fused.tail: _*).head()
-        val p = readProbe(rowAll)
-        val proven = listwiseSums(p._3(_)).forall { case (_, _, b) => provenBy(p)(b) }
-        if (proven && (declaredListwise || p._2))
-          (momentFrame(rowAll, probeAggs.size), true)
-        else if (declaredListwise || p._2)
-          (aggregate(listwiseAggs(provenBy(p), p._3(_))), true)
-        else (aggregate(pairwiseAggs(Some(p))), false)
-      } else if (declaredListwise) {
-        // grouped: the cheap probe scan, then one pass; gate closed: the
-        // lazy pure-decimal plan, no probe
-        val aggs =
-          if (statsOk) {
-            val p = readProbe(c.df.agg(probeAggs.head, probeAggs.tail: _*).head())
-            listwiseAggs(provenBy(p), p._3(_))
-          } else listwiseAggs(decimalOnly, _ => Double.NaN)
-        (aggregate(aggs), true)
-      } else if (groupBy.isEmpty) {
-        // gate closed: ONE pass computing the completeness counts and the
-        // decimal moments
-        val counts = probeAggs.take(1 + cols.size)
-        val aggsAll = counts ++ listwiseAggs(decimalOnly, _ => Double.NaN)
-        val rowAll = c.df.agg(aggsAll.head, aggsAll.tail: _*).head()
-        if (cols.indices.forall(i => rowAll.getLong(i + 1) == rowAll.getLong(0)))
-          (momentFrame(rowAll, counts.size), true)
-        else (aggregate(pairwiseAggs(None)), false)
-      } else {
-        // grouped pairwise: the completeness probe has ALWAYS been a
-        // separate scan here (a global probe can't fold into a grouped
-        // pass) — the range maxima ride that same pass, so split gating
-        // costs no extra scan
-        val p = readProbe(c.df.agg(probeAggs.head, probeAggs.tail: _*).head())
-        if (p._2) (aggregate(listwiseAggs(provenBy(p), p._3(_))), true)
-        else (aggregate(pairwiseAggs(Some(p))), false)
-      }
     val rows = pairs.map { case (i, j) =>
       val p = s"${i}_$j"
       def closing(n: Column, sx: Column, sy: Column,
@@ -1216,7 +1073,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val branches = pairs.map { case (i, j) =>
       val (a, b) = (cols(i), cols(j))
       val bothS =
-        if (declaredListwise) allOkS
+        if (listwise) allOkS
         else s"$a IS NOT NULL AND $b IS NOT NULL AND " +
           s"NOT isnan(CAST($a AS DOUBLE)) AND NOT isnan(CAST($b AS DOUBLE))"
       s"SELECT $gSel'$a' AS col_a, '$b' AS col_b, " +

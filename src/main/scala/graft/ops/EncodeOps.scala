@@ -1162,10 +1162,9 @@ object EncodeOps {
       else {
         val cum = col("_vr_x") + col("_vr_c")
         val picks = rankFns.zipWithIndex.map { case (f, i) =>
-          min(when(cum >= f(n), col("_vr_v"))).as(s"_vr_p$i")
+          s"_vr_p$i" -> min(when(cum >= f(n), col("_vr_v")))
         }
-        val r = scanned.agg(picks.head, picks.tail: _*).collect()(0)
-        rankFns.indices.map(r.get)
+        graft.core.CheckpointProbe.scalars(scanned, picks: _*)
       }
     graft.core.Chain.releaseCheckpoints(scanned)
     out

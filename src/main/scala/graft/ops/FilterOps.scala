@@ -143,8 +143,8 @@ final class FilterOps(private val c: Chain) extends AnyVal {
             // clears q (n/n = 1 > q), so min() is never null here
             val cume = (col("_q_excl") + col("_q_c")).cast("double") /
               lit(n.toDouble)
-            scanned.where(cume > lit(q))
-              .agg(min(col("_q_v"))).collect()(0).get(0)
+            graft.core.CheckpointProbe.scalars(scanned.where(cume > lit(q)),
+              "_q_cut" -> min(col("_q_v"))).head
           }
         graft.core.Chain.releaseCheckpoints(scanned)
         val gate =

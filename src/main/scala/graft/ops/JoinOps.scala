@@ -863,26 +863,27 @@ final class JoinOps(private val c: Chain) extends AnyVal {
     val conf = c.spark.conf
     val saved = bloomConf.map { case (k, _) =>
       k -> scala.util.Try(conf.get(k)).toOption }
-    val bloomRow =
+    val bloomBytes =
       try {
         bloomConf.foreach { case (k, v) =>
           val cur = scala.util.Try(conf.get(k).toLong).getOrElse(0L)
           conf.set(k, math.max(cur, v).toString)
         }
-        other.df.agg(bloomAgg.as("_bf")).collect()(0)
+        graft.core.CheckpointProbe.scalars(other.df, "_bf" -> bloomAgg).head
+          .asInstanceOf[Array[Byte]]
       } finally saved.foreach {
         case (k, Some(v)) => conf.set(k, v)
         case (k, None) => conf.unset(k)
       }
     val leftCols = c.df.columns.toSeq
     val prefiltered =
-      if (bloomRow.isNullAt(0)) c.df.where(lit(false))
+      if (bloomBytes == null) c.df.where(lit(false))
       else {
         val leftHash = xxhash64(joinColumns.map(p => col(p._1)): _*)
         val mightContain = org.apache.spark.sql.GraftBridge.column(
           org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
             org.apache.spark.sql.GraftBridge.expression(
-              lit(bloomRow.getAs[Array[Byte]](0))),
+              lit(bloomBytes)),
             org.apache.spark.sql.GraftBridge.expression(leftHash)))
         c.df.where(mightContain)
       }

@@ -52,4 +52,29 @@ object GraftBridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** `rdd.unpersist(false)` without its warning: on a locally
+    * checkpointed RDD, `unpersist` logs that the lineage "cannot be
+    * recomputed" once per RDD, which is the intended terminal state of
+    * every checkpoint release. This does what `unpersist` does after that
+    * line — `unpersistRDD` (`private[spark]`) drops the
+    * blocks and the persistent-RDD entry, and the RDD's own storage level
+    * (a private field, no setter) is reset to NONE.
+    */
+  def unpersistQuietly(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    rddStorageLevel.set(rdd, org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  private lazy val rddStorageLevel: java.lang.reflect.Field = {
+    val f = classOf[org.apache.spark.rdd.RDD[_]].getDeclaredField("storageLevel")
+    f.setAccessible(true)
+    f
+  }
+
+  /** The error the decimal `SUM` raises under ANSI mode when its total
+    * passes 38 digits (`QueryExecutionErrors` is `private[sql]`).
+    */
+  def decimalSumOverflow(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.overflowInSumOfDecimalError(null, "")
 }

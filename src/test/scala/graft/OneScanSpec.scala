@@ -13,8 +13,8 @@ import TestSpark._
 
 /** Plan and job census of the bulk ops that compile to one pass each
   * (sf0.001): tfidf tokenizes its corpus once, the exact cosine faces
-  * plan no repartition, corr_matrix builds with one aggregate action and
-  * falls back to a second pass only when its post-pass check fails, and
+  * plan no repartition, corr_matrix builds, renders and reports its
+  * schema with no job and runs as one aggregate over one scan, and
   * fuzzy_pairs compiles without the interpreted fallback. Also the
   * `dead-repartition` lint on fixtures, and linear_regression's closing
   * over correctly rounded sums (the side of its DuckDB gap that is
@@ -45,6 +45,26 @@ class OneScanSpec extends AnyFunSuite {
       s"q_search_tfidf must tokenize the corpus once:\n${prepared(search)}")
   }
 
+  test("search_tfidf tokenizes its query batch once") {
+    // the query batch is the `doc_id < 3` filtered scan; count the
+    // Generates over it in the plan that ran (adaptive stages unwrapped,
+    // a reused exchange not descended: it runs once)
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val search = query("q_search_tfidf")
+    search.collect()
+    def queryGenerates(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => queryGenerates(a.executedPlan)
+      case q: QueryStageExec => queryGenerates(q.plan)
+      case _: ReusedExchangeExec => 0
+      case g: GenerateExec if g.collectFirst { case f: FilterExec => f }.nonEmpty =>
+        1 + g.children.map(queryGenerates).sum
+      case other => other.children.map(queryGenerates).sum
+    }
+    val plan = search.queryExecution.executedPlan
+    assert(queryGenerates(plan) == 1, s"q_search_tfidf tokenizes its queries more than once:\n$plan")
+  }
+
   test("sim_topk and hard_negatives plan no repartition exchange") {
     for (q <- Seq("q_sim_topk", "q_hard_negatives")) {
       val plan = prepared(query(q))
@@ -52,30 +72,35 @@ class OneScanSpec extends AnyFunSuite {
         case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e
       }
       assert(reps.isEmpty, s"$q plans a repartition:\n$plan")
-      // the per-vector norm stays below the nested-loop join
+      // the per-vector norm stays below the nested-loop join, and each
+      // side computes it once per vector: one fixed_point_dot per side
       val bnlj = plan.collect {
         case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
       }
       assert(bnlj.size == 1, s"$q:\n$plan")
-      val normBelow = bnlj.head.children.forall(_.collectFirst {
-        case p: org.apache.spark.sql.execution.ProjectExec
-          if p.projectList.exists(_.toString.contains("fixed_point_dot")) => p
-      }.nonEmpty)
-      assert(normBelow, s"$q: the norm projection must sit below the join:\n$plan")
+      def dotCalls(side: SparkPlan): Int = side.collect { case n =>
+        n.expressions.map(_.collect { case d: graft.functions.FixedPointDot => d }.size).sum
+      }.sum
+      val calls = bnlj.head.children.map(dotCalls)
+      assert(calls == Seq(1, 1), s"$q: fixed_point_dot calls per join side $calls:\n$plan")
     }
   }
 
-  test("corr_matrix and corr_matrix_listwise build with a single aggregate action") {
-    for (q <- Seq("q_corr_matrix", "q_corr_matrix_listwise")) {
-      table("lineitem") // the footer read happens here, not in the build
-      var df: DataFrame = null
-      val actions = actionsDuring { df = query(q) }
-      assert(actions.size == 1, s"$q ran ${actions.size} actions:\n${actions.mkString("\n")}")
-      assert(actions.head.contains("HashAggregate") && actions.head.contains("shiftright"),
-        s"$q: expected the fused probe + split-long aggregate:\n${actions.head}")
-      // the closing reads the collected row, not the corpus
-      assert(countScans(df.queryExecution.executedPlan) == 0,
-        s"$q rescans the corpus:\n${df.queryExecution.executedPlan}")
+  test("corr_matrix and corr_matrix_listwise build and render with no action") {
+    for (deletion <- Seq("pairwise", "listwise")) {
+      val li = table("lineitem") // the footer read happens here, not in the build
+      var c: Chain = null
+      val actions = actionsDuring {
+        c = li.corrMatrix(Seq("l_quantity", "l_extendedprice", "l_discount"), deletion = deletion)
+        c.sql()
+        c.df.schema
+      }
+      assert(actions.isEmpty, s"$deletion ran ${actions.size} actions:\n${actions.mkString("\n")}")
+      // one aggregate over one scan, every moment an exact_sum
+      val plan = c.df.queryExecution.executedPlan
+      c.df.collect()
+      assert(countScans(plan) == 1, s"$deletion:\n$plan")
+      assert(prepared(c.df).toString.contains("exact_sum"), s"$deletion:\n${prepared(c.df)}")
     }
   }
 
@@ -86,6 +111,9 @@ class OneScanSpec extends AnyFunSuite {
     }.mkString("|")).sorted.toSeq
 
   test("corr_matrix falls back on a 1e12 value and on a null column, bitwise equal to decimal") {
+    // 1e12² leaves the long conversion at scale 8 and adds through the
+    // decimal cast; the null column leaves pairwise pairs empty. The
+    // rendered SQL spells every moment as SUM(CAST(… AS DECIMAL(38,8))).
     val big = (0 until 200).map { i =>
       (i % 3, java.lang.Double.valueOf(if (i == 17) 1e12 else i * 0.25),
         java.lang.Double.valueOf(i * 1.5 - 7.0), java.lang.Double.valueOf((i % 11) * 0.125))
@@ -96,46 +124,32 @@ class OneScanSpec extends AnyFunSuite {
     }.toDF("g", "a", "b", "c")
     for ((name, df) <- Seq("1e12" -> big, "null column" -> nullCol);
          deletion <- Seq("pairwise", "listwise")) {
-      var probed: DataFrame = null
+      df.createOrReplaceTempView("corr_t")
+      var c: Chain = null
       val actions = actionsDuring {
-        probed = Chain(spark, "t", df).corrMatrix(Seq("a", "b", "c"), deletion = deletion).df
+        c = Chain(spark, "corr_t", df).corrMatrix(Seq("a", "b", "c"), deletion = deletion)
       }
-      assert(actions.size == 1 && !actions.head.startsWith("FAILED"),
-        s"$name/$deletion: ${actions.mkString("\n")}")
-      // the fused row failed its check (a bound past the split range, or
-      // an incomplete pairwise column): the result is a second pass. An
-      // all-null column leaves listwise with no rows, which the check
-      // accepts, so that one closes from the fused row.
-      val secondPass = probed.queryExecution.optimizedPlan.collectFirst {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }.nonEmpty
-      assert(secondPass == (name == "1e12" || deletion == "pairwise"),
-        s"$name/$deletion: second pass $secondPass\n${probed.queryExecution.optimizedPlan}")
-      spark.conf.set("spark.graft.corr.probeMaxBytes", "0")
-      val decimal =
-        try Chain(spark, "t", df).corrMatrix(Seq("a", "b", "c"), deletion = deletion).df
-        finally spark.conf.unset("spark.graft.corr.probeMaxBytes")
-      assert(bits(probed) == bits(decimal), s"$name/$deletion diverged")
+      assert(actions.isEmpty, s"$name/$deletion: ${actions.mkString("\n")}")
+      assert(bits(c.df) == bits(spark.sql(c.sql())), s"$name/$deletion diverged")
     }
   }
 
   test("corr_matrix runs no probe where the plan statistics know n >= 2^30") {
     // a range's row count survives the projection with cost-based
-    // statistics on; the size gate is opened wide so only the row count
-    // closes it
+    // statistics on
     val huge = spark.range(0, 1L << 31).select(col("id").as("a"), col("id").as("b"))
-    val confs = Seq("spark.sql.cbo.enabled" -> "true",
-      "spark.graft.corr.probeMaxBytes" -> (1L << 42).toString)
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.conf.set("spark.sql.cbo.enabled", "true")
     try {
       assert(huge.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(1L << 31)))
-      // the declared-listwise build is then lazy: no job at all (a probe
-      // over 2^31 rows would run into the watchdog)
-      val r = Harness.run(spark, "corr-rowcount-gate", 60) {
-        Chain(spark, "huge", huge).corrMatrix(Seq("a", "b"), deletion = "listwise")
+      // the build is lazy: no job at all (a pass over 2^31 rows would run
+      // into the watchdog)
+      for (deletion <- Seq("pairwise", "listwise")) {
+        val r = Harness.run(spark, "corr-rowcount-gate", 60) {
+          Chain(spark, "huge", huge).corrMatrix(Seq("a", "b"), deletion = deletion)
+        }
+        assert(r.ok && r.jobs == 0, s"$deletion: ${r.error} jobs=${r.jobs}")
       }
-      assert(r.ok && r.jobs == 0, s"${r.error} jobs=${r.jobs}")
-    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    } finally spark.conf.unset("spark.sql.cbo.enabled")
   }
 
   test("fuzzy_pairs compiles with the codegen fallback off, output unchanged") {

@@ -9,7 +9,7 @@ import TestSpark._
 
 /** Round-11 hardening: ANSI divide-by-zero guards on the degenerate
   * inputs the profile ops are meant to flag (constant columns, zero
-  * weight mass), the corrMatrix completeness auto-degrade, the
+  * weight mass), the corrMatrix pairwise/listwise equality, the
   * fuzzyPairs early-stop cap probe, empty-input clusterEmbeddings, the
   * pseudonymize salt-free render face, and the two new ScaleLint rules
   * (literal-domain window keys; aggregated BNLJ builds warn unless
@@ -48,27 +48,24 @@ class Round11Spec extends AnyFunSuite {
     assert(got("b").contains(1.0))
   }
 
-  test("corr_matrix pairwise auto-degrades to shared moments on complete columns, bit-exact") {
-    // complete frame: pairwise == listwise by definition; the probe must
-    // pick the cheap arithmetic and the values must match bit-for-bit
+  test("corr_matrix pairwise equals listwise bit for bit on complete columns") {
+    // complete frame: pairwise == listwise by definition, and the exact
+    // sums make the values match bit-for-bit
     val li = table("lineitem")
     val pw = li.corrMatrix(Seq("l_quantity", "l_extendedprice", "l_discount"))
     val lw = li.corrMatrix(Seq("l_quantity", "l_extendedprice", "l_discount"),
       deletion = "listwise")
     assert(rows(pw.df) == rows(lw.df))
-    // the fold: the probe rides the shared-moment pass itself, so the
-    // complete case pays ONE scan and the closing runs over the collected
-    // bounded row — the result plan is a local relation with NO aggregate
-    // and NO rescan of the source
-    val planStr = pw.df.queryExecution.analyzed.toString
-    assert(pw.df.queryExecution.analyzed.collectFirst {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }.isEmpty, s"complete columns must close from the folded pass, got $planStr")
-    assert(pw.df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
-      case l: org.apache.spark.sql.execution.LogicalRDD => l
-    }.nonEmpty, s"expected a driver-local closing frame, got $planStr")
-    // incomplete frame: the probe must KEEP true pairwise (per-pair n)
+    // the declared mode is the plan: pairwise keeps per-pair counts, and
+    // the aggregate runs at the action, over the source
+    for ((c, first) <- Seq(pw -> "_n_", lw -> "_n")) {
+      val agg = c.df.queryExecution.analyzed.collectFirst {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+          a.aggregateExpressions.map(_.name)
+      }
+      assert(agg.exists(_.head.startsWith(first)), s"expected a lazy aggregate, got $agg")
+    }
+    // incomplete frame: true pairwise (per-pair n)
     val holey = Seq((Some(1.0), Some(2.0)), (None, Some(3.0)), (Some(2.0), Some(4.0)),
       (Some(3.0), None)).toDF("a", "b")
     val hp = Chain(spark, "cmh", holey).corrMatrix(Seq("a", "b"))

@@ -20,7 +20,7 @@ class Round18Spec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  // ---- Exact.splitDecimalSum8 ≡ SUM(CAST(x AS DECIMAL(38,8))) ---------
+  // ---- ExactSum ≡ SUM(CAST(x AS DECIMAL(38,s))) ----------------------
 
   /** bitwise double equality (NaN-safe) — value "equality" would paper
     * over sign-of-zero or last-bit differences the oracle hash sees
@@ -32,100 +32,113 @@ class Round18Spec extends AnyFunSuite {
     case (x, y) => x == y
   }
 
-  private def checkSplitEq(values: Seq[java.lang.Double]): Unit = {
-    val df = values.toDF("x")
-    val bound = values.filter(v => v != null && !v.isNaN && !v.isInfinite)
-      .map(v => math.abs(v.doubleValue)).foldLeft(0.0)(math.max)
-    assert(Exact.splitSumSafe(bound, values.size),
-      s"fixture must satisfy the probe: bound=$bound n=${values.size}")
-    val got = df.agg(
-      Exact.splitDecimalSum8(col("x")).as("split"),
-      sum(col("x").cast(DecimalType(38, 8))).cast("double").as("dec")).head()
-    assert(bitEq(got.get(0), got.get(1)),
-      s"split=${got.get(0)} dec=${got.get(1)} for $values")
+  /** [[graft.functions.ExactSum]] at `scale`, read as a double. */
+  private def exactSum(x: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.GraftBridge
+    val e = GraftBridge.expression(x)
+    GraftBridge.column(graft.functions.ExactSum(graft.functions.Dec8Unscaled(e, scale), e,
+      org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral, scale, asDouble = true,
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled).toAggregateExpression())
   }
 
-  test("splitDecimalSum8: bit-identical to the decimal sum on adversarial values") {
-    // exact half-boundaries at the 9th decimal (HALF_UP territory), signs,
-    // shortest-repr classics (0.1), large magnitudes near the sf bench
-    // ranges, exact integers, nulls
-    checkSplitEq(Seq[java.lang.Double](1.5e-8, 2.5e-8, -3.5e-8, 5e-9, -5e-9,
+  private def decimalSum(x: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column =
+    sum(x.cast(DecimalType(38, scale))).cast("double")
+
+  private def checkSumEq(values: Seq[java.lang.Double]): Unit =
+    for (scale <- Seq(0, 4, 8)) {
+      val got = values.toDF("x").agg(exactSum(col("x"), scale).as("exact"),
+        decimalSum(col("x"), scale).as("dec")).head()
+      assert(bitEq(got.get(0), got.get(1)),
+        s"s=$scale: exact=${got.get(0)} dec=${got.get(1)} for $values")
+    }
+
+  test("ExactSum: bit-identical to the decimal sum on adversarial values") {
+    // exact half-boundaries at the 9th and 5th decimal (HALF_UP
+    // territory), signs, shortest-repr classics (0.1), large magnitudes
+    // near the sf bench ranges, exact integers, nulls
+    checkSumEq(Seq[java.lang.Double](1.5e-8, 2.5e-8, -3.5e-8, 5e-9, -5e-9,
       0.1, -0.1, 0.30000000000000004, 1.0 / 3.0, -1.0 / 3.0,
       104999.91, -104999.91, 1.1022481097e10, 0.0, -0.0, null,
       12345678.87654321, -12345678.87654321, 1e-300, -1e-300,
       49.999999995, -49.999999995, 7.000000005, 2.000000015,
-      // totals whose 8th decimal digit is live (pins the recombination's
-      // result scale: a decimal(38,7) add would round these)
+      5e-5, 1.5e-4, -2.5e-4, 0.5, 1.5, -2.5,
+      // totals whose last kept decimal digit is live
       1e-8, 3e-8, -7e-8, 1.1e-7, -2.30000007e-7))
     // all-null and empty frames: both paths must return null
-    val allNull = Seq[java.lang.Double](null, null).toDF("x").agg(
-      Exact.splitDecimalSum8(col("x")).as("s"),
-      sum(col("x").cast(DecimalType(38, 8))).cast("double").as("d")).head()
-    assert(allNull.isNullAt(0) && allNull.isNullAt(1))
+    for (vals <- Seq(Seq[java.lang.Double](null, null), Seq.empty[java.lang.Double]);
+         s <- Seq(0, 4, 8)) {
+      val r = vals.toDF("x").agg(exactSum(col("x"), s).as("s"), decimalSum(col("x"), s).as("d"))
+        .head()
+      assert(r.isNullAt(0) && r.isNullAt(1), s"s=$s $vals: $r")
+    }
   }
 
-  test("splitDecimalSum8: randomized sweep across magnitudes matches bitwise") {
+  test("ExactSum: randomized sweep across magnitudes matches bitwise") {
+    // past ~4.6e10 (s = 8) and ~4.6e14 (s = 4) rows leave the long
+    // conversion and add through the decimal cast
     val rng = new scala.util.Random(1801)
-    for (mag <- Seq(1e-6, 1.0, 50.0, 1e5, 1e9, 4e10)) {
+    for (mag <- Seq(1e-6, 1.0, 50.0, 1e5, 1e9, 4e10, 1e13, 1e16, 1e19)) {
       val vals: Seq[java.lang.Double] = (0 until 2000).map { i =>
         if (i % 97 == 0) null
         else java.lang.Double.valueOf((rng.nextDouble() - 0.5) * mag)
       }
-      val bound = mag
-      if (Exact.splitSumSafe(bound, vals.size)) checkSplitEq(vals)
+      checkSumEq(vals)
     }
   }
 
-  test("Dec8Unscaled.unscaled8: exhaustive fuzz against the BigDecimal cast arithmetic") {
+  /** [[graft.functions.Dec8Unscaled.unscaled]] against the cast's own
+    * BigDecimal arithmetic over 4M+ doubles in the domain where the
+    * unscaled value fits a long with margin (|x·10^s| < 4e18).
+    */
+  private def fuzzUnscaled(scale: Int, seed: Int): Unit = {
+    val p = math.pow(10, scale)
     def ref(x: Double): Long =
       java.math.BigDecimal.valueOf(x)
-        .setScale(8, java.math.RoundingMode.HALF_UP)
+        .setScale(scale, java.math.RoundingMode.HALF_UP)
         .unscaledValue().longValueExact()
     def check(x: Double): Unit = {
-      val got = graft.functions.Dec8Unscaled.unscaled8(x)
+      val got = graft.functions.Dec8Unscaled.unscaled(x, scale)
       val want = ref(x)
-      assert(got == want, s"unscaled8($x) = $got, BigDecimal says $want " +
+      assert(got == want, s"unscaled($x, $scale) = $got, BigDecimal says $want " +
         s"(bits ${java.lang.Double.doubleToRawLongBits(x)})")
     }
-    // exact decimal half-boundaries k + 0.5 at the 9th digit — the HALF_UP
-    // corner the fast path must decline or get right — across magnitudes
+    // exact decimal half-boundaries k + 0.5 one digit past the scale —
+    // the HALF_UP corner the fast path must decline or get right
     for (k <- -2000L to 2000L) {
-      check((2 * k + 1) / 2e8)            // nearest double to (k+0.5)·1e-8
-      check(k / 1e8)                      // exact grid points
-      check(k / 1e8 + 1e-16); check(k / 1e8 - 1e-16)
+      check((2 * k + 1) / (2 * p))         // nearest double to (k+0.5)·10^-s
+      check(k / p)                         // exact grid points
+      check(k / p + 1e-8 / p); check(k / p - 1e-8 / p)
     }
     // neighbors of half-integer unscaled boundaries at large magnitudes
-    // (ulp-sized steps; domain capped where the unscaled value fits a
-    // long — the splitSumSafe probe the callers must pass)
-    for (m <- Seq(1e3, 1e6, 1e9, 1e12, 1e15, 1e17, 4e17); s <- Seq(-1, 1)) {
-      val b = s * (math.rint(m) + 0.5) / 1e8
+    // (ulp-sized steps, up to where the unscaled value nears 2^62)
+    for (m <- Seq(1e3, 1e6, 1e9, 1e12, 1e15, 1e17, 4e17); sg <- Seq(-1, 1)) {
+      val b = sg * (math.rint(m) + 0.5) / p
       check(b); check(math.nextUp(b)); check(math.nextDown(b))
     }
-    // dense random sweep across magnitudes and signs within the probed
-    // domain (|x| < ~4.6e10 so round(x·1e8) fits a long)
-    val rng = new scala.util.Random(1803)
+    // dense random sweep across magnitudes and signs: unscaled values
+    // from 1e-4 to 1e18
+    val rng = new scala.util.Random(seed)
     for (_ <- 0 until 2000000) {
-      val mag = math.pow(10, rng.nextDouble() * 22 - 12) // 1e-12 .. 1e10
+      val mag = math.pow(10, rng.nextDouble() * 22 - 4) / p
       check((rng.nextDouble() - 0.5) * mag)
     }
     // raw random bit patterns in the finite, in-range domain
     for (_ <- 0 until 2000000) {
       val x = java.lang.Double.longBitsToDouble(rng.nextLong())
-      if (!x.isNaN && !x.isInfinite && math.abs(x) < 4.0e10) check(x)
+      if (!x.isNaN && !x.isInfinite && math.abs(x) < 4.0e18 / p) check(x)
     }
     check(0.0); check(-0.0); check(1e-300); check(-1e-300)
   }
 
-  test("splitSumSafe: bounds, NaN/Inf and corpus-scale n close the gate") {
-    assert(Exact.splitSumSafe(104999.91 * 104999.91, 600000L)) // the bench worst case
-    assert(!Exact.splitSumSafe(Double.NaN, 100L))
-    assert(!Exact.splitSumSafe(Double.PositiveInfinity, 100L))
-    assert(!Exact.splitSumSafe(1.0, 1L << 31))   // n >= 2^30: corpus scale
-    assert(!Exact.splitSumSafe(1e12, 1000L))     // per-row unscaled past 2^61/1e8
-    assert(Exact.splitSumSafe(0.0, 0L))          // empty frame is trivially safe
+  test("Dec8Unscaled.unscaled8: exhaustive fuzz against the BigDecimal cast arithmetic") {
+    fuzzUnscaled(8, 1803)
   }
 
-  // ---- corrMatrix: probed split path ≡ forced pre-round-18 paths ------
+  test("Dec8Unscaled at scale 4: exhaustive fuzz against the BigDecimal cast arithmetic") {
+    fuzzUnscaled(4, 1804)
+  }
+
+  // ---- corrMatrix: the exact-sum plan ≡ its decimal SQL face ----------
 
   private def corrFixture(withNulls: Boolean): DataFrame = {
     val rng = new scala.util.Random(1802)
@@ -138,13 +151,13 @@ class Round18Spec extends AnyFunSuite {
     }.toDF("g", "a", "b", "c")
   }
 
+  /** The DataFrame plan against its rendered SQL, which spells every
+    * moment as `SUM(CAST(… AS DECIMAL(38,8)))`.
+    */
   private def corrBoth(df: DataFrame, groupBy: Seq[String], deletion: String): Unit = {
-    val probed = Chain(spark, "t", df).corrMatrix(Seq("a", "b", "c"), groupBy, deletion).df
-    spark.conf.set("spark.graft.corr.probeMaxBytes", "0")
-    val plain =
-      try Chain(spark, "t", df).corrMatrix(Seq("a", "b", "c"), groupBy, deletion).df
-      finally spark.conf.unset("spark.graft.corr.probeMaxBytes")
-    assert(rows(probed) == rows(plain),
+    df.createOrReplaceTempView("corr_fx")
+    val c = Chain(spark, "corr_fx", df).corrMatrix(Seq("a", "b", "c"), groupBy, deletion)
+    assert(rows(c.df) == rows(spark.sql(c.sql())),
       s"groupBy=$groupBy deletion=$deletion diverged")
   }
 
@@ -160,20 +173,9 @@ class Round18Spec extends AnyFunSuite {
       (0, 1.0, 2.0, 3.0), (1, Double.PositiveInfinity, 4.0, 5.0),
       (2, 2.5, 6.5, 0.25), (3, -7.5, 1.25, 0.125)
     ).toDF("g", "a", "b", "c")
-    // Inf makes max|a| infinite -> every a-touching sum declines the split
-    // path; results must still match the forced-decimal shape exactly
-    corrBoth(df, Nil, "listwise")
-  }
-
-  test("corrMatrix: the declared-listwise plan carries split-long partial aggregates") {
-    // ungrouped, the moments ride the one aggregate the chain build runs
-    // (probe and split-long sums together); read that action's plan
-    val df = corrFixture(withNulls = false)
-    val all = actionsDuring {
-      Chain(spark, "t", df).corrMatrix(Seq("a", "b", "c"), deletion = "listwise")
-    }
-    assert(all.exists(_.contains("shiftright")),
-      s"expected split-long (shiftright) partial aggregates in:\n${all.mkString("\n")}")
+    // Inf leaves the long conversion; its rows are excluded (not finite)
+    // and every result must still match the decimal face exactly
+    for (deletion <- Seq("pairwise", "listwise")) corrBoth(df, Nil, deletion)
   }
 
   // ---- joinCardinalityProfile: checkpointed keys-grain profile --------
