@@ -140,6 +140,11 @@ final class Chain private (
 
   // ---- terminal verbs (≅ SQLChain.preview/to_df/save, transforms.py:332-429)
 
+  /** `d.write`, writing local tables without a forked process per file
+    * ([[LocalFs.quiet]]).
+    */
+  private def write(d: DataFrame) = LocalFs.quiet(spark, d.write)
+
   /** Top-n rows (reference preview appends LIMIT 10). */
   def preview(n: Int = 10): Array[Row] = df.limit(n).collect()
 
@@ -156,7 +161,7 @@ final class Chain private (
         if (!overwrite && spark.catalog.tableExists(name))
           throw new IllegalStateException(
             s"table $name exists; pass overwrite=true to replace")
-        df.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+        write(df).mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
           .format("parquet").saveAsTable(name)
       case "VIEW" =>
         if (!overwrite && spark.catalog.tableExists(name))
@@ -180,7 +185,7 @@ final class Chain private (
     if (!overwrite && spark.catalog.tableExists(name))
       throw new IllegalStateException(
         s"table $name exists; pass overwrite=true to replace")
-    df.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+    write(df).mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
       .format("parquet")
       .partitionBy(partitionCols: _*)
       .saveAsTable(name)
@@ -194,7 +199,7 @@ final class Chain private (
     * null-padding.
     */
   def saveAppend(name: String): Unit =
-    df.write.mode(SaveMode.Append).format("parquet").saveAsTable(name)
+    write(df).mode(SaveMode.Append).format("parquet").saveAsTable(name)
 
   /** Key-based upsert (insert-or-replace): rows matching an existing row
     * on `keys` replace it, everything else appends; creates the table when
@@ -213,7 +218,7 @@ final class Chain private (
       s"upsert keys may not start with the internal rename prefix _nk_: $keys")
     import org.apache.spark.sql.functions.col
     if (!spark.catalog.tableExists(name)) {
-      df.write.mode(SaveMode.ErrorIfExists).format("parquet").saveAsTable(name)
+      write(df).mode(SaveMode.ErrorIfExists).format("parquet").saveAsTable(name)
     } else {
       // NULL-SAFE anti-join: a null key value must still match its stored
       // row ("same key" semantics), or every re-delivery of a null-keyed
@@ -225,7 +230,7 @@ final class Chain private (
       val merged = df.unionByName(kept)
       val staging = s"${name}_graft_upsert_staging"
       val retired = s"${name}_graft_upsert_retired"
-      merged.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(staging)
+      write(merged).mode(SaveMode.Overwrite).format("parquet").saveAsTable(staging)
       // three-step swap: the live name is never dangling — a crash leaves
       // either the old table or the new one reachable, plus a recoverable
       // *_retired / *_staging copy
@@ -261,8 +266,8 @@ final class Chain private (
     // numPartitions = buckets each task holds exactly one bucket's rows
     // and writes ONE file. Unaligned input writes up to tasks × buckets
     // files — the classic bucketed-table file explosion at scale.
-    df.repartition(buckets, keys.map(df.col): _*)
-      .write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+    write(df.repartition(buckets, keys.map(df.col): _*))
+      .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
       .format("parquet")
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
@@ -278,8 +283,8 @@ final class Chain private (
     */
   def appendBucketed(name: String, keys: Seq[String], buckets: Int): Unit = {
     require(keys.nonEmpty && buckets > 0, "bucketed append needs keys and buckets > 0")
-    df.repartition(buckets, keys.map(df.col): _*)
-      .write.mode(SaveMode.Append)
+    write(df.repartition(buckets, keys.map(df.col): _*))
+      .mode(SaveMode.Append)
       .format("parquet")
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
@@ -338,11 +343,11 @@ final class Chain private (
     val cuts = projected.stat.approxQuantile(qNames.toArray, probs, relErr).toSeq
     val zv = graft.functions.ZValue(zExprs, cuts.map(_.clone()), bits)
     val parts = if (files > 0) files else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    df.withColumn("_graft_z", zv)
+    write(df.withColumn("_graft_z", zv)
       .repartitionByRange(parts, col("_graft_z"))
       .sortWithinPartitions("_graft_z")
-      .drop("_graft_z")
-      .write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+      .drop("_graft_z"))
+      .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
       .format("parquet")
       .saveAsTable(name)
   }

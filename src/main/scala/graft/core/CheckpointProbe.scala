@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Eager `localCheckpoint` with aggregate metrics computed BY the
   * materialization job itself (`Dataset.observe`) — the round-17
@@ -149,6 +151,16 @@ private[graft] object CheckpointProbe {
         throw new IllegalStateException(s"checkpoint_probe: observation ${o.name} " +
           "left no observed row after its job")
     }
+
+  /** Is `df` computed by one task? True when its physical plan holds no
+    * exchange (nor the adaptive wrapper that plans one) and its RDD has
+    * one partition, as a small checkpoint's does; planning it runs no job.
+    */
+  def onePartition(df: DataFrame): Boolean = {
+    val qe = df.queryExecution
+    qe.executedPlan.collectFirst { case p @ (_: AdaptiveSparkPlanExec | _: Exchange) => p }.isEmpty &&
+      qe.toRdd.getNumPartitions == 1
+  }
 
   /** Does computing `df` plan a shuffle? True when its optimized plan
     * (subqueries included) holds a join, aggregate, window, global sort,

@@ -177,13 +177,17 @@ final class WindowOps(private val c: Chain) extends AnyVal {
     * ([[graft.core.CheckpointProbe]]) — no separate count pass.
     */
   def trainTestSplit(orderBy: Seq[(String, String)], trainPercent: Double): Chain = {
+    val order = orderBy.map { case (n, d) =>
+      if (d.equalsIgnoreCase("DESC")) col(n).desc else col(n).asc
+    }
     // n rides the checkpoint materialization (CheckpointProbe, round 17)
     // — the old separate count() re-scanned the blocks the sort job had
-    // just written
+    // just written. A narrow upstream held in one partition (a small
+    // checkpoint) is in global order once sorted in place: no range-bounds
+    // sampling job and no exchange stage
     val (sorted, probe) = graft.core.CheckpointProbe(
-      c.df.orderBy(orderBy.map { case (n, d) =>
-        if (d.equalsIgnoreCase("DESC")) col(n).desc else col(n).asc
-      }: _*),
+      if (graft.core.CheckpointProbe.onePartition(c.df)) c.df.sortWithinPartitions(order: _*)
+      else c.df.orderBy(order: _*),
       "_cp_n" -> count(lit(1)))
     val n = probe(0).asInstanceOf[Long]
     val cut = math.floor(trainPercent * n).toLong

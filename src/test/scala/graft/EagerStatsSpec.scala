@@ -188,4 +188,26 @@ class EagerStatsSpec extends AnyFunSuite {
         "a persisted input must survive release")
     } finally input.unpersist()
   }
+
+  test("train_test_split sorts a one-partition checkpoint in place: one job, the same split") {
+    val fx = shuffledFixture(mixed)
+    val imputed = Chain(spark, "fx", fx).impute(Seq("x" -> "mean"))
+    assert(CheckpointProbe.onePartition(imputed.df), "the small checkpoint should be one partition")
+    assert(!CheckpointProbe.onePartition(fx), "a shuffled frame plans an exchange")
+    val order = Seq("k" -> "DESC", "g" -> "ASC")
+    val (inPlace, jobs) = jobsDuring(imputed.trainTestSplit(order, 0.6))
+    // the reference goes through the range-partitioned global sort
+    val spreadIn = imputed.df.repartition(3)
+    assert(!CheckpointProbe.onePartition(spreadIn))
+    val spread = Chain(spark, "fx", spreadIn).trainTestSplit(order, 0.6)
+    try {
+      assert(jobs == 1, s"the in-place split launched $jobs jobs")
+      val want = spread.df.collect().toSeq
+      assert(inPlace.df.collect().toSeq == want)
+      assert(want.map(_.getAs[String]("tt_split")).count(_ == "TRAIN") == 6)
+    } finally {
+      inPlace.releaseCheckpoints()
+      spread.releaseCheckpoints()
+    }
+  }
 }

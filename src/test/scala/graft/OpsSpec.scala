@@ -534,4 +534,32 @@ class OpsSpec extends AnyFunSuite {
     c.save("t_save_guard", "TABLE", overwrite = true)
     assert(spark.table("t_save_guard").count() == c.df.count())
   }
+
+  test("save writes local tables without a chmod process: same modes, checksums and rows") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val dir = Files.createTempDirectory("graft_local_fs")
+    val fs = new graft.core.QuietRawLocalFileSystem
+    fs.initialize(dir.toUri, spark.sparkContext.hadoopConfiguration)
+    for (mode <- Seq("640", "755", "600")) {
+      val f = new Path(dir.resolve(s"f$mode").toUri)
+      fs.create(f).close()
+      fs.setPermission(f, new FsPermission(mode))
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(Paths.get(f.toUri))) ==
+        new FsPermission(mode).toString)
+    }
+    val c = table("nation")
+    c.save("t_save_local", overwrite = true)
+    c.save("t_save_local", overwrite = true)
+    val loc = spark.sql("DESCRIBE FORMATTED t_save_local").where("col_name = 'Location'")
+      .head().getString(1)
+    val names = Files.list(Paths.get(new java.net.URI(loc))).toArray.map(_.toString.split('/').last)
+    val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.nonEmpty && parts.forall(p => names.contains(s".$p.crc")),
+      s"every part file keeps its checksum: ${names.toSeq}")
+    assert(names.contains("_SUCCESS"))
+    assert(rows(spark.table("t_save_local")) == rows(c.df))
+  }
 }
