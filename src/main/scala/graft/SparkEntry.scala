@@ -917,9 +917,10 @@ object SparkEntry {
       "q_dedup_clusters" -> ((s, d) =>
         t(s, d, "documents").ngramJaccardPairs("doc_id", "text", n = 3, threshold = 0.5)
           .clusterPairs().df),
-      // the same components via large-star/small-star contraction — the
-      // chain-shaped-component algorithm, hash-checked against the same
-      // recursive-CTE oracle as the propagation path
+      // the same components through the op's historical contraction
+      // name (the same engine: a driver union-find within the iteration
+      // gate, the large-star/small-star loop past it), hash-checked
+      // against the same recursive-CTE oracle
       "q_dedup_clusters_ii" -> ((s, d) =>
         t(s, d, "documents").ngramJaccardPairs("doc_id", "text", n = 3, threshold = 0.5)
           .clusterPairsContraction().df),

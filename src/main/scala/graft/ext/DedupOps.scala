@@ -359,12 +359,10 @@ final class DedupOps(private val c: Chain) extends AnyVal {
     require(n <= maxRows,
       s"embeddingCosinePairs is exact and Ω(n²): corpus has $n rows > maxRows=$maxRows; " +
         "use minhashLsh/simhashPairs for sub-quadratic near-dup mining or raise maxRows deliberately")
-    val base = c.df.select(col(idCol).as("_id"), col(vecCol).as("_v"))
-      .withColumn("_norm", sqrt(Exact.dot(col("_v"), col("_v"))))
-      // zero-norm/NaN vectors never pair: their NaN cosine passes
-      // `>= threshold` (NaN compares greatest) and one such vector would
-      // merge everything it meets into a single bogus cluster
-      .where(SimilarityOps.usableVec(col("_v"), col("_norm")))
+    // zero-norm/NaN vectors never pair: their NaN cosine passes
+    // `>= threshold` (NaN compares greatest) and one such vector would
+    // merge everything it meets into a single bogus cluster
+    val base = SimilarityOps.withNorm(c.df, idCol, vecCol, "_id", "_v", "_norm")
       .withColumn("_sk", graft.functions.SignSketch(col("_v"), planes))
       // barrier: the id_a / id_b join-backs read this one exchange (a
       // ReusedExchange), so the norm is computed once per vector
@@ -701,44 +699,28 @@ object DedupOps {
     * COLLISION-CHECKED without a separate pass: the map is built as ONE
     * aggregation keyed by the surrogate (`collect_set` of the original
     * ids — size 1 everywhere unless two ids collide), and the collision
-    * probe rides the checkpoint's own materialization job as an observed
-    * metric (`max(size)`), so detection costs zero extra scans. Two
-    * distinct ids hashing to one surrogate would silently merge their
-    * components, so a collision fails loudly instead. P(collision) ≈
-    * n²/2⁶⁵ — negligible below ~10⁸ ids, detected above. The map's
-    * checkpoint blocks are released EAGERLY by [[translateLabels]] once
-    * the translated frame is materialized — they never reach the result
-    * plan.
+    * probe rides the checkpoint's own materialization job as observed
+    * metrics ([[graft.core.CheckpointProbe]]), so detection costs zero
+    * extra scans. Two distinct ids hashing to one surrogate would silently
+    * merge their components, so a collision fails loudly instead.
+    * P(collision) ≈ n²/2⁶⁵ — negligible below ~10⁸ ids, detected above.
+    * The map's checkpoint blocks are released EAGERLY by
+    * [[translateLabels]] once the translated frame is materialized — they
+    * never reach the result plan.
     */
   private[ext] def surrogateIdMap(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val obs = org.apache.spark.sql.Observation()
-    val m = checkpointRound(pairs
+    val (m, probe) = graft.core.CheckpointProbe(pairs
       .select(explode(array(col(aCol), col(bCol))).as("_oid"))
       .where(col("_oid").isNotNull)
       .groupBy(xxhash64(col("_oid")).as("_sid"))
       .agg(collect_set(col("_oid")).as("_oids"))
-      .observe(obs, max(size(col("_oids"))).as("_maxdup"),
-        sum(size(col("_oids"))).as("_nids"), count(lit(1)).as("_nsids"))
-      .select(element_at(col("_oids"), 1).as("_oid"), col("_sid")))
-    // the eager localCheckpoint above fired the observation listener
-    // synchronously in every measurement; the bounded poll only guards a
-    // listener-thread race, and an empty result after the deadline fails
-    // loudly (a silent fallback would skip the only collision detector)
-    var probe = org.apache.spark.sql.GraftBridge.observationResult(obs)
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (probe.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      probe = org.apache.spark.sql.GraftBridge.observationResult(obs)
-    }
-    if (probe.isEmpty)
-      throw new IllegalStateException(
-        "surrogate id map: the collision-probe observation never fired for " +
-          "the checkpoint materialization — cannot prove the surrogate keys " +
-          "are collision-free, refusing to cluster")
-    val maxDup = Option(probe("_maxdup")).fold(0L)(_.asInstanceOf[Number].longValue)
+      .select(element_at(col("_oids"), 1).as("_oid"), col("_sid"), size(col("_oids")).as("_k")),
+      "_maxdup" -> max(col("_k")), "_nids" -> sum(col("_k")), "_nsids" -> count(lit(1)))
+    val maxDup = Option(probe(0)).fold(0L)(_.asInstanceOf[Number].longValue)
     if (maxDup > 1L) {
-      val nIds = Option(probe("_nids")).fold(0L)(_.asInstanceOf[Number].longValue)
-      val nSids = Option(probe("_nsids")).fold(0L)(_.asInstanceOf[Number].longValue)
+      val nIds = Option(probe(1)).fold(0L)(_.asInstanceOf[Number].longValue)
+      val nSids = Option(probe(2)).fold(0L)(_.asInstanceOf[Number].longValue)
+      releaseRound(m)
       throw new IllegalStateException(
         s"xxhash64 surrogate collision among $nIds distinct ids " +
           s"(${nIds - nSids} colliding) — clustering would " +
@@ -748,22 +730,23 @@ object DedupOps {
     m
   }
 
-  /** Type-dispatch a pair frame's id columns into a CHECKPOINTED long
-    * `(src, dst)` edge frame: integral ids cast losslessly (fast path —
-    * one materialization of the upstream miner, exactly as before);
-    * string ids map through the collision-checked xxhash64 surrogate (the
-    * returned map translates labels back to original ids); any other type
-    * — and mixed families — fails loudly here.
+  /** Type-dispatch a pair frame's id columns into a CHECKPOINTED long edge
+    * frame `(a, b)` with `a = least`, `b = greatest` of the two ids (a
+    * pair with one null id is the other id's self-pair; an all-null pair
+    * drops), plus its row count, observed by the checkpoint job itself.
+    * Integral ids cast losslessly (one materialization of the upstream
+    * miner); string ids map through the collision-checked xxhash64
+    * surrogate (the returned map translates labels back to original ids);
+    * any other type — and mixed families — fails loudly here.
     *
     * The string path checkpoints the raw PAIR columns first and derives
     * both the surrogate map and the edge frame from that truncated frame,
     * so the upstream miner (the expensive LSH/PPJoin stage) runs ONCE —
     * not once for the map and again for the edges. The scratch pair
-    * checkpoint is released here; callers release the returned edge frame
-    * once their own first round is materialized.
+    * checkpoint is released here; [[components]] releases the edge frame.
     */
-  private[ext] def clusterEdges(op: String, pairs: DataFrame,
-                                aCol: String, bCol: String): (DataFrame, Option[DataFrame]) = {
+  private[ext] def clusterEdges(op: String, pairs: DataFrame, aCol: String,
+                                bCol: String): (DataFrame, Long, Option[DataFrame]) = {
     val dtA = pairs.schema(aCol).dataType
     val dtB = pairs.schema(bCol).dataType
     requireClusterableId(op, aCol, dtA)
@@ -772,17 +755,175 @@ object DedupOps {
       throw new IllegalArgumentException(
         s"$op: id columns must share a type family, got " +
           s"$aCol ${dtA.simpleString} vs $bCol ${dtB.simpleString}")
-    if (isIntegralId(dtA))
-      (checkpointRound(
-        pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))), None)
-    else {
+    def edges(df: DataFrame, a: Column, b: Column): (DataFrame, Long) = {
+      val (e, probe) = graft.core.CheckpointProbe(
+        df.select(least(a, b).as("a"), greatest(a, b).as("b")).where(col("a").isNotNull),
+        "_n" -> count(lit(1)))
+      (e, probe(0).asInstanceOf[Long])
+    }
+    if (isIntegralId(dtA)) {
+      val (e, n) = edges(pairs, col(aCol).cast("long"), col(bCol).cast("long"))
+      (e, n, None)
+    } else {
       val p = checkpointRound(pairs.select(col(aCol), col(bCol)))
       val m = surrogateIdMap(p, aCol, bCol)
-      val e = checkpointRound(
-        p.select(xxhash64(col(aCol)).as("src"), xxhash64(col(bCol)).as("dst")))
+      def sid(c: String) = when(col(c).isNotNull, xxhash64(col(c)))
+      val (e, n) = edges(p, sid(aCol), sid(bCol))
       releaseRound(p)
-      (e, Some(m))
+      (e, n, Some(m))
     }
+  }
+
+  /** Connected components of a pair frame: `(id, cluster_id)` for every id
+    * appearing in a pair, `cluster_id` = the component's minimum id (the
+    * minimum ORIGINAL id for string ids). The one engine behind
+    * [[DedupClusterOps.clusterPairs]] and
+    * [[DedupClusterOps.clusterPairsContraction]].
+    *
+    * The edge frame's row count comes from its own checkpoint job. When
+    * the edges pass the iteration gate ([[iterBroadcastFits]], the same
+    * `spark.graft.iterBroadcast.*` predicate that hints the loops'
+    * broadcasts), they are collected once and the components close on the
+    * driver by union-find ([[localComponents]]) — one job, no rounds, and
+    * labels held in the plan as a local relation, so nothing is left to
+    * release. Past the gate, the distributed contraction loop runs
+    * ([[contractComponents]]); `maxIters` bounds only that loop.
+    */
+  private[ext] def components(op: String, pairs: DataFrame, aCol: String, bCol: String,
+                              maxIters: Int): DataFrame = {
+    val (edges, nEdges, idMap) = clusterEdges(op, pairs, aCol, bCol)
+    val labels =
+      if (iterBroadcastFits(edges.sparkSession, edges.schema, nEdges)) {
+        val local = localComponents(edges)
+        releaseRound(edges)
+        local
+      } else contractComponents(op, edges, maxIters)
+    idMap.fold(labels)(m => translateLabels(labels, m))
+  }
+
+  /** Union-find over a collected `(a, b)` long edge frame: the node ids
+    * sorted into an index, each root the smallest index (so the smallest
+    * id) of its set — linking always hangs the larger root under the
+    * smaller one, with path halving on every find. The edges cross to the
+    * driver as one primitive array per partition, in one job.
+    */
+  private[ext] def localComponents(edges: DataFrame): DataFrame = {
+    val parts = edges.queryExecution.toRdd.mapPartitions { rows =>
+      val b = Array.newBuilder[Long]
+      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
+    }.collect()
+    val ends = parts.flatten
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    sorted.indices.foreach { i =>
+      if (i == 0 || sorted(i) != sorted(i - 1)) { sorted(n) = sorted(i); n += 1 }
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var k = 0
+    while (k < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, ends(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ends(k + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      k += 2
+    }
+    val rows = (0 until n).map { i =>
+      org.apache.spark.sql.catalyst.InternalRow(ids(i), ids(find(i)))
+    }
+    org.apache.spark.sql.GraftBridge.localRelation(edges.sparkSession,
+      new org.apache.spark.sql.types.StructType()
+        .add("id", org.apache.spark.sql.types.LongType)
+        .add("cluster_id", org.apache.spark.sql.types.LongType),
+      rows)
+  }
+
+  /** Connected components by alternating LARGE-STAR / SMALL-STAR
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC'14), the distributed body of [[components]] for edge
+    * frames past the iteration gate. Per round, large-star hangs every
+    * node's larger neighbors onto its minimum neighbor and small-star
+    * re-hangs the smaller ones; components contract to stars in
+    * O(log² diameter) rounds whatever the id order along a chain, and the
+    * working set is the edge list, which SHRINKS as components collapse.
+    * Each round is two groupBy-min + join-back passes, both partitioned by
+    * node id — no driver state. Every round is eagerly `localCheckpoint`ed
+    * (truncation is load-bearing: a round reads its predecessor several
+    * times, so without it the plan tree grows with rounds) and each dead
+    * round's blocks are released at once. The result plan reads the `ids`
+    * and final edge checkpoints; the consumer frees them with
+    * [[graft.core.Chain.releaseCheckpoints]].
+    */
+  private def contractComponents(op: String, edgesIn: DataFrame,
+                                 maxIters: Int): DataFrame = {
+    val ids = checkpointRound(
+      edgesIn.select(explode(array(col("a"), col("b"))).as("id")).distinct())
+    // the edge count rides the checkpoint materialization
+    // ([[graft.core.CheckpointProbe]]) — it drives BOTH the fixpoint
+    // probe and the in-loop broadcast gate, with no separate count job
+    val (edges0, edgeProbe) = graft.core.CheckpointProbe(
+      edgesIn.where(col("a") =!= col("b")).distinct(), "_cp_n" -> count(lit(1)))
+    var edges = edges0
+    releaseRound(edgesIn)
+    var prevCnt = edgeProbe(0).asInstanceOf[Long]
+    var it = 0
+    var converged = false
+    while (!converged && it < maxIters) {
+      // LARGE-STAR: hang every node's LARGER neighbors onto its minimum
+      // neighborhood member — emitted edges always point (larger → smaller)
+      val sym = edges.select(col("a").as("v"), col("b").as("u"))
+        .unionByName(edges.select(col("b").as("v"), col("a").as("u")))
+      // the per-node min frames are bounded by the round's MEASURED edge
+      // count (≤ 2·edges distinct centers) — broadcast-hint them when
+      // small, because both are aggregation outputs over checkpointRound
+      // frames whose statistics are the defaultSizeInBytes maximum, so no
+      // broadcast fires on its own
+      val bound = if (prevCnt > Long.MaxValue / 2) Long.MaxValue else prevCnt * 2
+      val mins = maybeBroadcastSmall(
+        sym.groupBy("v").agg(least(min(col("u")), first(col("v"))).as("m")), bound)
+      val ls = checkpointRound(sym.join(mins, "v").where(col("u") > col("v"))
+        .select(col("u").as("a"), col("m").as("b")).distinct())
+      // SMALL-STAR: per center, re-hang its smaller neighbors AND itself
+      // onto the smallest of them. The broadcast hint goes on the join
+      // side only: a hint under the union is no join relation, and Spark
+      // drops it with a HintErrorLogger warning on every round
+      val mins2 = ls.groupBy("a").agg(min(col("b")).as("m"))
+      // fixpoint = the round was the identity on the edge set (stars
+      // only). The edge count RIDES the round's checkpoint; the
+      // set-equality anti-join runs ONLY when counts tie — two distinct
+      // sets of equal size are equal iff one difference is empty, so a
+      // still-shrinking round pays no extra driver barrier
+      val (ss, ssProbe) = graft.core.CheckpointProbe(
+        ls.join(maybeBroadcastSmall(mins2, bound), "a")
+          .select(col("b").as("a"), col("m").as("b"))
+          .unionByName(mins2.select(col("a"), col("m").as("b")))
+          .where(col("a") =!= col("b")).distinct(),
+        "_cp_n" -> count(lit(1)))
+      releaseRound(ls)
+      val cnt = ssProbe(0).asInstanceOf[Long]
+      converged = cnt == prevCnt &&
+        ss.join(edges, Seq("a", "b"), "left_anti").isEmpty
+      prevCnt = cnt
+      releaseRound(edges)
+      edges = ss
+      it += 1
+    }
+    if (!converged) {
+      releaseRound(ids)
+      releaseRound(edges)
+      throw new IllegalStateException(
+        s"$op did not converge in $maxIters contraction rounds — raise maxIters")
+    }
+    val stars = maybeBroadcastSmall(
+      edges.select(col("a").as("_star_id"), col("b").as("_sroot")), prevCnt)
+    ids.join(stars, ids("id") === col("_star_id"), "left")
+      .select(col("id"), coalesce(col("_sroot"), col("id")).as("cluster_id"))
   }
 
   /** Translate a long-surrogate labels frame `(id, cluster_id)` back to
@@ -798,17 +939,17 @@ object DedupOps {
     * unchanged from the integral path: `cluster_id` = the component's
     * minimum id under the id column's own ordering, whatever the id
     * type. Everything here runs on the labels frame (one row per
-    * clustered doc, ≪ corpus). The labels/map checkpoints are superseded
-    * by the translated frame and released eagerly; the translated
-    * checkpoint rides in the result plan until the consumer's
-    * [[graft.core.Chain.releaseCheckpoints]].
+    * clustered doc, ≪ corpus). Every checkpoint the labels plan reads, and
+    * the map's, is superseded by the translated frame and released
+    * eagerly; the translated checkpoint rides in the result plan until the
+    * consumer's [[graft.core.Chain.releaseCheckpoints]].
     */
   private[ext] def translateLabels(labels: DataFrame, m: DataFrame): DataFrame = {
     val t = checkpointRound(labels
       .join(m.select(col("_sid").as("_ms"), col("_oid").as("_mo")),
         col("id") === col("_ms"))
       .select(col("_mo").as("id"), col("cluster_id").as("_csid")))
-    releaseRound(labels)
+    Chain.releaseCheckpoints(labels)
     releaseRound(m)
     // one explicit exchange on the surrogate cluster key feeds BOTH the
     // min aggregation and the join-back (ReusedExchange — the same
@@ -847,7 +988,7 @@ object DedupOps {
     * auto-broadcast nor AQE ever picks a broadcast for them and every
     * in-loop join shuffles BOTH sides, even when the label/contribution
     * map is a few hundred rows (measured round-17: ~9 scheduler jobs per
-    * propagation round at sf0.1, nearly all exchange stages of tiny
+    * label-propagation round at sf0.1, nearly all exchange stages of tiny
     * frames). The iterative ops already pay one bounded driver read per
     * round (the convergence probe), so the gate rides a count the loop
     * ALREADY has — no extra job, and the decision scales with the data:
@@ -867,15 +1008,24 @@ object DedupOps {
     * `spark.graft.iterBroadcast.maxBytes` (default 64 MB, the bench
     * AQE auto-broadcast ceiling).
     */
-  private[ext] def maybeBroadcastSmall(df: DataFrame, measuredRows: Long): DataFrame = {
-    val conf = df.sparkSession.conf
+  private[ext] def maybeBroadcastSmall(df: DataFrame, measuredRows: Long): DataFrame =
+    if (iterBroadcastFits(df.sparkSession, df.schema, measuredRows)) broadcast(df) else df
+
+  /** The one iteration gate: does a frame of `schema` with `measuredRows`
+    * rows fit the `spark.graft.iterBroadcast.*` row and byte caps? It
+    * decides the loops' broadcast hints ([[maybeBroadcastSmall]]) and
+    * whether [[components]] closes on the driver.
+    */
+  private[ext] def iterBroadcastFits(spark: org.apache.spark.sql.SparkSession,
+                                     schema: org.apache.spark.sql.types.StructType,
+                                     measuredRows: Long): Boolean = {
+    val conf = spark.conf
     val cap = conf.get("spark.graft.iterBroadcast.maxRows", "1000000").toLong
     val maxBytes = conf.get("spark.graft.iterBroadcast.maxBytes",
       (64L << 20).toString).toLong
     val stringBytes = conf.get("spark.graft.iterBroadcast.stringBytes", "48").toLong
-    if (cap > 0 && measuredRows >= 0 && measuredRows <= cap &&
-      broadcastFits(df.schema, measuredRows, maxBytes, stringBytes)) broadcast(df)
-    else df
+    cap > 0 && measuredRows >= 0 && measuredRows <= cap &&
+      broadcastFits(schema, measuredRows, maxBytes, stringBytes)
   }
 
   /** Byte gate for [[maybeBroadcastSmall]]: rows × estimated row width ≤
@@ -931,28 +1081,16 @@ object DedupOps {
   */
 final class DedupClusterOps(private val c: Chain) extends AnyVal {
 
-  /** cluster_pairs(id_a, id_b): connected components by iterative min-label
-    * propagation with pointer jumping — per round, every node takes the
-    * minimum label among itself and its neighbors (one equi-join + one
-    * min-aggregate, both shuffle-partitioned by node id), then chases one
-    * more hop through the previous round's label map (`label ← label of my
-    * label`, one additional equi-join on small label frames). Each
-    * materialized round therefore advances labels ~two hops, so rounds ≈
-    * half the component diameter — and near-dup clusters are shallow (dups
-    * of dups), so the declared per-round convergence probe runs a handful
-    * of times. Every round is eagerly `localCheckpoint`ed — truncation is
-    * load-bearing: a round references its predecessor 2-3 times, so
-    * without it the plan tree (and every action's plan-description
-    * rendering) grows geometrically with rounds — and each dead round's
-    * checkpoint blocks are explicitly released, so iteration leaves no
-    * storage residue behind in a long-running session. `maxIters` bounds
-    * adversarial chains; for huge chain-shaped components use
-    * [[clusterPairsContraction]]. Output: `(id, cluster_id)` for every id
-    * appearing in a pair. The OUTPUT frame itself is plan-truncated, so its
-    * blocks live until the consumer calls
-    * [[graft.core.Chain.releaseCheckpoints]] on the result (after the last
-    * read) — without that, each invocation in a long session retains one
-    * labels-frame of storage.
+  /** cluster_pairs(id_a, id_b): connected components, `(id, cluster_id)`
+    * for every id appearing in a pair, `cluster_id` = the component's
+    * minimum id. One engine ([[DedupOps.components]]): an edge set within
+    * the `spark.graft.iterBroadcast.*` gate is collected once and closed
+    * on the driver by union-find; a larger one runs the distributed
+    * large-star/small-star contraction loop, whose round count `maxIters`
+    * bounds (exceeding it fails loudly). A result from the distributed
+    * loop reads its checkpoint blocks until the consumer calls
+    * [[graft.core.Chain.releaseCheckpoints]] on it (after the last read);
+    * a driver-closed result holds its labels in the plan.
     *
     * Id types: integral ids run natively; STRING ids (UUID/URL corpus
     * keys) run through the collision-checked xxhash64 surrogate and
@@ -962,215 +1100,17 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
     * ([[DedupOps.requireClusterableId]]).
     */
   def clusterPairs(idACol: String = "id_a", idBCol: String = "id_b",
-                   maxIters: Int = 20): Chain = {
-    // clusterEdges checkpoints the pair pipeline BEFORE symmetrizing: the
-    // union's two branches would otherwise each re-run the whole upstream
-    // miner. Every round afterwards goes through checkpointRound
-    // (truncate, so plans never nest round-over-round) + releaseRound
-    // (free dead rounds' blocks — the storage residue that inflated
-    // long-session benchmarks).
-    val (edges, idMap) = DedupOps.clusterEdges("cluster_pairs", c.df, idACol, idBCol)
-    // miner pairs are unique (id_a < id_b), so the symmetrized union is
-    // dup-free by construction — no distinct shuffle. (User-fed duplicate
-    // pairs stay harmless: min-propagation is idempotent in its inputs.)
-    val sym = DedupOps.checkpointRound(edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst"))))
-    DedupOps.releaseRound(edges) // sym supersedes it
-    // labels only ever decrease, so the label SUM strictly decreases while
-    // anything changes — a convergence probe that RIDES each round's
-    // checkpoint materialization ([[graft.core.CheckpointProbe]], round
-    // 17: the old separate aggregate job re-scanned the fresh checkpoint
-    // every round — at corpus scale a full extra pass over its blocks).
-    // The same observation also returns the node count (constant across
-    // rounds — one row per id in a pair), which gates the in-loop
-    // broadcast hints below for free ([[DedupOps.maybeBroadcastSmall]]).
-    val probeMetrics = Seq(
-      "_cp_sum" -> sum(col("cluster_id").cast("decimal(38,0)")),
-      "_cp_n" -> count(lit(1)))
-    // round 0 folded into seeding: label = min(self, neighbors)
-    val (labels0, seedProbe) = graft.core.CheckpointProbe(
-      sym.groupBy(col("src").as("id"))
-        .agg(least(min(col("dst")), first(col("src"))).as("cluster_id")),
-      probeMetrics: _*)
-    var labels = labels0
-    var prevSum = seedProbe(0).asInstanceOf[java.math.BigDecimal]
-    val nNodes = seedProbe(1).asInstanceOf[Long]
-    var it = 0
-    // an EMPTY pair frame is already converged: labels0 is the empty
-    // (id, cluster_id) frame and the observed decimal sum is null — one
-    // round of the loop would NPE on s.compareTo(prevSum) (ADVICE r17)
-    var converged = nNodes == 0L
-    while (!converged && it < maxIters) {
-      // the label map is checkpointRound output — RDD-backed, so plan
-      // statistics are the defaultSizeInBytes maximum and no broadcast
-      // would ever fire on its own; hint it from the measured node count
-      // so a small map makes every in-loop join exchange-free (the sym
-      // and stepped sides then read their checkpoint blocks in place)
-      val labelsB = DedupOps.maybeBroadcastSmall(labels, nNodes)
-      val viaNbr = sym.join(labelsB, sym("src") === labels("id"))
-        .select(col("dst").as("id"), col("cluster_id"))
-      val stepped = labels.unionByName(viaNbr)
-        .groupBy("id").agg(min("cluster_id").as("cluster_id"))
-      // pointer jump through the PREVIOUS round's materialized map (no
-      // self-join of the un-materialized step output): label-of-label is
-      // still elementwise non-increasing, so the sum probe stays valid.
-      // (Round-17 note: chasing the prev map MORE than once per round was
-      // measured to buy nothing — the per-round label sums were identical
-      // with 1 and 3 chases on the deep-chain embedding fixture, because
-      // a chase only helps along the path of successive minima — while
-      // chained broadcast-join chases triggered a pathological per-round
-      // recompute blowup. One chase, broadcast when small, is the shape.)
-      val parents = DedupOps.maybeBroadcastSmall(
-        labels.select(col("id").as("_pid"), col("cluster_id").as("_pcl")),
-        nNodes)
-      val prev = labels
-      val (next, roundProbe) = graft.core.CheckpointProbe(
-        stepped.join(parents, stepped("cluster_id") === col("_pid"), "left")
-          .select(col("id"),
-            least(col("cluster_id"), coalesce(col("_pcl"), col("cluster_id"))).as("cluster_id")),
-        probeMetrics: _*)
-      labels = next
-      val s = roundProbe(0).asInstanceOf[java.math.BigDecimal]
-      DedupOps.releaseRound(prev) // this round is materialized; the old map is dead
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      it += 1
-    }
-    // the final labels frame keeps its blocks for the consumer (one row per
-    // clustered doc) — `Chain.releaseCheckpoints()` on the result is the
-    // documented owner-side release once nothing reads it again; the edge
-    // frame is scratch — release it now
-    DedupOps.releaseRound(sym)
-    if (!converged)
-      throw new IllegalStateException(
-        s"clusterPairs did not converge in $maxIters rounds — component diameter " +
-          "exceeds the bound; raise maxIters or use a contraction algorithm")
-    // string-keyed input: translate surrogates back to original ids
-    // (translateLabels releases the labels/map checkpoints eagerly and
-    // hands the consumer ONE retained frame — the translated labels)
-    val out = idMap.fold(labels)(m => DedupOps.translateLabels(labels, m))
-    c.next("dedup_clusters", out, None)
-  }
+                   maxIters: Int = 20): Chain =
+    c.next("dedup_clusters",
+      DedupOps.components("cluster_pairs", c.df, idACol, idBCol, maxIters), None)
 
-  /** cluster_pairs_contraction(id_a, id_b): connected components by
-    * alternating LARGE-STAR / SMALL-STAR contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    * edge-contraction complement to [[clusterPairs]]. Per round,
-    * large-star hangs every node's larger neighbors onto its minimum
-    * neighbor and small-star re-hangs the smaller ones; components
-    * contract to stars in O(log n) rounds. Where the label-propagation
-    * loop shuffles the FULL label map every round (one row per node,
-    * forever), contraction's working set is the edge list and it SHRINKS
-    * as components collapse — the bounded-memory formulation for huge,
-    * chain-shaped components (record linkage, web-graph-shaped
-    * similarity, transitive session stitching). Each round is two
-    * groupBy-min + join-back passes, both partitioned by node id — no
-    * driver state; intermediates persist MEMORY_AND_DISK and release as
-    * soon as the next round materializes. Output matches
-    * [[clusterPairs]]: `(id, cluster_id)` — cluster_id = the component's
-    * minimum id — for every id appearing in a pair. As with clusterPairs,
-    * release the result's retained blocks with
-    * [[graft.core.Chain.releaseCheckpoints]] once nothing reads it again.
-    *
-    * Id types, same admission as [[clusterPairs]]: integral ids run
-    * natively; string ids run through the collision-checked xxhash64
-    * surrogate and translate back on output (cluster_id re-canonicalized
-    * to the minimum ORIGINAL id); any other type — and mixed families —
-    * fails loudly at the op boundary.
+  /** cluster_pairs_contraction(id_a, id_b): [[clusterPairs]] under its
+    * historical name and round bound — the same engine, the same labels.
     */
   def clusterPairsContraction(idACol: String = "id_a", idBCol: String = "id_b",
-                              maxIters: Int = 50): Chain = {
-    // id-type dispatch shared with clusterPairs: integral native, string
-    // via collision-checked surrogate, else loud failure. clusterEdges
-    // returns a CHECKPOINTED edge frame — the one declared materialization
-    // of the upstream miner; `ids` (for the final labeling, incl.
-    // self-pairs) and the canonical edge set both read the truncated frame
-    // instead of re-running it. Every round goes through
-    // checkpointRound/releaseRound — see clusterPairs.
-    val (edgesIn, idMap) = DedupOps.clusterEdges("cluster_pairs_contraction", c.df, idACol, idBCol)
-    val raw = DedupOps.checkpointRound(
-      edgesIn.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")))
-    DedupOps.releaseRound(edgesIn)
-    val ids = DedupOps.checkpointRound(
-      raw.select(explode(array(col("a"), col("b"))).as("id")).distinct())
-    // the edge count rides the checkpoint materialization
-    // ([[graft.core.CheckpointProbe]]) — it drives BOTH the fixpoint
-    // probe and the in-loop broadcast gate, with no separate count job
-    val (edges0, edgeProbe) = graft.core.CheckpointProbe(
-      raw.where(col("a") =!= col("b")).distinct(), "_cp_n" -> count(lit(1)))
-    var edges = edges0
-    DedupOps.releaseRound(raw)
-    var prevCnt = edgeProbe(0).asInstanceOf[Long]
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      // LARGE-STAR: hang every node's LARGER neighbors onto its minimum
-      // neighborhood member — emitted edges always point (larger → smaller)
-      val sym = edges.select(col("a").as("v"), col("b").as("u"))
-        .unionByName(edges.select(col("b").as("v"), col("a").as("u")))
-      // the per-node min frames are bounded by the round's MEASURED edge
-      // count (≤ 2·edges distinct centers; the loop counts edges every
-      // round anyway) — broadcast-hint them when small, because both are
-      // aggregation outputs over checkpointRound frames whose statistics
-      // are the defaultSizeInBytes maximum, so no broadcast fires on its
-      // own and each round otherwise shuffles tiny frames on every join
-      val mins = DedupOps.maybeBroadcastSmall(
-        sym.groupBy("v").agg(least(min(col("u")), first(col("v"))).as("m")),
-        if (prevCnt > Long.MaxValue / 2) Long.MaxValue else prevCnt * 2)
-      val ls = DedupOps.checkpointRound(sym.join(mins, "v").where(col("u") > col("v"))
-        .select(col("u").as("a"), col("m").as("b")).distinct())
-      // SMALL-STAR: per center, re-hang its smaller neighbors AND itself
-      // onto the smallest of them. The broadcast hint goes on the join
-      // side only: a hint under the union is no join relation, and Spark
-      // drops it with a HintErrorLogger warning on every round
-      val mins2 = ls.groupBy("a").agg(min(col("b")).as("m"))
-      val mins2Hinted = DedupOps.maybeBroadcastSmall(mins2,
-        if (prevCnt > Long.MaxValue / 2) Long.MaxValue else prevCnt * 2)
-      // fixpoint = the round was the identity on the edge set (stars only).
-      // Probe cost: the edge count RIDES the round's checkpoint
-      // materialization (CheckpointProbe — no separate count job at all
-      // since round 17) and the set-equality anti-join runs ONLY when
-      // counts tie — two distinct sets of equal size are equal iff one
-      // difference is empty, so a still-shrinking round pays ZERO extra
-      // driver barriers. On iterative ops the per-round driver barrier
-      // count is the wall-clock driver at cluster scale.
-      val (ss, ssProbe) = graft.core.CheckpointProbe(
-        ls.join(mins2Hinted, "a")
-          .select(col("b").as("a"), col("m").as("b"))
-          .unionByName(mins2.select(col("a"), col("m").as("b")))
-          .where(col("a") =!= col("b")).distinct(),
-        "_cp_n" -> count(lit(1)))
-      DedupOps.releaseRound(ls)
-      val cnt = ssProbe(0).asInstanceOf[Long]
-      converged = cnt == prevCnt &&
-        ss.join(edges, Seq("a", "b"), "left_anti").isEmpty
-      prevCnt = cnt
-      DedupOps.releaseRound(edges)
-      edges = ss
-      it += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"clusterPairsContraction did not converge in $maxIters rounds")
-    val stars = DedupOps.maybeBroadcastSmall(
-      edges.select(col("a").as("_star_id"), col("b").as("_sroot")), prevCnt)
-    val labels = ids.join(stars, ids("id") === col("_star_id"), "left")
-      .select(col("id"), coalesce(col("_sroot"), col("id")).as("cluster_id"))
-    // integral path: `out` = the labels plan itself, so the `ids` and final
-    // `edges` checkpoint blocks ride in the result plan and the consumer's
-    // releaseCheckpoints frees them. String path: translateLabels TRUNCATES
-    // the result with its own localCheckpoint — ids/edges drop out of the
-    // result plan and the consumer can never free them, so release them
-    // here, eagerly, right after the translated frame is materialized.
-    val out = idMap.fold(labels) { m =>
-      val t = DedupOps.translateLabels(labels, m)
-      DedupOps.releaseRound(ids)
-      DedupOps.releaseRound(edges)
-      t
-    }
-    c.next("dedup_clusters", out, None)
-  }
+                              maxIters: Int = 50): Chain =
+    c.next("dedup_clusters",
+      DedupOps.components("cluster_pairs_contraction", c.df, idACol, idBCol, maxIters), None)
 
   /** dedup_near(id, text, n, threshold, keep_by): the end-to-end near-dup
     * corpus pass — mine exact n-gram-Jaccard pairs, connect them into
@@ -1182,7 +1122,8 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
     * a corpus.
     *
     * Scale shape = ngramJaccardPairs (PPJoin / inverted index, no n²) +
-    * clusterPairs (rounds ≈ half cluster diameter) + one labels join and
+    * clusterPairs (a driver union-find within the iteration gate, the
+    * contraction loop past it) + one labels join and
     * one window over the cluster id. The labels frame is one row per
     * CLUSTERED doc (≪ corpus); AQE broadcasts it when small. The result
     * plan embeds the labels frame's checkpoint blocks —
@@ -1198,7 +1139,6 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
   def dedupNear(idCol: String, textCol: String, n: Int = 3, threshold: Double = 0.5,
                 keepBy: Seq[(String, String)] = Nil,
                 candidates: String = "exact",
-                clusterer: String = "propagation",
                 numHashes: Int = 32, bands: Int = 0): Chain = {
     // fail on unsupported id types BEFORE any mining work
     DedupOps.requireClusterableId("dedup_near", idCol, c.df.schema(idCol).dataType)
@@ -1221,16 +1161,7 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
       case other => throw new IllegalArgumentException(
         s"dedup_near candidates must be exact or minhash, got $other")
     }
-    // cluster stage dial: min-label propagation (default — shallow dup
-    // clusters) or large-star/small-star contraction (huge chain-shaped
-    // components); both emit identical (id, cluster_id = component min)
-    val clusters = clusterer match {
-      case "propagation" => new DedupClusterOps(pairs).clusterPairs()
-      case "contraction" => new DedupClusterOps(pairs).clusterPairsContraction()
-      case other => throw new IllegalArgumentException(
-        s"dedup_near clusterer must be propagation or contraction, got $other")
-    }
-    keepOnePerCluster(clusters, idCol, keepBy, "dedup_near")
+    keepOnePerCluster(new DedupClusterOps(pairs).clusterPairs(), idCol, keepBy, "dedup_near")
   }
 
   /** dedup_near_embedding(id, vec, threshold, keep_by): the SEMANTIC
@@ -1250,17 +1181,7 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
     * whose vectors share no assigned cell are missed; `nassign` is the
     * recall dial (recall-gated in the spec — the usual SemDeDup regime
     * of a TIGHT threshold keeps near-identical pairs co-located). The
-    * cluster and keep-one stages are identical to the lexical op. The
-    * default clusterer STAYS `"propagation"` — round 18 measured the
-    * contraction default the r17 verdict proposed and it REGRESSED this
-    * face (sf0.1 deep-chain fixture, best-of-3: 4.75 -> 6.92 s, 62 -> 89
-    * scheduler jobs): a long similarity chain is large-star/small-star's
-    * worst case (O(log^2 diameter) rounds, each paying TWO checkpoints +
-    * a distinct + a fixpoint anti-join), while the broadcast-gated
-    * propagation round is one cheap join+aggregate. Contraction remains
-    * the right dial when the EDGE SET dwarfs memory (it shrinks as
-    * components collapse); labels are identical either way
-    * (Round18Spec pins equality on the deep-chain fixture).
+    * cluster and keep-one stages are identical to the lexical op.
     *
     * Id types: `idCol` must be integral (tinyint/smallint/int/bigint —
     * runs natively) or string (collision-checked xxhash64 surrogate,
@@ -1271,7 +1192,6 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
   def dedupNearEmbedding(idCol: String, vecCol: String, threshold: Double,
                          keepBy: Seq[(String, String)] = Nil,
                          candidates: String = "exact",
-                         clusterer: String = "propagation",
                          nlist: Int = 16, nassign: Int = 2,
                          trainSample: Int = 4096,
                          trainIters: Int = 15, maxRows: Long = 1000000L): Chain = {
@@ -1287,13 +1207,8 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
       case other => throw new IllegalArgumentException(
         s"dedup_near_embedding candidates must be exact or ivf, got $other")
     }
-    val clusters = clusterer match {
-      case "propagation" => new DedupClusterOps(pairs).clusterPairs()
-      case "contraction" => new DedupClusterOps(pairs).clusterPairsContraction()
-      case other => throw new IllegalArgumentException(
-        s"dedup_near_embedding clusterer must be propagation or contraction, got $other")
-    }
-    keepOnePerCluster(clusters, idCol, keepBy, "dedup_near_embedding")
+    keepOnePerCluster(new DedupClusterOps(pairs).clusterPairs(), idCol, keepBy,
+      "dedup_near_embedding")
   }
 
   /** The IVF candidate-pair miner behind `dedupNearEmbedding(candidates =
@@ -1311,12 +1226,10 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
     // ids pass through untyped (ranking, windows and pair comparisons
     // all work on any orderable type); the cluster stage downstream
     // owns the integral/string dispatch
-    val corpus = c.df.select(col(idCol).as("_id"), col(vecCol).as("_v"))
-      .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
-      // zero-norm/NaN vectors never pair (NaN cosine passes the
-      // threshold and would merge whole cells); they stay singletons
-      // and SURVIVE the dedup untouched
-      .where(SimilarityOps.usableVec(col("_v"), col("_n")))
+    // zero-norm/NaN vectors never pair (NaN cosine passes the threshold
+    // and would merge whole cells); they stay singletons and SURVIVE the
+    // dedup untouched
+    val corpus = SimilarityOps.withNorm(c.df, idCol, vecCol, "_id", "_v", "_n")
       // barrier: the nassign > 1 top-m window is partitioned by _id and
       // reads this exchange's partitioning
       .repartition(col("_id"))

@@ -144,12 +144,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
         "(the pool is a per-query driver-bounded frame — cap it, don't stream it)")
     require(lambdaPct >= 0 && lambdaPct <= 100,
       s"mmr_rerank: lambdaPct must be in [0, 100], got $lambdaPct")
-    def withNorm(df: DataFrame, idAs: String, vAs: String, nAs: String) =
-      df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
-        .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
-        .where(SimilarityOps.usableVec(col(vAs), col(nAs)))
-    val corpus = withNorm(c.df, "neighbor_id", "_vc", "_nc")
-    val qs = withNorm(queries, "query_id", "_vq", "_nq")
+    val corpus = SimilarityOps.withNorm(c.df, idCol, vecCol, "neighbor_id", "_vc", "_nc")
+    val qs = SimilarityOps.withNorm(queries, idCol, vecCol, "query_id", "_vq", "_nq")
     val rel = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
     val poolW = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("neighbor_id").asc)
@@ -206,9 +202,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
                         planes: Int = 256, rerankPerQuery: Int = 100): Chain = {
     require(rerankPerQuery >= k, s"rerankPerQuery ($rerankPerQuery) must be >= k ($k)")
     def prep(df: DataFrame, idAs: String, vAs: String, nAs: String, sAs: String) =
-      df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
-        .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
-        .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
+      SimilarityOps.withNorm(df, idCol, vecCol, idAs, vAs, nAs)
         .withColumn(sAs, SignSketch(col(vAs), planes))
     val corpus = prep(c.df, "neighbor_id", "_vc", "_nc", "_skc")
     val qs = prep(queries, "query_id", "_vq", "_nq", "_skq")
@@ -1493,9 +1487,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     require(multiProbe >= 0 && multiProbe <= rows,
       s"multiProbe must be in [0, rows], got $multiProbe")
     def prep(df: DataFrame, idAs: String, vAs: String, nAs: String) =
-      df.select(col(idCol).as(idAs), col(vecCol).as(vAs))
-        .withColumn(nAs, sqrt(Exact.dot(col(vAs), col(vAs))))
-        .where(SimilarityOps.usableVec(col(vAs), col(nAs))) // NaN cosine would rank FIRST
+      SimilarityOps.withNorm(df, idCol, vecCol, idAs, vAs, nAs)
         .withColumn("_sk", SignSketch(col(vAs), planes))
     // band b's key = bits [b*rows, (b+1)*rows) of the sketch
     def bandKey(b: Int) = {

@@ -153,13 +153,18 @@ object GraftFunctions {
   private def info(name: String): ExpressionInfo =
     new ExpressionInfo("graft.functions.GraftFunctions", name)
 
-  /** Register every kernel on an existing session (idempotent —
-    * re-registration overwrites with the same builder).
+  /** Register every kernel the session's function registry does not
+    * already hold (idempotent: a second `GraftSession` over one session
+    * registers nothing, so Spark logs no "replaced a previously
+    * registered function" line per kernel).
     */
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "scala_udf")
     }
+  }
 
   /** The injection list for [[GraftExtensions]]. */
   private[functions] def inject(ext: SparkSessionExtensions): Unit =

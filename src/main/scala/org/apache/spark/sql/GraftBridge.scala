@@ -31,12 +31,17 @@ object GraftBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
-  /** Non-blocking read of an [[Observation]]'s metrics (`getOrEmpty` is
-    * `private[sql]`; the public `get` blocks forever if the observed
-    * action never fires its listener — callers that piggyback a metric on
-    * a checkpoint materialization need a bounded poll instead).
+  /** A DataFrame over driver-held INTERNAL rows as a `LocalRelation`
+    * (`Dataset.ofRows` is `private[sql]`): the rows live in the plan, whose
+    * size statistics let the planner broadcast it, and no block is stored.
     */
-  def observationResult(o: Observation): Map[String, Any] = o.getOrEmpty
+  def localRelation(
+      spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
   /** Spark's own rule for the file and directory names a file-source
     * listing skips (`_`/`.` prefixes, in-flight `._COPYING_` copies, but

@@ -224,10 +224,12 @@ class ExtSpec extends AnyFunSuite {
 
   test("clusterPairs fails loudly when the iteration bound is too small") {
     import spark.implicits._
-    // a 6-hop path needs several propagation rounds; 1 is not enough
+    // a 6-hop path needs several contraction rounds; 1 is not enough.
+    // The bound governs the distributed loop, which runs past the
+    // iteration gate — closed here
     val path = (1L to 6L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("id_a", "id_b")
     intercept[IllegalStateException] {
-      Chain(spark, "p", path).clusterPairs(maxIters = 1)
+      gateClosed(Chain(spark, "p", path).clusterPairs(maxIters = 1))
     }
   }
 

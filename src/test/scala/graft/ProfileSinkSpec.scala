@@ -18,23 +18,35 @@ class ProfileSinkSpec extends AnyFunSuite {
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
+  /** One stored-profile sink: `refRows` is the row count of the reference
+    * profile a drift sink pins at start (0: the sink keeps none), and
+    * `touched` checks the stored values after the touched-key batch.
+    */
   private case class Sink(label: String, run: (DataFrame, String, String) => Unit,
-                          writesRef: Boolean = false)
+                          refRows: Long = 0, touched: String => Unit = _ => ())
 
   private lazy val reference = (1 to 12).map(i => row(i, i % 3, 0)).toDF()
 
   private val sinks = Seq(
     Sink("distinct sketch", (df, name, ck) => EventStreams.sinkDistinctSketchToTable(
-      df, Seq("g"), "user_id", name, ck, profileBuckets = 8)),
+      df, Seq("g"), "user_id", name, ck, profileBuckets = 8), touched = name => {
+      // estimates survive the bucketed rewrite: k1 merges batch-1 user 1
+      // with batch-2 users 30..39, every other key keeps its one user
+      val est = spark.sql(s"SELECT g, hll_sketch_estimate(_sk) FROM $name")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(est.size == 24)
+      assert(est("k1") >= 10 && est("k1") <= 12, s"k1 estimate ${est("k1")}")
+      assert(est("k2") == 1L, s"untouched key estimate changed: ${est("k2")}")
+    }),
     Sink("freq sketch", (df, name, ck) => EventStreams.sinkFreqSketchToTable(
       df, Seq("g"), "user_id", name, ck, profileBuckets = 8)),
     Sink("quantile sketch", (df, name, ck) => EventStreams.sinkQuantileSketchToTable(
       df, Seq("g"), "value", name, ck, profileBuckets = 8)),
     Sink("drift", (df, name, ck) => EventStreams.sinkDriftUpsertToTable(
-      df, reference, "g", "1 hour", name, ck, profileBuckets = 8), writesRef = true),
+      df, reference, "g", "1 hour", name, ck, profileBuckets = 8), refRows = 3),
     Sink("numeric drift", (df, name, ck) => EventStreams.sinkDriftNumericUpsertToTable(
       df, reference, "value", "1 hour", 0.0, 1.0, 4, name, ck, profileBuckets = 8),
-      writesRef = true),
+      refRows = 4),
     Sink("calibration", (df, name, ck) => EventStreams.sinkCalibrationUpsertToTable(
       df, "value", "label", name, ck, buckets = 4, groupBy = Seq("g"), profileBuckets = 8)),
     Sink("agreement", (df, name, ck) => EventStreams.sinkAgreementUpsertToTable(
@@ -75,8 +87,11 @@ class ProfileSinkSpec extends AnyFunSuite {
       val name = fresh(sink, "empty")
       drain(sink, Nil, name)
       assert(!spark.catalog.tableExists(name), sink.label)
-      // the drift sinks pin their reference at sink start, batches or not
-      assert(spark.catalog.tableExists(s"${name}_ref") == sink.writesRef, sink.label)
+      // the drift sinks pin their reference profile (one row per reference
+      // value or bucket) at sink start, batches or not
+      val ref = s"${name}_ref"
+      assert(spark.catalog.tableExists(ref) == sink.refRows > 0, sink.label)
+      if (sink.refRows > 0) assert(spark.table(ref).count() == sink.refRows, sink.label)
     }
   }
 
@@ -120,6 +135,7 @@ class ProfileSinkSpec extends AnyFunSuite {
       val untouched = before.filter { case (p, _) => !rewritten.contains(p.getParent) }
       assert(untouched.nonEmpty && untouched.forall { case (p, t) => after.get(p).contains(t) },
         s"${sink.label}: untouched partitions must keep their files (same path, same mtime)")
+      sink.touched(name)
     }
   }
 

@@ -280,7 +280,7 @@ class Round12Spec extends AnyFunSuite {
       "all-invalid group: full spine, null ece")
   }
 
-  test("calibration sink ungrouped: converges; empty stream never creates the table") {
+  test("calibration sink ungrouped: converges to the batch face") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     spark.sql("DROP TABLE IF EXISTS cal_sink_u")
@@ -288,7 +288,7 @@ class Round12Spec extends AnyFunSuite {
     val b2 = Seq((0.30, 1), (Double.NaN, 1))
     def drain(rowsIn: Seq[(Double, Int)], name: String): Unit = {
       val ms = MemoryStream[(Double, Int)]
-      if (rowsIn.nonEmpty) ms.addData(rowsIn: _*)
+      ms.addData(rowsIn: _*)
       EventStreams.sinkCalibrationUpsertToTable(
         ms.toDF().toDF("score", "label"), "score", "label", name,
         java.nio.file.Files.createTempDirectory("graft_ckpt_calu").toString,
@@ -302,10 +302,6 @@ class Round12Spec extends AnyFunSuite {
     val want = rows(Chain(spark, "calu", (b1 ++ b2).toDF("score", "label"))
       .calibrationProfile("score", "label", 4).df.select(visible.map(col): _*))
     assert(got == want)
-    spark.sql("DROP TABLE IF EXISTS cal_sink_never")
-    drain(Nil, "cal_sink_never")
-    assert(!spark.catalog.tableExists("cal_sink_never"),
-      "an all-empty stream must not create the table (and must not throw)")
   }
 
   test("agreement sink: additive class-frame merges converge to the batch face") {
@@ -331,14 +327,6 @@ class Round12Spec extends AnyFunSuite {
       (b1 ++ b2).toDF("g", "a", "b"))
       .agreementProfile("a", "b", groupBy = Seq("g")).df)
     assert(got == want, "stored table must equal the batch face over all delivered rows")
-    // and empty stream: no table, no throw
-    spark.sql("DROP TABLE IF EXISTS agree_sink_never")
-    val ms = MemoryStream[(String, String, String)]
-    EventStreams.sinkAgreementUpsertToTable(ms.toDF().toDF("g", "a", "b"),
-      "a", "b", "agree_sink_never",
-      java.nio.file.Files.createTempDirectory("graft_ckpt_ag2").toString,
-      groupBy = Seq("g"))
-    assert(!spark.catalog.tableExists("agree_sink_never"))
   }
 
   test("null group values survive the grouped closings (calibration, cohort, agreement)") {

@@ -205,32 +205,6 @@ class Round18Spec extends AnyFunSuite {
       "releaseCheckpoints must free the profile checkpoint")
   }
 
-  // ---- dedupNearEmbedding: contraction default ≡ propagation ----------
-
-  test("dedupNearEmbedding: contraction default equals propagation on a deep chain") {
-    // embeddings forming one long similarity CHAIN (each vector close to
-    // its neighbor, far from the rest): v_i = unit(cos(i*step), sin(i*step))
-    // — consecutive cosines ≈ cos(0.35) = 0.939 pass the 0.9 threshold,
-    // two-apart cos(0.7) = 0.765 fails; the adversarial diameter shape
-    // the contraction default exists for, plus isolated singletons
-    val step = 0.35
-    val chain = (0 until 24).map { i =>
-      (i.toLong, Seq(math.cos(i * step), math.sin(i * step)), s"d$i")
-    }
-    val iso = Seq((100L, Seq(0.0, -1.0), "iso1"), (101L, Seq(-1.0, 0.0), "iso2"))
-    val df = (chain ++ iso).toDF("vec_id", "embedding", "meta")
-    def run(clu: String) = rows(Chain(spark, "e", df)
-      .dedupNearEmbedding("vec_id", "embedding", 0.9, clusterer = clu).df)
-    val contraction = run("contraction")
-    val propagation = run("propagation")
-    assert(contraction == propagation,
-      s"contraction=$contraction\npropagation=$propagation")
-    // the default STAYS propagation (the contraction default was measured
-    // and regressed — see dedupNearEmbedding's docstring)
-    assert(rows(Chain(spark, "e", df)
-      .dedupNearEmbedding("vec_id", "embedding", 0.9).df) == propagation)
-  }
-
   test("clusterPairs: an empty pair frame returns empty labels (no NPE)") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     val got = Chain(spark, "p", empty).clusterPairs().df

@@ -532,23 +532,31 @@ class ScaleOpsSpec extends AnyFunSuite {
     val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     def persisted = spark.sparkContext.getPersistentRDDs.size
     val base = persisted
-    // twice in one session: residue must not accumulate across invocations
-    (1 to 2).foreach { _ =>
-      val labels = Chain(spark, "p", pairs).clusterPairs()
-      assert(labels.df.count() == 41)
-      assert(persisted > base, "labels blocks stay alive for the consumer")
-      labels.releaseCheckpoints()
-      assert(persisted == base, "release must return storage to baseline")
+    // the driver finish (below the iteration gate) holds its labels in
+    // the plan: no block outlives the build, before any release
+    val local = Chain(spark, "p", pairs).clusterPairs()
+    assert(local.df.count() == 41)
+    assert(persisted == base, "the driver-closed labels leave no residue")
+    // the distributed loop (gate closed), twice in one session: residue
+    // must not accumulate across invocations
+    gateClosed {
+      (1 to 2).foreach { _ =>
+        val labels = Chain(spark, "p", pairs).clusterPairs()
+        assert(labels.df.count() == 41)
+        assert(persisted > base, "labels blocks stay alive for the consumer")
+        labels.releaseCheckpoints()
+        assert(persisted == base, "release must return storage to baseline")
+      }
+      val viaContraction = Chain(spark, "p", pairs).clusterPairsContraction()
+      assert(viaContraction.df.count() == 41)
+      viaContraction.releaseCheckpoints()
+      assert(persisted == base)
+      val docs = table("documents")
+      val nearDeduped = docs.dedupNear("doc_id", "text", n = 3, threshold = 0.5)
+      assert(nearDeduped.df.count() > 0)
+      nearDeduped.releaseCheckpoints()
+      assert(persisted == base)
     }
-    val viaContraction = Chain(spark, "p", pairs).clusterPairsContraction()
-    assert(viaContraction.df.count() == 41)
-    viaContraction.releaseCheckpoints()
-    assert(persisted == base)
-    val docs = table("documents")
-    val nearDeduped = docs.dedupNear("doc_id", "text", n = 3, threshold = 0.5)
-    assert(nearDeduped.df.count() > 0)
-    nearDeduped.releaseCheckpoints()
-    assert(persisted == base)
   }
 
   test("string-id clusterPairs: surrogate translate is two long-keyed joins over checkpointed frames") {
@@ -601,7 +609,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     spark.sparkContext.addSparkListener(listener)
-    val got = try {
+    val got = try gateClosed {
       val out = Chain(spark, "p", pairs).clusterPairsContraction()
       val n = out.df.count()
       out.releaseCheckpoints()

@@ -241,6 +241,65 @@ class SessionSpec extends AnyFunSuite {
       s"unlisted: ${found.toSet -- allowed.keySet}; gone: ${allowed.keySet -- found.toSet}")
   }
 
+  test("src/main observes metrics in one mechanism and runs one connected-components loop") {
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    // (file, enclosing def) of every code line holding `needle`
+    def uses(needle: String): Seq[(String, String)] = mainSources.flatMap { f =>
+      import scala.jdk.CollectionConverters._
+      var enclosing = ""
+      java.nio.file.Files.readAllLines(f).asScala.toSeq.filterNot(isComment).flatMap { line =>
+        """\bdef\s+(\w+)""".r.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+        if (line.contains(needle)) Seq(f.getFileName.toString -> enclosing) else Nil
+      }
+    }.sorted
+    // CheckpointProbe's one observation (inside its Observed class) and the
+    // chain verb that hands a caller's Observation to Spark
+    assert(uses("Observation(").isEmpty, uses("Observation(").mkString("\n"))
+    assert(uses(".observe(").map(_._1) == Seq("Chain.scala", "CheckpointProbe.scala"),
+      uses(".observe(").mkString("\n"))
+    assert(uses(".observe(").contains("Chain.scala" -> "observed"))
+    // one connected-components body: the contraction loop in DedupOps
+    assert(uses("while (!converged") == Seq("DedupOps.scala" -> "contractComponents"),
+      uses("while (!converged").mkString("\n"))
+  }
+
+  test("a second GraftSession on one session re-registers no kernel") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-registry-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    // the function registry logs its replacement warning under its own
+    // package; the suite's session logs at ERROR, so lift it to WARN here
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("org.apache.spark.sql.catalyst.analysis")
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    try {
+      GraftSession(spark)
+      GraftSession(spark)
+    } finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val replaced = lines.asScala.filter(_.contains("replaced a previously registered function"))
+    assert(replaced.isEmpty, replaced.mkString("\n"))
+    val missing = graft.functions.GraftFunctions.registeredNames
+      .filterNot(n => spark.catalog.functionExists(n))
+    assert(missing.isEmpty, s"unresolvable kernels: $missing")
+  }
+
   test("a harness run counts the jobs of its own job group") {
     // a collect of a range needs no exchange: one job, one stage
     val one = Harness.run(spark, "session-spec-count", timeoutSec = 60)(spark.range(10).collect())

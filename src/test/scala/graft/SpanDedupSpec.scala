@@ -87,19 +87,16 @@ class SpanDedupSpec extends AnyFunSuite {
     assert(kept == Seq(2L, 3L))
   }
 
-  test("dedupNear with the contraction clusterer is hash-equal to propagation") {
-    // sf-scaled end-to-end: same miner, both component algorithms, same
-    // survivors — the round-6 ask that the contraction path be selectable
-    // from the end-to-end op, not only from clusterPairsContraction
+  test("dedupNear with the driver finish is hash-equal to the distributed loop") {
+    // sf-scaled end-to-end: same miner, both component paths (the driver
+    // union-find below the iteration gate, the contraction loop with the
+    // gate closed), same survivors
     val docs = table("documents")
-    val prop = rows(docs.dedupNear("doc_id", "text", n = 3, threshold = 0.5,
+    def run() = rows(docs.dedupNear("doc_id", "text", n = 3, threshold = 0.5,
       keepBy = Seq("n_chars" -> "DESC")).df)
-    val contr = rows(docs.dedupNear("doc_id", "text", n = 3, threshold = 0.5,
-      keepBy = Seq("n_chars" -> "DESC"), clusterer = "contraction").df)
-    assert(prop == contr)
-    val e = intercept[IllegalArgumentException](
-      docs.dedupNear("doc_id", "text", clusterer = "nope").df)
-    assert(e.getMessage.contains("clusterer"))
+    val local = run()
+    val distributed = gateClosed(run())
+    assert(local == distributed)
   }
 
   test("dedup/cluster family handles string ids, equal to numeric relabeling") {
@@ -119,10 +116,10 @@ class SpanDedupSpec extends AnyFunSuite {
       .dedupNear("doc_uid", "text", n = 3, threshold = 0.5,
         keepBy = Seq("n_chars" -> "DESC")).df)
     assert(keptNum == keptStr, "string-keyed dedup must keep the same documents")
-    // contraction clusterer agrees on the string-keyed corpus too
-    val keptStrC = surv(Chain(spark, "sdocs", strDf)
+    // the distributed loop agrees on the string-keyed corpus too
+    val keptStrC = gateClosed(surv(Chain(spark, "sdocs", strDf)
       .dedupNear("doc_uid", "text", n = 3, threshold = 0.5,
-        keepBy = Seq("n_chars" -> "DESC"), clusterer = "contraction").df)
+        keepBy = Seq("n_chars" -> "DESC")).df))
     assert(keptStr == keptStrC)
     // direct cluster op on string pairs: same components as the long
     // fixture, with the representative canonicalized to the component's
@@ -131,8 +128,8 @@ class SpanDedupSpec extends AnyFunSuite {
     val comp = Chain(spark, "sp", sPairs).clusterPairs().df.collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(comp == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
-    val compC = Chain(spark, "sp", sPairs).clusterPairsContraction().df.collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val compC = gateClosed(Chain(spark, "sp", sPairs).clusterPairsContraction().df.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap)
     assert(compC == comp)
   }
 

@@ -442,56 +442,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(post1 == 0, "replay must not duplicate postings")
   }
 
-  test("profile sink rewrites only touched buckets, not the whole table") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    val base = 1704067200L * 1000000000L
-    def evt(id: Long, tpe: String, user: Long) =
-      Evt(id, base + id * 60L * 1000000000L, user, tpe, 1.0, "{}")
-    spark.sql("DROP TABLE IF EXISTS stream_profile_bkt_t")
-    def drain(events: Evt*): Unit = {
-      val ms = MemoryStream[Evt]
-      ms.addData(events: _*)
-      EventStreams.sinkDistinctSketchToTable(ms.toDF(), Seq("event_type"), "user_id",
-        "stream_profile_bkt_t", Files.createTempDirectory("graft_ckpt_pb").toString,
-        profileBuckets = 8)
-    }
-    // batch 1: 24 event types spread the keys across the 8 hash buckets
-    drain((1L to 24L).map(i => evt(i, s"type_$i", i)): _*)
-    val tableDir = Paths.get(new java.net.URI(
-      spark.sql("DESCRIBE TABLE EXTENDED stream_profile_bkt_t")
-        .where("col_name = 'Location'").collect()(0).getString(1)))
-    def dataFiles(): Map[String, Long] = {
-      val out = scala.collection.mutable.Map[String, Long]()
-      Files.walk(tableDir).forEach { p =>
-        val n = p.getFileName.toString
-        if (Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith("."))
-          out(tableDir.relativize(p).toString) = Files.getLastModifiedTime(p).toMillis
-      }
-      out.toMap
-    }
-    val before = dataFiles()
-    assert(before.nonEmpty)
-    // batch 2: one key -> one touched bucket; every other bucket's files
-    // must survive the batch byte-identical (same path, same mtime)
-    drain((30L to 39L).map(i => evt(100 + i, "type_1", i)): _*)
-    val after = dataFiles()
-    val surviving = before.filter { case (p, t) => after.get(p).contains(t) }
-    assert(surviving.nonEmpty,
-      s"untouched buckets must keep their files; before=${before.keySet}, after=${after.keySet}")
-    assert(surviving.size < after.size,
-      "the touched bucket must actually be rewritten")
-    // estimates unchanged by the bucketed rewrite
-    val est = spark.sql(
-      "SELECT event_type, hll_sketch_estimate(_sk) FROM stream_profile_bkt_t")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est.size == 24)
-    assert(est("type_1") >= 10 && est("type_1") <= 12,
-      s"type_1 merges batch-1 user 1 with batch-2 users 30..39, got ${est("type_1")}")
-    assert(est("type_2") == 1L, s"untouched key estimate unchanged, got ${est("type_2")}")
-  }
-
   test("streaming upsert sink converges under redelivery") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql = spark.sqlContext
@@ -577,7 +527,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(!spark.catalog.tableExists("empty_corpus_idx"))
   }
 
-  test("append, tfidf-, embedding-ingest and profile sinks run an all-empty stream to clean completion") {
+  test("append, tfidf- and embedding-ingest sinks finish an all-empty stream cleanly") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql = spark.sqlContext
     import spark.implicits._
@@ -608,26 +558,6 @@ class StreamingSpec extends AnyFunSuite {
       threshold = 0.9, nlist = 2, indexBuckets = 2)
     assert(!spark.catalog.tableExists("empty_vec_t"))
     assert(!spark.catalog.tableExists("empty_vec_idx"))
-
-    spark.sql("DROP TABLE IF EXISTS empty_profile_t")
-    val msS = MemoryStream[Evt]
-    EventStreams.sinkDistinctSketchToTable(msS.toDF(), Seq("event_type"), "user_id",
-      "empty_profile_t", Files.createTempDirectory("graft_ckpt_es").toString,
-      profileBuckets = 2)
-    assert(!spark.catalog.tableExists("empty_profile_t"))
-
-    // drift sink: no drift table on an empty stream, but the PINNED
-    // reference profile is written at sink start by design
-    spark.sql("DROP TABLE IF EXISTS empty_drift_t")
-    spark.sql("DROP TABLE IF EXISTS empty_drift_t_ref")
-    val msDr = MemoryStream[Evt]
-    val refEv = Seq(Evt(1L, 0L, 1L, "click", 1.0, "{}")).toDF()
-    EventStreams.sinkDriftUpsertToTable(msDr.toDF(), refEv, "event_type", "1 hour",
-      "empty_drift_t", Files.createTempDirectory("graft_ckpt_edr").toString,
-      profileBuckets = 2)
-    assert(!spark.catalog.tableExists("empty_drift_t"))
-    assert(spark.catalog.tableExists("empty_drift_t_ref"))
-    assert(spark.table("empty_drift_t_ref").count() == 1)
   }
 }
 

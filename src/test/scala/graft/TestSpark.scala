@@ -32,6 +32,15 @@ object TestSpark {
   def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Run `body` with the iteration gate closed
+    * (`spark.graft.iterBroadcast.maxRows=0`): connected components then
+    * take the distributed contraction loop instead of the driver finish.
+    */
+  def gateClosed[T](body: => T): T = {
+    spark.conf.set("spark.graft.iterBroadcast.maxRows", "0")
+    try body finally spark.conf.unset("spark.graft.iterBroadcast.maxRows")
+  }
+
   /** Each Dataset action `build` runs, as its executed plan's text (a
     * failed action as "FAILED <exception>").
     */
