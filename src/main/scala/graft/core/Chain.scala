@@ -46,17 +46,21 @@ final class Chain private (
     val entryName: String,
     val df: DataFrame,
     val steps: Vector[TransformStep],
-    superseded: Set[Int]) {
+    superseded: Map[Int, org.apache.spark.rdd.RDD[_]]) {
 
-  /** Ids of the checkpointed RDDs `df` reads. */
-  private lazy val checkpoints: Set[Int] = Chain.checkpointedRdds(df).map(_.id).toSet
+  /** The checkpointed RDDs `df` reads, by id. */
+  private lazy val checkpoints: Map[Int, org.apache.spark.rdd.RDD[_]] =
+    Chain.checkpointedRdds(df).map(r => r.id -> r).toMap
 
   private def append(newDf: DataFrame, step: TransformStep): Chain = {
     val more = new Chain(spark, entryName, newDf, steps :+ step, superseded)
     // checkpoints a step left that a later step no longer reads (a sort
     // checkpointed over an earlier checkpoint) are out of reach of a walk
-    // of the final plan: remember their ids for releaseCheckpoints
-    val dropped = checkpoints -- more.checkpoints
+    // of the final plan: keep them for releaseCheckpoints. The reference
+    // is strong on purpose: nothing else holds a superseded RDD, and
+    // Spark's context cleaner would otherwise free its blocks at whatever
+    // garbage collection comes first, not at the release
+    val dropped = checkpoints -- more.checkpoints.keySet
     if (dropped.isEmpty) more
     else new Chain(spark, entryName, newDf, more.steps, superseded ++ dropped)
   }
@@ -375,8 +379,10 @@ final class Chain private (
     */
   def releaseCheckpoints(): Unit = {
     Chain.releaseCheckpoints(df)
-    val live = spark.sparkContext.getPersistentRDDs
-    superseded.foreach(id => live.get(id).foreach(GraftBridge.unpersistQuietly))
+    superseded.values.foreach { rdd =>
+      if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        GraftBridge.unpersistQuietly(rdd)
+    }
   }
 
   /** Plan-shape guardrails ([[ScaleLint]]): inspect the compiled plan for
@@ -393,7 +399,7 @@ final class Chain private (
 
 object Chain {
   def apply(spark: SparkSession, entryName: String, df: DataFrame): Chain =
-    new Chain(spark, entryName, df, Vector.empty, Set.empty)
+    new Chain(spark, entryName, df, Vector.empty, Map.empty)
 
   /** Release EVERY checkpoint block embedded in a frame's plan: walks the
     * analyzed plan and unpersists each `LogicalRDD`'s blocks. This is the

@@ -172,6 +172,21 @@ class EagerStatsSpec extends AnyFunSuite {
       s"cached partitions left after release: ${cached.toSeq}")
   }
 
+  test("a chain keeps its superseded checkpoints cached through a garbage collection") {
+    val sc = spark.sparkContext
+    val firstRdd = sc.emptyRDD[Int].id
+    def cached = sc.getRDDStorageInfo.filter(_.id > firstRdd)
+    val chain = SparkEntry.entryChain(spark)
+    assert(chain.df.count() > 0)
+    // impute's checkpoint is reachable only through the chain; Spark's
+    // context cleaner frees the blocks of an RDD once it is collected
+    System.gc()
+    Thread.sleep(1000)
+    try assert(cached.length >= 2, s"a collection freed a superseded checkpoint: ${cached.toSeq}")
+    finally chain.releaseCheckpoints()
+    assert(cached.map(_.numCachedPartitions).sum == 0)
+  }
+
   test("releaseCheckpoints reaches superseded checkpoints and spares a persisted input") {
     val input = shuffledFixture(mixed).persist()
     try {

@@ -442,6 +442,56 @@ class StreamingSpec extends AnyFunSuite {
     assert(post1 == 0, "replay must not duplicate postings")
   }
 
+  test("profile sink rewrites only touched buckets, not the whole table") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val base = 1704067200L * 1000000000L
+    def evt(id: Long, tpe: String, user: Long) =
+      Evt(id, base + id * 60L * 1000000000L, user, tpe, 1.0, "{}")
+    spark.sql("DROP TABLE IF EXISTS stream_profile_bkt_t")
+    def drain(events: Evt*): Unit = {
+      val ms = MemoryStream[Evt]
+      ms.addData(events: _*)
+      EventStreams.sinkDistinctSketchToTable(ms.toDF(), Seq("event_type"), "user_id",
+        "stream_profile_bkt_t", Files.createTempDirectory("graft_ckpt_pb").toString,
+        profileBuckets = 8)
+    }
+    // batch 1: 24 event types spread the keys across the 8 hash buckets
+    drain((1L to 24L).map(i => evt(i, s"type_$i", i)): _*)
+    val tableDir = Paths.get(new java.net.URI(
+      spark.sql("DESCRIBE TABLE EXTENDED stream_profile_bkt_t")
+        .where("col_name = 'Location'").collect()(0).getString(1)))
+    def dataFiles(): Map[String, Long] = {
+      val out = scala.collection.mutable.Map[String, Long]()
+      Files.walk(tableDir).forEach { p =>
+        val n = p.getFileName.toString
+        if (Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith("."))
+          out(tableDir.relativize(p).toString) = Files.getLastModifiedTime(p).toMillis
+      }
+      out.toMap
+    }
+    val before = dataFiles()
+    assert(before.nonEmpty)
+    // batch 2: one key -> one touched bucket; every other bucket's files
+    // must survive the batch byte-identical (same path, same mtime)
+    drain((30L to 39L).map(i => evt(100 + i, "type_1", i)): _*)
+    val after = dataFiles()
+    val surviving = before.filter { case (p, t) => after.get(p).contains(t) }
+    assert(surviving.nonEmpty,
+      s"untouched buckets must keep their files; before=${before.keySet}, after=${after.keySet}")
+    assert(surviving.size < after.size,
+      "the touched bucket must actually be rewritten")
+    // estimates unchanged by the bucketed rewrite
+    val est = spark.sql(
+      "SELECT event_type, hll_sketch_estimate(_sk) FROM stream_profile_bkt_t")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(est.size == 24)
+    assert(est("type_1") >= 10 && est("type_1") <= 12,
+      s"type_1 merges batch-1 user 1 with batch-2 users 30..39, got ${est("type_1")}")
+    assert(est("type_2") == 1L, s"untouched key estimate unchanged, got ${est("type_2")}")
+  }
+
   test("streaming upsert sink converges under redelivery") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql = spark.sqlContext
