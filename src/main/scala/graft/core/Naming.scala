@@ -66,6 +66,20 @@ object Naming {
     if (n.matches("[A-Za-z_][A-Za-z0-9_]*")) n
     else "`" + n.replace("`", "``") + "`"
 
+  /** The select list of a step that adds columns over `columns`, as the
+    * DataFrame face's `withColumn` builds it: each `(name, sqlExpr)` takes
+    * the place of a same-named source column (case-insensitive, Spark's
+    * resolver), or else appends after the source columns in order.
+    * `SELECT *, expr AS name` over an existing `name` would carry both,
+    * and the next reference fails as AMBIGUOUS_REFERENCE.
+    */
+  def selectReplacing(columns: Seq[String], adds: Seq[(String, String)]): String =
+    adds.foldLeft(columns.map(n => n -> quoteId(n))) { case (acc, (n, e)) =>
+      val item = n -> s"$e AS ${quoteId(n)}"
+      val i = acc.indexWhere(_._1.equalsIgnoreCase(n))
+      if (i >= 0) acc.updated(i, item) else acc :+ item
+    }.map(_._2).mkString(", ")
+
   /** SQL literal for a driver-computed statistic embedded into a rendered
     * fragment (the reference's compile-time `run_query` pattern bakes
     * values into the template the same way).

@@ -1222,47 +1222,22 @@ final class DedupClusterOps(private val c: Chain) extends AnyVal {
                                      trainSample: Int, trainIters: Int): Chain = {
     require(nassign >= 1 && nassign <= nlist,
       s"nassign must be in [1, nlist], got $nassign (nlist=$nlist)")
-    val spark = c.df.sparkSession
-    // ids pass through untyped (ranking, windows and pair comparisons
-    // all work on any orderable type); the cluster stage downstream
-    // owns the integral/string dispatch
-    // zero-norm/NaN vectors never pair (NaN cosine passes the threshold
-    // and would merge whole cells); they stay singletons and SURVIVE the
-    // dedup untouched
+    // ids pass through untyped (pair comparisons work on any orderable
+    // type); the cluster stage downstream owns the integral/string
+    // dispatch. Zero-norm/NaN vectors never pair (NaN cosine passes the
+    // threshold and would merge whole cells); they stay singletons and
+    // SURVIVE the dedup untouched
     val corpus = SimilarityOps.withNorm(c.df, idCol, vecCol, "_id", "_v", "_n")
-      // barrier: the nassign > 1 top-m window is partitioned by _id and
-      // reads this exchange's partitioning
-      .repartition(col("_id"))
-    // bounded hash-deterministic training sample → driver k-means
-    // (the declared compile-time-introspection pattern)
-    val trainVecs = corpus
-      .orderBy(xxhash64(col("_id")).asc, col("_id").asc)
-      .limit(trainSample)
-      .select(col("_v").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    val centers = SimilarityOps.sphericalKMeans(trainVecs, nlist, trainIters)
-    // the trailing repartition(_cid) is load-bearing twice over: the
-    // self-join below reads `assigned` on BOTH sides, and without a
-    // common exchange each side would recompute the whole assignment
-    // (the crossJoin+window for nassign>1) — with it, both sides reuse
-    // ONE exchange (ReusedExchange) that is ALSO the join's required
-    // partitioning, so the pair stage adds no further shuffle
-    val assigned = (
-      if (nassign <= 1)
-        corpus.withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
-          .select(col("_id"), col("_v"), col("_n"), col("_cid"))
-      else {
-        // top-m cells per vector: broadcast the nlist centroids, rank
-        // by cosine — one id-partitioned window, no extra corpus pass
-        val centroids = broadcast(SimilarityOps.centroidFrame(spark, centers))
-        val sim = Exact.dot(col("_v"), col("_cv")) / col("_n") / col("_cn")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("_id")).orderBy(col("_cs").desc, col("_cid").asc)
-        corpus.crossJoin(centroids)
-          .select(col("_id"), col("_v"), col("_n"), col("_cid"), sim.as("_cs"))
-          .withColumn("_r", row_number().over(w)).where(col("_r") <= nassign)
-          .select(col("_id"), col("_v"), col("_n"), col("_cid"))
-      }).repartition(col("_cid"))
+    val centers = SimilarityOps.sphericalKMeans(
+      SimilarityOps.trainSample(corpus, "_id", "_v", trainSample), nlist, trainIters)
+    // the repartition(_cid) is load-bearing: the self-join below reads
+    // `assigned` on BOTH sides, and both reuse this ONE exchange
+    // (ReusedExchange, which KMeansSpec pins) that is also the join's
+    // required partitioning — without it each side would recompute the
+    // assignment, and the pair stage would shuffle again
+    val assigned = corpus
+      .withColumn("_cid", SimilarityOps.cellIds(col("_v"), centers, nassign))
+      .repartition(col("_cid"))
     val l = assigned.select(col("_cid"), col("_id").as("id_a"),
       col("_v").as("_va"), col("_n").as("_na"))
     val r = assigned.select(col("_cid"), col("_id").as("id_b"),

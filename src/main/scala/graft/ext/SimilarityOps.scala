@@ -2,7 +2,7 @@ package graft.ext
 
 import graft.core.{Chain, Exact}
 import graft.functions.SignSketch
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,11 +51,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     val scored = corpus.crossJoin(broadcast(qs))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val df2 = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-    c.next("cosine_topk", df2, None)
+    c.next("cosine_topk", SimilarityOps.rankTopK(scored, "cosine", ascending = false, k), None)
   }
 
   /** hard_negatives(queries, positives, …): contrastive-training negative
@@ -94,10 +90,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
       .join(broadcast(pos), Seq("query_id", "neighbor_id"), "left_anti")
     val denoised = fnThreshold.fold(scored)(t => scored.where(col("cosine") < lit(t)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     c.next("hard_negatives",
-      denoised.withColumn("rank", row_number().over(w)).where(col("rank") <= k), None)
+      SimilarityOps.rankTopK(denoised, "cosine", ascending = false, k), None)
   }
 
   /** Sketch-rerank top-k: every corpus row is scored against each query by
@@ -147,20 +141,14 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     val corpus = SimilarityOps.withNorm(c.df, idCol, vecCol, "neighbor_id", "_vc", "_nc")
     val qs = SimilarityOps.withNorm(queries, idCol, vecCol, "query_id", "_vq", "_nq")
     val rel = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
-    val poolW = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("neighbor_id").asc)
-    val pool = DedupOps.checkpointRound(
+    val pool = DedupOps.checkpointRound(SimilarityOps.rankTopK(
       corpus.crossJoin(broadcast(qs))
         .where(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"), col("_vc"), col("_nc"),
-          rel.cast("double").as("rel"))
-        .withColumn("_pr", row_number().over(poolW))
-        .where(col("_pr") <= poolK).drop("_pr"))
+          rel.cast("double").as("rel")), "rel", ascending = false, poolK).drop("rank"))
     val lam = lambdaPct / 100.0
-    val pickW = Window.partitionBy(col("query_id"))
-      .orderBy(col("_score").desc, col("neighbor_id").asc)
     def pick1(scored: DataFrame, step: Int) =
-      scored.withColumn("_r", row_number().over(pickW)).where(col("_r") === 1)
+      SimilarityOps.rankTopK(scored, "_score", ascending = false, 1)
         .select(col("query_id"), col("neighbor_id"), col("_vc"), col("_nc"),
           col("rel"), lit(step).as("mmr_rank"))
     var selected = DedupOps.checkpointRound(
@@ -212,10 +200,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         SignSketch.hamming(col("_skq"), col("_skc")).as("_ham"))
-    val preW = Window.partitionBy(col("query_id"))
-      .orderBy(col("_ham").asc, col("neighbor_id").asc)
-    val survivors = hams.withColumn("_pre", row_number().over(preW))
-      .where(col("_pre") <= rerankPerQuery)
+    val survivors = SimilarityOps.rankTopK(hams, "_ham", ascending = true, rerankPerQuery)
       .select(col("query_id"), col("neighbor_id"))
     // pass 2: exact rerank of the survivors only
     val cos = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
@@ -223,10 +208,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       .join(corpus.select(col("neighbor_id"), col("_vc"), col("_nc")), Seq("neighbor_id"))
       .join(broadcast(qs.select(col("query_id"), col("_vq"), col("_nq"))), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     c.next("cosine_topk_hamming",
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k), None)
+      SimilarityOps.rankTopK(scored, "cosine", ascending = false, k), None)
   }
 
   /** IVF-flat top-k: spherical k-means centroids trained on a bounded,
@@ -262,56 +245,24 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
                     assign: Int = 1): Chain = {
     require(assign >= 1 && assign <= nlist,
       s"assign must be in [1, nlist=$nlist], got $assign")
-    val spark = c.df.sparkSession
-    val corpus = c.df.select(col(idCol).as("neighbor_id"), col(vecCol).as("_vc"))
-      .withColumn("_nc", sqrt(Exact.dot(col("_vc"), col("_vc"))))
-      .where(SimilarityOps.usableVec(col("_vc"), col("_nc"))) // NaN cosine would rank FIRST
-    // --- train: deterministic hash-ordered sample -> driver k-means
-    val trainVecs = corpus
-      .orderBy(xxhash64(col("neighbor_id")).asc, col("neighbor_id").asc)
-      .limit(trainSample)
-      .select(col("_vc").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    val centers = SimilarityOps.sphericalKMeans(trainVecs, nlist, trainIters)
-    val centroids = broadcast(SimilarityOps.centroidFrame(spark, centers))
-    // assign every corpus vector to its best cell in ONE narrow codegen
-    // projection: argmax over the (literal) centroids via greatest() on
-    // (dot, -cid) structs — centroids are unit vectors and _nc is fixed
-    // per row, so argmax of the raw dot = argmax of cosine; ties → the
-    // smaller cid, matching the probe side's ordering. No crossJoin, no
-    // per-row window, no shuffle — the scan stage does the assignment.
-    val assigned = (
-      if (assign == 1)
-        corpus.withColumn("_cid", SimilarityOps.bestCellId(col("_vc"), centers))
-      else corpus.withColumn("_cid",
-        explode(SimilarityOps.topCellIds(col("_vc"), centers, assign)))
-    ).select(col("neighbor_id"), col("_vc"), col("_nc"), col("_cid"))
-    // each query probes its nprobe closest cells
-    val qs = queries.select(col(idCol).as("query_id"), col(vecCol).as("_vq"))
-      .withColumn("_nq", sqrt(Exact.dot(col("_vq"), col("_vq"))))
-      .where(SimilarityOps.usableVec(col("_vq"), col("_nq")))
-    val qSim = Exact.dot(col("_vq"), col("_cv")) / col("_nq") / col("_cn")
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("_qs").desc, col("_cid").asc)
-    val probes = qs.crossJoin(centroids)
-      .select(col("query_id"), col("_vq"), col("_nq"), col("_cid"), qSim.as("_qs"))
-      .withColumn("_pr", row_number().over(probeW))
-      .where(col("_pr") <= nprobe)
+    val corpus = SimilarityOps.withNorm(c.df, idCol, vecCol, "neighbor_id", "_vc", "_nc")
+    val centers = SimilarityOps.sphericalKMeans(
+      SimilarityOps.trainSample(corpus, "neighbor_id", "_vc", trainSample), nlist, trainIters)
+    val assigned = corpus.withColumn("_cid", SimilarityOps.cellIds(col("_vc"), centers, assign))
+    val qs = SimilarityOps.withNorm(queries, idCol, vecCol, "query_id", "_vq", "_nq")
+    val probes = SimilarityOps.probeCells(qs,
+        broadcast(SimilarityOps.centroidFrame(c.spark, centers)), "query_id", nprobe)
       .select(col("query_id"), col("_vq"), col("_nq"), col("_cid"))
-    // exact rerank within probed cells; under multi-assignment the same
-    // (query, candidate) pair can arrive via two probed cells — dedup
-    // before ranking (the exact cosine is deterministic, so distinct on
-    // the scored triple is exact)
+    // under multi-assignment the same (query, candidate) pair can arrive
+    // via two probed cells: the exact cosine is deterministic, so distinct
+    // on the scored triple is exact
     val cos = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
     val scoredRaw = assigned
       .join(SimilarityOps.maybeBroadcastProbes(queries, probes, nprobe), Seq("_cid"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
     val scored = if (assign == 1) scoredRaw else scoredRaw.distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    c.next("cosine_topk_ivf",
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k), None)
+    c.next("cosine_topk_ivf", SimilarityOps.rankTopK(scored, "cosine", ascending = false, k), None)
   }
 
   /** ivf_index(id, vec): the PERSISTENT half of incremental ANN — train
@@ -334,28 +285,16 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     */
   def ivfIndex(idCol: String, vecCol: String, nlist: Int = 16,
                trainSample: Int = 4096, trainIters: Int = 15): Chain = {
-    val spark = c.df.sparkSession
     // integral ids cast to long, string ids pass through (centroid marker
     // rows carry a null of the SAME type); other types fail loudly — the
     // old unconditional cast nulled string ids, and a null-id index is
     // read back as all-centroids: probes silently return nothing
     val (idExpr, idType) = SimilarityOps.indexId("ivf_index", c.df, idCol)
-    val corpus = c.df.select(idExpr.as("_id"), col(vecCol).as("_v"))
-      .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
-      // zero-norm/NaN vectors are excluded from the index: they can never
-      // be a true neighbor, and their NaN cosines would otherwise top
-      // every ranking (NaN compares greatest)
-      .where(SimilarityOps.usableVec(col("_v"), col("_n")))
-    val trainVecs = corpus
-      .orderBy(xxhash64(col("_id")).asc, col("_id").asc)
-      .limit(trainSample)
-      .select(col("_v").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    val centers = SimilarityOps.sphericalKMeans(trainVecs, nlist, trainIters)
-    val assigned = corpus
-      .withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
-      .select(col("_cid"), col("_id"), col("_v").cast("array<double>").as("_v"), col("_n"))
-    val centroidRows = SimilarityOps.centroidFrame(spark, centers)
+    val corpus = SimilarityOps.withNorm(c.df, idExpr, vecCol, "_id", "_v", "_n")
+    val centers = SimilarityOps.sphericalKMeans(
+      SimilarityOps.trainSample(corpus, "_id", "_v", trainSample), nlist, trainIters)
+    val assigned = SimilarityOps.flatPostings(corpus, centers)
+    val centroidRows = SimilarityOps.centroidFrame(c.spark, centers)
       .select(col("_cid"), lit(null).cast(idType).as("_id"),
         col("_cv").as("_v"), col("_cn").as("_n"))
     c.next("ivf_index", assigned.unionByName(centroidRows), None)
@@ -370,14 +309,11 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     * re-assigned.
     */
   def ivfIndexAssign(index: DataFrame, idCol: String, vecCol: String): Chain = {
-    val centers = SimilarityOps.collectCentroids(index)
+    SimilarityOps.requireIndex("ivf_index_assign", index, SimilarityOps.FlatIndex, c.df, idCol)
     val (idExpr, _) = SimilarityOps.indexId("ivf_index_assign", c.df, idCol)
-    val assigned = c.df.select(idExpr.as("_id"), col(vecCol).as("_v"))
-      .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
-      .where(SimilarityOps.usableVec(col("_v"), col("_n"))) // same exclusion as the build
-      .withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
-      .select(col("_cid"), col("_id"), col("_v").cast("array<double>").as("_v"), col("_n"))
-    c.next("ivf_index_assign", assigned, None)
+    c.next("ivf_index_assign", SimilarityOps.flatPostings(
+      SimilarityOps.withNorm(c.df, idExpr, vecCol, "_id", "_v", "_n"),
+      SimilarityOps.collectCentroids(index)), None)
   }
 
   /** search_ivf_index(index, k, nprobe): probe a saved [[ivfIndex]] table
@@ -395,41 +331,16 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     */
   def searchIvfIndex(index: DataFrame, idCol: String, vecCol: String,
                      k: Int, nprobe: Int = 4): Chain = {
-    require(Seq("_cid", "_id", "_v", "_n").forall(index.columns.contains),
-      s"index must have columns (_cid, _id, _v, _n) from ivfIndex; got ${index.columns.mkString(", ")}")
-    // query-id family must match the index's _id family: a string query id
-    // compared to a long index id implicit-casts to null and silently
-    // drops every candidate
-    val qdt = c.df.schema(idCol).dataType
-    DedupOps.requireClusterableId("search_ivf_index", idCol, qdt)
-    val idt = index.schema("_id").dataType
-    require(DedupOps.isIntegralId(qdt) == DedupOps.isIntegralId(idt),
-      s"search_ivf_index: query id '$idCol' (${qdt.simpleString}) and index _id " +
-        s"(${idt.simpleString}) must share a type family")
-    val centroids = broadcast(index.where(col("_id").isNull)
-      .select(col("_cid"), col("_v").as("_cv"), col("_n").as("_cn")))
-    val qs = c.df.select(col(idCol).as("query_id"), col(vecCol).as("_vq"))
-      .withColumn("_nq", sqrt(Exact.dot(col("_vq"), col("_vq"))))
-      .where(SimilarityOps.usableVec(col("_vq"), col("_nq")))
-    val qSim = Exact.dot(col("_vq"), col("_cv")) / col("_nq") / col("_cn")
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("_qs").desc, col("_cid").asc)
-    val probes = qs.crossJoin(centroids)
-      .select(col("query_id"), col("_vq"), col("_nq"), col("_cid"), qSim.as("_qs"))
-      .withColumn("_pr", row_number().over(probeW))
-      .where(col("_pr") <= nprobe)
+    SimilarityOps.requireIndex("search_ivf_index", index, SimilarityOps.FlatIndex, c.df, idCol)
+    val qs = SimilarityOps.withNorm(c.df, idCol, vecCol, "query_id", "_vq", "_nq")
+    val probes = SimilarityOps.probeCells(qs, SimilarityOps.indexCentroids(index), "query_id", nprobe)
       .select(col("query_id"), col("_vq"), col("_nq"), col("_cid"))
     val cos = Exact.dot(col("_vq"), col("_v")) / col("_nq") / col("_n")
-    // the _n guard also covers indexes built before the build-side
-    // exclusion existed
-    val scored = index.where(col("_id").isNotNull && SimilarityOps.usableVec(col("_v"), col("_n")))
+    val scored = SimilarityOps.flatMembers(index)
       .join(SimilarityOps.maybeBroadcastProbes(c.df, probes, nprobe), Seq("_cid"))
       .where(col("query_id") =!= col("_id"))
       .select(col("query_id"), col("_id").as("neighbor_id"), cos.as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    c.next("search_ivf_index",
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k), None)
+    c.next("search_ivf_index", SimilarityOps.rankTopK(scored, "cosine", ascending = false, k), None)
   }
 
   /** quantize_embeddings(vec): symmetric per-vector int8 quantization —
@@ -666,6 +577,9 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       require(n == clusterCol || !c.df.columns.contains(n),
         s"cluster_eval: column '$n' collides with an output name — rename first"))
     val v = col(vecCol)
+    // a projected norm, not withNorm: the rows keep every source column
+    // (the cluster key and the scan-2 distances read them), and the norm
+    // feeds the distances as well as the usability filter
     val nrm = sqrt(Exact.dot(v, v))
     val usable = c.df.where(col(clusterCol).isNotNull &&
       v.isNotNull && SimilarityOps.usableVec(v, nrm))
@@ -764,16 +678,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     // gate): one NaN in the sample would poison its centroid's mean and
     // silently strand whole code ranges — pqEncode NULLs such vectors, the
     // fit must skip them for the same reason
-    val vd = col(vecCol)
-    val bad = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
-      .map(x => coalesce(array_contains(vd, lit(x)), lit(false)))
-      .reduce(_ || _)
-    val sample = c.df
-      .where(vd.isNotNull && !bad)
-      .orderBy(xxhash64(col(idCol)).asc, col(idCol).asc)
-      .limit(trainSample)
-      .select(vd.cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val sample = SimilarityOps.trainSample(
+      c.df.where(SimilarityOps.finiteVec(col(vecCol))), idCol, vecCol, trainSample)
     require(sample.length >= ks,
       s"pq_fit needs at least ks=$ks usable sample rows, got ${sample.length}")
     val dim = sample(0).length
@@ -874,11 +780,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     Seq(idCol, vecCol).foreach(cn => require(queries.columns.contains(cn),
       s"search_pq: query frame is missing column '$cn'"))
     val centers = SimilarityOps.collectPqModel(model)
-    val qs = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_vq"))
-      .withColumn("_nq", sqrt(Exact.dot(col("_vq"), col("_vq"))))
-      .where(col("_vq").isNotNull &&
-        SimilarityOps.usableVec(col("_vq"), col("_nq")))
+    val qs = SimilarityOps.withNorm(queries, idCol, vecCol, "query_id", "_vq", "_nq")
       .drop("_nq")
     val corpus = c.df
       .select(col(idCol).as("neighbor_id"), col(codeCol).as("_pc"))
@@ -887,10 +789,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc_dist",
         graft.functions.PqAdcDist(col("_pc"), col("_vq"), centers))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    val df2 = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val df2 = SimilarityOps.rankTopK(scored, "adc_dist", ascending = true, k)
       .select(col("query_id"), col("neighbor_id"), col("adc_dist"), col("rank"))
     c.next("search_pq", df2, None, Map("k" -> k.toString))
   }
@@ -940,60 +839,22 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
                  nlist: Int = 16, trainSample: Int = 4096,
                  trainIters: Int = 15, assign: Int = 1,
                  byResidual: Boolean = false): Chain = {
-    val spark = c.df.sparkSession
     require(assign >= 1 && assign <= nlist,
       s"ivf_pq_index: assign must be in [1, nlist=$nlist], got $assign")
     Seq(idCol, vecCol).foreach(cn => require(c.df.columns.contains(cn),
       s"ivf_pq_index: chain is missing column '$cn'"))
+    val spark = c.spark
     val (idExpr, idType) = SimilarityOps.indexId("ivf_pq_index", c.df, idCol)
     val pqCenters = SimilarityOps.collectPqModel(pqModel)
-    val corpus = c.df.select(idExpr.as("_id"), col(vecCol).as("_v"))
-      .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
-      // same exclusion as ivfIndex: zero-norm/NaN vectors can never be a
-      // true neighbor, and PqEncode NULLs them anyway
-      .where(SimilarityOps.usableVec(col("_v"), col("_n")))
-    val trainVecs = corpus
-      .orderBy(xxhash64(col("_id")).asc, col("_id").asc)
-      .limit(trainSample)
-      .select(col("_v").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val corpus = SimilarityOps.withNorm(c.df, idExpr, vecCol, "_id", "_v", "_n")
+    val trainVecs = SimilarityOps.trainSample(corpus, "_id", "_v", trainSample)
     val centers = SimilarityOps.sphericalKMeans(trainVecs, nlist, trainIters)
     val resCbOpt =
       if (!byResidual) None
       else Some(SimilarityOps.fitResidualCodebook(
         trainVecs, centers, pqCenters.length, pqCenters(0).length, trainIters))
-    val assigned = resCbOpt match {
-      case None =>
-        // encode BEFORE the (optional) multi-assign explode — raw codes
-        // are cell-independent, one kernel pass per row, replicas share it
-        val coded = corpus
-          .withColumn("_pc", graft.functions.PqEncode(col("_v"), pqCenters))
-          .where(col("_pc").isNotNull)
-        (if (assign == 1)
-          coded.withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
-        else coded.withColumn("_cid",
-          explode(SimilarityOps.topCellIds(col("_v"), centers, assign)))
-        ).select(col("_cid"), col("_id"), col("_pc"),
-          lit(null).cast("array<double>").as("_v"),
-          lit(null).cast("double").as("_n"))
-      case Some(resCb) =>
-        // residual codes are cell-DEPENDENT: assign first, then encode
-        // x − centroid(cell) per replica (VecSub + PqEncode, both
-        // codegen kernels in the same scan stage)
-        val cellTagged =
-          if (assign == 1)
-            corpus.withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
-          else corpus.withColumn("_cid",
-            explode(SimilarityOps.topCellIds(col("_v"), centers, assign)))
-        cellTagged
-          .withColumn("_pc", graft.functions.PqEncode(
-            graft.functions.VecSub(col("_v"),
-              SimilarityOps.cellCentroidAt(col("_cid"), centers)), resCb))
-          .where(col("_pc").isNotNull)
-          .select(col("_cid"), col("_id"), col("_pc"),
-            lit(null).cast("array<double>").as("_v"),
-            lit(null).cast("double").as("_n"))
-    }
+    val assigned = SimilarityOps.pqPostings(corpus, centers, assign,
+      resCbOpt.getOrElse(pqCenters), byResidual)
     val centroidRows = SimilarityOps.centroidFrame(spark, centers)
       .select(col("_cid"), lit(null).cast(idType).as("_id"),
         lit(null).cast("array<int>").as("_pc"),
@@ -1028,48 +889,15 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
                        idCol: String, vecCol: String,
                        assign: Int = 1): Chain = {
     require(assign >= 1, s"ivf_pq_index_assign: assign must be >= 1, got $assign")
-    require(Seq("_cid", "_id", "_pc", "_v", "_n").forall(index.columns.contains),
-      s"index must have columns (_cid, _id, _pc, _v, _n) from ivfPqIndex; " +
-        s"got ${index.columns.mkString(", ")}")
+    SimilarityOps.requireIndex("ivf_pq_index_assign", index, SimilarityOps.PqIndex, c.df, idCol)
     val centers = SimilarityOps.collectCentroids(index)
     require(assign <= centers.length,
       s"ivf_pq_index_assign: assign ($assign) exceeds the index's nlist (${centers.length})")
     val (idExpr, _) = SimilarityOps.indexId("ivf_pq_index_assign", c.df, idCol)
     val resCbOpt = SimilarityOps.collectResidualCodebook(index)
-    val batch = c.df.select(idExpr.as("_id"), col(vecCol).as("_v"))
-      .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
-      .where(SimilarityOps.usableVec(col("_v"), col("_n"))) // same exclusion as the build
-    val assigned = resCbOpt match {
-      case None =>
-        val pqCenters = SimilarityOps.collectPqModel(pqModel)
-        val coded = batch
-          .withColumn("_pc", graft.functions.PqEncode(col("_v"), pqCenters))
-          .where(col("_pc").isNotNull)
-        (if (assign == 1)
-          coded.withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
-        else coded.withColumn("_cid",
-          explode(SimilarityOps.topCellIds(col("_v"), centers, assign)))
-        ).select(col("_cid"), col("_id"), col("_pc"),
-          lit(null).cast("array<double>").as("_v"),
-          lit(null).cast("double").as("_n"))
-      case Some(resCb) =>
-        // residual index: assign first, encode vs the replica's own cell
-        // with the EMBEDDED codebook — the build-side shape exactly
-        val cellTagged =
-          if (assign == 1)
-            batch.withColumn("_cid", SimilarityOps.bestCellId(col("_v"), centers))
-          else batch.withColumn("_cid",
-            explode(SimilarityOps.topCellIds(col("_v"), centers, assign)))
-        cellTagged
-          .withColumn("_pc", graft.functions.PqEncode(
-            graft.functions.VecSub(col("_v"),
-              SimilarityOps.cellCentroidAt(col("_cid"), centers)), resCb))
-          .where(col("_pc").isNotNull)
-          .select(col("_cid"), col("_id"), col("_pc"),
-            lit(null).cast("array<double>").as("_v"),
-            lit(null).cast("double").as("_n"))
-    }
-    c.next("ivf_pq_index_assign", assigned, None)
+    c.next("ivf_pq_index_assign", SimilarityOps.pqPostings(
+      SimilarityOps.withNorm(c.df, idExpr, vecCol, "_id", "_v", "_n"), centers, assign,
+      resCbOpt.getOrElse(SimilarityOps.collectPqModel(pqModel)), resCbOpt.isDefined), None)
   }
 
   /** search_ivf_pq(pq_model, index, id, vec, k, nprobe): IVFADC search —
@@ -1105,39 +933,11 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     require(nprobe >= 1, s"search_ivf_pq: nprobe must be >= 1, got $nprobe")
     require(indexAssign >= 1,
       s"search_ivf_pq: indexAssign must be >= 1, got $indexAssign")
-    require(Seq("_cid", "_id", "_pc", "_v", "_n").forall(index.columns.contains),
-      s"index must have columns (_cid, _id, _pc, _v, _n) from ivfPqIndex; " +
-        s"got ${index.columns.mkString(", ")}")
     Seq(idCol, vecCol).foreach(cn => require(c.df.columns.contains(cn),
       s"search_ivf_pq: query chain is missing column '$cn'"))
-    val qdt = c.df.schema(idCol).dataType
-    DedupOps.requireClusterableId("search_ivf_pq", idCol, qdt)
-    val idt = index.schema("_id").dataType
-    require(DedupOps.isIntegralId(qdt) == DedupOps.isIntegralId(idt),
-      s"search_ivf_pq: query id '$idCol' (${qdt.simpleString}) and index _id " +
-        s"(${idt.simpleString}) must share a type family")
-    val resCbOpt = SimilarityOps.collectResidualCodebook(index)
-    val adcCenters = resCbOpt.getOrElse(SimilarityOps.collectPqModel(pqModel))
-    val centroids = broadcast(index.where(col("_id").isNull && col("_cid") >= 0)
-      .select(col("_cid"), col("_v").as("_cv"), col("_n").as("_cn")))
-    val qs = c.df.select(col(idCol).as("query_id"), col(vecCol).as("_vq"))
-      .withColumn("_nq", sqrt(Exact.dot(col("_vq"), col("_vq"))))
-      .where(SimilarityOps.usableVec(col("_vq"), col("_nq")))
-    val qSim = Exact.dot(col("_vq"), col("_cv")) / col("_nq") / col("_cn")
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("_qs").desc, col("_cid").asc)
-    val probes0 = qs.crossJoin(centroids)
-      .select(col("query_id"), col("_vq"), col("_cv"), col("_cid"), qSim.as("_qs"))
-      .withColumn("_pr", row_number().over(probeW))
-      .where(col("_pr") <= nprobe)
-    // residual index: the probe row's vector becomes the per-cell
-    // residual q − centroid, computed once per (query, cell) and reused
-    // for every candidate in the cell — Jégou's per-cell distance table
-    val probes = (resCbOpt match {
-      case None => probes0
-      case Some(_) => probes0.withColumn("_vq",
-        graft.functions.VecSub(col("_vq"), col("_cv")))
-    }).select(col("query_id"), col("_vq"), col("_cid"))
+    SimilarityOps.requireIndex("search_ivf_pq", index, SimilarityOps.PqIndex, c.df, idCol)
+    val (adcCenters, residual, probes) = SimilarityOps.pqProbes(index, pqModel,
+      SimilarityOps.withNorm(c.df, idCol, vecCol, "query_id", "_vq", "_nq"), "query_id", nprobe)
     val scoredRaw = index.where(col("_id").isNotNull && col("_pc").isNotNull)
       .join(SimilarityOps.maybeBroadcastProbes(c.df, probes, nprobe), Seq("_cid"))
       .where(col("query_id") =!= col("_id"))
@@ -1152,13 +952,10 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     // ivfCosineTopK convention).
     val scored =
       if (indexAssign == 1) scoredRaw
-      else if (resCbOpt.isEmpty) scoredRaw.distinct()
+      else if (!residual) scoredRaw.distinct()
       else scoredRaw.groupBy(col("query_id"), col("neighbor_id"))
         .agg(min(col("adc_dist")).as("adc_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    c.next("search_ivf_pq",
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k),
+    c.next("search_ivf_pq", SimilarityOps.rankTopK(scored, "adc_dist", ascending = true, k),
       None, Map("k" -> k.toString, "nprobe" -> nprobe.toString))
   }
 
@@ -1192,21 +989,14 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     val cand = searchIvfPq(pqModel, index, idCol, vecCol,
       k = rerankPerQuery, nprobe = nprobe, indexAssign = indexAssign)
       .df.select(col("query_id"), col("neighbor_id"))
-    val corp = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_vc"))
-      .withColumn("_nc", sqrt(Exact.dot(col("_vc"), col("_vc"))))
-      .where(SimilarityOps.usableVec(col("_vc"), col("_nc")))
-    val qs = c.df.select(col(idCol).as("query_id"), col(vecCol).as("_vq"))
-      .withColumn("_nq", sqrt(Exact.dot(col("_vq"), col("_vq"))))
-      .where(SimilarityOps.usableVec(col("_vq"), col("_nq")))
+    val corp = SimilarityOps.withNorm(corpus, idCol, vecCol, "neighbor_id", "_vc", "_nc")
+    val qs = SimilarityOps.withNorm(c.df, idCol, vecCol, "query_id", "_vq", "_nq")
     val cos = Exact.dot(col("_vq"), col("_vc")) / col("_nq") / col("_nc")
     val scored = cand
       .join(corp, Seq("neighbor_id"))
       .join(SimilarityOps.maybeBroadcastProbes(c.df, qs, 1), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    c.next("search_ivf_pq_rerank",
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k),
+    c.next("search_ivf_pq_rerank", SimilarityOps.rankTopK(scored, "cosine", ascending = false, k),
       None, Map("k" -> k.toString, "rerank" -> rerankPerQuery.toString,
         "nprobe" -> nprobe.toString))
   }
@@ -1321,11 +1111,7 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
   def pcaFit(idCol: String, vecCol: String, dim: Int,
              trainSample: Int = 4096): Chain = {
     require(dim >= 1, s"pca dim must be >= 1, got $dim")
-    val sample = c.df
-      .orderBy(xxhash64(col(idCol)).asc, col(idCol).asc)
-      .limit(trainSample)
-      .select(col(vecCol).cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val sample = SimilarityOps.trainSample(c.df, idCol, vecCol, trainSample)
     require(sample.length >= 2, s"pca_fit needs >= 2 sample rows, got ${sample.length}")
     val d = sample(0).length
     require(sample.forall(_.length == d),
@@ -1383,29 +1169,19 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     */
   def dedupAgainstIvfIndex(index: DataFrame, idCol: String, vecCol: String,
                            threshold: Double, nprobe: Int = 4): Chain = {
-    require(Seq("_cid", "_id", "_v", "_n").forall(index.columns.contains),
-      s"index must have columns (_cid, _id, _v, _n) from ivfIndex; got ${index.columns.mkString(", ")}")
+    SimilarityOps.requireIndex("dedup_against_ivf_index", index, SimilarityOps.FlatIndex,
+      c.df, idCol)
     // same id dispatch as the build side (the old unconditional long cast
     // nulled string ids: the anti-join matched nothing and the dedup
     // silently no-opped); zero-norm/NaN batch vectors never probe — a NaN
     // cosine passes `>= threshold` (NaN compares greatest) and would
     // silently DELETE corrupted-embedding rows as duplicates
     val (idExpr, _) = SimilarityOps.indexId("dedup_against_ivf_index", c.df, idCol)
-    val centroids = broadcast(index.where(col("_id").isNull)
-      .select(col("_cid"), col("_v").as("_cv"), col("_n").as("_cn")))
-    val qs = c.df.select(idExpr.as("_qid"), col(vecCol).as("_vq"))
-      .withColumn("_nq", sqrt(Exact.dot(col("_vq"), col("_vq"))))
-      .where(SimilarityOps.usableVec(col("_vq"), col("_nq")))
-    val qSim = Exact.dot(col("_vq"), col("_cv")) / col("_nq") / col("_cn")
-    val probeW = Window.partitionBy(col("_qid"))
-      .orderBy(col("_qs").desc, col("_cid").asc)
-    val probes = qs.crossJoin(centroids)
-      .select(col("_qid"), col("_vq"), col("_nq"), col("_cid"), qSim.as("_qs"))
-      .withColumn("_pr", row_number().over(probeW))
-      .where(col("_pr") <= nprobe)
+    val qs = SimilarityOps.withNorm(c.df, idExpr, vecCol, "_qid", "_vq", "_nq")
+    val probes = SimilarityOps.probeCells(qs, SimilarityOps.indexCentroids(index), "_qid", nprobe)
       .select(col("_qid"), col("_vq"), col("_nq"), col("_cid"))
     val cos = Exact.dot(col("_vq"), col("_v")) / col("_nq") / col("_n")
-    val dropIds = index.where(col("_id").isNotNull && SimilarityOps.usableVec(col("_v"), col("_n")))
+    val dropIds = SimilarityOps.flatMembers(index)
       .join(SimilarityOps.maybeBroadcastProbes(c.df, probes, nprobe), Seq("_cid"))
       .where(cos >= threshold)
       .select(col("_qid")).distinct()
@@ -1436,32 +1212,13 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
     require(maxDist >= 0.0 && !maxDist.isNaN,
       s"dedup_against_ivf_pq_index: maxDist must be >= 0, got $maxDist")
     require(nprobe >= 1, s"dedup_against_ivf_pq_index: nprobe must be >= 1, got $nprobe")
-    require(Seq("_cid", "_id", "_pc", "_v", "_n").forall(index.columns.contains),
-      s"index must have columns (_cid, _id, _pc, _v, _n) from ivfPqIndex; " +
-        s"got ${index.columns.mkString(", ")}")
+    SimilarityOps.requireIndex("dedup_against_ivf_pq_index", index, SimilarityOps.PqIndex,
+      c.df, idCol)
     val (idExpr, _) = SimilarityOps.indexId("dedup_against_ivf_pq_index", c.df, idCol)
-    val resCbOpt = SimilarityOps.collectResidualCodebook(index)
-    val adcCenters = resCbOpt.getOrElse(SimilarityOps.collectPqModel(pqModel))
-    val centroids = broadcast(index.where(col("_id").isNull && col("_cid") >= 0)
-      .select(col("_cid"), col("_v").as("_cv"), col("_n").as("_cn")))
-    val qs = c.df.select(idExpr.as("_qid"), col(vecCol).as("_vq"))
-      .withColumn("_nq", sqrt(Exact.dot(col("_vq"), col("_vq"))))
-      .where(SimilarityOps.usableVec(col("_vq"), col("_nq")))
-    val qSim = Exact.dot(col("_vq"), col("_cv")) / col("_nq") / col("_cn")
-    val probeW = Window.partitionBy(col("_qid"))
-      .orderBy(col("_qs").desc, col("_cid").asc)
-    val probes0 = qs.crossJoin(centroids)
-      .select(col("_qid"), col("_vq"), col("_cv"), col("_cid"), qSim.as("_qs"))
-      .withColumn("_pr", row_number().over(probeW))
-      .where(col("_pr") <= nprobe)
-    // residual index: per-cell residual probes, embedded codebook — the
-    // searchIvfPq regime (threshold then lives in the residual metric;
-    // calibrate it against residual-index distances, not raw-code ones)
-    val probes = (resCbOpt match {
-      case None => probes0
-      case Some(_) => probes0.withColumn("_vq",
-        graft.functions.VecSub(col("_vq"), col("_cv")))
-    }).select(col("_qid"), col("_vq"), col("_cid"))
+    // a residual index moves the threshold into the residual metric:
+    // calibrate it against residual-index distances, not raw-code ones
+    val (adcCenters, _, probes) = SimilarityOps.pqProbes(index, pqModel,
+      SimilarityOps.withNorm(c.df, idExpr, vecCol, "_qid", "_vq", "_nq"), "_qid", nprobe)
     val dropIds = index.where(col("_id").isNotNull && col("_pc").isNotNull)
       .join(SimilarityOps.maybeBroadcastProbes(c.df, probes, nprobe), Seq("_cid"))
       .where(graft.functions.PqAdcDist(col("_pc"), col("_vq"), adcCenters) <= maxDist)
@@ -1516,10 +1273,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       .join(corpus.select(col("neighbor_id"), col("_vc"), col("_nc")), Seq("neighbor_id"))
       .join(broadcast(qs.select(col("query_id"), col("_vq"), col("_nq"))), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     c.next("cosine_topk_lsh",
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k), None)
+      SimilarityOps.rankTopK(scored, "cosine", ascending = false, k), None)
   }
 
   /** cluster_embeddings(id, vec, k): first-class spherical k-means over
@@ -1546,16 +1301,8 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
                         as: String = "cluster"): Chain = {
     require(k >= 1, s"cluster_embeddings needs k >= 1, got $k")
     val (idExpr, idType) = SimilarityOps.indexId("cluster_embeddings", c.df, idCol)
-    val nrm = sqrt(Exact.dot(col(vecCol), col(vecCol)))
-    val usable = SimilarityOps.usableVec(col(vecCol), nrm)
-    val trainVecs = c.df
-      .select(idExpr.as("_id"), col(vecCol).as("_v"))
-      .withColumn("_n", sqrt(Exact.dot(col("_v"), col("_v"))))
-      .where(SimilarityOps.usableVec(col("_v"), col("_n")))
-      .orderBy(xxhash64(col("_id")).asc, col("_id").asc)
-      .limit(trainSample)
-      .select(col("_v").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val trainVecs = SimilarityOps.trainSample(
+      SimilarityOps.withNorm(c.df, idExpr, vecCol, "_id", "_v", "_n"), "_id", "_v", trainSample)
     // empty corpus / every vector failing the usableVec guard: every row
     // is degenerate by definition — return a null cluster column instead
     // of tripping sphericalKMeans' nonEmpty require (the empty-input
@@ -1564,6 +1311,9 @@ final class SimilarityOps(private val c: Chain) extends AnyVal {
       return c.next("cluster_embeddings",
         c.df.withColumn(as, lit(null).cast(idType)), None)
     val centers = SimilarityOps.sphericalKMeans(trainVecs, k, trainIters)
+    // a projected norm, not withNorm: every row is kept (an unusable vector
+    // gets a null cluster), so there is no filter to push through it
+    val usable = SimilarityOps.usableVec(col(vecCol), sqrt(Exact.dot(col(vecCol), col(vecCol))))
     val assigned = c.df.withColumn("_ce_cid",
       when(usable, SimilarityOps.bestCellId(col(vecCol), centers)))
     val labels = assigned.where(col("_ce_cid").isNotNull)
@@ -1584,13 +1334,15 @@ object SimilarityOps {
     */
   private[ext] def finiteElements(df: DataFrame, groupBy: Seq[String],
                                   vecCol: String): DataFrame = {
-    val v = col(vecCol)
-    val bad = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    df.where(finiteVec(col(vecCol)))
+      .select(groupBy.map(col) :+ posexplode(col(vecCol)).as(Seq("_pos", "_val")): _*)
+  }
+
+  /** A non-null vector with no NaN or ±Inf element. */
+  private[ext] def finiteVec(v: Column): Column =
+    v.isNotNull && !Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
       .map(x => coalesce(array_contains(v, lit(x)), lit(false)))
       .reduce(_ || _)
-    df.where(v.isNotNull && !bad)
-      .select(groupBy.map(col) :+ posexplode(v).as(Seq("_pos", "_val")): _*)
-  }
 
   /** [[finiteElements]] as SQL over `{{source}}`. */
   private[ext] def finiteElementsSql(vecCol: String): String = {
@@ -1655,10 +1407,27 @@ object SimilarityOps {
     * finite and the vector would rank with a silently wrong partial
     * direction — `array_contains(v, NaN)` catches it (NaN = NaN is TRUE
     * under Spark SQL equality; the probe is codegen'd and linear). Rows
-    * failing the guard never rank, never match, and SURVIVE dedup
-    * untouched (a corrupted embedding is unknowable, not a duplicate);
-    * null vectors fail the null-propagated predicate and drop too.
+    * failing the guard never rank, never match, never enter an index or a
+    * training sample, and SURVIVE dedup untouched (a corrupted embedding
+    * is unknowable, not a duplicate); null vectors fail the
+    * null-propagated predicate and drop too.
     */
+  private[ext] def usableVec(v: Column, n: Column): Column =
+    !isnan(n) && (n > lit(0.0)) &&
+      !coalesce(array_contains(v, lit(Double.NaN)), lit(false))
+
+  // ---------------------------------------------------------------------
+  // The ANN skeleton. Every op of the family (exact, sketch, LSH and IVF
+  // top-k, the IVF and IVFADC indexes with their assign, search and dedup
+  // faces, cluster_embeddings, the PQ and PCA fits, the IVF pair miner) is
+  // built from these steps, each written once:
+  //   withNorm     the (id, vector, norm) frame of usable vectors
+  //   trainSample  the bounded, hash-ordered sample a driver fit trains on
+  //   cellIds      the cell(s) a vector is posted to
+  //   probeCells   each query's nprobe best cells of an index
+  //   rankTopK     the per-query ranked finish
+  // ---------------------------------------------------------------------
+
   /** `(idAs, vAs, nAs)`: each row's id, vector and norm
     * sqrt(Exact.dot(v, v)), keeping only [[usableVec]] rows (a NaN cosine
     * would rank FIRST). The norm is GENERATED (a one-element explode), not
@@ -1668,16 +1437,154 @@ object SimilarityOps {
     * vector — while a filter on a generated column stays above its
     * Generate, so each vector's dot product runs once.
     */
-  private[ext] def withNorm(df: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String,
-                            idAs: String, vAs: String, nAs: String): org.apache.spark.sql.DataFrame =
-    df.select(col(idCol).as(idAs), col(vecCol).as(vAs),
+  private[ext] def withNorm(df: DataFrame, idCol: String, vecCol: String,
+                            idAs: String, vAs: String, nAs: String): DataFrame =
+    withNorm(df, col(idCol), vecCol, idAs, vAs, nAs)
+
+  /** [[withNorm]] over an id expression: the index family's [[indexId]]. */
+  private[ext] def withNorm(df: DataFrame, id: Column, vecCol: String,
+                            idAs: String, vAs: String, nAs: String): DataFrame =
+    df.select(id.as(idAs), col(vecCol).as(vAs),
         explode(array(sqrt(Exact.dot(col(vecCol), col(vecCol))))).as(nAs))
       .where(usableVec(col(vAs), col(nAs)))
 
-  private[ext] def usableVec(v: org.apache.spark.sql.Column,
-                             n: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    !isnan(n) && (n > lit(0.0)) &&
-      !coalesce(array_contains(v, lit(Double.NaN)), lit(false))
+  /** The training sample of every driver-side fit: the first `n` rows of
+    * `df` in `(xxhash64(id), id)` order, `vec` collected as doubles. One
+    * bounded, declared driver collect (the encoders' compile-time
+    * introspection pattern); the hash order makes the sample, and so the
+    * model, a function of the data alone, never of the partitioning.
+    */
+  private[ext] def trainSample(df: DataFrame, id: String, vec: String,
+                               n: Int): Array[Array[Double]] =
+    df.orderBy(xxhash64(col(id)).asc, col(id).asc).limit(n)
+      .select(col(vec).cast("array<double>"))
+      .collect().map(_.getSeq[Double](0).toArray)
+
+  /** The cell id(s) `v` is posted to, in the scan stage (no crossJoin, no
+    * window, no shuffle): its best cell ([[bestCellId]]) at `assign` = 1,
+    * one row per top-`assign` cell ([[topCellIds]], exploded) above that
+    * — the SPANN-style boundary duplication. Centroids are unit vectors
+    * and the vector's norm is fixed per row, so the raw-dot argmax is the
+    * cosine argmax; ties go to the smaller cid, the probe side's order.
+    */
+  private[ext] def cellIds(v: Column, centers: Array[Array[Double]], assign: Int): Column =
+    if (assign == 1) bestCellId(v, centers) else explode(topCellIds(v, centers, assign))
+
+  /** The saved-index admission every assign, search and dedup face runs:
+    * the index carries the builder's `cols`, and the batch id is a
+    * clusterable type of the index `_id`'s family — a string query id
+    * compared with a long index id implicit-casts to null and silently
+    * drops every candidate.
+    */
+  private[ext] def requireIndex(op: String, index: DataFrame, cols: (String, Seq[String]),
+                                batch: DataFrame, idCol: String): Unit = {
+    val (builder, names) = cols
+    require(names.forall(index.columns.contains),
+      s"index must have columns (${names.mkString(", ")}) from $builder; " +
+        s"got ${index.columns.mkString(", ")}")
+    val qdt = batch.schema(idCol).dataType
+    DedupOps.requireClusterableId(op, idCol, qdt)
+    val idt = index.schema("_id").dataType
+    require(DedupOps.isIntegralId(qdt) == DedupOps.isIntegralId(idt),
+      s"$op: query id '$idCol' (${qdt.simpleString}) and index _id " +
+        s"(${idt.simpleString}) must share a type family")
+  }
+
+  private[ext] val FlatIndex = "ivfIndex" -> Seq("_cid", "_id", "_v", "_n")
+  private[ext] val PqIndex = "ivfPqIndex" -> Seq("_cid", "_id", "_pc", "_v", "_n")
+
+  /** A saved index's centroid marker rows `(_cid, _cv, _cn)`, broadcast
+    * (nlist rows). Probe geometry comes off the index's own rows, so it
+    * always matches the stored assignments; `_cid >= 0` skips the
+    * residual-codebook rows a residual IVFADC index carries at -1.
+    */
+  private[ext] def indexCentroids(index: DataFrame): DataFrame =
+    broadcast(index.where(col("_id").isNull && col("_cid") >= 0)
+      .select(col("_cid"), col("_v").as("_cv"), col("_n").as("_cn")))
+
+  /** Each query's `nprobe` best cells: the queries `(qid, _vq, _nq)` cross
+    * the broadcast centroids `(_cid, _cv, _cn)`, rank them by exact
+    * cosine (ties to the smaller cid, the [[cellIds]] order) and keep
+    * `(qid, _vq, _nq, _cv, _cid)` of the first `nprobe`. The candidate
+    * join then visits only those cells' members — the IVF recall/cost
+    * dial: candidate volume ≈ assign × nprobe / nlist of the corpus.
+    */
+  private[ext] def probeCells(qs: DataFrame, centroids: DataFrame, qid: String,
+                              nprobe: Int): DataFrame = {
+    val qSim = Exact.dot(col("_vq"), col("_cv")) / col("_nq") / col("_cn")
+    val w = Window.partitionBy(col(qid)).orderBy(col("_qs").desc, col("_cid").asc)
+    qs.crossJoin(centroids)
+      .select(col(qid), col("_vq"), col("_nq"), col("_cv"), col("_cid"), qSim.as("_qs"))
+      .withColumn("_pr", row_number().over(w))
+      .where(col("_pr") <= nprobe)
+      .drop("_qs", "_pr")
+  }
+
+  /** The IVFADC probe: [[probeCells]] over the index's centroids, with the
+    * ADC codebook to score the probed codes by. A residual index (its
+    * embedded codebook found, `pqModel` superseded) turns each probe
+    * row's vector into the per-cell residual q − centroid, computed once
+    * per (query, cell) and reused for every code in the cell — Jégou's
+    * per-cell distance table. Returns (codebook, residual?, probes
+    * `(qid, _vq, _cid)`).
+    */
+  private[ext] def pqProbes(index: DataFrame, pqModel: DataFrame, qs: DataFrame,
+                            qid: String, nprobe: Int)
+      : (Array[Array[Array[Double]]], Boolean, DataFrame) = {
+    val resCbOpt = collectResidualCodebook(index)
+    val probes = probeCells(qs, indexCentroids(index), qid, nprobe)
+    val vq = if (resCbOpt.isEmpty) col("_vq") else graft.functions.VecSub(col("_vq"), col("_cv"))
+    (resCbOpt.getOrElse(collectPqModel(pqModel)), resCbOpt.isDefined,
+      probes.select(col(qid), vq.as("_vq"), col("_cid")))
+  }
+
+  /** The family's ranked finish: per `query_id`, rows ordered by `score`
+    * (descending unless `ascending`) with `neighbor_id` ascending on
+    * ties, numbered `rank` from 1 and cut at `k` — one shuffle on
+    * query_id. The exact-decimal scores make the ranking, and so the
+    * cut, independent of the partitioning.
+    */
+  private[ext] def rankTopK(scored: DataFrame, score: String, ascending: Boolean,
+                            k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(if (ascending) col(score).asc else col(score).desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+  }
+
+  /** IVF-flat postings `(_cid, _id, _v, _n)` of a [[withNorm]] frame
+    * `(_id, _v, _n)`: each vector in its best cell.
+    */
+  private[ext] def flatPostings(vecs: DataFrame, centers: Array[Array[Double]]): DataFrame =
+    vecs.withColumn("_cid", bestCellId(col("_v"), centers))
+      .select(col("_cid"), col("_id"), col("_v").cast("array<double>").as("_v"), col("_n"))
+
+  /** The member rows of a saved IVF-flat index. The usability guard also
+    * covers indexes built before the build-side exclusion existed.
+    */
+  private[ext] def flatMembers(index: DataFrame): DataFrame =
+    index.where(col("_id").isNotNull && usableVec(col("_v"), col("_n")))
+
+  /** IVFADC postings `(_cid, _id, _pc, null _v, null _n)` of a [[withNorm]]
+    * frame `(_id, _v, _n)`, shared by the build and the incremental
+    * assign. Raw codes are cell-independent: encode once, BEFORE the
+    * multi-assign explode, so replicas share the kernel pass. Residual
+    * codes are cell-DEPENDENT: assign first, then encode x − centroid(cell)
+    * per replica (VecSub + PqEncode, both codegen kernels in the scan
+    * stage). Vectors PqEncode nulls drop.
+    */
+  private[ext] def pqPostings(vecs: DataFrame, centers: Array[Array[Double]], assign: Int,
+                              codebook: Array[Array[Array[Double]]],
+                              residual: Boolean): DataFrame = {
+    def encode(df: DataFrame, v: Column) =
+      df.withColumn("_pc", graft.functions.PqEncode(v, codebook)).where(col("_pc").isNotNull)
+    def assignCells(df: DataFrame) = df.withColumn("_cid", cellIds(col("_v"), centers, assign))
+    val posted =
+      if (!residual) assignCells(encode(vecs, col("_v")))
+      else encode(assignCells(vecs),
+        graft.functions.VecSub(col("_v"), cellCentroidAt(col("_cid"), centers)))
+    posted.select(col("_cid"), col("_id"), col("_pc"),
+      lit(null).cast("array<double>").as("_v"), lit(null).cast("double").as("_n"))
+  }
 
   /** Id admission for the persistent ANN index family: integral ids cast
     * losslessly to long (compatible with previously saved indexes),

@@ -105,23 +105,25 @@ object TextOps {
 final class TextAnalysisOps(private val c: Chain) extends AnyVal {
   import TextOps._
 
-  /** token_count(text_col): whitespace tokens + BPE-ish subword proxy. */
+  /** token_count(text_col): whitespace tokens + BPE-ish subword proxy,
+    * replacing existing `n_tokens`/`n_bpeish` columns in place.
+    */
   def tokenCounts(textCol: String): Chain = {
     val df2 = c.df
       .withColumn("n_tokens", size(tokens(col(textCol))))
       .withColumn("n_bpeish", bpeishCount(col(textCol)).cast("int"))
     val tc = Naming.quoteId(textCol)
-    c.next("token_count", df2, Some(
-      s"SELECT *, size(${tokensSql(tc)}) AS n_tokens, " +
-        s"CAST(${bpeishCountSql(tc)} AS INT) AS n_bpeish FROM {{source}}"))
+    val sel = Naming.selectReplacing(c.df.columns.toSeq, Seq(
+      "n_tokens" -> s"size(${tokensSql(tc)})",
+      "n_bpeish" -> s"CAST(${bpeishCountSql(tc)} AS INT)"))
+    c.next("token_count", df2, Some(s"SELECT $sel FROM {{source}}"))
   }
 
   /** quality_score(text_col): length/punctuation/stopword heuristics with a
     * composite score in [0,1]. Exact integer-ratio arithmetic — identical
-    * across engines. Emits its own `n_tokens` (subsuming [[tokenCounts]] —
-    * don't compose the two over one column: the DataFrame face would
-    * replace the earlier column in place while the SQL face appends a
-    * duplicate name).
+    * across engines. Emits its own `n_tokens` (subsuming [[tokenCounts]]:
+    * a tokenCounts after it replaces `n_tokens` in place on both faces,
+    * but this face appends, so don't run it after a tokenCounts).
     */
   def qualityScore(textCol: String): Chain = {
     val txt = col(textCol)

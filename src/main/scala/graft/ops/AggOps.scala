@@ -955,6 +955,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     val wS = s"CAST('$w' AS DOUBLE)"
     val inS = s"$column IS NOT NULL AND NOT isnan(CAST($column AS DOUBLE)) AND " +
       s"CAST($column AS DOUBLE) >= $loS AND CAST($column AS DOUBLE) <= $hiS"
+    val spineS = AggOps.bucketSpineSql(buckets)
     // grouped SQL keeps the readable distinct-spine shape (the oracle /
     // render face is result-, not plan-, graded) but joins NULL-SAFELY so
     // a NULL group keeps its counts, matching the DataFrame face
@@ -962,7 +963,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
       if (groupBy.isEmpty)
         s"SELECT bucket, $loS + bucket * $wS AS bucket_lo, " +
           s"$loS + (bucket + 1) * $wS AS bucket_hi, COALESCE(cnt, 0) AS cnt " +
-          s"FROM (SELECT explode(sequence(0, ${buckets - 1})) AS bucket) " +
+          s"FROM (SELECT explode($spineS) AS bucket) " +
           s"LEFT JOIN (SELECT LEAST(CAST(FLOOR((CAST($column AS DOUBLE) - $loS) / $wS) " +
           s"AS BIGINT), ${buckets - 1}) AS bucket, COUNT(*) AS cnt FROM {{source}} " +
           s"WHERE $inS GROUP BY bucket) USING (bucket)"
@@ -974,7 +975,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
         s"SELECT ${gSelSp}sp.bucket, $loS + sp.bucket * $wS AS bucket_lo, " +
           s"$loS + (sp.bucket + 1) * $wS AS bucket_hi, COALESCE(cc.cnt, 0) AS cnt " +
           s"FROM ((SELECT DISTINCT ${groupBy.mkString(", ")} FROM {{source}}) " +
-          s"CROSS JOIN (SELECT explode(sequence(0, ${buckets - 1})) AS bucket)) sp " +
+          s"CROSS JOIN (SELECT explode($spineS) AS bucket)) sp " +
           s"LEFT JOIN (SELECT ${groupBy.mkString(", ")}, " +
           s"LEAST(CAST(FLOOR((CAST($column AS DOUBLE) - $loS) / $wS) " +
           s"AS BIGINT), ${buckets - 1}) AS bucket, COUNT(*) AS cnt FROM {{source}} " +
@@ -1345,7 +1346,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
       if (groupBy.isEmpty)
         s"SELECT bucket, bucket * $wS AS bucket_lo, (bucket + 1) * $wS AS bucket_hi, " +
           statsSql +
-          s"FROM (SELECT explode(sequence(0, ${buckets - 1})) AS bucket) " +
+          s"FROM (SELECT explode(${AggOps.bucketSpineSql(buckets)}) AS bucket) " +
           s"LEFT JOIN ($cntSql) USING (bucket)"
       else {
         val onS = (Seq("sp.bucket = cnt.bucket") ++
@@ -1355,7 +1356,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
           s"sp.bucket * $wS AS bucket_lo, (sp.bucket + 1) * $wS AS bucket_hi, " +
           statsSql +
           s"FROM ((SELECT DISTINCT ${groupBy.mkString(", ")} FROM {{source}}) " +
-          s"CROSS JOIN (SELECT explode(sequence(0, ${buckets - 1})) AS bucket)) sp " +
+          s"CROSS JOIN (SELECT explode(${AggOps.bucketSpineSql(buckets)}) AS bucket)) sp " +
           s"LEFT JOIN ($cntSql) cnt ON $onS"
       }
     // exact decimal term |pos − ssum| = n·|pos_rate − score_avg| with no
@@ -3084,6 +3085,13 @@ private[graft] object AggOps {
     else s"($jS) _j JOIN ($aS) _a ON " +
       groupBy.map(k => s"_j.$k <=> _a.$k").mkString(" AND ") +
       s" JOIN ($bS) _b ON " + groupBy.map(k => s"_j.$k <=> _b.$k").mkString(" AND ")
+
+  /** The SQL face's bucket spine 0 … `buckets` − 1 as a BIGINT array, the
+    * type the DataFrame face's `range`/long `sequence` spine has (a bare
+    * `sequence(0, n)` is INT).
+    */
+  private[graft] def bucketSpineSql(buckets: Int): String =
+    s"sequence(CAST(0 AS BIGINT), CAST(${buckets - 1} AS BIGINT))"
 
   /** The per-bucket readout columns of a calibration accumulator frame
     * (count `nb`, exact Σscore `ssumd`, positives `pos`) — shared by

@@ -72,8 +72,8 @@ final class ProjectOps(private val c: Chain) extends AnyVal {
     val df2 = mathOps.zip(allNames).foldLeft(c.df) { case (d, (op, n)) =>
       d.withColumn(n, expr(op))
     }
-    val sel = mathOps.zip(allNames).map { case (op, n) => s"$op AS $n" }
-    c.next("math", df2, Some(s"SELECT *, ${sel.mkString(", ")} FROM {{source}}"))
+    val sel = Naming.selectReplacing(c.df.columns.toSeq, allNames.zip(mathOps))
+    c.next("math", df2, Some(s"SELECT $sel FROM {{source}}"))
   }
 
   /** if_then(conditions, default, alias): CASE WHEN cascade. Conditions are

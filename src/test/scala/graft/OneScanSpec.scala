@@ -86,6 +86,25 @@ class OneScanSpec extends AnyFunSuite {
     }
   }
 
+  test("the IVF and IVFADC plans compute each input vector's norm once") {
+    // each input-vector branch (the corpus or saved index, and the query
+    // or ingest batch) reaches withNorm once; its generated norm keeps the
+    // usability filter from copying fixed_point_dot(v, v) into a Filter
+    for (q <- Seq("q_sim_topk_ivf", "q_sim_topk_ivf_index", "q_search_pq_ivf",
+        "q_dedup_incremental_sem")) {
+      val plan = prepared(query(q))
+      val selfDots = plan.collect { case n =>
+        n.expressions.flatMap(_.collect {
+          case d: graft.functions.FixedPointDot if d.left.semanticEquals(d.right) =>
+            d.left.toString
+        })
+      }.flatten
+      val perVector = selfDots.groupBy(identity).map { case (v, ds) => v -> ds.size }
+      assert(perVector.size == 2 && perVector.values.forall(_ == 1),
+        s"$q: fixed_point_dot(v, v) calls per input vector $perVector:\n$plan")
+    }
+  }
+
   test("corr_matrix and corr_matrix_listwise build and render with no action") {
     for (deletion <- Seq("pairwise", "listwise")) {
       val li = table("lineitem") // the footer read happens here, not in the build

@@ -131,6 +131,47 @@ class RenderSpec extends AnyFunSuite {
     }
   }
 
+  /** The rendered face, run by `spark.sql`, has the DataFrame face's
+    * column names and types in order and the same rows.
+    */
+  private def assertRoundTrip(ch: graft.core.Chain): Unit = {
+    val back = spark.sql(ch.sql())
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType.catalogString)
+    assert(cols(back) == cols(ch.df), s"schema of ${ch.steps.last.op}")
+    assert(rows(back) == rows(ch.df), s"rows of ${ch.steps.last.op}")
+  }
+
+  test("column-replacing steps render in place: the q_dedup_exact and q_llm_pipeline chains round-trip") {
+    // math over an existing name and tokenCounts re-adding n_tokens
+    // replace the column where the DataFrame face's withColumn does
+    import graft.ext._
+    val docs = table("documents")
+    assertRoundTrip(docs.union(docs.math(Seq("doc_id + 10000"), Seq("doc_id")))
+      .dedupExact("doc_id", "text"))
+    assertRoundTrip(table("documents")
+      .qualityScore("text")
+      .filterRows(Seq("quality > 0.5", "n_tokens >= 20"))
+      .dedupExact("doc_id", "text")
+      .tokenCounts("text")
+      .aggregate(Seq("lang"), Seq(
+        "doc_id" -> Seq("COUNT"),
+        "n_tokens" -> Seq("SUM", "AVG"),
+        "quality" -> Seq("AVG"))))
+  }
+
+  test("bucket spines render BIGINT like the DataFrame face: q_histogram, q_histogram_grouped, calibration") {
+    assertRoundTrip(table("orders").histogram("o_totalprice", 0.0, 500000.0, 16))
+    assertRoundTrip(table("orders").histogram("o_totalprice", 0.0, 500000.0, 8,
+      groupBy = Seq("o_orderstatus")))
+    val scored = table("lineitem").math(
+      Seq("l_discount * 9", "CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END"),
+      Seq("score", "label"))
+    assertRoundTrip(scored.calibrationProfile("score", "label", 10))
+    assertRoundTrip(scored.calibrationProfile("score", "label", 10,
+      groupBy = Seq("l_linestatus")))
+  }
+
   test("exact-sum faces round-trip on NaN rows, null rows and an all-NaN group") {
     // windowed SUM/AVG (windowAggSql), flag_outliers grouped and
     // ungrouped, and aggregate STDDEV/VAR render through graft.core.Exact's

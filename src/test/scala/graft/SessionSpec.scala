@@ -241,20 +241,21 @@ class SessionSpec extends AnyFunSuite {
       s"unlisted: ${found.toSet -- allowed.keySet}; gone: ${allowed.keySet -- found.toSet}")
   }
 
-  test("src/main observes metrics in one mechanism and runs one connected-components loop") {
+  /** (file, enclosing def) of every src/main code line holding `needle`. */
+  private def uses(needle: String): Seq[(String, String)] = mainSources.flatMap { f =>
+    import scala.jdk.CollectionConverters._
     def isComment(line: String): Boolean = {
       val t = line.trim
       t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
     }
-    // (file, enclosing def) of every code line holding `needle`
-    def uses(needle: String): Seq[(String, String)] = mainSources.flatMap { f =>
-      import scala.jdk.CollectionConverters._
-      var enclosing = ""
-      java.nio.file.Files.readAllLines(f).asScala.toSeq.filterNot(isComment).flatMap { line =>
-        """\bdef\s+(\w+)""".r.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
-        if (line.contains(needle)) Seq(f.getFileName.toString -> enclosing) else Nil
-      }
-    }.sorted
+    var enclosing = ""
+    java.nio.file.Files.readAllLines(f).asScala.toSeq.filterNot(isComment).flatMap { line =>
+      """\bdef\s+(\w+)""".r.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+      if (line.contains(needle)) Seq(f.getFileName.toString -> enclosing) else Nil
+    }
+  }.sorted
+
+  test("src/main observes metrics in one mechanism and runs one connected-components loop") {
     // CheckpointProbe's one observation (inside its Observed class) and the
     // chain verb that hands a caller's Observation to Spark
     assert(uses("Observation(").isEmpty, uses("Observation(").mkString("\n"))
@@ -264,6 +265,27 @@ class SessionSpec extends AnyFunSuite {
     // one connected-components body: the contraction loop in DedupOps
     assert(uses("while (!converged") == Seq("DedupOps.scala" -> "contractComponents"),
       uses("while (!converged").mkString("\n"))
+  }
+
+  test("src/main spells the vector norm, the ANN training sample and the IVF cell probe once") {
+    // withNorm is the one (id, vector, norm) frame; the two row-keeping
+    // sites project the norm because they filter no rows through it
+    assert(uses("sqrt(Exact.dot(") == Seq("SimilarityOps.scala" -> "clusterEmbeddings",
+      "SimilarityOps.scala" -> "clusterEval", "SimilarityOps.scala" -> "withNorm"),
+      uses("sqrt(Exact.dot(").mkString("\n"))
+    assert(uses("orderBy(xxhash64(") == Seq("SimilarityOps.scala" -> "trainSample"),
+      uses("orderBy(xxhash64(").mkString("\n"))
+    // the ANN family ranks in two windows, the nprobe cell probe and the
+    // per-query top-k finish; the IVF pair miner assigns cells without
+    // one. DedupOps' other two are the keep-one pick and the n-gram
+    // prefix filter's rarity order
+    val annWindows = uses("row_number().over(")
+      .filter(u => Set("SimilarityOps.scala", "DedupOps.scala")(u._1))
+    assert(annWindows == Seq("DedupOps.scala" -> "keepOnePerCluster",
+      "DedupOps.scala" -> "ngramJaccardPairs", "SimilarityOps.scala" -> "probeCells",
+      "SimilarityOps.scala" -> "rankTopK"), annWindows.mkString("\n"))
+    assert(uses("<= nprobe") == Seq("SimilarityOps.scala" -> "probeCells"),
+      uses("<= nprobe").mkString("\n"))
   }
 
   test("a second GraftSession on one session re-registers no kernel") {

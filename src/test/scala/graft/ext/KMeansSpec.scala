@@ -74,4 +74,42 @@ class KMeansSpec extends AnyFunSuite {
     assert(plan.contains("ReusedExchange"),
       s"expected a ReusedExchange across the assignment self-join; plan:\n$plan")
   }
+
+  test("ivf pair mining at nassign = 2 mines the pairs of the crossJoin + window assignment") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import graft.core.Exact
+    import graft.TestSpark.{rows, spark, table}
+    val emb = table("embeddings")
+    val (nlist, nassign, sample, iters, threshold) = (4, 2, 512, 5, 0.4)
+    val got = new DedupClusterOps(emb).ivfCandidatePairs("vec_id", "embedding",
+      threshold, nlist, nassign, sample, iters).df
+    // the reference: the top-m assignment the miner used before cellIds,
+    // every vector crossed with the broadcast centroids and ranked by
+    // cosine in an id-partitioned window
+    val corpus = SimilarityOps.withNorm(emb.df, "vec_id", "embedding", "_id", "_v", "_n")
+    val centers = SimilarityOps.sphericalKMeans(
+      SimilarityOps.trainSample(corpus, "_id", "_v", sample), nlist, iters)
+    val sim = Exact.dot(col("_v"), col("_cv")) / col("_n") / col("_cn")
+    val w = Window.partitionBy(col("_id")).orderBy(col("_cs").desc, col("_cid").asc)
+    val assigned = corpus.crossJoin(broadcast(SimilarityOps.centroidFrame(spark, centers)))
+      .select(col("_id"), col("_v"), col("_n"), col("_cid"), sim.as("_cs"))
+      .withColumn("_r", row_number().over(w)).where(col("_r") <= nassign)
+    val l = assigned.select(col("_cid"), col("_id").as("id_a"),
+      col("_v").as("_va"), col("_n").as("_na"))
+    val r = assigned.select(col("_cid"), col("_id").as("id_b"),
+      col("_v").as("_vb"), col("_n").as("_nb"))
+    val cos = Exact.dot(col("_va"), col("_vb")) / col("_na") / col("_nb")
+    val ref = l.join(r, Seq("_cid")).where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), cos.as("cosine"))
+      .where(col("cosine") >= threshold).distinct()
+    val expected = rows(ref)
+    assert(expected.nonEmpty, "the fixture must mine some pairs")
+    assert(rows(got) == expected)
+    // the assignments agree cell for cell, not only where pairs clear
+    // the threshold
+    val cells = corpus.select(col("_id"),
+      SimilarityOps.cellIds(col("_v"), centers, nassign).as("_cid"))
+    assert(rows(cells) == rows(assigned.select(col("_id"), col("_cid"))))
+  }
 }
