@@ -915,12 +915,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
       s"histogram group columns collide with output/internal names " +
         s"${groupBy.intersect(reservedHist).mkString(", ")} — rename first")
     val w = (hi - lo) / buckets
-    val x = col(column).cast("double")
-    val in = x.isNotNull && !isnan(x) && x >= lit(lo) && x <= lit(hi)
-    val b = least(floor((x - lit(lo)) / lit(w)).cast("long"), lit((buckets - 1).toLong))
-    val edges = Seq(
-      (lit(lo) + col("bucket") * lit(w)).as("bucket_lo"),
-      (lit(lo) + (col("bucket") + lit(1L)) * lit(w)).as("bucket_hi"))
+    val (in, b) = AggOps.equalWidthBin(column, lo, hi, buckets)
+    val edges = AggOps.binEdges(lo, hi, buckets)
     val df2 =
       if (groupBy.isEmpty) {
         val counts = c.df.where(in).groupBy(b.as("bucket"))
@@ -938,15 +934,8 @@ final class AggOps(private val c: Chain) extends AnyVal {
         val counts0 = c.df
           .groupBy((groupBy.map(col) :+ when(in, b).as("bucket")): _*)
           .agg(count(when(in, lit(1))).as("cnt"))
-        val perGroup = counts0.groupBy(groupBy.map(col): _*)
-          .agg(map_from_entries(collect_list(when(col("bucket").isNotNull,
-            struct(col("bucket"), col("cnt"))))).as("_m"))
-        perGroup
-          .select((groupBy.map(col) :+
-            explode(sequence(lit(0L), lit((buckets - 1).toLong))).as("bucket") :+
-            col("_m")): _*)
-          .select((groupBy.map(col) ++ (col("bucket") +: edges) :+
-            coalesce(try_element_at(col("_m"), col("bucket")), lit(0L)).as("cnt")): _*)
+        AggOps.foldPadCounts(counts0, groupBy, buckets, Seq("cnt" -> "cnt"))
+          .select((groupBy.map(col) ++ (col("bucket") +: edges) :+ col("cnt")): _*)
       }
     // double literals through CAST('…' AS DOUBLE): a bare decimal literal
     // is exact DECIMAL in ANSI engines (the winsorize rationale)
@@ -1858,16 +1847,15 @@ final class AggOps(private val c: Chain) extends AnyVal {
     * group value groups like any other value. `other` must carry the
     * same-named group columns.
     *
-    * Scale, ungrouped: one hash aggregate per side (map-side combined,
-    * ≤ buckets rows out), totals and psi_total as windows over the
-    * bucket-count frame (tiny — never a second corpus scan), spine join
-    * broadcast. Grouped: ONE scan per side — both sides tag-union into
-    * ONE (group, bucket) aggregate (≤ groups × (buckets + 1) rows
-    * shuffle); excluded rows keep a NULL bucket inside it so group
-    * DISCOVERY rides the same pass, and the spine pads per group via the
-    * bucket-map explode (the [[histogram]]/[[calibrationProfile]] regime
-    * — never a corpus-side distinct-groups rescan); closings are two
-    * tiny per-group aggregates over the bounded frame. Not
+    * Scale: ONE scan per side — both sides tag-union into ONE
+    * (group, bucket) aggregate ([[AggOps.sideCounts]], map-side combined,
+    * ≤ groups × (buckets + 1) rows shuffle); excluded rows keep a NULL
+    * bucket inside it so group DISCOVERY rides the same pass, and the
+    * spine pads per group via the bucket-map explode
+    * ([[AggOps.foldPadCounts]] — never a corpus-side distinct-groups
+    * rescan); closings are two tiny per-group aggregates over the bounded
+    * frame ([[AggOps.psiTerms]]). Ungrouped is the same plan with no group
+    * columns: one count map, totals broadcast back by crossJoin. Not
     * SQL-renderable (two frames — the [[graft.ops.JoinOps.diffAgainst]]
     * posture).
     */
@@ -1876,45 +1864,15 @@ final class AggOps(private val c: Chain) extends AnyVal {
                  groupBy: Seq[String] = Nil): Chain = {
     require(buckets > 0, s"psi_profile needs buckets > 0, got $buckets")
     require(hi > lo, s"psi_profile needs hi > lo, got [$lo, $hi]")
-    require(eps > 0.0 && eps < 1.0, s"psi_profile needs eps in (0, 1), got $eps")
-    AggOps.requirePsiGroupNames("psi_profile", groupBy,
+    AggOps.requirePsiEps("psi_profile", eps)
+    AggOps.twoSampleGuard("psi_profile", c.df, other, column, groupBy,
       Seq("bucket", "bucket_lo", "bucket_hi"))
-    val w = (hi - lo) / buckets
-    val x = col(column).cast("double")
-    val in = x.isNotNull && !isnan(x) && x >= lit(lo) && x <= lit(hi)
-    val b = least(floor((x - lit(lo)) / lit(w)).cast("long"), lit((buckets - 1).toLong))
-    val closed =
-      if (groupBy.isEmpty) {
-        def bucketCounts(df: DataFrame, as: String) =
-          df.where(in).groupBy(b.as("bucket")).agg(count(lit(1)).as(as))
-        val spine = c.spark.range(buckets).select(col("id").as("bucket"))
-        val joined = spine
-          .join(bucketCounts(c.df, "_cb"), Seq("bucket"), "left")
-          .join(bucketCounts(other, "_co"), Seq("bucket"), "left")
-          .select(col("bucket"),
-            coalesce(col("_cb"), lit(0L)).as("cnt_base"),
-            coalesce(col("_co"), lit(0L)).as("cnt_other"))
-        AggOps.psiTerms(joined, eps)
-      } else {
-        // ONE scan per side: tag-union into ONE (group, bucket) aggregate;
-        // excluded rows keep a NULL bucket so group discovery rides the
-        // same pass, and the per-group map/explode fold pads the spine —
-        // the histogram/calibrationProfile regime, never a corpus rescan
-        def side(df: DataFrame, tag: Int) =
-          df.select((groupBy.map(col) ++ Seq(when(in, b).as("bucket"),
-            lit(tag).as("_s"))): _*)
-        val counts = side(c.df, 0).unionByName(side(other, 1))
-          .groupBy((groupBy.map(col) :+ col("bucket")): _*)
-          .agg(count(when(col("_s") === 0, lit(1))).as("_cb"),
-            count(when(col("_s") === 1, lit(1))).as("_co"))
-        AggOps.psiTerms(AggOps.foldPadCounts(counts, groupBy, buckets), eps, groupBy)
-      }
-    val df2 = closed
-      .withColumn("bucket_lo", lit(lo) + col("bucket") * lit(w))
-      .withColumn("bucket_hi", lit(lo) + (col("bucket") + lit(1L)) * lit(w))
-      .select((groupBy.map(col) ++ Seq(col("bucket"), col("bucket_lo"),
-        col("bucket_hi"), col("cnt_base"), col("cnt_other"),
-        col("psi_term"), col("psi_total"))): _*)
+    val (in, b) = AggOps.equalWidthBin(column, lo, hi, buckets)
+    val counts = AggOps.sideCounts(c.df, other, groupBy, when(in, b), "bucket",
+      keepNull = true)
+    val df2 = AggOps.psiTerms(AggOps.foldPadCounts(counts, groupBy, buckets), eps, groupBy)
+      .select((groupBy.map(col) ++ (col("bucket") +: AggOps.binEdges(lo, hi, buckets)) ++
+        Seq(col("cnt_base"), col("cnt_other"), col("psi_term"), col("psi_total"))): _*)
     c.next("psi_profile", df2, None)
   }
 
@@ -1937,151 +1895,52 @@ final class AggOps(private val c: Chain) extends AnyVal {
     * bounds — the bins drift by ±ε rank, the PSI stays a valid
     * equal-frequency profile (gate with rank bands, never hashes).
     *
-    * Scale: the BASE side is scanned ONCE — its pruned value projection
-    * persists across the sketch and count derivations, both of which run
-    * EAGERLY at op-construction as bounded driver reads (≤ buckets − 1
-    * cutoffs + ≤ buckets counts, the searchTfidfIndex declared-read
-    * posture), then the cache is released; `other` is scanned once,
-    * lazily, through one map-side-combined count aggregate over
-    * ≤ `buckets` cells, and the PSI closing runs over the bounded spine
-    * frame — no global sort, nothing corpus-sized past the first
-    * exchanges. An empty/degenerate base yields null cutoffs → every
-    * valid row buckets to 0 and `_tb` = 0 nulls the shares: the profile
-    * reads null, never a fake zero.
+    * `group_by` (per-slice equal-frequency drift): each slice gets its own
+    * equal-frequency bins, and every count, total, term, `psi_total`, and
+    * cutoff bound closes per group. Group discovery follows
+    * [[psiProfile]]: null/NaN rows keep a NULL bucket, so an all-invalid
+    * group stays visible (null cutoffs, zero counts, null terms); a group
+    * seen only on the `other` side buckets to 0 with null bounds and null
+    * terms — visible, never a fake zero. Ungrouped, an empty/degenerate
+    * base likewise yields null cutoffs and a null profile.
     *
-    * `group_by` (per-slice equal-frequency drift): cutoffs come from ONE
-    * GROUPED KLL aggregate over the base side — each slice gets its own
-    * equal-frequency bins — and every count, total, term, `psi_total`,
-    * and cutoff bound closes per group. The cutoff and base-count frames
-    * are BOUNDED DECLARED DRIVER READS capped at `maxGroups` (loud
-    * refusal past the cap — per-group cutoffs cannot fold to literals
-    * without a driver read, and an unbounded group domain would need a
-    * persisted-base shape instead; drift slices are low-cardinality by
-    * construction) and re-lift as literal frames, so the base side is
-    * still scanned exactly ONCE (persisted pruned projection, eagerly
-    * released) and the returned plan carries it only as literals.
-    * `other` is scanned once, lazily, through one broadcast join against
-    * the literal cutoffs + one map-side-combined aggregate. Group
-    * discovery follows [[psiProfile]]: null/NaN rows keep a NULL bucket,
-    * so an all-invalid group stays visible (null cutoffs, zero counts,
-    * null terms); a group seen only on the `other` side buckets to 0
-    * with null bounds and null terms — visible, never a fake zero.
+    * Scale: the BASE side is read ONCE, eagerly, by
+    * [[AggOps.quantileReference]] — one grouped KLL aggregate and one
+    * bucket-count aggregate over its persisted pruned projection, both
+    * BOUNDED DECLARED DRIVER READS capped at `maxGroups` (loud refusal
+    * past the cap — per-group cutoffs cannot fold to literals without a
+    * driver read; drift slices are low-cardinality by construction),
+    * re-lifted as literal frames, so the returned plan carries the base
+    * only as literals. `other` is scanned once, lazily, through one
+    * broadcast join against the literal cutoffs and one map-side-combined
+    * aggregate; the PSI closing runs over the bounded padded frame — no
+    * global sort, nothing corpus-sized past the first exchanges.
     */
   def psiQuantileProfile(other: DataFrame, column: String, buckets: Int,
                          eps: Double = 1e-6, k: Int = 200,
                          groupBy: Seq[String] = Nil,
                          maxGroups: Int = 1000): Chain = {
     require(buckets > 1, s"psi_quantile_profile needs buckets > 1, got $buckets")
-    require(eps > 0.0 && eps < 1.0, s"psi_quantile_profile needs eps in (0, 1), got $eps")
-    val xr = col(column).cast("double")
-    if (groupBy.isEmpty) {
-      val baseV = c.df
-        .select(xr.as(column)).where(col(column).isNotNull && !isnan(col(column)))
-        .persist()
-      val (cuts, baseCounts) =
-        try {
-          val cuts = AggOps.literalCutoffs(
-            AggOps.kllCutoffs(baseV, column, buckets, k), c.spark, buckets)
-          val baseRows = AggOps.cutoffBucketed(baseV, column, cuts, buckets)
-            .groupBy("bucket").agg(count(lit(1)).as("_cb")).collect()
-          (cuts, AggOps.literalCountFrame(c.spark, baseRows, "_cb"))
-        } finally baseV.unpersist(false)
-      val otherCounts = AggOps.cutoffBucketed(other, column, cuts, buckets)
-        .groupBy("bucket").agg(count(lit(1)).as("_co"))
-      val spine = c.spark.range(buckets).select(col("id").as("bucket"))
-      val joined = spine
-        .join(baseCounts, Seq("bucket"), "left")
-        .join(otherCounts, Seq("bucket"), "left")
-        .select(col("bucket"),
-          coalesce(col("_cb"), lit(0L)).as("cnt_base"),
-          coalesce(col("_co"), lit(0L)).as("cnt_other"))
-      val df2 = AggOps.withCutoffBounds(AggOps.psiTerms(joined, eps), cuts, buckets)
-        .select("bucket", "cut_lo", "cut_hi", "cnt_base", "cnt_other",
-          "psi_term", "psi_total")
-      c.next("psi_quantile_profile", df2, None)
-    } else {
-      require(maxGroups > 0, s"psi_quantile_profile needs maxGroups > 0, got $maxGroups")
-      AggOps.requirePsiGroupNames("psi_quantile_profile", groupBy,
-        Seq("cut_lo", "cut_hi", "_x", "_sk") ++
-          (1 until buckets).map(i => s"_cut$i"))
-      val v = col("_x").isNotNull && !isnan(col("_x"))
-      val cutJoinCond = groupBy.map(kk => col(kk) <=> col(s"_cg_$kk")).reduce(_ && _)
-      // bucket = #cutoffs strictly below x, cutoffs joined per group; a
-      // group with no cutoff row (all-invalid base, or other-side-only)
-      // gets null conditions → bucket 0, matching the ungrouped
-      // degenerate posture
-      def bucketCounts(df: DataFrame, cutF: DataFrame, as: String) = {
-        val branches = (buckets - 1 to 1 by -1)
-          .map(i => (col("_x") > col(s"_cut$i"), lit(i.toLong)))
-        val bexpr = branches.tail
-          .foldLeft(when(branches.head._1, branches.head._2)) {
-            case (acc, (cond, bv)) => acc.when(cond, bv)
-          }.otherwise(lit(0L))
-        df.join(broadcast(cutF), cutJoinCond, "left")
-          .groupBy((groupBy.map(col) :+ when(v, bexpr).as("bucket")): _*)
-          .agg(count(when(v, lit(1))).as(as))
-      }
-      val baseP = c.df.select((groupBy.map(col) :+ xr.as("_x")): _*).persist()
-      val (cutF, baseCounts) =
-        try {
-          val cutAgg = baseP.where(v).groupBy(groupBy.map(col): _*)
-            .agg(graft.functions.KllSketches.sketchAgg(col("_x"), k).as("_sk"))
-            .select((groupBy.map(col) ++ (1 until buckets).map(i =>
-              graft.functions.KllSketches.quantile(col("_sk"), i.toDouble / buckets)
-                .as(s"_cut$i"))): _*)
-          val cutRows = cutAgg.limit(maxGroups + 1).collect()
-          require(cutRows.length <= maxGroups,
-            s"psi_quantile_profile grouped saw more than maxGroups=$maxGroups " +
-              "base groups — the per-group cutoff fold is a declared driver " +
-              "read of groups × (buckets − 1) doubles; raise maxGroups or " +
-              "coarsen the grouping")
-          val cutSchema = StructType(
-            groupBy.map { g =>
-              val f = cutAgg.schema(g); StructField(s"_cg_${f.name}", f.dataType, nullable = true)
-            } ++ (1 until buckets).map(i =>
-              StructField(s"_cut$i", DoubleType, nullable = true)))
-          val cutF = c.spark.createDataFrame(
-            java.util.Arrays.asList(cutRows: _*), cutSchema)
-          val countCap = maxGroups * (buckets + 1)
-          val baseRows = bucketCounts(baseP, cutF, "_cb")
-            .limit(countCap + 1).collect()
-          require(baseRows.length <= countCap,
-            s"psi_quantile_profile grouped base-count frame exceeded " +
-              s"maxGroups=$maxGroups × (buckets + 1) rows — raise maxGroups " +
-              "or coarsen the grouping")
-          val countSchema = StructType(
-            groupBy.map { g =>
-              val f = baseP.schema(g); StructField(f.name, f.dataType, nullable = true)
-            } ++ Seq(StructField("bucket", LongType, nullable = true),
-              StructField("_cb", LongType, nullable = true)))
-          (cutF, c.spark.createDataFrame(
-            java.util.Arrays.asList(baseRows: _*), countSchema))
-        } finally baseP.unpersist(false)
-      val otherCounts = bucketCounts(
-        other.select((groupBy.map(col) :+ xr.as("_x")): _*), cutF, "_co")
-      // literal base counts + lazy other counts: tag-free union into ONE
-      // aggregate (a full-outer join would need null-safe keys; the union
-      // groups null group values and the NULL discovery bucket naturally)
-      val counts = baseCounts
-        .select((groupBy.map(col) ++ Seq(col("bucket"), col("_cb"), lit(0L).as("_co"))): _*)
-        .unionByName(otherCounts
-          .select((groupBy.map(col) ++ Seq(col("bucket"), lit(0L).as("_cb"), col("_co"))): _*))
-        .groupBy((groupBy.map(col) :+ col("bucket")): _*)
-        .agg(sum(col("_cb")).as("_cb"), sum(col("_co")).as("_co"))
-      val closed = AggOps.psiTerms(
-        AggOps.foldPadCounts(counts, groupBy, buckets), eps, groupBy)
-      val df2 = closed.join(broadcast(cutF), cutJoinCond, "left")
-        .withColumn("cut_lo",
-          AggOps.cutBoundExpr(buckets, bb => if (bb == 0) None else Some(bb)))
-        .withColumn("cut_hi",
-          AggOps.cutBoundExpr(buckets, bb => if (bb == buckets - 1) None else Some(bb + 1)))
-        .drop((groupBy.map(kk => s"_cg_$kk") ++
-          (1 until buckets).map(i => s"_cut$i")): _*)
-        .select((groupBy.map(col) ++ Seq(col("bucket"), col("cut_lo"),
-          col("cut_hi"), col("cnt_base"), col("cnt_other"),
-          col("psi_term"), col("psi_total"))): _*)
-      c.next("psi_quantile_profile", df2, None)
-    }
+    AggOps.requirePsiEps("psi_quantile_profile", eps)
+    require(maxGroups > 0, s"psi_quantile_profile needs maxGroups > 0, got $maxGroups")
+    AggOps.twoSampleGuard("psi_quantile_profile", c.df, other, column, groupBy,
+      Seq("cut_lo", "cut_hi", "_sk") ++ (1 until buckets).map(i => s"_cut$i"))
+    val (cutF, baseCounts) = AggOps.quantileReference("psi_quantile_profile", c.df,
+      column, groupBy, buckets, k, maxGroups)
+    // literal base counts + lazy other counts: one union into ONE
+    // aggregate (a full-outer join would need null-safe keys; the union
+    // groups null group values and the NULL discovery bucket naturally)
+    val counts = baseCounts
+      .unionByName(AggOps.cutoffCounts(other, column, cutF, groupBy, buckets, "_co"),
+        allowMissingColumns = true)
+      .groupBy((groupBy.map(col) :+ col("bucket")): _*)
+      .agg(sum(col("_cb")).as("_cb"), sum(col("_co")).as("_co"))
+    val closed = AggOps.psiTerms(AggOps.foldPadCounts(counts, groupBy, buckets), eps, groupBy)
+    val df2 = AggOps.withCutoffBounds(closed, cutF, groupBy, buckets)
+      .select((groupBy.map(col) ++ Seq(col("bucket"), col("cut_lo"),
+        col("cut_hi"), col("cnt_base"), col("cnt_other"),
+        col("psi_term"), col("psi_total"))): _*)
+    c.next("psi_quantile_profile", df2, None)
   }
 
   /** psi_categorical_profile(other, column, group_by): [[psiProfile]]
@@ -2099,42 +1958,21 @@ final class AggOps(private val c: Chain) extends AnyVal {
     * whose rows are all null-valued yields no rows (exactly what its
     * own ungrouped run would produce, fuzz-pinned).
     *
-    * Scale, grouped: ONE scan per side — tag-union into ONE
-    * (group, value) aggregate with map-side combine — then the two tiny
-    * per-group closing aggregates ([[AggOps.psiTerms]],
-    * null-safe). Ungrouped keeps the two-count-frame full-outer shape.
+    * Scale, at any grouping: ONE scan per side — tag-union into ONE
+    * (group, value) aggregate with map-side combine
+    * ([[AggOps.sideCounts]]) — then the two tiny per-group closing
+    * aggregates ([[AggOps.psiTerms]], null-safe).
     */
   def psiCategoricalProfile(other: DataFrame, column: String,
                             eps: Double = 1e-6,
                             groupBy: Seq[String] = Nil): Chain = {
-    require(eps > 0.0 && eps < 1.0, s"psi_categorical needs eps in (0, 1), got $eps")
-    AggOps.requirePsiGroupNames("psi_categorical", groupBy, Seq("value"))
-    val closed =
-      if (groupBy.isEmpty) {
-        def valueCounts(df: DataFrame, as: String) =
-          df.where(col(column).isNotNull)
-            .groupBy(col(column).cast("string").as("value"))
-            .agg(count(lit(1)).as(as))
-        val joined = valueCounts(c.df, "_cb")
-          .join(valueCounts(other, "_co"), Seq("value"), "full_outer")
-          .select(col("value"),
-            coalesce(col("_cb"), lit(0L)).as("cnt_base"),
-            coalesce(col("_co"), lit(0L)).as("cnt_other"))
-        AggOps.psiTerms(joined, eps)
-      } else {
-        def side(df: DataFrame, tag: Int) =
-          df.where(col(column).isNotNull)
-            .select((groupBy.map(col) ++ Seq(
-              col(column).cast("string").as("value"), lit(tag).as("_s"))): _*)
-        val counts = side(c.df, 0).unionByName(side(other, 1))
-          .groupBy((groupBy.map(col) :+ col("value")): _*)
-          .agg(count(when(col("_s") === 0, lit(1))).as("cnt_base"),
-            count(when(col("_s") === 1, lit(1))).as("cnt_other"))
-        AggOps.psiTerms(counts, eps, groupBy)
-      }
-    val df2 = closed.select((groupBy.map(col) ++ Seq(col("value"),
-      col("cnt_base"), col("cnt_other"), col("psi_term"),
-      col("psi_total"))): _*)
+    AggOps.requirePsiEps("psi_categorical", eps)
+    AggOps.twoSampleGuard("psi_categorical", c.df, other, column, groupBy, Seq("value"))
+    val counts = AggOps.sideCounts(c.df, other, groupBy, col(column).cast("string"), "value")
+      .withColumnsRenamed(Map("_cb" -> "cnt_base", "_co" -> "cnt_other"))
+    val df2 = AggOps.psiTerms(counts, eps, groupBy).select((groupBy.map(col) ++
+      Seq(col("value"), col("cnt_base"), col("cnt_other"), col("psi_term"),
+        col("psi_total"))): _*)
     c.next("psi_categorical_profile", df2, None)
   }
 
@@ -2157,70 +1995,31 @@ final class AggOps(private val c: Chain) extends AnyVal {
     * compare — visible, never a fake 0 or 1).
     *
     * Scale shape: one scan per side tag-unioned into ONE (group, value)
-    * count aggregate (map-side combined — the exchange carries counts,
-    * not rows), then cumulative windows per group over the distinct
-    * values and one closing aggregate. UNGROUPED — where a continuous
-    * column makes the distinct-value frame corpus-scale — there is no
-    * single-partition window at all: both sides' cumulative counts ride
-    * ONE multi-weight [[graft.core.PrefixScan]] over the count frame
-    * (materialized once; the side totals are a one-row aggregate over
-    * the same checkpoint, broadcast back via crossJoin). Identical
-    * integers; the ungrouped face is therefore EAGER (the PrefixScan
-    * posture — release via [[graft.core.Chain.releaseCheckpoints]]).
+    * count aggregate ([[AggOps.sideCounts]] — the exchange carries
+    * counts, not rows), then cumulative counts and side totals per group
+    * over the distinct values ([[AggOps.sideTotals]]) and one closing
+    * aggregate. UNGROUPED — where a continuous column makes the
+    * distinct-value frame corpus-scale — there is no single-partition
+    * window at all: both sides' cumulative counts ride ONE multi-weight
+    * [[graft.core.PrefixScan]] over the count frame and the totals
+    * broadcast back from the same checkpoint. Identical integers; the
+    * ungrouped face is therefore EAGER (the PrefixScan posture — release
+    * via [[graft.core.Chain.releaseCheckpoints]]).
     */
   def ksProfile(other: DataFrame, column: String,
                 groupBy: Seq[String] = Nil): Chain = {
-    AggOps.requirePsiGroupNames("ks_profile", groupBy,
-      Seq("n_base", "n_other", "ks_fp", "_v", "_ca", "_cuma", "_cumb",
-        "_na", "_nb"))
-    Seq(c.df -> "base chain", other -> "other frame").foreach { case (df, who) =>
-      require(df.columns.contains(column), s"ks_profile: $who is missing column '$column'")
-      groupBy.foreach(g => require(df.columns.contains(g),
-        s"ks_profile: $who is missing group column '$g'"))
-    }
+    AggOps.twoSampleGuard("ks_profile", c.df, other, column, groupBy,
+      Seq("n_base", "n_other", "ks_fp"))
     val x = col(column).cast("double")
-    val xr = when(!isnan(x), x)
-    def side(df: DataFrame, tag: Int) =
-      df.select((groupBy.map(col) ++ Seq(xr.as("_v"), lit(tag).as("_s"))): _*)
-        .where(col("_v").isNotNull)
-    val counts = side(c.df, 0).unionByName(side(other, 1))
-      .groupBy((groupBy.map(col) :+ col("_v")): _*)
-      .agg(count(when(col("_s") === 0, lit(1))).as("_ca"),
-        count(when(col("_s") === 1, lit(1))).as("_cb"))
+    val stepped = AggOps.sideTotals(
+      AggOps.sideCounts(c.df, other, groupBy, when(!isnan(x), x), "_v"),
+      groupBy, cumulativeBy = Some(col("_v").asc))
     import Exact.fpq
-    val stepped = if (groupBy.isEmpty) {
-      // no single-partition window: BOTH cumulative counts ride ONE
-      // multi-weight PrefixScan over the count frame (materialized once —
-      // the totals branch reads the same checkpoint blocks instead of
-      // re-scanning the corpus), and the side totals arrive as a one-row
-      // aggregate broadcast back via crossJoin
-      val scanned = graft.core.PrefixScan.exclusivePrefixSums(
-        counts, Nil, Seq(col("_v").asc),
-        Seq(col("_ca") -> "_xca", col("_cb") -> "_xcb"))
-      val totals = broadcast(scanned.agg(
-        coalesce(sum(col("_ca")), lit(0L)).as("_na"),
-        coalesce(sum(col("_cb")), lit(0L)).as("_nb")))
-      scanned.crossJoin(totals)
-        .withColumn("_cuma", col("_xca") + col("_ca"))
-        .withColumn("_cumb", col("_xcb") + col("_cb"))
-        .drop("_xca", "_xcb")
-    } else {
-      val wPart = Window.partitionBy(groupBy.map(col): _*)
-      val wCum = wPart.orderBy(col("_v").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      counts
-        .withColumn("_cuma", sum(col("_ca")).over(wCum))
-        .withColumn("_cumb", sum(col("_cb")).over(wCum))
-        .withColumn("_na", sum(col("_ca")).over(wPart))
-        .withColumn("_nb", sum(col("_cb")).over(wPart))
-    }
-    val dTerm = when(col("_na") > 0L && col("_nb") > 0L,
-      abs(fpq(col("_cuma").cast("double") / col("_na").cast("double")) -
-        fpq(col("_cumb").cast("double") / col("_nb").cast("double"))))
-    val df2 = (
-      if (groupBy.isEmpty) stepped.groupBy()
-      else stepped.groupBy(groupBy.map(col): _*))
-      .agg(max(col("_na")).as("n_base"), max(col("_nb")).as("n_other"),
+    val dTerm = when(col("_tb") > 0L && col("_to") > 0L,
+      abs(fpq(col("_cumb").cast("double") / col("_tb").cast("double")) -
+        fpq(col("_cumo").cast("double") / col("_to").cast("double"))))
+    val df2 = stepped.groupBy(groupBy.map(col): _*)
+      .agg(max(col("_tb")).as("n_base"), max(col("_to")).as("n_other"),
         max(dTerm).as("ks_fp"))
     c.next("ks_profile", df2, None)
   }
@@ -2451,19 +2250,10 @@ final class AggOps(private val c: Chain) extends AnyVal {
     */
   def tTestProfile(other: DataFrame, column: String,
                    groupBy: Seq[String] = Nil): Chain = {
-    AggOps.requirePsiGroupNames("t_test_profile", groupBy,
+    AggOps.twoSampleGuard("t_test_profile", c.df, other, column, groupBy,
       Seq("n_base", "n_other", "mean_base", "mean_other", "var_base",
-        "var_other", "t_stat", "df", "_x", "_n1", "_s1", "_q1", "_n2",
-        "_s2", "_q2"))
-    Seq(c.df -> "base chain", other -> "other frame").foreach { case (df, who) =>
-      require(df.columns.contains(column), s"t_test_profile: $who is missing column '$column'")
-      groupBy.foreach(g => require(df.columns.contains(g),
-        s"t_test_profile: $who is missing group column '$g'"))
-    }
-    def side(df: DataFrame, tag: Int) =
-      df.select((groupBy.map(col) ++ Seq(col(column).cast("double").as("_x"),
-        lit(tag).as("_s"))): _*)
-    val u = side(c.df, 0).unionByName(side(other, 1))
+        "var_other", "t_stat", "df", "_n1", "_s1", "_q1", "_n2", "_s2", "_q2"))
+    val u = AggOps.tagUnion(c.df, other, groupBy, col(column).cast("double").as("_x"))
     // the x² decimal cast gates exclusion: NaN casts to null, and so does
     // an overflowing x² — rows drop from n, Σx and Σx² together (the
     // flagOutliers contract)
@@ -2473,10 +2263,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
     }
     val aggs = (mg(0) ++ mg(1)).zip(Seq("_n1", "_s1", "_q1", "_n2", "_s2", "_q2"))
       .map { case (e, n) => e.as(n) }
-    val g = (
-      if (groupBy.isEmpty) u.groupBy()
-      else u.groupBy(groupBy.map(col): _*))
-      .agg(aggs.head, aggs.tail: _*)
+    val g = u.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val (m1, m2) = (Exact.Moments(col("_n1"), col("_s1"), col("_q1")).toDouble,
       Exact.Moments(col("_n2"), col("_s2"), col("_q2")).toDouble)
     val closed = g
@@ -2517,48 +2304,20 @@ final class AggOps(private val c: Chain) extends AnyVal {
     * two-FRAME counterpart of [[crossTable]]'s within-table independence
     * χ². An empty side yields null chi2/df (nothing to test).
     *
-    * Scale shape: the [[ksProfile]] tag-union — one scan per side into
-    * ONE (group, value) count aggregate, group-partitioned window totals
-    * over that count frame, one closing aggregate.
+    * Scale shape: the [[ksProfile]] side count and side totals — one scan
+    * per side into ONE (group, value) count aggregate, totals over that
+    * count frame ([[AggOps.sideTotals]]: group-partitioned windows, or
+    * ungrouped a declared eager checkpoint with broadcast totals), one
+    * closing aggregate.
     */
   def chiSquareHomogeneity(other: DataFrame, column: String,
                            groupBy: Seq[String] = Nil): Chain = {
-    AggOps.requirePsiGroupNames("chi_square_homogeneity", groupBy,
-      Seq("n_base", "n_other", "n_values", "chi2", "df", "_v", "_ca",
-        "_na", "_nb"))
-    Seq(c.df -> "base chain", other -> "other frame").foreach { case (df, who) =>
-      require(df.columns.contains(column),
-        s"chi_square_homogeneity: $who is missing column '$column'")
-      groupBy.foreach(g => require(df.columns.contains(g),
-        s"chi_square_homogeneity: $who is missing group column '$g'"))
-    }
-    def side(df: DataFrame, tag: Int) =
-      df.where(col(column).isNotNull)
-        .select((groupBy.map(col) ++ Seq(col(column).cast("string").as("_v"),
-          lit(tag).as("_s"))): _*)
-    val counts = side(c.df, 0).unionByName(side(other, 1))
-      .groupBy((groupBy.map(col) :+ col("_v")): _*)
-      .agg(count(when(col("_s") === 0, lit(1))).as("_ca"),
-        count(when(col("_s") === 1, lit(1))).as("_cb"))
-    val stepped = if (groupBy.isEmpty) {
-      // side totals from a one-row aggregate broadcast back via
-      // crossJoin, NOT a whole-frame window (SinglePartition funnel when
-      // a continuous column makes the value frame corpus-scale). The
-      // count frame materializes once (localCheckpoint) so the totals
-      // branch reads the same blocks instead of re-scanning the corpus —
-      // a declared eager step (the PrefixScan posture).
-      val cnts = counts.localCheckpoint()
-      cnts.crossJoin(broadcast(cnts.agg(
-        coalesce(sum(col("_ca")), lit(0L)).as("_na"),
-        coalesce(sum(col("_cb")), lit(0L)).as("_nb"))))
-    } else {
-      val wPart = Window.partitionBy(groupBy.map(col): _*)
-      counts
-        .withColumn("_na", sum(col("_ca")).over(wPart))
-        .withColumn("_nb", sum(col("_cb")).over(wPart))
-    }
-    val tot = (col("_na") + col("_nb")).cast("double")
-    val rowT = (col("_ca") + col("_cb")).cast("double")
+    AggOps.twoSampleGuard("chi_square_homogeneity", c.df, other, column, groupBy,
+      Seq("n_base", "n_other", "n_values", "chi2", "df"))
+    val stepped = AggOps.sideTotals(
+      AggOps.sideCounts(c.df, other, groupBy, col(column).cast("string"), "_v"), groupBy)
+    val tot = (col("_tb") + col("_to")).cast("double")
+    val rowT = (col("_cb") + col("_co")).cast("double")
     def cell(o: Column, sideT: Column) = {
       val e = rowT * sideT.cast("double") / tot
       val d = o.cast("double") - e
@@ -2567,17 +2326,13 @@ final class AggOps(private val c: Chain) extends AnyVal {
     // both sides non-empty → every expected count is > 0 (each value row
     // exists because some side saw it); quantize the per-cell pair before
     // the decimal sum — the crossTable closing
-    val term = when(col("_na") > 0L && col("_nb") > 0L,
-      Exact.fpq(cell(col("_ca"), col("_na")) + cell(col("_cb"), col("_nb"))))
-    val closed = (
-      if (groupBy.isEmpty) stepped.groupBy()
-      else stepped.groupBy(groupBy.map(col): _*))
-      .agg(max(col("_na")).as("n_base"), max(col("_nb")).as("n_other"),
+    val term = when(col("_tb") > 0L && col("_to") > 0L,
+      Exact.fpq(cell(col("_cb"), col("_tb")) + cell(col("_co"), col("_to"))))
+    val df2 = stepped.groupBy(groupBy.map(col): _*)
+      .agg(max(col("_tb")).as("n_base"), max(col("_to")).as("n_other"),
         count(lit(1)).as("n_values"),
         Exact.fromFixed(Exact.fixedSum(term)).as("chi2"))
       .withColumn("df", when(col("chi2").isNotNull, col("n_values") - lit(1L)))
-    val df2 = closed.select((groupBy.map(col) ++ Seq(col("n_base"),
-      col("n_other"), col("n_values"), col("chi2"), col("df"))): _*)
     c.next("chi_square_homogeneity", df2, None)
   }
 
@@ -2690,65 +2445,34 @@ final class AggOps(private val c: Chain) extends AnyVal {
     * empty side reports that side's n as 0 with NULL entropies and jsd
     * (no distribution to compare — the [[ksProfile]] posture).
     *
-    * Scale shape: one scan per side tag-unioned into ONE (group, value)
-    * count aggregate; totals ride group-partitioned windows over that
-    * count frame (counts, not rows) and one closing aggregate per group.
-    * UNGROUPED the totals come from a one-row aggregate over the
-    * checkpointed count frame broadcast back via crossJoin — never a
-    * whole-frame window (declared eager, the chiSquareHomogeneity shape).
+    * Scale shape: the [[chiSquareHomogeneity]] side count and side totals
+    * over one (group, value) count aggregate, then one closing aggregate
+    * per group.
     */
   def jsdProfile(other: DataFrame, column: String,
                  groupBy: Seq[String] = Nil): Chain = {
-    AggOps.requirePsiGroupNames("jsd_profile", groupBy,
-      Seq("n_base", "n_other", "n_values", "h_base", "h_other", "h_mix",
-        "jsd", "_v", "_ca", "_na", "_nb"))
-    Seq(c.df -> "base chain", other -> "other frame").foreach { case (df, who) =>
-      require(df.columns.contains(column), s"jsd_profile: $who is missing column '$column'")
-      groupBy.foreach(g => require(df.columns.contains(g),
-        s"jsd_profile: $who is missing group column '$g'"))
-    }
-    def side(df: DataFrame, tag: Int) =
-      df.where(col(column).isNotNull)
-        .select((groupBy.map(col) ++ Seq(col(column).cast("string").as("_v"),
-          lit(tag).as("_s"))): _*)
-    val counts = side(c.df, 0).unionByName(side(other, 1))
-      .groupBy((groupBy.map(col) :+ col("_v")): _*)
-      .agg(count(when(col("_s") === 0, lit(1))).as("_ca"),
-        count(when(col("_s") === 1, lit(1))).as("_cb"))
-    val stepped = if (groupBy.isEmpty) {
-      // side totals via one-row aggregate + broadcast crossJoin over the
-      // checkpointed count frame — the chiSquareHomogeneity shape; no
-      // whole-frame window, no corpus rescan, declared eager
-      val cnts = counts.localCheckpoint()
-      cnts.crossJoin(broadcast(cnts.agg(
-        coalesce(sum(col("_ca")), lit(0L)).as("_na"),
-        coalesce(sum(col("_cb")), lit(0L)).as("_nb"))))
-    } else {
-      val wPart = Window.partitionBy(groupBy.map(col): _*)
-      counts
-        .withColumn("_na", sum(col("_ca")).over(wPart))
-        .withColumn("_nb", sum(col("_cb")).over(wPart))
-    }
+    AggOps.twoSampleGuard("jsd_profile", c.df, other, column, groupBy,
+      Seq("n_base", "n_other", "n_values", "h_base", "h_other", "h_mix", "jsd"))
+    val stepped = AggOps.sideTotals(
+      AggOps.sideCounts(c.df, other, groupBy, col(column).cast("string"), "_v"), groupBy)
     import Exact.fpq
     // per-value quantized d·ln(d) term; d = 0 contributes 0 exactly
     def term(d: Column) =
       when(d > 0.0, fpq(d * log(d))).otherwise(lit(0L))
-    // guard the shares: an empty side has _na/_nb = 0 and ANSI mode
+    // guard the shares: an empty side has _tb/_to = 0 and ANSI mode
     // raises on the division; the zeroed share contributes a 0 term and
     // the entropy guards null the empty side's outputs anyway
-    val p = when(col("_na") > 0L,
-      col("_ca").cast("double") / col("_na").cast("double")).otherwise(lit(0.0))
-    val q = when(col("_nb") > 0L,
-      col("_cb").cast("double") / col("_nb").cast("double")).otherwise(lit(0.0))
+    val p = when(col("_tb") > 0L,
+      col("_cb").cast("double") / col("_tb").cast("double")).otherwise(lit(0.0))
+    val q = when(col("_to") > 0L,
+      col("_co").cast("double") / col("_to").cast("double")).otherwise(lit(0.0))
     val m = (p + q) / lit(2.0)
-    val closed = (
-      if (groupBy.isEmpty) stepped.groupBy()
-      else stepped.groupBy(groupBy.map(col): _*))
-      .agg(max(col("_na")).as("n_base"), max(col("_nb")).as("n_other"),
+    val closed = stepped.groupBy(groupBy.map(col): _*)
+      .agg(max(col("_tb")).as("n_base"), max(col("_to")).as("n_other"),
         count(lit(1)).as("n_values"),
         Exact.fixedSum(term(p)).as("_slp"),
         Exact.fixedSum(term(q)).as("_slq"),
-        Exact.fixedSum(when(col("_na") > 0L && col("_nb") > 0L, term(m))
+        Exact.fixedSum(when(col("_tb") > 0L && col("_to") > 0L, term(m))
           .otherwise(lit(null))).as("_slm"))
     def h(sln: String, nOk: Column) = when(nOk, -Exact.fromFixed(col(sln)))
     val df2 = closed
@@ -2809,9 +2533,7 @@ final class AggOps(private val c: Chain) extends AnyVal {
         row_number().over(wG.orderBy(col("_cnt").asc, col("_v").asc_nulls_first)))
     }
     val Dec = DecimalType(38, 0)
-    val closed = (
-      if (groupBy.isEmpty) ranked.groupBy()
-      else ranked.groupBy(groupBy.map(col): _*))
+    val closed = ranked.groupBy(groupBy.map(col): _*)
       .agg(sum(col("_cnt")).as("n"), count(lit(1)).as("n_values"),
         sum((col("_i") * col("_cnt")).cast(Dec)).as("_sic"))
     val num = lit(2.0) * col("_sic").cast("double") -
@@ -3175,34 +2897,132 @@ private[graft] object AggOps {
     attach(t1, t1.groupBy(g: _*).agg(psiTotalAgg), "_p_")
   }
 
-  /** Pad a grouped (groups…, bucket, _cb, _co) count frame — where a NULL
-    * bucket row is the group-discovery vote from excluded/invalid rows —
-    * to the full per-group bucket spine via the bucket-map explode (the
-    * [[graft.ops.AggOps.histogram]] regime): one map per group, exploded
-    * against `sequence(0, buckets-1)`, missing cells coalesce to 0.
-    * Runs entirely on the bounded aggregated frame — never a corpus
-    * rescan. Shared by the grouped PSI faces.
+  /** The PSI eps floor must lie in (0, 1): at 0 an empty cell divides by
+    * zero in the ln factor, at 1 every floored share is 1 and each term
+    * reads a fake 0. Checked at the entry of every PSI and drift face.
     */
-  def foldPadCounts(counts: DataFrame, groupBy: Seq[String],
-                    buckets: Int): DataFrame = {
-    val perGroup = counts.groupBy(groupBy.map(col): _*)
+  private[graft] def requirePsiEps(op: String, eps: Double): Unit =
+    require(eps > 0.0 && eps < 1.0, s"$op needs eps in (0, 1), got $eps")
+
+  /** Pad a (groups…, bucket, counts…) count frame — where a NULL bucket
+    * row is the group-discovery vote from excluded rows — to the full
+    * per-group bucket spine via the bucket-map explode: one map per group,
+    * exploded against `sequence(0, buckets-1)`; each count column of
+    * `names` (from → to) reads its cell, missing cells coalesce to 0. Runs
+    * entirely on the bounded aggregated frame — never a corpus rescan.
+    * With no groups the one map is a global aggregate. Shared by the PSI
+    * faces, [[graft.ops.AggOps.histogram]] and the binned drift faces.
+    */
+  def foldPadCounts(counts: DataFrame, groupBy: Seq[String], buckets: Int,
+                    names: Seq[(String, String)] =
+                      Seq("_cb" -> "cnt_base", "_co" -> "cnt_other")): DataFrame = {
+    val g = groupBy.map(col)
+    counts.groupBy(g: _*)
       .agg(map_from_entries(collect_list(when(col("bucket").isNotNull,
-        struct(col("bucket"), struct(col("_cb"), col("_co")))))).as("_m"))
-    perGroup
-      .select((groupBy.map(col) :+
-        explode(sequence(lit(0L), lit((buckets - 1).toLong))).as("bucket") :+
+        struct(col("bucket"), struct(names.map(n => col(n._1)): _*))))).as("_m"))
+      .select((g :+ explode(sequence(lit(0L), lit((buckets - 1).toLong))).as("bucket") :+
         col("_m")): _*)
-      .select((groupBy.map(col) ++ Seq(col("bucket"),
-        coalesce(try_element_at(col("_m"), col("bucket")).getField("_cb"),
-          lit(0L)).as("cnt_base"),
-        coalesce(try_element_at(col("_m"), col("bucket")).getField("_co"),
-          lit(0L)).as("cnt_other"))): _*)
+      .select((g :+ col("bucket")) ++ names.map { case (from, to) =>
+        coalesce(try_element_at(col("_m"), col("bucket")).getField(from), lit(0L)).as(to)
+      }: _*)
   }
 
-  /** Reserved-name guard for the grouped PSI faces: group columns must
-    * not collide with output/internal names or the `_t_`/`_p_`/`_cg_`
-    * rename prefixes the null-safe joins use.
+  /** The two-sample family's entry guard: group names clear of the PSI
+    * reserved names, the engine's internal columns and the op's own
+    * `reserved`, and `column` plus every group column present in BOTH
+    * frames (a friendly message instead of an analysis error).
     */
+  private[graft] def twoSampleGuard(op: String, base: DataFrame, other: DataFrame,
+                                    column: String, groupBy: Seq[String],
+                                    reserved: Seq[String]): Unit = {
+    requirePsiGroupNames(op, groupBy,
+      Seq("_v", "_x", "_cumb", "_cumo", "_xcb", "_xco") ++ reserved)
+    Seq(base -> "base chain", other -> "other frame").foreach { case (df, who) =>
+      require(df.columns.contains(column), s"$op: $who is missing column '$column'")
+      groupBy.foreach(g => require(df.columns.contains(g),
+        s"$op: $who is missing group column '$g'"))
+    }
+  }
+
+  /** Both frames' group columns and `cols` in ONE union, each row tagged
+    * with its side in `_s` (0 = base, 1 = other).
+    */
+  private[graft] def tagUnion(base: DataFrame, other: DataFrame, groupBy: Seq[String],
+                              cols: Column*): DataFrame =
+    Seq(base, other).zipWithIndex.map { case (df, tag) =>
+      df.select((groupBy.map(col) ++ cols :+ lit(tag).as("_s")): _*)
+    }.reduce(_ unionByName _)
+
+  /** The two-sample side count (groups…, `name`, _cb, _co): per group and
+    * key value, the base and other row counts from ONE map-side-combined
+    * aggregate over the [[tagUnion]] — one scan per side, counts not rows
+    * past the exchange. Rows whose key is null drop at the scan unless
+    * `keepNull` (the binned PSI face keeps a NULL bucket, so a group whose
+    * rows are all excluded is still discovered in the same pass).
+    */
+  private[graft] def sideCounts(base: DataFrame, other: DataFrame, groupBy: Seq[String],
+                                key: Column, name: String,
+                                keepNull: Boolean = false): DataFrame = {
+    val keep = if (keepNull) lit(true) else key.isNotNull
+    tagUnion(base.where(keep), other.where(keep), groupBy, key.as(name))
+      .groupBy((groupBy.map(col) :+ col(name)): _*)
+      .agg(count(when(col("_s") === 0, lit(1))).as("_cb"),
+        count(when(col("_s") === 1, lit(1))).as("_co"))
+  }
+
+  /** Per-group side totals `_tb`/`_to` over a [[sideCounts]] frame, plus
+    * the running counts `_cumb`/`_cumo` in `cumulativeBy` order when given.
+    * With groups they are group-partitioned windows over the bounded
+    * count frame. Without, a whole-frame window would be a single-task
+    * stage, so the count frame materializes once (a declared eager step —
+    * release via [[graft.core.Chain.releaseCheckpoints]]): running counts
+    * ride one multi-weight [[graft.core.PrefixScan]] (which materializes
+    * it), otherwise a `localCheckpoint`; the totals are a one-row
+    * aggregate over the same blocks, broadcast back via crossJoin.
+    */
+  private[graft] def sideTotals(counts: DataFrame, groupBy: Seq[String],
+                                cumulativeBy: Option[Column] = None): DataFrame =
+    if (groupBy.isEmpty) {
+      val m = cumulativeBy.fold(counts.localCheckpoint())(o =>
+        graft.core.PrefixScan.exclusivePrefixSums(counts, Nil, Seq(o),
+          Seq(col("_cb") -> "_xcb", col("_co") -> "_xco")))
+      val totals = m.crossJoin(broadcast(m.agg(
+        coalesce(sum(col("_cb")), lit(0L)).as("_tb"),
+        coalesce(sum(col("_co")), lit(0L)).as("_to"))))
+      if (cumulativeBy.isEmpty) totals
+      else totals.withColumn("_cumb", col("_xcb") + col("_cb"))
+        .withColumn("_cumo", col("_xco") + col("_co")).drop("_xcb", "_xco")
+    } else {
+      val wPart = Window.partitionBy(groupBy.map(col): _*)
+      val cum = cumulativeBy.fold(counts) { o =>
+        val wCum = wPart.orderBy(o).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        counts.withColumn("_cumb", sum(col("_cb")).over(wCum))
+          .withColumn("_cumo", sum(col("_co")).over(wCum))
+      }
+      cum.withColumn("_tb", sum(col("_cb")).over(wPart))
+        .withColumn("_to", sum(col("_co")).over(wPart))
+    }
+
+  /** The equal-width bin of psiProfile, histogram and the numeric drift
+    * face: (in-range predicate, bucket index) of `column` over [lo, hi] in
+    * `buckets` bins. Null/NaN/out-of-range rows are out; x = hi folds into
+    * the top bucket.
+    */
+  private[graft] def equalWidthBin(column: String, lo: Double, hi: Double,
+                                   buckets: Int): (Column, Column) = {
+    val x = col(column).cast("double")
+    val w = (hi - lo) / buckets
+    (x.isNotNull && !isnan(x) && x >= lit(lo) && x <= lit(hi),
+      least(floor((x - lit(lo)) / lit(w)).cast("long"), lit((buckets - 1).toLong)))
+  }
+
+  /** `bucket_lo`/`bucket_hi` of an [[equalWidthBin]] `bucket` column. */
+  private[graft] def binEdges(lo: Double, hi: Double, buckets: Int): Seq[Column] = {
+    val w = (hi - lo) / buckets
+    Seq((lit(lo) + col("bucket") * lit(w)).as("bucket_lo"),
+      (lit(lo) + (col("bucket") + lit(1L)) * lit(w)).as("bucket_hi"))
+  }
+
   /** Pool-adjacent-violators over per-bucket (Σ fpq(label), count) pairs —
     * [[AggOps.isotonicFit]]'s driver pass. Violations compare by BigInt
     * cross-product (exact at any corpus size — pos_fp·n passes 2^63
@@ -3243,6 +3063,10 @@ private[graft] object AggOps {
     cal
   }
 
+  /** Reserved-name guard for the grouped PSI and two-sample faces: group
+    * columns must not collide with output/internal names or the
+    * `_t_`/`_p_`/`_cg_` rename prefixes the null-safe joins use.
+    */
   private[graft] def requirePsiGroupNames(op: String, groupBy: Seq[String],
                                           extra: Seq[String]): Unit = {
     val reserved = Seq("bucket", "cnt_base", "cnt_other", "psi_term",
@@ -3276,21 +3100,6 @@ private[graft] object AggOps {
   // stays far inside the long range
   private def psiTotalAgg: Column =
     Exact.fromFixed(Exact.fixedSum(Exact.fpq(col("psi_term"), 12)), 12).as("psi_total")
-
-  /** Equal-frequency cutoffs as a ONE-ROW frame (`_cut1`.. `_cut{b-1}`)
-    * from one mergeable KLL aggregate — shared by [[psiQuantileProfile]]
-    * and the windowed drift face. Broadcast this onto any side that needs
-    * bucketing; an empty/degenerate input yields null cutoffs (callers'
-    * zero-mass closings surface null, see psiTermExpr).
-    */
-  private[graft] def kllCutoffs(df: DataFrame, valueCol: String,
-                                buckets: Int, k: Int): DataFrame = {
-    val x = col(valueCol).cast("double")
-    df.where(x.isNotNull && !isnan(x))
-      .agg(graft.functions.KllSketches.sketchAgg(x, k).as("_sk"))
-      .select((1 until buckets).map(i => graft.functions.KllSketches
-        .quantile(col("_sk"), i.toDouble / buckets).as(s"_cut$i")): _*)
-  }
 
   /** The agreement census' per-(group, label) accumulator frame —
     * (n_a, n_b, n_agree), all plain additive longs, from ONE melted
@@ -3355,64 +3164,100 @@ private[graft] object AggOps {
         po.as("po"), col("_pe").as("pe"), kappa.as("kappa"), col("n"))): _*)
   }
 
-  /** Collect a [[kllCutoffs]] one-row frame (a bounded declared driver
-    * read: buckets − 1 doubles) and rebuild it as a LITERAL one-row frame
-    * — downstream broadcasts then carry the cutoffs as constants instead
-    * of re-running the sketch aggregate once per use, which is what lets
-    * [[graft.streaming.EventStreams.driftByWindowQuantile]] and
-    * [[graft.ops.AggOps.psiQuantileProfile]] scan their reference side
-    * exactly once. Null cutoffs (empty/degenerate input) survive the
-    * round-trip; double literals are exact.
+  /** The quantile-PSI reference read, shared by
+    * [[graft.ops.AggOps.psiQuantileProfile]] (any grouping) and
+    * [[graft.streaming.EventStreams.driftByWindowQuantile]] (`Nil`):
+    * per-group equal-frequency cutoffs `_cut1`.. `_cut{b-1}` from ONE
+    * (grouped) mergeable KLL aggregate over `base`'s non-null, non-NaN
+    * `column` values, read out at i/buckets, and the base's per-group
+    * bucket counts `_cb`. Both are BOUNDED DECLARED DRIVER READS — at most
+    * `maxGroups` cutoff rows and `maxGroups` × (buckets + 1) count rows,
+    * loud refusal past the cap — re-lifted as literal frames: the pruned
+    * projection persists across the two reads and is released before
+    * return, so `base` is scanned ONCE and the caller's plan carries it
+    * only as literals. The cutoff frame's group columns are renamed
+    * `_cg_<g>` (join it with [[joinCutoffs]]); a group whose base values are
+    * all invalid reads null cutoffs.
     */
-  private[graft] def literalCutoffs(cuts: DataFrame,
-                                    spark: org.apache.spark.sql.SparkSession,
-                                    buckets: Int): DataFrame = {
-    val row = cuts.collect()(0)
-    spark.range(1).select((1 until buckets).map { i =>
-      (if (row.isNullAt(i - 1)) lit(null).cast("double")
-       else lit(row.getDouble(i - 1))).as(s"_cut$i")
-    }: _*)
+  private[graft] def quantileReference(op: String, base: DataFrame, column: String,
+                                       groupBy: Seq[String], buckets: Int, k: Int,
+                                       maxGroups: Int): (DataFrame, DataFrame) = {
+    val g = groupBy.map(col)
+    val baseP = base.select((g :+ col(column).cast("double").as("_x")): _*).persist()
+    try {
+      val cutAgg = baseP.where(col("_x").isNotNull && !isnan(col("_x"))).groupBy(g: _*)
+        .agg(graft.functions.KllSketches.sketchAgg(col("_x"), k).as("_sk"))
+        .select((g ++ (1 until buckets).map(i =>
+          graft.functions.KllSketches.quantile(col("_sk"), i.toDouble / buckets)
+            .as(s"_cut$i"))): _*)
+      def literal(rows: Array[Row], fields: Seq[StructField]) =
+        base.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+          StructType(fields.map(_.copy(nullable = true))))
+      val cutRows = cutAgg.limit(maxGroups + 1).collect()
+      require(cutRows.length <= maxGroups,
+        s"$op saw more than maxGroups=$maxGroups base groups — the per-group " +
+          "cutoff fold is a declared driver read of groups × (buckets − 1) " +
+          "doubles; raise maxGroups or coarsen the grouping")
+      // one ungrouped row re-lifts as literal columns, which the optimizer
+      // folds into every bucket cascade (the cutoffs then cost the plan
+      // nothing, size estimates included); per-group rows as a local relation
+      val cutF =
+        if (groupBy.isEmpty) base.sparkSession.range(1).select(cutAgg.columns.indices.map(i =>
+          lit(cutRows(0).get(i)).cast(DoubleType).as(cutAgg.columns(i))): _*)
+        else literal(cutRows, cutAgg.schema.fields.toSeq.map(f =>
+          if (groupBy.contains(f.name)) f.copy(name = s"_cg_${f.name}") else f))
+      val counts = cutoffCounts(baseP, "_x", cutF, groupBy, buckets, "_cb")
+      val countCap = maxGroups * (buckets + 1)
+      val countRows = counts.limit(countCap + 1).collect()
+      require(countRows.length <= countCap,
+        s"$op base-count frame exceeded maxGroups=$maxGroups × (buckets + 1) " +
+          "rows — raise maxGroups or coarsen the grouping")
+      (cutF, literal(countRows, counts.schema.fields.toSeq))
+    } finally baseP.unpersist(false)
   }
 
-  /** Re-lift collected (bucket, count) rows — a bounded declared driver
-    * read, ≤ buckets of them — into a literal two-column frame
-    * (`bucket`, `countName`), the counts companion of [[literalCutoffs]].
+  /** `df` joined with a [[quantileReference]] cutoff frame by broadcast:
+    * per group null-safely and LEFT (a group with no cutoff row keeps its
+    * rows, bucketing to 0 with null bounds); with no groups a cross join
+    * with the one literal row, whose cutoffs the optimizer folds into the
+    * plan as constants.
     */
-  private[graft] def literalCountFrame(spark: org.apache.spark.sql.SparkSession,
-                                       rows: Array[Row],
-                                       countName: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("bucket", LongType, nullable = false),
-      StructField(countName, LongType, nullable = false)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows.map(r => Row(r.getLong(0), r.getLong(1))): _*),
-      schema)
-  }
+  private[graft] def joinCutoffs(df: DataFrame, cutF: DataFrame,
+                                 groupBy: Seq[String]): DataFrame =
+    if (groupBy.isEmpty) df.crossJoin(broadcast(cutF))
+    else df.join(broadcast(cutF),
+      groupBy.map(g => col(g) <=> col(s"_cg_$g")).reduce(_ && _), "left")
 
-  /** Valid rows of `df` bucketed by the cutoff frame: `bucket` =
-    * #cutoffs strictly below x (full-domain coverage — only null/NaN rows
-    * drop). Keeps all original columns plus `bucket`.
+  /** Equal-frequency bucket of `x` against the joined `_cut{i}` columns:
+    * #cutoffs strictly below x, so the domain is covered with no clipping;
+    * null cutoffs (a group with no cutoff row) bucket to 0.
     */
-  private[graft] def cutoffBucketed(df: DataFrame, valueCol: String,
-                                    cuts: DataFrame, buckets: Int): DataFrame = {
-    val x = col(valueCol).cast("double")
-    val branches = (buckets - 1 to 1 by -1)
-      .map(i => (x > col(s"_cut$i"), lit(i.toLong)))
-    val b = branches.tail
-      .foldLeft(when(branches.head._1, branches.head._2)) {
-        case (acc, (cond, v)) => acc.when(cond, v)
-      }.otherwise(lit(0L))
-    df.where(x.isNotNull && !isnan(x)).crossJoin(broadcast(cuts))
-      .withColumn("bucket", b)
-      .drop((1 until buckets).map(i => s"_cut$i"): _*)
+  private[graft] def cutoffBucket(x: Column, buckets: Int): Column =
+    (buckets - 1 to 1 by -1).foldLeft(None: Option[Column]) { (acc, i) =>
+      val (cond, b) = (x > col(s"_cut$i"), lit(i.toLong))
+      Some(acc.fold(when(cond, b))(_.when(cond, b)))
+    }.get.otherwise(lit(0L))
+
+  /** (groups…, bucket, `as`) counts of `df`'s `column` bucketed by a
+    * [[quantileReference]] cutoff frame, joined per group by broadcast.
+    * Null/NaN rows keep a NULL bucket with count 0, so an all-invalid
+    * group is still discovered.
+    */
+  private[graft] def cutoffCounts(df: DataFrame, column: String, cutF: DataFrame,
+                                  groupBy: Seq[String], buckets: Int,
+                                  as: String): DataFrame = {
+    val x = col(column).cast("double")
+    val v = x.isNotNull && !isnan(x)
+    joinCutoffs(df, cutF, groupBy)
+      .groupBy((groupBy.map(col) :+ when(v, cutoffBucket(x, buckets)).as("bucket")): _*)
+      .agg(count(when(v, lit(1))).as(as))
   }
 
   /** Bin-bound lookup over joined `_cut{i}` columns: maps `bucket` to the
     * selected cutoff column, null past the open ends (and null when the
     * cutoff columns themselves are null — a group with no cutoffs).
-    * Shared by [[withCutoffBounds]] and the grouped quantile-PSI face.
     */
-  private[graft] def cutBoundExpr(buckets: Int, sel: Int => Option[Int]): Column =
+  private def cutBoundExpr(buckets: Int, sel: Int => Option[Int]): Column =
     (0 until buckets).flatMap(b => sel(b).map(i =>
       (col("bucket") === lit(b.toLong), col(s"_cut$i"))))
       .foldLeft(None: Option[Column]) { case (acc, (cond, v)) =>
@@ -3420,13 +3265,13 @@ private[graft] object AggOps {
       }.get.otherwise(lit(null).cast("double"))
 
   /** Attach `cut_lo`/`cut_hi` bin bounds (null at the open ends) to a
-    * frame carrying a `bucket` column, from the one-row cutoff frame.
+    * frame carrying `bucket` and the group columns, from a
+    * [[quantileReference]] cutoff frame.
     */
-  private[graft] def withCutoffBounds(df: DataFrame, cuts: DataFrame,
-                                      buckets: Int): DataFrame = {
-    df.crossJoin(broadcast(cuts))
+  private[graft] def withCutoffBounds(df: DataFrame, cutF: DataFrame, groupBy: Seq[String],
+                                      buckets: Int): DataFrame =
+    joinCutoffs(df, cutF, groupBy)
       .withColumn("cut_lo", cutBoundExpr(buckets, b => if (b == 0) None else Some(b)))
       .withColumn("cut_hi", cutBoundExpr(buckets, b => if (b == buckets - 1) None else Some(b + 1)))
-      .drop((1 until buckets).map(i => s"_cut$i"): _*)
-  }
+      .drop((groupBy.map(g => s"_cg_$g") ++ (1 until buckets).map(i => s"_cut$i")): _*)
 }

@@ -764,23 +764,39 @@ object EventStreams {
     require(valueCol != "_ts",
       s"$op reserves _ts for the derived event-time column — rename the value column first")
 
-  def driftByWindow(events: DataFrame, reference: DataFrame, valueCol: String,
-                    width: String, eps: Double = 1e-6): DataFrame = {
-    requireValueColNotInternal("drift_by_window", valueCol)
-    val refC = reference.where(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("string").as("value"))
-      .agg(count(lit(1)).as("cnt_base"))
-    driftFromCounts(windowCounts(events, valueCol, width), refC, eps)
+  // every drift face and sink checks its value column and eps floor at the
+  // call, before a sink pins its reference or a query plans a division
+  private def requireDrift(op: String, valueCol: String, eps: Double): Unit = {
+    requireValueColNotInternal(op, valueCol)
+    graft.ops.AggOps.requirePsiEps(op, eps)
   }
 
-  private def windowCounts(events: DataFrame, valueCol: String,
-                           width: String): DataFrame =
+  def driftByWindow(events: DataFrame, reference: DataFrame, valueCol: String,
+                    width: String, eps: Double = 1e-6): DataFrame = {
+    requireDrift("drift_by_window", valueCol, eps)
+    driftFromCounts(valueCounts(events, valueCol, width), refValueCounts(reference, valueCol), eps)
+  }
+
+  /** Per-(tumbling window, key) counts `cnt_other` of the event rows
+    * `keep` admits — the events side of every drift face.
+    */
+  private def windowCounts(events: DataFrame, width: String, keep: Column,
+                           key: Column): DataFrame =
     events
       .withColumn("_ts", eventTime(events))
-      .where(col(valueCol).isNotNull)
+      .where(keep)
       .groupBy(window(col("_ts"), width).getField("start").cast(TimestampNTZType)
-        .as("window_start"), col(valueCol).cast("string").as("value"))
+        .as("window_start"), key)
       .agg(count(lit(1)).as("cnt_other"))
+
+  private def valueCounts(events: DataFrame, valueCol: String, width: String): DataFrame =
+    windowCounts(events, width, col(valueCol).isNotNull,
+      col(valueCol).cast("string").as("value"))
+
+  private def refValueCounts(reference: DataFrame, valueCol: String): DataFrame =
+    reference.where(col(valueCol).isNotNull)
+      .groupBy(col(valueCol).cast("string").as("value"))
+      .agg(count(lit(1)).as("cnt_base"))
 
   private def driftFromCounts(wc: DataFrame, refC: DataFrame,
                               eps: Double): DataFrame = {
@@ -824,13 +840,12 @@ object EventStreams {
                              valueCol: String, width: String, name: String,
                              checkpointDir: String, eps: Double = 1e-6,
                              profileBuckets: Int = 16): StreamingQuery = {
+    requireDrift("sink_drift", valueCol, eps)
     def close(counts: DataFrame) =
       driftFromCounts(counts, counts.sparkSession.table(name + "_ref"), eps)
     runProfileSink(events, name, checkpointDir, profileBuckets, Seq(col("window_start")),
-      Some(reference.where(col(valueCol).isNotNull)
-        .groupBy(col(valueCol).cast("string").as("value"))
-        .agg(count(lit(1)).as("cnt_base"))))(
-      aggregate = windowCounts(_, valueCol, width),
+      Some(refValueCounts(reference, valueCol)))(
+      aggregate = valueCounts(_, valueCol, width),
       close = close,
       merge = (bs, old) => close(mergeCounts(bs, old, Seq("window_start", "value"))))
   }
@@ -859,17 +874,20 @@ object EventStreams {
     * repeated on its rows.
     *
     * Scale: one map-side-combined aggregate per side (≤ buckets rows per
-    * window out); the spine-complete reference profile (buckets rows)
-    * broadcasts onto the distinct-window spine; totals and psi_total stay
-    * partitioned by window ([[graft.ops.AggOps.psiTerms]]) — no
-    * global window, unbounded stream history is fine. Batch face of
-    * [[sinkDriftNumericUpsertToTable]].
+    * window out), binned by [[graft.ops.AggOps.equalWidthBin]]; each
+    * window pads to the full spine from its own count map and the
+    * spine-complete reference profile (buckets rows) attaches by a
+    * broadcast bucket join; totals and psi_total stay partitioned by
+    * window ([[graft.ops.AggOps.psiTerms]]) — no global window, unbounded
+    * stream history is fine. Over events in one window it equals
+    * [[graft.ops.AggOps.psiProfile]] with the reference as base. Batch
+    * face of [[sinkDriftNumericUpsertToTable]].
     */
   def driftByWindowNumeric(events: DataFrame, reference: DataFrame,
                            valueCol: String, width: String, lo: Double,
                            hi: Double, buckets: Int,
                            eps: Double = 1e-6): DataFrame = {
-    requireValueColNotInternal("drift_by_window_numeric", valueCol)
+    requireDrift("drift_by_window_numeric", valueCol, eps)
     require(buckets > 0, s"drift_by_window_numeric needs buckets > 0, got $buckets")
     require(hi > lo, s"drift_by_window_numeric needs hi > lo, got [$lo, $hi]")
     driftFromBucketCounts(
@@ -878,76 +896,45 @@ object EventStreams {
       lo, hi, buckets, eps)
   }
 
-  // histogram/psiProfile bin arithmetic: in-range predicate + bucket index
-  // (x = hi folds into the top bucket; null/NaN/out-of-range excluded)
-  private def bucketExpr(valueCol: String, lo: Double, hi: Double,
-                         buckets: Int): (Column, Column) = {
-    val x = col(valueCol).cast("double")
-    val in = x.isNotNull && !isnan(x) && x >= lit(lo) && x <= lit(hi)
-    val w = (hi - lo) / buckets
-    (in, least(floor((x - lit(lo)) / lit(w)).cast("long"), lit((buckets - 1).toLong)))
-  }
-
   /** Spine-complete reference bucket counts: every bucket present, zeros
     * included — pinned verbatim into `<name>_ref` by the sink, so a
     * reference gap reads as an eps-floored share, never a missing row.
     */
   private def refBucketCounts(reference: DataFrame, valueCol: String,
                               lo: Double, hi: Double, buckets: Int): DataFrame = {
-    val (in, b) = bucketExpr(valueCol, lo, hi, buckets)
-    val counts = reference.where(in).groupBy(b.as("bucket"))
-      .agg(count(lit(1)).as("_cb"))
-    reference.sparkSession.range(buckets).select(col("id").as("bucket"))
-      .join(counts, Seq("bucket"), "left")
-      .select(col("bucket"), coalesce(col("_cb"), lit(0L)).as("cnt_base"))
+    val (in, b) = graft.ops.AggOps.equalWidthBin(valueCol, lo, hi, buckets)
+    graft.ops.AggOps.foldPadCounts(
+      reference.where(in).groupBy(b.as("bucket")).agg(count(lit(1)).as("cnt_base")),
+      Nil, buckets, Seq("cnt_base" -> "cnt_base"))
   }
 
   private def windowBucketCounts(events: DataFrame, valueCol: String,
                                  width: String, lo: Double, hi: Double,
                                  buckets: Int): DataFrame = {
-    val (in, b) = bucketExpr(valueCol, lo, hi, buckets)
-    events
-      .withColumn("_ts", eventTime(events))
-      .where(in)
-      .groupBy(window(col("_ts"), width).getField("start").cast(TimestampNTZType)
-        .as("window_start"), b.as("bucket"))
-      .agg(count(lit(1)).as("cnt_other"))
+    val (in, b) = graft.ops.AggOps.equalWidthBin(valueCol, lo, hi, buckets)
+    windowCounts(events, width, in, b.as("bucket"))
   }
 
-  /** Pad a (window_start, bucket, cnt_other) window-count aggregate to
-    * the full 0..buckets-1 spine per window — the per-window map/explode
-    * fold, ONE consumer of the corpus-side aggregate (the old
-    * distinct-windows grid re-joined wc and column pruning split it into
-    * two corpus scans; reference-confirmed by the corpus-rescan-spine
-    * lint).
+  /** A (window_start, bucket, cnt_other) window-count aggregate padded to
+    * the full 0..buckets-1 spine per window ([[graft.ops.AggOps
+    * .foldPadCounts]] — ONE consumer of the corpus-side aggregate, one
+    * corpus scan) with the bounded reference counts attached by bucket,
+    * zeros padded, so every window carries every bucket.
     */
-  private def padWindowBuckets(wc: DataFrame, buckets: Int): DataFrame =
-    wc.groupBy(col("window_start"))
-      .agg(map_from_entries(collect_list(
-        struct(col("bucket"), col("cnt_other")))).as("_m"))
-      .select(col("window_start"),
-        explode(sequence(lit(0L), lit((buckets - 1).toLong))).as("bucket"),
-        col("_m"))
+  private def padWithReference(wc: DataFrame, refC: DataFrame, buckets: Int): DataFrame =
+    graft.ops.AggOps.foldPadCounts(wc, Seq("window_start"), buckets,
+        Seq("cnt_other" -> "cnt_other"))
+      .join(broadcast(refC), Seq("bucket"), "left")
       .select(col("window_start"), col("bucket"),
-        coalesce(try_element_at(col("_m"), col("bucket")), lit(0L)).as("cnt_other"))
+        coalesce(col("cnt_base"), lit(0L)).as("cnt_base"), col("cnt_other"))
 
   private def driftFromBucketCounts(wc: DataFrame, refC: DataFrame,
                                     lo: Double, hi: Double, buckets: Int,
-                                    eps: Double): DataFrame = {
-    val w = (hi - lo) / buckets
-    // the reference is spine-complete, so the per-bucket join carries
-    // cnt_base for every spine row; aggregated broadcast build, bounded
-    // by `buckets`
-    val joined = padWindowBuckets(wc, buckets)
-      .join(broadcast(refC), Seq("bucket"), "left")
-      .select(col("window_start"), col("bucket"), col("cnt_base"),
-        col("cnt_other"))
-    graft.ops.AggOps.psiTerms(joined, eps, Seq("window_start"))
-      .withColumn("bucket_lo", lit(lo) + col("bucket") * lit(w))
-      .withColumn("bucket_hi", lit(lo) + (col("bucket") + lit(1L)) * lit(w))
-      .select("window_start", "bucket", "bucket_lo", "bucket_hi",
-        "cnt_base", "cnt_other", "psi_term", "psi_total")
-  }
+                                    eps: Double): DataFrame =
+    graft.ops.AggOps.psiTerms(padWithReference(wc, refC, buckets), eps, Seq("window_start"))
+      .select((Seq(col("window_start"), col("bucket")) ++
+        graft.ops.AggOps.binEdges(lo, hi, buckets) ++
+        Seq(col("cnt_base"), col("cnt_other"), col("psi_term"), col("psi_total"))): _*)
 
   /** drift_by_window_quantile(events, reference, value_col, width,
     * buckets): the EQUAL-FREQUENCY twin of [[driftByWindowNumeric]],
@@ -969,50 +956,33 @@ object EventStreams {
     * are literal inclusive-rank order statistics (oracle-replayable);
     * beyond it they carry KLL's published rank-error bounds.
     *
-    * The reference is scanned ONCE: its pruned value projection persists
-    * across the two derivations (cutoff sketch, bucket counts), both of
-    * which run EAGERLY at op-construction as bounded driver reads
-    * (≤ buckets−1 cutoffs + ≤ buckets counts — the searchTfidfIndex
-    * declared-read posture), then the cache is released before the lazy
-    * events-side plan is even built. Nothing corpus-sized ever reaches
-    * the driver, and the returned plan carries the reference only as
-    * literals.
+    * The reference is read by psiQuantileProfile's own reference read
+    * ([[graft.ops.AggOps.quantileReference]] with no groups): scanned
+    * ONCE, its pruned value projection persisted across the cutoff sketch
+    * and the bucket counts, both EAGER bounded driver reads at
+    * op-construction (≤ buckets−1 cutoffs + ≤ buckets + 1 counts — the
+    * searchTfidfIndex declared-read posture), the cache released before
+    * the lazy events-side plan is built. Nothing corpus-sized ever
+    * reaches the driver, and the returned plan carries the reference
+    * only as literals. Over events in one window it equals
+    * [[graft.ops.AggOps.psiQuantileProfile]] with the reference as base.
     */
   def driftByWindowQuantile(events: DataFrame, reference: DataFrame,
                             valueCol: String, width: String, buckets: Int,
                             eps: Double = 1e-6, k: Int = 200): DataFrame = {
-    requireValueColNotInternal("drift_by_window_quantile", valueCol)
+    requireDrift("drift_by_window_quantile", valueCol, eps)
     require(buckets > 1, s"drift_by_window_quantile needs buckets > 1, got $buckets")
-    val spark = reference.sparkSession
-    val xr = col(valueCol).cast("double")
-    val refV = reference
-      .select(xr.as(valueCol)).where(col(valueCol).isNotNull && !isnan(col(valueCol)))
-      .persist()
-    val (cuts, refCounts) =
-      try {
-        val cuts = graft.ops.AggOps.literalCutoffs(
-          graft.ops.AggOps.kllCutoffs(refV, valueCol, buckets, k), spark, buckets)
-        val refCountRows = graft.ops.AggOps
-          .cutoffBucketed(refV, valueCol, cuts, buckets)
-          .groupBy("bucket").agg(count(lit(1)).as("_cb")).collect()
-        (cuts, graft.ops.AggOps.literalCountFrame(spark, refCountRows, "_cb"))
-      } finally refV.unpersist(false)
-    val wc = graft.ops.AggOps.cutoffBucketed(
-        events.withColumn("_ts", eventTime(events)), valueCol, cuts, buckets)
-      .groupBy(window(col("_ts"), width).getField("start").cast(TimestampNTZType)
-        .as("window_start"), col("bucket"))
-      .agg(count(lit(1)).as("cnt_other"))
-    // per-window map/explode spine fold (padWindowBuckets — one consumer
-    // of the events aggregate, one corpus scan); the literal reference
-    // counts then attach by equi join, zeros padded, so every window
-    // still carries every bucket
-    val joined = padWindowBuckets(wc, buckets)
-      .join(broadcast(refCounts), Seq("bucket"), "left")
-      .select(col("window_start"), col("bucket"),
-        coalesce(col("_cb"), lit(0L)).as("cnt_base"), col("cnt_other"))
+    val (cuts, refCounts) = graft.ops.AggOps.quantileReference("drift_by_window_quantile",
+      reference, valueCol, Nil, buckets, k, maxGroups = 1)
+    val x = col(valueCol).cast("double")
+    val wc = windowCounts(graft.ops.AggOps.joinCutoffs(events, cuts, Nil), width,
+      x.isNotNull && !isnan(x),
+      graft.ops.AggOps.cutoffBucket(x, buckets).as("bucket"))
     graft.ops.AggOps.withCutoffBounds(
-        graft.ops.AggOps.psiTerms(joined, eps, Seq("window_start")),
-        cuts, buckets)
+        graft.ops.AggOps.psiTerms(
+          padWithReference(wc, refCounts.withColumnRenamed("_cb", "cnt_base"), buckets),
+          eps, Seq("window_start")),
+        cuts, Nil, buckets)
       .select("window_start", "bucket", "cut_lo", "cut_hi",
         "cnt_base", "cnt_other", "psi_term", "psi_total")
   }
@@ -1033,6 +1003,7 @@ object EventStreams {
                                     name: String, checkpointDir: String,
                                     eps: Double = 1e-6,
                                     profileBuckets: Int = 16): StreamingQuery = {
+    requireDrift("sink_drift_numeric", valueCol, eps)
     require(buckets > 0, s"sink_drift_numeric needs buckets > 0, got $buckets")
     require(hi > lo, s"sink_drift_numeric needs hi > lo, got [$lo, $hi]")
     def close(counts: DataFrame) = driftFromBucketCounts(counts,

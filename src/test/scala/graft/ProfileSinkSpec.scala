@@ -150,6 +150,26 @@ class ProfileSinkSpec extends AnyFunSuite {
     }
   }
 
+  test("drift sinks: a _ts value column or an eps outside (0, 1) refuses before the reference is pinned") {
+    // `_ts` is the event time the sink derives; counting it would silently
+    // profile the wrong column
+    val events = MemoryStream[ProfileRow].toDF().withColumn("_ts", col("value"))
+    val ref = reference.withColumn("_ts", col("value"))
+    val drifts = Seq[(String, (String, String, Double) => Unit)](
+      "drift" -> ((name, v, eps) => EventStreams.sinkDriftUpsertToTable(
+        events, ref, v, "1 hour", name, checkpoint(), eps = eps)),
+      "numeric drift" -> ((name, v, eps) => EventStreams.sinkDriftNumericUpsertToTable(
+        events, ref, v, "1 hour", 0.0, 1.0, 4, name, checkpoint(), eps = eps)))
+    for ((label, run) <- drifts; (v, eps) <- Seq(("_ts", 1e-6), ("value", 0.0), ("value", 1.0))) {
+      val name = s"ps_refuse_${label.replace(' ', '_')}"
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"DROP TABLE IF EXISTS ${name}_ref")
+      intercept[IllegalArgumentException](run(name, v, eps))
+      assert(!spark.catalog.tableExists(s"${name}_ref"),
+        s"$label pinned its reference before refusing ($v, eps $eps)")
+    }
+  }
+
   /** Data files under a table directory (relative path -> mtime). */
   private def dataFiles(dir: Path): Map[Path, Long] = {
     import scala.jdk.CollectionConverters._

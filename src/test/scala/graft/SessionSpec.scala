@@ -198,7 +198,6 @@ class SessionSpec extends AnyFunSuite {
       ("AggOps.scala", "describeTable", "count") ->
         "RelationalGroupedDataset.count(): a lazy grouped count",
       ("AggOps.scala", "isotonicFit", "agg") -> "grouped: <= buckets rows",
-      ("AggOps.scala", "psiQuantileProfile", "agg") -> "grouped: <= buckets rows",
       ("Bench.scala", "emit", "count") -> "grouped: the bench's warm-up query",
       ("Bench.scala", "timeOne", "count") -> "the bench's timed action",
       ("DedupOps.scala", "pairOut", "count") ->
@@ -206,7 +205,6 @@ class SessionSpec extends AnyFunSuite {
           "single-partition exchange on either path"),
       ("EncodeOps.scala", "nanFree", "count") ->
         "RelationalGroupedDataset.count(): impute's lazy grouped mode count",
-      ("EventStreams.scala", "driftByWindowQuantile", "agg") -> "grouped: <= buckets rows",
       ("SelectionOps.scala", "bucketCounts", "agg") -> "grouped: <= buckets rows",
       ("SelectionOps.scala", "lmModel", "agg") -> "grouped: <= buckets rows",
       ("TextOps.scala", "mixByTemperature", "agg") -> "grouped: one row per stratum",
@@ -286,6 +284,21 @@ class SessionSpec extends AnyFunSuite {
       "SimilarityOps.scala" -> "rankTopK"), annWindows.mkString("\n"))
     assert(uses("<= nprobe") == Seq("SimilarityOps.scala" -> "probeCells"),
       uses("<= nprobe").mkString("\n"))
+  }
+
+  test("src/main spells the two-sample side count, the equal-width bin and the quantile reference read once") {
+    // the base/other tag and its per-side count: the tag union and the
+    // side count every two-sample face builds on
+    assert(uses("lit(tag).as(\"_s\")") == Seq("AggOps.scala" -> "tagUnion"),
+      uses("lit(tag).as(\"_s\")").mkString("\n"))
+    assert(uses("count(when(col(\"_s\") === 0") == Seq("AggOps.scala" -> "sideCounts"),
+      uses("count(when(col(\"_s\") === 0").mkString("\n"))
+    // psiProfile, histogram and the numeric drift face bin through one home
+    assert(uses("floor((x - lit(lo))") == Seq("AggOps.scala" -> "equalWidthBin"),
+      uses("floor((x - lit(lo))").mkString("\n"))
+    // the KLL cutoff read of psiQuantileProfile and the quantile drift face
+    assert(uses(".toDouble / buckets") == Seq("AggOps.scala" -> "quantileReference"),
+      uses(".toDouble / buckets").mkString("\n"))
   }
 
   test("a second GraftSession on one session re-registers no kernel") {
